@@ -28,11 +28,12 @@ from glob import glob
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..schemas import HARVEST_MODEL_FILE_META, MODEL_DATA, SOURCE_MODEL_META
+from ..schemas import (GAUGE_STATION, HARVEST_MODEL_FILE_META, MODEL_DATA, MODEL_SOURCE,
+                       SOURCE_MODEL_META)
 from ..sources.catalog import Catalog
 from ..sources.harvest_csv import read_harvest_csv
 from .bootstrap import source_key
-from .dashboard_meta import get_adcirc_run_property_variables
+from .dashboard_meta import check_model_source_meta, get_adcirc_run_property_variables
 
 LEDGER = "harvest_model_file_meta"
 FACT = "model_data"
@@ -97,23 +98,15 @@ class ModelIngest:
     def _register_source(self, src: dict) -> None:
         """Idempotent source auto-registration (J8+M1): add source meta and
         one model_source row per station of the matching location_type."""
-        meta = self.catalog.read("source_model_meta", SOURCE_MODEL_META)
-        if self.catalog.exists("source_model_meta"):
-            seen = meta.filter(
-                (F.col("filename_prefix") == src["filename_prefix"])
-                & (F.col("source_instance") == src["source_instance"])).limit(1).count()
-            if seen:
-                return
+        if self.catalog.exists("source_model_meta") and check_model_source_meta(
+                self.catalog.read("source_model_meta", SOURCE_MODEL_META),
+                src["filename_prefix"], src["source_instance"]):
+            return
         row = self.spark.createDataFrame(
-            [[src[k] for k in ("data_source", "source_name", "source_archive",
-                               "source_variable", "source_instance", "forcing_metclass",
-                               "filename_prefix", "location_type", "units")]],
-            "data_source string, source_name string, source_archive string, "
-            "source_variable string, source_instance string, forcing_metclass string, "
-            "filename_prefix string, location_type string, units string")
+            [[src[f.name] for f in SOURCE_MODEL_META.fields]], SOURCE_MODEL_META)
         self.catalog.append(row, "source_model_meta")
 
-        stations = (self.catalog.read("gauge_station")
+        stations = (self.catalog.read("gauge_station", GAUGE_STATION)
                     .filter(F.col("location_type") == src["location_type"]))
         model_source = stations.select(
             source_key(F.col("station_name"), F.lit(src["data_source"]),
@@ -150,36 +143,36 @@ class ModelIngest:
             self._register_source(src)
 
         processing = dt.datetime.now().replace(microsecond=0)
-        batch = None
+        keys =["data_source", "source_name", "source_archive", "source_instance",
+                "forcing_metclass"]
+        file_srcs = self.spark.createDataFrame(
+            [[os.path.basename(path)] + [src[k] for k in keys] for path, _, src in files],
+            ", ".join(f"{k} string" for k in ["file_name", *keys]))
+        lookup = (self.catalog.read("model_source", MODEL_SOURCE).join(file_srcs, keys)
+                  .join(self.catalog.read("gauge_station", GAUGE_STATION)
+                        .select("station_id", "station_name"), "station_id")
+                  .select("file_name", "station_name", "source_id"))
+        rows = (read_harvest_csv(self.spark, [path for path, _, _ in files], "water_level")
+                .join(F.broadcast(lookup), ["file_name", "station_name"], "left"))
+        loaded = F.col("source_id").isNotNull() & F.col("time").isNotNull()
+        # one grouped aggregate: per-file windows over the raw rows, and
+        # the rows that will merge (a matched source and a parsed time)
+        stats = {r["file_name"]: r for r in rows.groupBy("file_name").agg(
+            F.min("time").alias("lo"), F.max("time").alias("hi"),
+            F.count(F.when(loaded, 1)).alias("n")).collect()}
+        n_rows = sum(r["n"] for r in stats.values())
+        batch = rows.filter(loaded).select(
+            "source_id", F.lit(timemark).cast("timestamp_ntz").alias("timemark"), "time",
+            "water_level", F.lit(None).cast("double").alias("wave_height"),
+            F.lit(processing).cast("timestamp_ntz").alias("__proc_dt"))
         ledger_rows = []
-        windows = {}
-        for path, kind, src in files:
+        for path, _, src in files:
             name = os.path.basename(path)
-            raw = read_harvest_csv(self.spark, [path], "water_level")
-            w = raw.agg(F.min("time").alias("lo"), F.max("time").alias("hi")).first()
-            windows[name] = (w["lo"], w["hi"])
-            df = (
-                raw
-                .withColumn("timemark", F.lit(timemark).cast("timestamp_ntz"))
-                .join(F.broadcast(
-                    self.catalog.read("model_source")
-                    .filter((F.col("data_source") == src["data_source"])
-                            & (F.col("source_name") == src["source_name"])
-                            & (F.col("source_archive") == src["source_archive"])
-                            & (F.col("source_instance") == src["source_instance"])
-                            & (F.col("forcing_metclass") == src["forcing_metclass"]))
-                    .join(self.catalog.read("gauge_station")
-                          .select("station_id", "station_name"), "station_id")
-                    .select("station_name", "source_id")), "station_name")
-                .select("source_id", "timemark", "time",
-                        "water_level", F.lit(None).cast("double").alias("wave_height"),
-                        F.lit(processing).cast("timestamp_ntz").alias("__proc_dt"))
-            )
-            batch = df if batch is None else batch.unionByName(df)
+            window = stats.get(name) or {"lo": None, "hi": None}
             ledger_rows.append({
                 "dir_path": run_dir, "file_name": name, "model_run_id": model_run_id,
                 "processing_datetime": processing, "data_date_time": timemark,
-                "data_begin_time": windows[name][0], "data_end_time": windows[name][1],
+                "data_begin_time": window["lo"], "data_end_time": window["hi"],
                 "data_source": src["data_source"], "source_name": src["source_name"],
                 "source_archive": src["source_archive"],
                 "source_instance": src["source_instance"],
@@ -188,8 +181,6 @@ class ModelIngest:
                 "ingested": True, "overlap_past_file_date_time": False,
             })
 
-        batch = batch.filter(F.col("time").isNotNull())
-        n_rows = batch.count()
         # rerun dedup (run/ingestModelTasks.py:102-114): key includes
         # timemark so runs coexist; latest processing wins on rerun
         self.catalog.merge_keep_latest(

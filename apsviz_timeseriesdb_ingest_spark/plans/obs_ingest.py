@@ -3,15 +3,15 @@ as one Spark lineage (SURVEY section 3.1).
 
 Reference stages (per-source subprocesses + intermediate CSVs) collapse to:
 
-    discover()    -- glob harvest dir, anti-join the ledger (J4), compute
-                     per-file timemark (F1) + min/max TIME (A1) in ONE
-                     distributed read, append ledger rows ingested=False
-    ingest_new()  -- read all pending files (one job per measure variable),
-                     enrich with source_id via broadcast dim join (J1/J2),
-                     widen to the sparse 6-measure layout (S6),
-                     merge into gauge_data with keep-latest dedup bounded
-                     to each batch's time window (J7/M3),
-                     flip ledger ingested flags (M2)
+    discover()    -- glob harvest dir, per-file timemark (F1), anti-join
+                     the ledger (J4), append rows ingested=False; no CSV read
+    ingest_new()  -- read all pending files ONCE (one scan per measure
+                     variable), widen to the sparse 6-measure layout (S6),
+                     enrich with source_id via broadcast dim join (J1/J2)
+                     and materialize; per-file min/max TIME (A1) from that
+                     copy, keep-latest merge into gauge_data bounded to the
+                     batch's time window (J7/M3), one ledger update fills
+                     the windows and flips ingested (M2)
 
 Keep-latest ordering: the reference keeps the highest serial ``obs_id``
 per (source_id, time) — i.e. last-loaded wins, and files are loaded in
@@ -35,10 +35,13 @@ from pyspark.sql import functions as F
 from ..operators.ledger import new_files_anti_join
 from ..schemas import (
     GAUGE_DATA,
+    GAUGE_SOURCE,
+    GAUGE_STATION,
     HARVEST_OBS_FILE_META,
     OBS_MEASURES,
     RETAIN_OBS_STATION,
     RETAIN_OBS_STATION_FILE_META,
+    SOURCE_OBS_META,
 )
 from ..sources.catalog import Catalog
 from ..sources.harvest_csv import read_harvest_csv
@@ -79,8 +82,9 @@ class ObsIngest:
 
     def discover(self) -> int:
         """Find new harvest files for every configured source; append them
-        to the ledger with ingested=False. Returns number discovered."""
-        source_meta = self.catalog.read("source_obs_meta").collect()
+        to the ledger with ingested=False and null TIME windows (filled by
+        :meth:`ingest_new`). Returns number discovered."""
+        source_meta = self.catalog.read("source_obs_meta", SOURCE_OBS_META).collect()
         ledger = self.catalog.read(LEDGER, HARVEST_OBS_FILE_META)
 
         candidates = []
@@ -107,33 +111,21 @@ class ObsIngest:
             "timemark timestamp_ntz, data_source string, source_name string, "
             "source_archive string, source_variable string, location_type string",
         )
-        new = new_files_anti_join(cand, ledger).cache()
+        new = new_files_anti_join(cand, ledger)
         new_rows = new.collect()
         if not new_rows:
-            new.unpersist()
             return 0
-
-        # per-file [min,max] TIME in one distributed read per variable (A1)
-        stats = None
-        for variable in {r.source_variable for r in new_rows}:
-            paths = [self._readable_path(r.dir_path, r.file_name) for r in new_rows
-                     if r.source_variable == variable]
-            s = (read_harvest_csv(self.spark, paths, variable)
-                 .groupBy("file_key")
-                 .agg(F.min("time").alias("data_begin_time"),
-                      F.max("time").alias("data_end_time")))
-            stats = s if stats is None else stats.unionByName(s)
-
+        no_time = F.lit(None).cast("timestamp_ntz")
         entries = (
-            new.withColumn("file_key", F.translate("file_name", ":", "_"))
-            .join(stats, "file_key", "left")
+            self.spark.createDataFrame(new_rows, new.schema)
             .withColumn("processing_datetime", F.current_timestamp().cast("timestamp_ntz"))
+            .withColumn("data_begin_time", no_time)
+            .withColumn("data_end_time", no_time)
             .withColumn("ingested", F.lit(False))
             .withColumn("overlap_past_file_date_time", F.lit(False))
             .select(*[f.name for f in HARVEST_OBS_FILE_META.fields])
         )
         self.catalog.append(entries, LEDGER)
-        new.unpersist()
         return len(new_rows)
 
     # -- stages 2+3: enrich + merge ---------------------------------------
@@ -142,15 +134,17 @@ class ObsIngest:
         """Ingest every pending ledger file into the fact table. Returns
         number of files ingested."""
         ledger = self.catalog.read(LEDGER, HARVEST_OBS_FILE_META)
-        pending = ledger.filter(~F.col("ingested")).orderBy("data_date_time").collect()
+        pending = sorted(ledger.filter(~F.col("ingested")).collect(),
+                         key=lambda r: r.data_date_time)
         if not pending:
             return 0
 
         # source_id lookup: gauge_source ⋈ gauge_station → natural keys
         # (J1+J2). Tiny; broadcast into the fact stream.
-        stations = self.catalog.read("gauge_station").select("station_id", "station_name")
+        stations = (self.catalog.read("gauge_station", GAUGE_STATION)
+                    .select("station_id", "station_name"))
         src_lookup = (
-            self.catalog.read("gauge_source")
+            self.catalog.read("gauge_source", GAUGE_SOURCE)
             .join(stations, "station_id")
             .select("station_name", "data_source", "source_name", "source_archive",
                     "source_id")
@@ -158,34 +152,43 @@ class ObsIngest:
 
         # ledger meta keyed by file_key rides along the CSV rows so one
         # read per measure variable covers every pending source config.
-        meta_rows = [[r.file_name.replace(":", "_"), r.data_source, r.source_name,
-                      r.source_archive, r.data_date_time] for r in pending]
-        pending_meta = (
-            self.spark.createDataFrame(meta_rows,
-                                       "file_key string, data_source string, "
-                                       "source_name string, source_archive string, "
-                                       "data_date_time timestamp_ntz"))
+        pending_meta = self.spark.createDataFrame(
+            [[r.file_name, r.file_name.replace(":", "_"), r.data_source, r.source_name,
+              r.source_archive, r.data_date_time] for r in pending],
+            "file_name string, file_key string, data_source string, source_name string, "
+            "source_archive string, data_date_time timestamp_ntz")
 
-        batch = None
+        rows = None
         for variable in sorted({r.source_variable for r in pending}):
             paths = [self._readable_path(r.dir_path, r.file_name) for r in pending
                      if r.source_variable == variable]
             df = (
                 read_harvest_csv(self.spark, paths, variable)
+                .drop("file_name")  # the staged name; the ledger's comes from meta
                 .join(F.broadcast(pending_meta), "file_key")
-                .join(F.broadcast(src_lookup),
-                      ["station_name", "data_source", "source_name", "source_archive"])
+                .filter(F.col("time").isNotNull())
                 .select(
-                    "source_id", "timemark", "time",
+                    "file_name", "station_name", "data_source", "source_name",
+                    "source_archive", "timemark", "time",
                     *[(F.col(variable) if m == variable else F.lit(None).cast("double"))
                       .alias(m) for m in OBS_MEASURES],
                     F.col("data_date_time").alias("__file_dt"),
                     F.col("file_key").alias("__file_key"),
                 )
             )
-            batch = df if batch is None else batch.unionByName(df)
+            rows = df if rows is None else rows.unionByName(df)
+        # the pass's one CSV read, materialized once; the left join keeps
+        # unknown stations' rows for the windows (they are not merged)
+        rows = (rows.join(F.broadcast(src_lookup),
+                          ["station_name", "data_source", "source_name", "source_archive"],
+                          "left")
+                .localCheckpoint(eager=True))
+        windows = rows.groupBy("file_name").agg(
+            F.min("time").alias("__begin"), F.max("time").alias("__end"))
 
-        batch = batch.filter(F.col("time").isNotNull())
+        batch = (rows.filter(F.col("source_id").isNotNull())
+                 .select("source_id", "timemark", "time", *OBS_MEASURES,
+                         "__file_dt", "__file_key"))
         self.catalog.merge_keep_latest(
             FACT, batch,
             keys=["source_id", "time"],
@@ -194,10 +197,13 @@ class ObsIngest:
             drop_before_write=["__file_dt", "__file_key"],
         )
 
-        done = {r.file_name for r in pending}
-        updated = ledger.withColumn(
-            "ingested",
-            F.when(F.col("file_name").isin(list(done)), F.lit(True)).otherwise(F.col("ingested")),
+        updated = (
+            ledger.join(F.broadcast(windows), "file_name", "left")
+            .withColumn("data_begin_time", F.coalesce("data_begin_time", "__begin"))
+            .withColumn("data_end_time", F.coalesce("data_end_time", "__end"))
+            .withColumn("ingested",
+                        F.col("ingested") | F.col("file_name").isin([r.file_name for r in pending]))
+            .select(*[f.name for f in HARVEST_OBS_FILE_META.fields])
         )
         self.catalog.update(LEDGER, updated)
         return len(pending)
@@ -212,17 +218,15 @@ class ObsIngest:
         (``run/createRetainObsStationFileMeta.py:110-135``), and ledger
         them. Returns number of meta files processed.
 
-        Batched like :meth:`discover`: ONE distributed read computes every
-        paired data file's TIME window (columns are positional
-        ``station, TIME`` across all variables, so a single declared
-        schema covers them) and ONE read collects every meta file's
-        station list, followed by a single snapshot append — no per-file
-        driver loop. Meta files whose paired data file is missing or
-        empty are skipped this pass (retried next pass) instead of
-        aborting the whole sequence ingest."""
-        from pyspark.sql.types import StringType, StructField, StructType
-
-        source_meta = self.catalog.read("source_obs_meta").collect()
+        Batched: the paired data files' windows are the parsed
+        ``data_begin_time``/``data_end_time`` that :meth:`ingest_new`
+        wrote to the obs ledger (one ledger probe, no CSV re-read, so a
+        malformed ``TIME`` cell cannot abort the pass), and ONE read
+        collects every meta file's station list, followed by a single
+        snapshot append — no per-file driver loop. Meta files whose
+        paired data file is not ingested or has no parseable ``TIME``
+        are skipped this pass (retried next pass)."""
+        source_meta = self.catalog.read("source_obs_meta", SOURCE_OBS_META).collect()
         ledger = self.catalog.read("retain_obs_station_file_meta",
                                    RETAIN_OBS_STATION_FILE_META)
 
@@ -256,34 +260,27 @@ class ObsIngest:
             match = _TIMEMARK_RE.search(name)
             if not match:
                 continue
-            data_name = "_".join(name.split("_meta_"))
-            if not os.path.exists(os.path.join(self.harvest_dir, data_name)):
-                continue  # paired data file not harvested (yet)
-            pending.append((name, data_name, _parse_timemark(match), m))
+            pending.append((name, "_".join(name.split("_meta_")),
+                            _parse_timemark(match), m))
         if not pending:
             return 0
 
         def _key(name: str) -> str:
             return name.replace(":", "_")  # staged-symlink identity
 
-        str_col = lambda c: StructField(c, StringType())  # noqa: E731
-        win_df = (
-            self.spark.read
-            .schema(StructType([str_col("station"), str_col("TIME")]))
-            .option("header", True)
-            .csv([self._readable_path(self.harvest_dir, d) for _, d, _, _ in pending])
-            .withColumn("file_key", F.element_at(F.split(F.input_file_name(), "/"), -1))
-            .groupBy("file_key")
-            .agg(F.min("TIME").alias("lo"), F.max("TIME").alias("hi")))
-        windows = {r["file_key"]: (r["lo"], r["hi"]) for r in win_df.collect()}
+        data_names = self.spark.createDataFrame(
+            [(d,) for _, d, _, _ in pending], "file_name string")
+        windows = {r.file_name: (r.data_begin_time, r.data_end_time) for r in
+                   self.catalog.read(LEDGER, HARVEST_OBS_FILE_META)
+                   .join(F.broadcast(data_names), "file_name", "left_semi")
+                   .select("file_name", "data_begin_time", "data_end_time")
+                   .collect()}
 
         const_rows, entries = [], []
         for name, data_name, stamp, m in pending:
-            window = windows.get(_key(data_name))
-            if window is None or window[0] is None or window[1] is None:
-                continue  # empty paired data file: skip, retry next pass
-            begin = dt.datetime.fromisoformat(window[0])
-            end = dt.datetime.fromisoformat(window[1])
+            begin, end = windows.get(data_name, (None, None))
+            if begin is None or end is None:
+                continue  # paired data file missing, empty or not ingested yet
             const_rows.append([_key(name), stamp, begin, end, m.data_source,
                                m.source_name, m.source_archive, m.location_type])
             entries.append([self.harvest_dir, name, m.data_source,
@@ -298,13 +295,11 @@ class ObsIngest:
             "end_date timestamp_ntz, data_source string, source_name string, "
             "source_archive string, location_type string")
         meta_stations = (
-            self.spark.read
-            .schema(StructType([str_col("station")]))
-            .option("header", True)
-            .csv([self._readable_path(self.harvest_dir, n) for n, _, _, _ in pending])
+            self.spark.read.schema("station string").option("header", True)
+            .csv([self._readable_path(self.harvest_dir, e[1]) for e in entries])
             .withColumn("file_key", F.element_at(F.split(F.input_file_name(), "/"), -1))
             .select(F.col("station").alias("station_name"), "file_key"))
-        info = self.catalog.read("gauge_station").select(
+        info = self.catalog.read("gauge_station", GAUGE_STATION).select(
             "station_name", "lat", "lon", "location_name", "tz", "gauge_owner",
             "country", "state", "county", "geom")
         snapshot = (meta_stations

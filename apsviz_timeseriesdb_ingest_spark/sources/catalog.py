@@ -68,13 +68,18 @@ class DynamicOverwriteMerge(MergeStrategy):
     with only the time-bucket partitions the batch touches, rewritten via
     dynamic partition overwrite. Cost is proportional to the batch's time
     window, never the table (the reference's bounded DELETE,
-    ``run/ingestObsTasks.py:390-399``, as partition pruning)."""
+    ``run/ingestObsTasks.py:390-399``, as partition pruning). ``incoming``
+    runs ONCE: it is materialized with ``time_bucket``, and one
+    ``distinct`` over that copy is both the emptiness guard and the
+    month list; the dedup never re-runs the caller's lineage."""
 
     def merge(self, catalog: "Catalog", table: str, incoming: DataFrame,
               keys: Sequence[str], order_by: Sequence[Column], *,
               time_col: str, drop_before_write: Sequence[str]) -> None:
-        incoming = incoming.withColumn(TIME_BUCKET, time_bucket(time_col))
-        if incoming.isEmpty():
+        incoming = (incoming.withColumn(TIME_BUCKET, time_bucket(time_col))
+                    .localCheckpoint(eager=True))
+        months = [r[0] for r in incoming.select(TIME_BUCKET).distinct().collect()]
+        if not months:
             # degenerate batches (e.g. a header-only harvest file) must
             # not create/overwrite anything: writing an empty frame to a
             # fresh table path leaves a parquet dir with no footers that
@@ -88,7 +93,6 @@ class DynamicOverwriteMerge(MergeStrategy):
             catalog.overwrite(deduped, table, partition_by=[TIME_BUCKET],
                               refresh_skipping=False)
             return
-        months = [r[0] for r in incoming.select(TIME_BUCKET).distinct().collect()]
         existing = catalog.read(table).filter(F.col(TIME_BUCKET).isin(months))
         merged = keep_latest(
             existing.unionByName(incoming, allowMissingColumns=True), keys, order_by,
@@ -177,9 +181,13 @@ class Catalog:
         return os.path.isdir(self.path(table))
 
     def read(self, table: str, schema: StructType | None = None) -> DataFrame:
-        if not self.exists(table) and schema is not None:
+        """``schema``: the table's ``schemas.py`` declaration. It skips
+        parquet footer inference (a Spark job per read); a missing table
+        reads as an empty frame of it."""
+        if schema is not None and not self.exists(table):
             return self.spark.createDataFrame([], schema)
-        return self.spark.read.parquet(self.path(table))
+        reader = self.spark.read if schema is None else self.spark.read.schema(schema)
+        return reader.parquet(self.path(table))
 
     def refresh_skipping(self, table: str) -> dict[str, int]:
         """Bring the table's skipping sidecars (``{table}__zm`` /

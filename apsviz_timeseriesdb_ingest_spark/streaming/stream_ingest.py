@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..schemas import OBS_MEASURES
+from ..schemas import GAUGE_SOURCE, GAUGE_STATION, OBS_MEASURES, SOURCE_OBS_META
 from ..sources.catalog import Catalog
 from ..sources.harvest_csv import obs_data_schema
 from ..functions.timeparse import timemark_from_filename
@@ -63,12 +63,13 @@ class StreamingObsIngest:
     def _enrich(self, batch: DataFrame) -> DataFrame:
         """Same enrichment as the batch path: file identity → timemark,
         prefix → source config, station → source_id (broadcast dims)."""
-        meta = (self.catalog.read("source_obs_meta")
+        meta = (self.catalog.read("source_obs_meta", SOURCE_OBS_META)
                 .filter(F.col("source_variable") == self.source_variable)
                 .select("data_source", "source_name", "source_archive",
                         "filename_prefix"))
-        stations = self.catalog.read("gauge_station").select("station_id", "station_name")
-        src_lookup = (self.catalog.read("gauge_source")
+        stations = (self.catalog.read("gauge_station", GAUGE_STATION)
+                    .select("station_id", "station_name"))
+        src_lookup = (self.catalog.read("gauge_source", GAUGE_SOURCE)
                       .join(stations, "station_id")
                       .select("station_name", "data_source", "source_name",
                               "source_archive", "source_id"))
