@@ -78,7 +78,7 @@ def _fact_read(catalog: Catalog, table: str, schema,
     predicates are always applied (r6 verdict task 7: the skipping
     layer now serves the headline read API, not just its own tests)."""
     from ..sources.skipping import zm_table
-    from ..sources.zonemap import prune_files, read_pruned
+    from ..sources.zonemap import ZONEMAP_SCHEMA, prune_files, read_pruned
 
     if time_range is None or not catalog.exists(zm_table(table)) \
             or not catalog.exists(table):
@@ -86,9 +86,9 @@ def _fact_read(catalog: Catalog, table: str, schema,
     lo, hi = (_parse_ntz(b) for b in time_range)
     if lo is None or hi is None:
         return catalog.read(table, schema)
-    keep = prune_files(catalog.read(zm_table(table)), "time", lo, hi,
-                       path=catalog.path(table))
-    return read_pruned(catalog.spark, catalog.path(table), keep)
+    keep = prune_files(catalog.read(zm_table(table), ZONEMAP_SCHEMA), "time",
+                       lo, hi, path=catalog.path(table))
+    return read_pruned(catalog.spark, catalog.path(table), keep, schema)
 
 
 def obs_view(catalog: Catalog, *,

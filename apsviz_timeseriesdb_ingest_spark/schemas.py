@@ -76,6 +76,13 @@ HARVEST_OBS_FILE_META = StructType([
     _f("ingested", B), _f("overlap_past_file_date_time", B),
 ])
 
+#: streaming obs ingest's audit ledger, one row per file (streaming/stream_ingest.py)
+STREAM_OBS_LEDGER = StructType([
+    _f("file_name", S), _f("source_variable", S), _f("data_begin_time", T),
+    _f("data_end_time", T), _f("timemark", T), _f("processing_datetime", T),
+    _f("ingested", B),
+])
+
 #: drf_source_model_meta — run/ingestModelTasks.py:165-166
 SOURCE_MODEL_META = StructType([
     _f("data_source", S), _f("source_name", S), _f("source_archive", S),

@@ -16,8 +16,9 @@ Design for 100 TB:
 
 - **Build** is one distributed, COLUMN-PRUNED pass (``mapInPandas``
   over the file list; each task reads just the probed column of its
-  files via pyarrow). Unlike the zone map this touches row data — a
-  build-once/probe-many artifact, persisted via :func:`build_bloom_skip`.
+  files via pyarrow). Unlike the zone map's driver-side footer read
+  this touches row data — a build-once/probe-many artifact, persisted
+  via :func:`build_bloom_skip`.
 - **Bitmaps are stored as ``array<bigint>`` words** (n_bits/64 per
   row), so probing is a JVM-side ``(word >> bit) & 1`` conjunction
   over the tiny stats table — bitmaps never move to the driver and the
@@ -158,24 +159,38 @@ def build_bloom_skip(catalog, path: str, columns: Iterable[str], *,
     build-once/probe-many form. Returns the file count covered.
 
     ``incremental=True`` collects only files absent from the existing
-    table and retires rows for deleted files (see
-    ``zonemap.build_zonemap``); the geometry must match the existing
-    table's — a mismatch raises rather than plant the mixed-geometry
-    probe error."""
-    from .zonemap import _build_stats
-
-    if incremental and catalog.exists(table):
-        geom = (catalog.read(table).filter("has_bloom")
-                .select("n_bits", "n_hashes").distinct().collect())
-        if geom and (geom[0].n_bits, geom[0].n_hashes) != (n_bits,
-                                                           n_hashes):
-            raise ValueError(
-                f"incremental build geometry ({n_bits}, {n_hashes}) != "
-                f"existing table's ({geom[0].n_bits}, {geom[0].n_hashes})"
-                " — rebuild with incremental=False to change geometry")
-    return _build_stats(catalog, path, columns, table=table,
-                        incremental=incremental, collect=collect_bloom,
-                        n_bits=n_bits, n_hashes=n_hashes)
+    table and retires rows for deleted files through a Spark-side
+    semi-join; the geometry must match the existing table's — a
+    mismatch raises rather than plant the mixed-geometry probe error."""
+    on_disk = list_parquet_files(path)
+    if not incremental or not catalog.exists(table):
+        catalog.overwrite(collect_bloom(catalog.spark, path, columns,
+                                        n_bits=n_bits, n_hashes=n_hashes),
+                          table)
+        return len(on_disk)
+    old = catalog.read(table, BLOOM_SCHEMA)
+    geom = (old.filter("has_bloom")
+            .select("n_bits", "n_hashes").distinct().collect())
+    if geom and (geom[0].n_bits, geom[0].n_hashes) != (n_bits, n_hashes):
+        raise ValueError(
+            f"incremental build geometry ({n_bits}, {n_hashes}) != "
+            f"existing table's ({geom[0].n_bits}, {geom[0].n_hashes})"
+            " — rebuild with incremental=False to change geometry")
+    covered = {r.file for r in old.select("file").distinct().collect()}
+    fresh = [f for f in on_disk if f not in covered]
+    # survivors via a Spark-side semi-join: the bitmaps never reach the
+    # driver (an isin literal would not scale to 100k-file tables);
+    # materialized before the overwrite replaces what it reads
+    disk_df = catalog.spark.createDataFrame([(f,) for f in on_disk],
+                                            "file string")
+    keep = (old.join(F.broadcast(disk_df), "file", "left_semi")
+            .localCheckpoint(eager=True))
+    if fresh:
+        keep = keep.unionByName(collect_bloom(
+            catalog.spark, path, columns, n_bits=n_bits, n_hashes=n_hashes,
+            files=fresh))
+    catalog.overwrite(keep, table)
+    return len(on_disk)
 
 
 def prune_files_bloom(bloom: DataFrame, column: str, values: Sequence,

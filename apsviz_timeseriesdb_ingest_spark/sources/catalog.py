@@ -180,7 +180,7 @@ class Catalog:
     def exists(self, table: str) -> bool:
         return os.path.isdir(self.path(table))
 
-    def read(self, table: str, schema: StructType | None = None) -> DataFrame:
+    def read(self, table: str, schema: StructType | str | None = None) -> DataFrame:
         """``schema``: the table's ``schemas.py`` declaration. It skips
         parquet footer inference (a Spark job per read); a missing table
         reads as an empty frame of it."""

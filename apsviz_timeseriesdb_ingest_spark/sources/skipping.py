@@ -21,13 +21,15 @@ from typing import Iterable, Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .bloomskip import build_bloom_skip, prune_files_bloom
+from .bloomskip import BLOOM_SCHEMA, build_bloom_skip, prune_files_bloom
 from .zonemap import (
+    ZONEMAP_SCHEMA,
     build_zonemap,
     prune_files,
     prune_files_in,
     prune_files_prefix,
     read_pruned,
+    refresh_zonemap,
 )
 
 
@@ -68,31 +70,34 @@ def build_skipping(catalog, table: str, *,
 def skipping_spec(catalog, table: str) -> dict:
     """What the existing sidecars of ``table`` cover, recovered from the
     sidecars THEMSELVES (each stats row names its column; Bloom rows
-    carry their geometry) — so maintenance hooks need no record of the
-    original ``build_skipping`` arguments. Keys present only for
-    sidecars that exist AND have rows: ``range_cols``,
+    carry their geometry) — so no record of the original
+    ``build_skipping`` arguments is needed. :func:`refresh_skipping`
+    takes the zone map's columns from the one sidecar read its refresh
+    makes anyway, and the Bloom part from the same helper as here. Keys
+    present only for sidecars that exist AND have rows: ``range_cols``,
     ``equality_cols``, ``n_bits``, ``n_hashes``. A zero-row sidecar
     (built while the table was empty) names no columns and cannot be
     refreshed — reads already degrade safely against it (uncovered
     files are kept), so it is simply skipped."""
     spec: dict = {}
     if catalog.exists(zm_table(table)):
-        cols = sorted(r["column"] for r in catalog.read(zm_table(table))
+        cols = sorted(r.column for r in _read_zm(catalog, table)
                       .select("column").distinct().collect())
         if cols:
             spec["range_cols"] = cols
-    if catalog.exists(bloom_table(table)):
-        bl = catalog.read(bloom_table(table))
-        cols = sorted(r["column"] for r in
-                      bl.select("column").distinct().collect())
-        if cols:
-            spec["equality_cols"] = cols
-            geom = (bl.filter("has_bloom")
-                    .select("n_bits", "n_hashes").distinct().collect())
-            if geom:
-                spec["n_bits"] = geom[0]["n_bits"]
-                spec["n_hashes"] = geom[0]["n_hashes"]
-    return spec
+    return spec | _bloom_spec(catalog, table)
+
+
+def _bloom_spec(catalog, table: str) -> dict:
+    if not catalog.exists(bloom_table(table)):
+        return {}
+    bl = _read_bloom(catalog, table)
+    cols = sorted(r.column for r in bl.select("column").distinct().collect())
+    if not cols:
+        return {}
+    geom = (bl.filter("has_bloom")
+            .select("n_bits", "n_hashes").distinct().collect())
+    return {"equality_cols": cols, **(geom[0].asDict() if geom else {})}
 
 
 def refresh_skipping(catalog, table: str) -> dict[str, int]:
@@ -101,19 +106,33 @@ def refresh_skipping(catalog, table: str) -> dict[str, int]:
     :class:`~.catalog.Catalog` mutation verbs call automatically, so
     index staleness (previously SAFE but silent: reads just skipped
     less until someone re-ran ``build_skipping``) no longer
-    accumulates. Incremental by construction: appends pay a stats pass
-    over the new files only; compaction/overwrite replaced every file,
-    so the incremental build degenerates to the full rebuild those
-    need. No-op (two dir checks, zero Spark jobs) when the table has
-    no sidecars — which is every table that never opted into skipping."""
-    spec = skipping_spec(catalog, table)
-    if not spec:
-        return {}
-    bloom_kw = {k: spec[k] for k in ("n_bits", "n_hashes") if k in spec}
-    return build_skipping(catalog, table,
-                          range_cols=spec.get("range_cols", ()),
-                          equality_cols=spec.get("equality_cols", ()),
-                          incremental=True, **bloom_kw)
+    accumulates. Incremental by construction: appends pay stats over
+    the new files only; compaction/overwrite replaced every file, so
+    the incremental build degenerates to the full rebuild those need.
+    The zone map refresh is :func:`~.zonemap.refresh_zonemap`: one
+    sidecar read and at most one write. No-op (two dir checks, zero
+    Spark jobs) when the table has no sidecars — which is every table
+    that never opted into skipping."""
+    out: dict[str, int] = {}
+    path = catalog.path(table)
+    if catalog.exists(zm_table(table)):
+        n = refresh_zonemap(catalog, path, table=zm_table(table))
+        if n is not None:
+            out[zm_table(table)] = n
+    spec = _bloom_spec(catalog, table)
+    if spec:
+        out[bloom_table(table)] = build_bloom_skip(
+            catalog, path, spec.pop("equality_cols"),
+            table=bloom_table(table), incremental=True, **spec)
+    return out
+
+
+def _read_zm(catalog, table: str) -> DataFrame:
+    return catalog.read(zm_table(table), ZONEMAP_SCHEMA)
+
+
+def _read_bloom(catalog, table: str) -> DataFrame:
+    return catalog.read(bloom_table(table), BLOOM_SCHEMA)
 
 
 def read_between(catalog, table: str, column: str, lo, hi) -> DataFrame:
@@ -125,7 +144,7 @@ def read_between(catalog, table: str, column: str, lo, hi) -> DataFrame:
     pred = F.col(column).between(F.lit(lo), F.lit(hi))
     if not catalog.exists(zm_table(table)):
         return catalog.read(table).filter(pred)
-    keep = prune_files(catalog.read(zm_table(table)), column, lo, hi,
+    keep = prune_files(_read_zm(catalog, table), column, lo, hi,
                        path=path)
     return read_pruned(catalog.spark, path, keep).filter(pred)
 
@@ -141,10 +160,10 @@ def read_equals(catalog, table: str, column: str,
     vals = list(values)
     pred = F.col(column).isin(vals)
     if catalog.exists(bloom_table(table)):
-        keep = prune_files_bloom(catalog.read(bloom_table(table)),
+        keep = prune_files_bloom(_read_bloom(catalog, table),
                                  column, vals, path=path)
     elif catalog.exists(zm_table(table)):
-        keep = prune_files_in(catalog.read(zm_table(table)), column,
+        keep = prune_files_in(_read_zm(catalog, table), column,
                               vals, path=path)
     else:
         return catalog.read(table).filter(pred)
@@ -162,7 +181,7 @@ def read_prefix(catalog, table: str, column: str,
     pred = F.col(column).startswith(prefix)
     if not catalog.exists(zm_table(table)):
         return catalog.read(table).filter(pred)
-    keep = prune_files_prefix(catalog.read(zm_table(table)), column,
+    keep = prune_files_prefix(_read_zm(catalog, table), column,
                               prefix, path=path)
     return read_pruned(catalog.spark, path, keep).filter(pred)
 
@@ -243,7 +262,7 @@ def read_committed_between(catalog, table: str, column: str, lo, hi, *,
     pred = F.col(column).between(F.lit(lo), F.lit(hi))
     stats_keep = None
     if catalog.exists(zm_table(table)):
-        stats_keep = prune_files(catalog.read(zm_table(table)), column,
+        stats_keep = prune_files(_read_zm(catalog, table), column,
                                  lo, hi, path=catalog.path(table))
     return _committed_pruned_read(catalog, table, index_table,
                                   as_of_batch, stats_keep).filter(pred)
@@ -259,7 +278,7 @@ def read_committed_equals(catalog, table: str, column: str,
     pred = F.col(column).isin(vals)
     stats_keep = None
     if catalog.exists(bloom_table(table)):
-        stats_keep = prune_files_bloom(catalog.read(bloom_table(table)),
+        stats_keep = prune_files_bloom(_read_bloom(catalog, table),
                                        column, vals,
                                        path=catalog.path(table))
     return _committed_pruned_read(catalog, table, index_table,

@@ -27,7 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..schemas import GAUGE_SOURCE, GAUGE_STATION, OBS_MEASURES, SOURCE_OBS_META
+from ..schemas import (GAUGE_SOURCE, GAUGE_STATION, OBS_MEASURES, SOURCE_OBS_META,
+                       STREAM_OBS_LEDGER)
 from ..sources.catalog import Catalog
 from ..sources.harvest_csv import obs_data_schema
 from ..functions.timeparse import timemark_from_filename
@@ -88,7 +89,10 @@ class StreamingObsIngest:
         )
 
     def _merge_batch(self, batch: DataFrame, batch_id: int) -> None:
-        batch = self._enrich(batch).filter(F.col("time").isNotNull())
+        # one run of the enrichment lineage feeds the emptiness guard,
+        # the merge and the ledger rows
+        batch = (self._enrich(batch).filter(F.col("time").isNotNull())
+                 .localCheckpoint(eager=True))
         if batch.isEmpty():
             return
         self.catalog.merge_keep_latest(
@@ -115,7 +119,7 @@ class StreamingObsIngest:
                     F.lit(True).alias("ingested"))
         )
         if self.catalog.exists("stream_obs_ledger"):
-            seen = (self.catalog.read("stream_obs_ledger")
+            seen = (self.catalog.read("stream_obs_ledger", STREAM_OBS_LEDGER)
                     .select("file_name", "source_variable"))
             ledger_rows = ledger_rows.join(
                 F.broadcast(seen), ["file_name", "source_variable"], "left_anti")

@@ -1,7 +1,8 @@
 """Declared-schema guard: every table that ingest or the read API reads
-with its ``schemas.py`` StructType must hold exactly those fields on
-disk. ``Catalog.read(table, schema)`` skips footer inference and reads
-by name, so a written column missing from the declaration would be
+with its ``schemas.py`` StructType (or, for a ``{table}__zm`` zone-map
+sidecar, ``ZONEMAP_SCHEMA``) must hold exactly those fields on disk.
+``Catalog.read(table, schema)`` skips footer inference and reads by
+name, so a written column missing from the declaration would be
 dropped silently, and a declared column missing on disk would read as
 nulls."""
 
@@ -14,6 +15,9 @@ from apsviz_timeseriesdb_ingest_spark.plans.bootstrap import bootstrap
 from apsviz_timeseriesdb_ingest_spark.plans.model_ingest import ModelIngest
 from apsviz_timeseriesdb_ingest_spark.plans.obs_ingest import ObsIngest
 from apsviz_timeseriesdb_ingest_spark.sources.catalog import Catalog
+from apsviz_timeseriesdb_ingest_spark.sources.skipping import build_skipping, zm_table
+from apsviz_timeseriesdb_ingest_spark.sources.zonemap import ZONEMAP_SCHEMA
+from apsviz_timeseriesdb_ingest_spark.streaming import StreamingObsIngest
 
 from .test_model_pipeline import PROPS, RUN_ID
 from .test_obs_pipeline import SOURCE_META_HEADER, SOURCE_META_ROWS, STATIONS, _write
@@ -32,6 +36,7 @@ DECLARED = {
     "model_data": schemas.MODEL_DATA,
     "harvest_model_file_meta": schemas.HARVEST_MODEL_FILE_META,
     "apsviz_station_file_meta": schemas.APSVIZ_STATION_FILE_META,
+    "stream_obs_ledger": schemas.STREAM_OBS_LEDGER,
 }
 
 
@@ -60,7 +65,17 @@ def test_declared_schemas_match_disk(spark, tmp_path_factory):
         "instance_id long, uid string, key string, value string")
     assert ModelIngest(spark, catalog, str(harvest)).ingest_run(RUN_ID, config)["rows"] == 1
 
-    for table, declared in DECLARED.items():
+    stream = root / "stream"
+    stream.mkdir()
+    _write(stream / "noaa_stationdata_water_level_2024-01-01T13_00_00.csv",
+           ["STATION,TIME,WATER_LEVEL", "ST_A,2024-01-01 11:00:00,1.5"])
+    StreamingObsIngest(spark, catalog, str(stream), str(root / "checkpoint"),
+                       source_variable="water_level").run_available()
+    build_skipping(catalog, "gauge_data", range_cols=["time"])
+    tables = dict(DECLARED)
+    tables[zm_table("gauge_data")] = spark.createDataFrame([], ZONEMAP_SCHEMA).schema
+
+    for table, declared in tables.items():
         assert catalog.exists(table), table
         parts = set(catalog.partition_columns(table))
         on_disk = {f.name: f.dataType for f in spark.read.parquet(catalog.path(table)).schema

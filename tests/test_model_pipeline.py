@@ -148,6 +148,8 @@ def test_station_ledger_probe_is_per_run(env, spark):
     history — and a rerun is still idempotent with 10k foreign-run rows
     present (r6 verdict task 4)."""
     catalog = env["catalog"]
+    pipe = ModelIngest(spark, catalog, env["harvest"])
+    pipe.ingest_run(RUN_ID, env["config"])  # idempotent if already ingested
     before = catalog.read("apsviz_station_file_meta").count()
     foreign = spark.range(10_000).select(
         F.lit("/other").alias("dir_path"),
@@ -162,7 +164,6 @@ def test_station_ledger_probe_is_per_run(env, spark):
         F.lit("u").alias("csvurl"), F.lit(True).alias("ingested"))
     catalog.append(foreign, "apsviz_station_file_meta")
 
-    pipe = ModelIngest(spark, catalog, env["harvest"])
     out = pipe.ingest_run(RUN_ID, env["config"])
     # idempotent against its OWN run's ledger row, untouched by history
     assert out["station_files"] == 0

@@ -24,6 +24,7 @@ from apsviz_timeseriesdb_ingest_spark.sources.skipping import (
     zm_table,
 )
 from apsviz_timeseriesdb_ingest_spark.sources.zonemap import (
+    collect_zonemap,
     list_parquet_files,
     prune_files,
 )
@@ -195,3 +196,74 @@ def test_read_equals_zonemap_fallback(spark, catalog):
 
     got = read_prefix(catalog, "t", "name", "b0").count()
     assert got == sum(1 for n in names if n.startswith("b0")) > 0
+
+
+#: one zone-map refresh: a driver read of the sidecar plus one overwrite
+REFRESH_JOB_BUDGET = 2
+
+
+def test_refresh_equals_rebuild_and_job_budget(spark, catalog, tmp_path):
+    """After an append, a keep-latest merge and a compaction, the
+    refreshed ``__zm`` rows equal a full footer pass over the current
+    files, and one refresh runs at most two Spark jobs. The fixture
+    carries an empty part file (``has_stats=False``, null bounds) in a
+    partition no step rewrites, and an all-null column."""
+    import datetime as dt
+    import os
+    import shutil
+
+    from apsviz_timeseriesdb_ingest_spark.sources.catalog import time_bucket
+
+    schema = "id long, time timestamp_ntz, v double"
+    cols = ["time", "v"]
+
+    def frame(ids, day):
+        return spark.createDataFrame(
+            [(i, dt.datetime(2024, 1 + i % 3, day, i % 24), None)
+             for i in ids], schema)
+
+    def assert_current():
+        got = {tuple(r) for r in catalog.read(zm_table("facts")).collect()}
+        want = {tuple(r) for r in
+                collect_zonemap(spark, catalog.path("facts"), cols).collect()}
+        assert got == want
+
+    catalog.merge_keep_latest("facts", frame(range(12), 1), ["id"], ["time"])
+    spark.createDataFrame([], schema).coalesce(1).write.parquet(
+        str(tmp_path / "empty"))
+    empty_dir = os.path.join(catalog.path("facts"), "time_bucket=2024-05")
+    os.makedirs(empty_dir)
+    for f in list_parquet_files(str(tmp_path / "empty")):
+        shutil.copy(f, empty_dir)
+    build_skipping(catalog, "facts", range_cols=cols)
+    zm = catalog.read(zm_table("facts")).collect()
+    assert any(r.file.startswith(empty_dir) and not r.has_stats for r in zm)
+    assert not any(r.has_stats for r in zm if r.column == "v")
+
+    catalog.append(frame(range(100, 106), 2).withColumn("time_bucket", time_bucket()),
+                   "facts", partition_by=["time_bucket"], refresh_skipping=False)
+    sc = spark.sparkContext
+    sc.setJobGroup("zm-refresh-job-budget", "one zone-map refresh")
+    try:
+        out = catalog.refresh_skipping("facts")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup("zm-refresh-job-budget"))
+    assert jobs <= REFRESH_JOB_BUDGET, jobs
+    assert out == {zm_table("facts"): len(list_parquet_files(catalog.path("facts")))}
+    assert_current()
+
+    # touches February only: January and March keep the appended files
+    # that the compaction then rewrites
+    catalog.merge_keep_latest("facts", frame([4, 7, 301], 3), ["id"], ["time"])
+    assert_current()
+    before = set(list_parquet_files(catalog.path("facts")))
+    catalog.compact("facts")
+    assert set(list_parquet_files(catalog.path("facts"))) != before
+    assert_current()
+    assert any(r.file.startswith(empty_dir) and not r.has_stats
+               for r in catalog.read(zm_table("facts")).collect())
+    assert read_between(catalog, "facts", "time", dt.datetime(2024, 2, 1),
+                        dt.datetime(2024, 2, 28)).count() == \
+        catalog.read("facts").filter(F.month("time") == 2).count()

@@ -156,3 +156,62 @@ def test_clean_source_delete(spark, tmp_path_factory):
     # the file source contract, so only assert on the older file)
     assert catalog.read("gauge_data").count() == 2
     assert not os.path.exists(f1)
+
+
+def test_micro_batch_reads_each_landed_row_once(spark, tmp_path):
+    """The micro-batch's enrichment lineage runs once: the stream's own
+    progress reports exactly the landed rows, not one read per use of
+    the batch (emptiness guard, merge, ledger)."""
+    import time
+
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    class Progress(StreamingQueryListener):
+        def __init__(self):
+            self.rows = []
+            self.done = False
+
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            self.rows.append(event.progress.numInputRows)
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            self.done = True
+
+    (tmp_path / "harvest").mkdir()
+    _write(tmp_path / "stations.csv",
+           ["ST_A,34.1,-77.1,gmt,NOAA/NOS,Alpha,tidal,us,nc,NH,0101A"])
+    _write(tmp_path / "meta.csv", [
+        "data_source,source_name,source_archive,source_variable,filename_prefix,location_type,units",
+        "tidal_gauge,noaa,noaa,water_level,noaa_stationdata_water_level,tidal,m",
+    ])
+    catalog = Catalog(spark, str(tmp_path / "warehouse"))
+    bootstrap(spark, catalog, station_csvs=[str(tmp_path / "stations.csv")],
+              source_meta_csv=str(tmp_path / "meta.csv"))
+    _write(tmp_path / "harvest" / "noaa_stationdata_water_level_2024-01-01T00_00_00.csv",
+           ["STATION,TIME,WATER_LEVEL", "ST_A,2024-01-01 00:00:00,1.0",
+            "ST_A,2024-01-01 01:00:00,1.1", "ST_A,2024-01-01 02:00:00,1.2"])
+    _write(tmp_path / "harvest" / "noaa_stationdata_water_level_2024-01-01T03_00_00.csv",
+           ["STATION,TIME,WATER_LEVEL", "ST_A,2024-01-01 03:00:00,1.3",
+            "ST_A,2024-01-01 04:00:00,1.4"])
+
+    listener = Progress()
+    spark.streams.addListener(listener)
+    try:
+        StreamingObsIngest(spark, catalog, str(tmp_path / "harvest"),
+                           str(tmp_path / "checkpoint"),
+                           source_variable="water_level").run_available()
+        # listener events arrive asynchronously, after termination
+        deadline = time.monotonic() + 30
+        while not listener.done and time.monotonic() < deadline:
+            time.sleep(0.1)
+    finally:
+        spark.streams.removeListener(listener)
+    assert listener.done
+    assert catalog.read("gauge_data").count() == 5
+    assert sum(listener.rows) == 5
