@@ -33,7 +33,8 @@ from pyspark.sql import functions as F
 
 from ..functions.predicates import interval_overlaps
 from ..operators.dedup import keep_latest
-from ..schemas import APSVIZ_STATION, RETAIN_OBS_STATION
+from ..schemas import APSVIZ_STATION, GAUGE_STATION, RETAIN_OBS_STATION
+from ..session import local_frame
 from ..sources.catalog import Catalog
 
 #: categories never published as obs stations
@@ -52,7 +53,7 @@ def ingest_retain_obs_station(catalog: Catalog, *, station_names: Sequence[str],
                               source_name: str, source_archive: str,
                               location_type: str) -> None:
     """Append one harvest window's station snapshot to retain_obs_station."""
-    stations = catalog.read("gauge_station").filter(
+    stations = catalog.read("gauge_station", GAUGE_STATION).filter(
         F.col("station_name").isin(list(station_names)))
     snapshot = stations.select(
         "station_name", "lat", "lon", "location_name", "tz", "gauge_owner",
@@ -69,7 +70,7 @@ def ingest_retain_obs_station(catalog: Catalog, *, station_names: Sequence[str],
 
 
 def _station_info(catalog: Catalog) -> DataFrame:
-    return catalog.read("gauge_station").select(*STATION_INFO_COLS)
+    return catalog.read("gauge_station", GAUGE_STATION).select(*STATION_INFO_COLS)
 
 
 def publish_apsviz_stations(spark: SparkSession, catalog: Catalog, *,
@@ -92,12 +93,12 @@ def publish_apsviz_stations(spark: SparkSession, catalog: Catalog, *,
     }
 
     info = F.broadcast(_station_info(catalog))
+    adcirc_names = local_frame(spark, [(s,) for s in adcirc_station_names],
+                               "station_name string")
 
     # --- ADCIRC side ------------------------------------------------------
     adcirc = (
-        spark.createDataFrame([(s,) for s in adcirc_station_names],
-                              "station_name string")
-        .join(info, "station_name")
+        adcirc_names.join(info, "station_name")
         .withColumns(run_consts)
         .withColumn("data_source", F.lit(data_source))
         .withColumn("source_name", F.lit(source_name))
@@ -127,10 +128,7 @@ def publish_apsviz_stations(spark: SparkSession, catalog: Catalog, *,
     obs = keep_latest(obs, ["station_name"],
                       [F.col("data_source").asc(), F.col("source_name").asc()])
     # anti-join: obs stations already covered by ADCIRC drop out (J5)
-    obs = obs.join(
-        spark.createDataFrame([(s,) for s in adcirc_station_names],
-                              "station_name string"),
-        "station_name", "left_anti")
+    obs = obs.join(adcirc_names, "station_name", "left_anti")
     obs_out = (
         obs.drop("gauge_owner")
         .join(info, "station_name")

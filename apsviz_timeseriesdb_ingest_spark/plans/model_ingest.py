@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from ..schemas import (GAUGE_STATION, HARVEST_MODEL_FILE_META, MODEL_DATA, MODEL_SOURCE,
                        SOURCE_MODEL_META)
+from ..session import local_frame
 from ..sources.catalog import Catalog
 from ..sources.harvest_csv import read_harvest_csv
 from .bootstrap import source_key
@@ -102,9 +103,8 @@ class ModelIngest:
                 self.catalog.read("source_model_meta", SOURCE_MODEL_META),
                 src["filename_prefix"], src["source_instance"]):
             return
-        row = self.spark.createDataFrame(
-            [[src[f.name] for f in SOURCE_MODEL_META.fields]], SOURCE_MODEL_META)
-        self.catalog.append(row, "source_model_meta")
+        self.catalog.append(local_frame(self.spark, [src], SOURCE_MODEL_META),
+                            "source_model_meta")
 
         stations = (self.catalog.read("gauge_station", GAUGE_STATION)
                     .filter(F.col("location_type") == src["location_type"]))
@@ -145,8 +145,8 @@ class ModelIngest:
         processing = dt.datetime.now().replace(microsecond=0)
         keys =["data_source", "source_name", "source_archive", "source_instance",
                 "forcing_metclass"]
-        file_srcs = self.spark.createDataFrame(
-            [[os.path.basename(path)] + [src[k] for k in keys] for path, _, src in files],
+        file_srcs = local_frame(self.spark, [
+            [os.path.basename(path)] + [src[k] for k in keys] for path, _, src in files],
             ", ".join(f"{k} string" for k in ["file_name", *keys]))
         lookup = (self.catalog.read("model_source", MODEL_SOURCE).join(file_srcs, keys)
                   .join(self.catalog.read("gauge_station", GAUGE_STATION)
@@ -189,10 +189,8 @@ class ModelIngest:
             time_col="time", drop_before_write=["__proc_dt"],
         )
 
-        entries = self.spark.createDataFrame(
-            [[r[f.name] for f in HARVEST_MODEL_FILE_META.fields] for r in ledger_rows],
-            HARVEST_MODEL_FILE_META)
-        self.catalog.append(entries, LEDGER)
+        self.catalog.append(local_frame(self.spark, ledger_rows, HARVEST_MODEL_FILE_META),
+                            LEDGER)
 
         published = self.publish_stations(model_run_id, props, timemark)
         return {"files": len(files), "rows": n_rows, "station_files": published}
@@ -266,7 +264,7 @@ class ModelIngest:
                             src["location_type"], self.ui_data_url, True])
         if entries:
             self.catalog.append(
-                self.spark.createDataFrame(entries, APSVIZ_STATION_FILE_META),
+                local_frame(self.spark, entries, APSVIZ_STATION_FILE_META),
                 "apsviz_station_file_meta")
         return len(entries)
 

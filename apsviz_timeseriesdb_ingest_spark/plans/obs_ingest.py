@@ -43,6 +43,7 @@ from ..schemas import (
     RETAIN_OBS_STATION_FILE_META,
     SOURCE_OBS_META,
 )
+from ..session import local_frame
 from ..sources.catalog import Catalog
 from ..sources.harvest_csv import read_harvest_csv
 
@@ -105,8 +106,8 @@ class ObsIngest:
                 })
         if not candidates:
             return 0
-        cand = self.spark.createDataFrame(
-            candidates,
+        cand = local_frame(
+            self.spark, candidates,
             "dir_path string, file_name string, data_date_time timestamp_ntz, "
             "timemark timestamp_ntz, data_source string, source_name string, "
             "source_archive string, source_variable string, location_type string",
@@ -117,7 +118,7 @@ class ObsIngest:
             return 0
         no_time = F.lit(None).cast("timestamp_ntz")
         entries = (
-            self.spark.createDataFrame(new_rows, new.schema)
+            local_frame(self.spark, new_rows, new.schema)
             .withColumn("processing_datetime", F.current_timestamp().cast("timestamp_ntz"))
             .withColumn("data_begin_time", no_time)
             .withColumn("data_end_time", no_time)
@@ -152,9 +153,9 @@ class ObsIngest:
 
         # ledger meta keyed by file_key rides along the CSV rows so one
         # read per measure variable covers every pending source config.
-        pending_meta = self.spark.createDataFrame(
-            [[r.file_name, r.file_name.replace(":", "_"), r.data_source, r.source_name,
-              r.source_archive, r.data_date_time] for r in pending],
+        pending_meta = local_frame(self.spark, [
+            [r.file_name, r.file_name.replace(":", "_"), r.data_source, r.source_name,
+             r.source_archive, r.data_date_time] for r in pending],
             "file_name string, file_key string, data_source string, source_name string, "
             "source_archive string, data_date_time timestamp_ntz")
 
@@ -244,8 +245,7 @@ class ObsIngest:
         # history) — the model-side r6 verdict task 4 applied to the
         # retain-obs ledger
         if candidates:
-            names = self.spark.createDataFrame(
-                [(n,) for n, _ in candidates], "file_name string")
+            names = local_frame(self.spark, [(n,) for n, _ in candidates], "file_name string")
             seen = {r.file_name for r in
                     ledger.join(F.broadcast(names), "file_name",
                                 "left_semi")
@@ -268,8 +268,7 @@ class ObsIngest:
         def _key(name: str) -> str:
             return name.replace(":", "_")  # staged-symlink identity
 
-        data_names = self.spark.createDataFrame(
-            [(d,) for _, d, _, _ in pending], "file_name string")
+        data_names = local_frame(self.spark, [(d,) for _, d, _, _ in pending], "file_name string")
         windows = {r.file_name: (r.data_begin_time, r.data_end_time) for r in
                    self.catalog.read(LEDGER, HARVEST_OBS_FILE_META)
                    .join(F.broadcast(data_names), "file_name", "left_semi")
@@ -289,8 +288,8 @@ class ObsIngest:
         if not const_rows:
             return 0
 
-        consts = self.spark.createDataFrame(
-            const_rows,
+        consts = local_frame(
+            self.spark, const_rows,
             "file_key string, timemark timestamp_ntz, begin_date timestamp_ntz, "
             "end_date timestamp_ntz, data_source string, source_name string, "
             "source_archive string, location_type string")
@@ -308,7 +307,7 @@ class ObsIngest:
                     .select(*[f.name for f in RETAIN_OBS_STATION.fields]))
         self.catalog.append(snapshot, "retain_obs_station")
         self.catalog.append(
-            self.spark.createDataFrame(entries, RETAIN_OBS_STATION_FILE_META),
+            local_frame(self.spark, entries, RETAIN_OBS_STATION_FILE_META),
             "retain_obs_station_file_meta")
         return len(entries)
 

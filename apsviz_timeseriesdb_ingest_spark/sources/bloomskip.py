@@ -49,6 +49,7 @@ from typing import Iterable, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from .zonemap import _render, list_parquet_files
 
 #: stats-table schema: one row per (file, column); ``words`` is the
@@ -95,7 +96,7 @@ def collect_bloom(spark: SparkSession, path: str, columns: Iterable[str],
     files = list_parquet_files(path) if files is None else list(files)
     cols = list(columns)
     if not files:
-        return spark.createDataFrame([], BLOOM_SCHEMA)
+        return local_frame(spark, [], BLOOM_SCHEMA)
     n_words = (n_bits + 63) // 64
     cap = n_bits // MIN_BITS_PER_DISTINCT
 
@@ -146,7 +147,7 @@ def collect_bloom(spark: SparkSession, path: str, columns: Iterable[str],
                 "num_rows", "words", "has_bloom"])
 
     par = min(len(files), spark.sparkContext.defaultParallelism)
-    return (spark.createDataFrame([(f,) for f in files], "file string")
+    return (local_frame(spark, [(f,) for f in files], "file string")
             .repartition(par)
             .mapInPandas(scan, schema=BLOOM_SCHEMA))
 
@@ -181,8 +182,7 @@ def build_bloom_skip(catalog, path: str, columns: Iterable[str], *,
     # survivors via a Spark-side semi-join: the bitmaps never reach the
     # driver (an isin literal would not scale to 100k-file tables);
     # materialized before the overwrite replaces what it reads
-    disk_df = catalog.spark.createDataFrame([(f,) for f in on_disk],
-                                            "file string")
+    disk_df = local_frame(catalog.spark, [(f,) for f in on_disk], "file string")
     keep = (old.join(F.broadcast(disk_df), "file", "left_semi")
             .localCheckpoint(eager=True))
     if fresh:

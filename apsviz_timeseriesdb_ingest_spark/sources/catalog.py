@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from ..operators.dedup import keep_latest
+from ..session import local_frame
 
 #: partition column derived from event time for fact tables
 TIME_BUCKET = "time_bucket"
@@ -185,7 +186,7 @@ class Catalog:
         parquet footer inference (a Spark job per read); a missing table
         reads as an empty frame of it."""
         if schema is not None and not self.exists(table):
-            return self.spark.createDataFrame([], schema)
+            return local_frame(self.spark, [], schema)
         reader = self.spark.read if schema is None else self.spark.read.schema(schema)
         return reader.parquet(self.path(table))
 
@@ -643,8 +644,7 @@ class Catalog:
         rows = self.committed_batches(ledger)
         if as_of is not None:
             rows = [r for r in rows if r[0] <= int(as_of)]
-        return self.spark.createDataFrame(
-            rows, "__batch long, __writer string")
+        return local_frame(self.spark, rows, "__batch long, __writer string")
 
     def read_committed(self, table: str,
                        index_table: str = "minhash_index",

@@ -36,6 +36,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from ..session import local_frame
+
 #: stats-table schema; values rendered to strings so ONE table covers
 #: every column type (comparisons re-parse via ``dtype`` at prune time)
 ZONEMAP_SCHEMA = ("file string, column string, dtype string, "
@@ -138,8 +140,7 @@ def collect_zonemap(spark: SparkSession, path: str,
     """:func:`footer_stats` over the table's data files (or ``files``)
     as a frame."""
     files = list_parquet_files(path) if files is None else files
-    return spark.createDataFrame(footer_stats(files, columns),
-                                 ZONEMAP_SCHEMA)
+    return local_frame(spark, footer_stats(files, columns), ZONEMAP_SCHEMA)
 
 
 def build_zonemap(catalog, path: str, columns: Iterable[str], *,
@@ -175,11 +176,11 @@ def _write_zonemap(catalog, path: str, columns: Iterable[str], table: str,
     if old is not None:
         covered, live = {r.file for r in old}, set(on_disk)
         new = [f for f in on_disk if f not in covered]
-        rows = [tuple(r) for r in old if r.file in live]
+        rows = [r for r in old if r.file in live]
         if not new and len(rows) == len(old):
             return len(on_disk)
-    catalog.overwrite(catalog.spark.createDataFrame(
-        rows + footer_stats(new, columns), ZONEMAP_SCHEMA), table)
+    catalog.overwrite(local_frame(catalog.spark, rows + footer_stats(new, columns),
+                                  ZONEMAP_SCHEMA), table)
     return len(on_disk)
 
 

@@ -43,6 +43,26 @@ def spark():
     yield s
 
 
+@pytest.fixture
+def parallelize_calls(monkeypatch):
+    """A list that grows by one per ``SparkContext.parallelize`` call.
+
+    ``createDataFrame`` of a Python list goes through ``parallelize``,
+    and every task that reads such a frame runs a Python worker;
+    ``session.local_frame`` does not call it."""
+    from pyspark import SparkContext
+
+    calls = []
+    parallelize = SparkContext.parallelize
+
+    def counted(self, *args, **kwargs):
+        calls.append(args[0] if args else kwargs.get("c"))
+        return parallelize(self, *args, **kwargs)
+
+    monkeypatch.setattr(SparkContext, "parallelize", counted)
+    return calls
+
+
 @pytest.fixture(scope="session")
 def sf_small():
     return SF_SMALL

@@ -1,0 +1,104 @@
+"""``session.local_frame`` builds the same frame as
+``spark.createDataFrame(rows, schema)`` for every schema the ingest path
+hands it: the declared tables, the skipping sidecars and the DDL strings
+of the driver-rows call sites."""
+
+from __future__ import annotations
+
+import datetime as dt
+
+import pytest
+from pyspark.sql import Row
+from pyspark.sql.types import (
+    ArrayType,
+    BooleanType,
+    DoubleType,
+    IntegerType,
+    LongType,
+    StringType,
+    StructType,
+    TimestampNTZType,
+)
+
+from apsviz_timeseriesdb_ingest_spark import schemas
+from apsviz_timeseriesdb_ingest_spark.session import local_frame
+from apsviz_timeseriesdb_ingest_spark.sources.bloomskip import BLOOM_SCHEMA
+from apsviz_timeseriesdb_ingest_spark.sources.zonemap import ZONEMAP_SCHEMA
+
+TS = dt.datetime(2024, 1, 2, 3, 4, 5, 678901)
+
+#: the DDL strings passed by the plans/ and sources/ call sites
+CALL_SITE_DDL = {
+    "obs_candidates": "dir_path string, file_name string, data_date_time timestamp_ntz, "
+                      "timemark timestamp_ntz, data_source string, source_name string, "
+                      "source_archive string, source_variable string, location_type string",
+    "obs_pending_meta": "file_name string, file_key string, data_source string, "
+                        "source_name string, source_archive string, "
+                        "data_date_time timestamp_ntz",
+    "obs_station_meta_consts": "file_key string, timemark timestamp_ntz, "
+                               "begin_date timestamp_ntz, end_date timestamp_ntz, "
+                               "data_source string, source_name string, "
+                               "source_archive string, location_type string",
+    "model_file_srcs": "file_name string, data_source string, source_name string, "
+                       "source_archive string, source_instance string, "
+                       "forcing_metclass string",
+    "file_name": "file_name string",
+    "station_name": "station_name string",
+    "file": "file string",
+    "committed": "__batch long, __writer string",
+    "zonemap": ZONEMAP_SCHEMA,
+    "bloom": BLOOM_SCHEMA,
+}
+
+SCHEMAS = {**{name: s for name, s in vars(schemas).items() if isinstance(s, StructType)},
+           **CALL_SITE_DDL}
+
+_SAMPLE = {
+    StringType: "s:1", LongType: 2 ** 62, IntegerType: -7, DoubleType: 1.5,
+    BooleanType: True, TimestampNTZType: TS,
+}
+
+
+def _sample(dtype):
+    if isinstance(dtype, ArrayType):
+        return [1, None, -(2 ** 63)]
+    return _SAMPLE[type(dtype)]
+
+
+def _struct(schema) -> StructType:
+    return StructType.fromDDL(schema) if isinstance(schema, str) else schema
+
+
+def test_every_declared_schema_is_covered():
+    assert {"GAUGE_DATA", "HARVEST_OBS_FILE_META", "APSVIZ_STATION_FILE_META",
+            "RETAIN_OBS_STATION", "STREAM_OBS_LEDGER", "CONFIG_ITEM"} <= set(SCHEMAS)
+
+
+@pytest.mark.parametrize("name", sorted(SCHEMAS))
+def test_same_frame_as_create_dataframe(spark, name):
+    schema = SCHEMAS[name]
+    names = _struct(schema).fieldNames()
+    values = [_sample(f.dataType) for f in _struct(schema).fields]
+    rows = [tuple(values), Row(**dict(zip(names, values))), dict(zip(names, values)),
+            [None] * len(names), {}]
+    got, want = local_frame(spark, rows, schema), spark.createDataFrame(rows, schema)
+    assert got.dtypes == want.dtypes
+    assert got.schema == want.schema
+    assert got.collect() == want.collect()
+    assert got.collect()[0] == tuple(values)  # timestamps stay wall-clock
+    empty = local_frame(spark, [], schema)
+    assert empty.dtypes == want.dtypes and empty.collect() == []
+
+
+@pytest.mark.parametrize("row", [
+    ("x", "2024-01-02 03:04:05", 1),  # string in a timestamp_ntz field
+    ("x", TS, "1"),                   # string in a long field
+    ("x", TS),                        # too few values
+    ("x", TS, 1, 2),                  # too many values
+])
+def test_value_that_does_not_fit_raises(spark, row):
+    ddl = "name string, at timestamp_ntz, n long"
+    with pytest.raises((TypeError, ValueError)):
+        spark.createDataFrame([row], ddl)
+    with pytest.raises((TypeError, ValueError)):
+        local_frame(spark, [row], ddl)

@@ -106,10 +106,13 @@ def test_f6_source_derivation():
     assert derive_source(PROPS, "FORECAST", "NDBCBUOYS")["location_type"] == "ocean"
 
 
-def test_ingest_run(env, spark):
+def test_ingest_run(env, spark, parallelize_calls):
     pipe = ModelIngest(spark, env["catalog"], env["harvest"])
     out = pipe.ingest_run(RUN_ID, env["config"])
     assert out == {"files": 2, "rows": 5, "station_files": 1}
+    # source registration, ledgers and the station publish build their
+    # driver rows through Arrow, never as a Python RDD
+    assert len(parallelize_calls) == 0, parallelize_calls
     # sources auto-registered: forecast + nowcast
     meta = env["catalog"].read("source_model_meta")
     assert meta.count() == 2

@@ -468,7 +468,7 @@ def test_station_meta_malformed_boundary_time(spark, tmp_path_factory):
 OBS_PASS_JOB_BUDGET = 30
 
 
-def test_obs_pass_job_budget(spark, tmp_path_factory):
+def test_obs_pass_job_budget(spark, tmp_path_factory, parallelize_calls):
     catalog, harvest = _fresh_env(spark, tmp_path_factory, "obsjobs")
     pipe = ObsIngest(spark, catalog, harvest)
     _harvest_file(harvest, "noaa_stationdata_water_level", "2024-01-01T02:00:00", FILE1)
@@ -479,6 +479,7 @@ def test_obs_pass_job_budget(spark, tmp_path_factory):
                   [("ST_C", "2024-01-01 01:00:00", 3.1)])
     _write(os.path.join(harvest, "noaa_stationdata_meta_water_level_2024-01-01T04:00:00.csv"),
            ["STATION,LAT,LON", "ST_A,34.1,-77.1"])
+    parallelize_calls.clear()
     sc = spark.sparkContext
     sc.setJobGroup("obs-pass-job-budget", "one obs ingest pass")
     try:
@@ -489,3 +490,5 @@ def test_obs_pass_job_budget(spark, tmp_path_factory):
     assert out == {"discovered": 2, "ingested": 2, "station_meta": 1}
     jobs = len(sc.statusTracker().getJobIdsForGroup("obs-pass-job-budget"))
     assert jobs <= OBS_PASS_JOB_BUDGET, jobs
+    # driver rows reach Spark through Arrow, never as a Python RDD
+    assert len(parallelize_calls) == 0, parallelize_calls
