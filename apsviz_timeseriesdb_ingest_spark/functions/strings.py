@@ -11,10 +11,3 @@ def sanitize_pivot_label(label: str) -> str:
     any number of dots.
     """
     return label.replace(".", "")
-
-
-def csv_url(base: str, **params: str) -> str:
-    """Build the csvurl the reference attaches to apsviz stations
-    (``run/createIngestApsVizStationData.py:317-319``)."""
-    query = "&".join(f"{k}={v}" for k, v in params.items())
-    return f"{base}?{query}" if query else base

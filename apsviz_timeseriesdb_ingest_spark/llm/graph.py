@@ -107,12 +107,12 @@ def pagerank(edges: DataFrame, *, src_col: str = "src",
     ``resume=True`` (requires ``checkpoint_catalog``) makes a DRIVER
     loss recoverable too: each durable ranks write also records a
     ``{checkpoint_prefix}_progress`` row (completed iteration + slot
-    table), and a resumed call reloads edges/nodes/outdeg/ranks from
-    the tables and continues from the recorded iteration — losing at
-    most ``checkpoint_every - 1`` rounds of work. The resumed result is
-    bit-identical to an uninterrupted run (decimal-summed updates;
-    tested). The caller owns passing the SAME edges/damping — the
-    tables cannot validate that.
+    table), and a resumed call reads that progress row, the edges slot
+    and the recorded ``(node, rank, out)`` ranks slot, and continues from
+    the recorded iteration — losing at most ``checkpoint_every - 1``
+    rounds of work. The resumed result is bit-identical to an
+    uninterrupted run (decimal-summed updates; tested). The caller owns
+    passing the SAME edges/damping — the tables cannot validate that.
     """
     from ..operators.itercheckpoint import LineageCutter
 
@@ -133,18 +133,6 @@ def pagerank(edges: DataFrame, *, src_col: str = "src",
                     f"'{progress_table}' tables for a fresh run")
             es = checkpoint_catalog.read(f"{checkpoint_prefix}_edges_0")
             ranks = checkpoint_catalog.read(ranks_tbl)
-            if "out" not in ranks.columns:
-                # ranks slot written before r12 (state was (node, rank);
-                # out-degree folded into the state since) — rebuild the
-                # folded form once from the durable outdeg slot; the
-                # decimal-grid update is identical either way
-                outdeg = checkpoint_catalog.read(
-                    f"{checkpoint_prefix}_outdeg_0")
-                ranks = ranks.join(outdeg, "node", "left") \
-                    .select("node", "rank", "out")
-            cut.seed("edges", 1)
-            cut.seed("nodes", 1)
-            cut.seed("outdeg", 1)
             cut.seed("ranks", done)
             for i in range(done, iters):
                 ranks = _pagerank_pass(es, ranks, damping, cut)
@@ -170,8 +158,9 @@ def pagerank(edges: DataFrame, *, src_col: str = "src",
     outdeg = (es.groupBy("src").agg(F.sum("w").alias("out"))
               .withColumnRenamed("src", "node"))
     if checkpoint_catalog is not None:
-        # durable slots are the resume contract; in local mode both
-        # frames fold into the first pass's cut instead (2 fewer jobs)
+        # durable slots (resume reads only edges and ranks); in local
+        # mode both frames fold into the first pass's cut instead (2
+        # fewer jobs)
         nodes = cut(nodes, "nodes")
         outdeg = cut(outdeg, "outdeg")
     # node count rides as a broadcast one-row aggregate (same fold as

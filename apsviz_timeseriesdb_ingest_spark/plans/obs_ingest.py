@@ -13,12 +13,17 @@ Reference stages (per-source subprocesses + intermediate CSVs) collapse to:
                      batch's time window (J7/M3), one ledger update fills
                      the windows and flips ingested (M2)
 
+The source lookup, the measure fan-out and the keep-latest merge are
+module functions that the streaming path (``streaming/stream_ingest``)
+calls too, so batch and stream enrich and merge with the same code.
+
 Keep-latest ordering: the reference keeps the highest serial ``obs_id``
 per (source_id, time) — i.e. last-loaded wins, and files are loaded in
 ``data_date_time`` order (``run/ingestObsTasks.py:45-56,233-237``). The
-deterministic Spark equivalent orders by (timemark DESC, file data
-datetime DESC, file_name DESC): newest harvest wins regardless of load
-order, making ingest permutation-invariant where the reference is
+deterministic Spark equivalent orders by (timemark DESC, file key DESC):
+``discover`` stamps ``data_date_time`` and ``timemark`` from the same
+file-name timemark, so the newest harvest wins regardless of load order,
+making ingest permutation-invariant where the reference is
 order-dependent.
 """
 
@@ -29,9 +34,10 @@ import os
 import re
 from glob import glob
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.timeparse import TIMEMARK_RE
 from ..operators.ledger import new_files_anti_join
 from ..schemas import (
     GAUGE_DATA,
@@ -50,13 +56,53 @@ from ..sources.harvest_csv import read_harvest_csv
 LEDGER = "harvest_obs_file_meta"
 FACT = "gauge_data"
 
-#: accepts ':' or '_' separators (colon-free names are the streaming-safe
-#: producer convention; see functions/timeparse.TIMEMARK_RE)
-_TIMEMARK_RE = re.compile(r"(\d+-\d+-\d+T\d+[:_]\d+[:_]\d+)")
+
+def _timemark_of(name: str) -> dt.datetime | None:
+    """The timemark a harvest file name embeds (F1, driver side), or
+    None when it has none."""
+    match = re.search(TIMEMARK_RE, name)
+    return dt.datetime.fromisoformat(match.group(1).replace("_", ":")) if match else None
 
 
-def _parse_timemark(match: re.Match) -> dt.datetime:
-    return dt.datetime.fromisoformat(match.group(1).replace("_", ":"))
+def _staged_name(file_name: str) -> str:
+    """Colon-free identity of a harvest file: Hadoop paths cannot contain
+    ':', so colon-named files are staged and joined under this name."""
+    return file_name.replace(":", "_")
+
+
+def join_source_id(rows: DataFrame, catalog: Catalog, how: str = "inner") -> DataFrame:
+    """Attach ``source_id`` to rows keyed by station and source config:
+    the gauge_source ⋈ gauge_station lookup (J1+J2), tiny and broadcast."""
+    stations = catalog.read("gauge_station", GAUGE_STATION).select("station_id", "station_name")
+    lookup = (catalog.read("gauge_source", GAUGE_SOURCE)
+              .join(stations, "station_id")
+              .select("station_name", "data_source", "source_name", "source_archive",
+                      "source_id"))
+    return rows.join(F.broadcast(lookup),
+                     ["station_name", "data_source", "source_name", "source_archive"], how)
+
+
+def measure_columns(variable: str) -> list[Column]:
+    """The sparse 6-measure layout (S6): ``variable``'s values, NULL
+    doubles for every other measure."""
+    return [(F.col(variable) if m == variable else F.lit(None).cast("double")).alias(m)
+            for m in OBS_MEASURES]
+
+
+def merge_obs(catalog: Catalog, rows: DataFrame) -> None:
+    """Keep-latest merge of enriched rows (``source_id``, ``timemark``,
+    ``time``, the measures, ``file_name``) into gauge_data: per
+    (source_id, time) the newest (timemark, file key) wins, the file key
+    being the colon-free :func:`_staged_name`."""
+    catalog.merge_keep_latest(
+        FACT,
+        rows.select("source_id", "timemark", "time", *OBS_MEASURES,
+                    F.translate("file_name", ":", "_").alias("__file_key")),
+        keys=["source_id", "time"],
+        order_by=["timemark", "__file_key"],
+        time_col="time",
+        drop_before_write=["__file_key"],
+    )
 
 
 class ObsIngest:
@@ -74,7 +120,7 @@ class ObsIngest:
             return os.path.join(dir_path, file_name)
         staged = os.path.join(dir_path, ".staged")
         os.makedirs(staged, exist_ok=True)
-        link = os.path.join(staged, file_name.replace(":", "_"))
+        link = os.path.join(staged, _staged_name(file_name))
         if not os.path.lexists(link):
             os.symlink(os.path.abspath(os.path.join(dir_path, file_name)), link)
         return link
@@ -92,10 +138,9 @@ class ObsIngest:
         for m in source_meta:
             for path in sorted(glob(os.path.join(self.harvest_dir, m.filename_prefix + "*.csv"))):
                 name = os.path.basename(path)
-                match = _TIMEMARK_RE.search(name)
-                if not match:  # null-guard path (run/createHarvestObsFileMeta.py:159-164)
+                stamp = _timemark_of(name)
+                if stamp is None:  # null-guard path (run/createHarvestObsFileMeta.py:159-164)
                     continue
-                stamp = _parse_timemark(match)
                 candidates.append({
                     "dir_path": os.path.dirname(path), "file_name": name,
                     "data_date_time": stamp, "timemark": stamp,
@@ -140,24 +185,13 @@ class ObsIngest:
         if not pending:
             return 0
 
-        # source_id lookup: gauge_source ⋈ gauge_station → natural keys
-        # (J1+J2). Tiny; broadcast into the fact stream.
-        stations = (self.catalog.read("gauge_station", GAUGE_STATION)
-                    .select("station_id", "station_name"))
-        src_lookup = (
-            self.catalog.read("gauge_source", GAUGE_SOURCE)
-            .join(stations, "station_id")
-            .select("station_name", "data_source", "source_name", "source_archive",
-                    "source_id")
-        )
-
         # ledger meta keyed by file_key rides along the CSV rows so one
         # read per measure variable covers every pending source config.
         pending_meta = local_frame(self.spark, [
-            [r.file_name, r.file_name.replace(":", "_"), r.data_source, r.source_name,
-             r.source_archive, r.data_date_time] for r in pending],
+            [r.file_name, _staged_name(r.file_name), r.data_source, r.source_name,
+             r.source_archive] for r in pending],
             "file_name string, file_key string, data_source string, source_name string, "
-            "source_archive string, data_date_time timestamp_ntz")
+            "source_archive string")
 
         rows = None
         for variable in sorted({r.source_variable for r in pending}):
@@ -168,35 +202,16 @@ class ObsIngest:
                 .drop("file_name")  # the staged name; the ledger's comes from meta
                 .join(F.broadcast(pending_meta), "file_key")
                 .filter(F.col("time").isNotNull())
-                .select(
-                    "file_name", "station_name", "data_source", "source_name",
-                    "source_archive", "timemark", "time",
-                    *[(F.col(variable) if m == variable else F.lit(None).cast("double"))
-                      .alias(m) for m in OBS_MEASURES],
-                    F.col("data_date_time").alias("__file_dt"),
-                    F.col("file_key").alias("__file_key"),
-                )
+                .select("file_name", "station_name", "data_source", "source_name",
+                        "source_archive", "timemark", "time", *measure_columns(variable))
             )
             rows = df if rows is None else rows.unionByName(df)
         # the pass's one CSV read, materialized once; the left join keeps
         # unknown stations' rows for the windows (they are not merged)
-        rows = (rows.join(F.broadcast(src_lookup),
-                          ["station_name", "data_source", "source_name", "source_archive"],
-                          "left")
-                .localCheckpoint(eager=True))
+        rows = join_source_id(rows, self.catalog, "left").localCheckpoint(eager=True)
         windows = rows.groupBy("file_name").agg(
             F.min("time").alias("__begin"), F.max("time").alias("__end"))
-
-        batch = (rows.filter(F.col("source_id").isNotNull())
-                 .select("source_id", "timemark", "time", *OBS_MEASURES,
-                         "__file_dt", "__file_key"))
-        self.catalog.merge_keep_latest(
-            FACT, batch,
-            keys=["source_id", "time"],
-            order_by=["timemark", "__file_dt", "__file_key"],
-            time_col="time",
-            drop_before_write=["__file_dt", "__file_key"],
-        )
+        merge_obs(self.catalog, rows.filter(F.col("source_id").isNotNull()))
 
         updated = (
             ledger.join(F.broadcast(windows), "file_name", "left")
@@ -257,16 +272,12 @@ class ObsIngest:
         for name, m in candidates:
             if name in seen:
                 continue
-            match = _TIMEMARK_RE.search(name)
-            if not match:
+            stamp = _timemark_of(name)
+            if stamp is None:
                 continue
-            pending.append((name, "_".join(name.split("_meta_")),
-                            _parse_timemark(match), m))
+            pending.append((name, "_".join(name.split("_meta_")), stamp, m))
         if not pending:
             return 0
-
-        def _key(name: str) -> str:
-            return name.replace(":", "_")  # staged-symlink identity
 
         data_names = local_frame(self.spark, [(d,) for _, d, _, _ in pending], "file_name string")
         windows = {r.file_name: (r.data_begin_time, r.data_end_time) for r in
@@ -280,7 +291,7 @@ class ObsIngest:
             begin, end = windows.get(data_name, (None, None))
             if begin is None or end is None:
                 continue  # paired data file missing, empty or not ingested yet
-            const_rows.append([_key(name), stamp, begin, end, m.data_source,
+            const_rows.append([_staged_name(name), stamp, begin, end, m.data_source,
                                m.source_name, m.source_archive, m.location_type])
             entries.append([self.harvest_dir, name, m.data_source,
                             m.source_name, m.source_archive, m.location_type,
@@ -346,7 +357,7 @@ class ObsIngest:
                 shutil.move(src, os.path.join(archive_dir, file_name))
             else:
                 os.remove(src)
-            staged = os.path.join(dir_path, ".staged", file_name.replace(":", "_"))
+            staged = os.path.join(dir_path, ".staged", _staged_name(file_name))
             if os.path.lexists(staged):
                 os.remove(staged)
             n += 1

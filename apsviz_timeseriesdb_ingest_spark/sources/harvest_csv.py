@@ -29,23 +29,14 @@ def obs_data_schema(source_variable: str) -> StructType:
     ])
 
 
-def read_harvest_csv(spark: SparkSession, paths: Sequence[str], source_variable: str,
-                     ) -> DataFrame:
-    """Read harvest data CSVs with declared schema; normalize columns the
-    way the reference does (lower-case, station→station_name, parse TIME;
+def normalize_harvest_rows(raw: DataFrame) -> DataFrame:
+    """Normalize a raw harvest frame (batch or streaming) the way the
+    reference does (lower-case, station→station_name, parse TIME;
     ``run/createIngestObsData.py:168-174``) and attach file identity +
     timemark (F1)."""
-    df = (
-        spark.read.schema(obs_data_schema(source_variable))
-        .option("header", True)
-        .csv(list(paths))
-        .withColumn("file_name", F.element_at(F.split(F.input_file_name(), "/"), -1))
-        # join key robust to colon-sanitized staging (Hadoop paths can't
-        # contain ':'; see plans/obs_ingest staging)
-        .withColumn("file_key", F.translate(F.col("file_name"), ":", "_"))
-    )
     return (
-        df.withColumnRenamed("station", "station_name")
+        raw.withColumn("file_name", F.element_at(F.split(F.input_file_name(), "/"), -1))
+        .withColumnRenamed("station", "station_name")
         .withColumnRenamed("TIME", "time_raw")  # rename first: drop("TIME") would
         # also remove the new "time" column under case-insensitive resolution
         # try_cast, not to_timestamp_ntz: under ANSI mode (Spark 4 default)
@@ -55,6 +46,19 @@ def read_harvest_csv(spark: SparkSession, paths: Sequence[str], source_variable:
         .withColumn("time", F.col("time_raw").try_cast("timestamp_ntz"))
         .drop("time_raw")
         .withColumn("timemark", timemark_from_filename("file_name").cast("timestamp_ntz"))
+    )
+
+
+def read_harvest_csv(spark: SparkSession, paths: Sequence[str], source_variable: str,
+                     ) -> DataFrame:
+    """Read harvest data CSVs with declared schema into normalized rows
+    (:func:`normalize_harvest_rows`) plus a colon-free ``file_key``."""
+    reader = spark.read.schema(obs_data_schema(source_variable)).option("header", True)
+    return (
+        normalize_harvest_rows(reader.csv(list(paths)))
+        # join key robust to colon-sanitized staging (Hadoop paths can't
+        # contain ':'; see plans/obs_ingest staging)
+        .withColumn("file_key", F.translate(F.col("file_name"), ":", "_"))
     )
 
 

@@ -9,12 +9,14 @@ Mapping of reference semantics onto streaming primitives:
 - ``ingested`` flag flip (M2) → implicit in checkpoint commit; an audit
   ledger row is still appended per file inside the same foreachBatch for
   API parity with the batch pipeline
-- keep-latest dedup over overlapping windows (J7) → the same
-  ``Catalog.merge_keep_latest`` writer the batch path uses, so semantics
-  are identical by construction
+- enrichment and keep-latest dedup over overlapping windows (J7) → the
+  batch path's own row normalization (``sources/harvest_csv``), source
+  lookup, measure fan-out and merge (``plans/obs_ingest``), so semantics
+  are identical by construction; only the file-prefix → source-config
+  join is stream-specific
 - ordering (ORDER BY data_date_time) → ``latestFirst=false`` +
-  ``maxFilesPerTrigger`` for bounded micro-batches; the deterministic
-  merge ordering makes results order-independent anyway
+  ``maxFilesPerTrigger`` for bounded micro-batches; the merge orders by
+  (timemark, file key) on both paths, so results are order-independent
 
 Note: Hadoop file listing cannot address paths containing ':' — harvest
 producers targeting streaming mode write ``...T00_00_00.csv`` names (the
@@ -27,11 +29,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..schemas import (GAUGE_SOURCE, GAUGE_STATION, OBS_MEASURES, SOURCE_OBS_META,
-                       STREAM_OBS_LEDGER)
+from ..plans.obs_ingest import join_source_id, measure_columns, merge_obs
+from ..schemas import SOURCE_OBS_META, STREAM_OBS_LEDGER
 from ..sources.catalog import Catalog
-from ..sources.harvest_csv import obs_data_schema
-from ..functions.timeparse import timemark_from_filename
+from ..sources.harvest_csv import normalize_harvest_rows, obs_data_schema
 
 
 class StreamingObsIngest:
@@ -62,57 +63,37 @@ class StreamingObsIngest:
         self.source_archive_dir = source_archive_dir
 
     def _enrich(self, batch: DataFrame) -> DataFrame:
-        """Same enrichment as the batch path: file identity → timemark,
-        prefix → source config, station → source_id (broadcast dims)."""
+        """The stream-specific enrichment: file-name prefix → source
+        config (the batch path takes it from its ledger)."""
         meta = (self.catalog.read("source_obs_meta", SOURCE_OBS_META)
                 .filter(F.col("source_variable") == self.source_variable)
                 .select("data_source", "source_name", "source_archive",
                         "filename_prefix"))
-        stations = (self.catalog.read("gauge_station", GAUGE_STATION)
-                    .select("station_id", "station_name"))
-        src_lookup = (self.catalog.read("gauge_source", GAUGE_SOURCE)
-                      .join(stations, "station_id")
-                      .select("station_name", "data_source", "source_name",
-                              "source_archive", "source_id"))
-        enriched = (
-            batch
-            .join(F.broadcast(meta),
-                  F.col("file_name").startswith(F.col("filename_prefix")))
-            .join(F.broadcast(src_lookup),
-                  ["station_name", "data_source", "source_name", "source_archive"])
-        )
-        return enriched.select(
-            "source_id", "timemark", "time",
-            *[(F.col(self.source_variable) if m == self.source_variable
-               else F.lit(None).cast("double")).alias(m) for m in OBS_MEASURES],
-            F.col("file_name").alias("__file_key"),
-        )
+        return batch.join(F.broadcast(meta),
+                          F.col("file_name").startswith(F.col("filename_prefix")))
 
     def _merge_batch(self, batch: DataFrame, batch_id: int) -> None:
         # one run of the enrichment lineage feeds the emptiness guard,
         # the merge and the ledger rows
-        batch = (self._enrich(batch).filter(F.col("time").isNotNull())
+        batch = (join_source_id(self._enrich(batch), self.catalog)
+                 .filter(F.col("time").isNotNull())
+                 .select("source_id", "timemark", "time",
+                         *measure_columns(self.source_variable), "file_name")
                  .localCheckpoint(eager=True))
         if batch.isEmpty():
             return
-        self.catalog.merge_keep_latest(
-            "gauge_data", batch,
-            keys=["source_id", "time"],
-            order_by=["timemark", "__file_key"],
-            time_col="time",
-            drop_before_write=["__file_key"],
-        )
+        merge_obs(self.catalog, batch)
         # audit ledger parity. foreachBatch is at-least-once on
         # failure/replay (the checkpoint commits AFTER this function
         # returns), so the append must be idempotent like the gauge_data
         # merge: anti-join the existing ledger on the file identity so a
         # replayed batch re-appends nothing.
         ledger_rows = (
-            batch.groupBy("__file_key")
+            batch.groupBy("file_name")
             .agg(F.min("time").alias("data_begin_time"),
                  F.max("time").alias("data_end_time"),
                  F.first("timemark").alias("timemark"))
-            .select(F.col("__file_key").alias("file_name"),
+            .select("file_name",
                     F.lit(self.source_variable).alias("source_variable"),
                     "data_begin_time", "data_end_time", "timemark",
                     F.current_timestamp().cast("timestamp_ntz").alias("processing_datetime"),
@@ -137,18 +118,7 @@ class StreamingObsIngest:
             reader = reader.option("cleanSource", self.clean_source)
             if self.source_archive_dir:
                 reader = reader.option("sourceArchiveDir", self.source_archive_dir)
-        raw = reader.csv(self.harvest_dir)
-        return (
-            raw.withColumn("file_name",
-                           F.element_at(F.split(F.input_file_name(), "/"), -1))
-            .withColumnRenamed("station", "station_name")
-            .withColumnRenamed("TIME", "time_raw")
-            # try_cast: one malformed TIME cell must not kill the stream
-            # under ANSI mode (see sources/harvest_csv)
-            .withColumn("time", F.col("time_raw").try_cast("timestamp_ntz"))
-            .drop("time_raw")
-            .withColumn("timemark", timemark_from_filename("file_name").cast("timestamp_ntz"))
-        )
+        return normalize_harvest_rows(reader.csv(self.harvest_dir))
 
     def run_available(self) -> None:
         """Process every currently-available new file exactly once."""

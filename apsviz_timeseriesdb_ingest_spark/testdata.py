@@ -43,13 +43,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             f"timestampadd(MICROSECOND, CAST({c} DIV 1000 AS BIGINT), "
             f"TIMESTAMP_NTZ '1970-01-01 00:00:00')"))
     return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in (names or TABLES)}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every testdata table as a temp view (for spark.sql paths)."""
-    for n in TABLES:
-        load_table(spark, sf_dir, n).createOrReplaceTempView(n)

@@ -45,6 +45,9 @@ HEADLINE = [
     "a2_count_distinct",
 ]
 
+#: longest stdout line that survives a ~2000-char tail capture whole
+LINE_BUDGET = 1950
+
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -103,18 +106,31 @@ def main() -> None:
     # record to BENCH_LAST.json, and print a line that is itself a
     # complete, parseable record carrying "queries" UNCONDITIONALLY —
     # if the line outgrows the tail budget, drop the cold map first,
-    # never "queries".
+    # never "queries" (printed_line).
     try:
         with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
                                "BENCH_LAST.json"), "w") as f:
             f.write(json.dumps(record) + "\n")
     except OSError:
         pass
+    print(printed_line(record))
+
+
+def printed_line(record: dict) -> str:
+    """The stdout line for ``record``: compact JSON without the
+    per-pass warm map, and without the cold map too when the line would
+    outgrow ``LINE_BUDGET``. Exits non-zero rather than print a line
+    still over budget, whose clipped tail would lose "queries"."""
     printed = {k: v for k, v in record.items() if k != "queries_warm"}
     compact = dict(separators=(",", ":"))
-    if len(json.dumps(printed, **compact)) > 1950:
+    if len(json.dumps(printed, **compact)) > LINE_BUDGET:
         printed = {k: v for k, v in printed.items() if k != "queries_cold"}
-    print(json.dumps(printed, **compact))
+    line = json.dumps(printed, **compact)
+    if len(line) > LINE_BUDGET:
+        sys.exit(f"bench: the printed record is {len(line)} chars without "
+                 f"queries_cold, over the {LINE_BUDGET}-char budget; "
+                 "BENCH_LAST.json holds the full record")
+    return line
 
 
 if __name__ == "__main__":

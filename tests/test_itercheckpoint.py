@@ -183,6 +183,26 @@ def test_pagerank_resume_from_progress_table(spark, tmp_path):
         pagerank(edges, iters=2, resume=True)
 
 
+def test_pagerank_resume_round_trip(spark, tmp_path):
+    """Resume reads the progress row, the edges slot and the ranks slot
+    only: with the nodes and outdeg slots gone, a run stopped after 1 of
+    3 passes still resumes to exactly the serial reference's ranks (the
+    shared decimal grid makes them bit-identical on this graph)."""
+    from apsviz_timeseriesdb_ingest_spark.llm.graph import _pagerank_py, pagerank
+
+    pairs = [("a", "b"), ("b", "c"), ("c", "a"), ("a", "c"), ("d", "a")]
+    edges = spark.createDataFrame(pairs, "src string, dst string")
+    cat = Catalog(spark, str(tmp_path / "wh"))
+    pagerank(edges, iters=1, checkpoint_catalog=cat).collect()
+    cat.drop("pagerank_nodes_0")
+    cat.drop("pagerank_outdeg_0")
+    resumed = {r.node: r.rank
+               for r in pagerank(edges, iters=3, checkpoint_catalog=cat,
+                                 resume=True).collect()}
+    assert resumed == _pagerank_py(pairs, iters=3)
+    assert cat.read("pagerank_progress").collect()[0]["iter"] == 3
+
+
 def test_pagerank_resume_respects_every_k(spark, tmp_path):
     """With checkpoint_every=3, progress tracks only durable writes;
     resuming replays the missing rounds and still matches exactly."""
