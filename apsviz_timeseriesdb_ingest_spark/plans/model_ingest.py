@@ -21,6 +21,7 @@ Per run directory ``<harvest_dir>/<model_run_id>/`` containing
 
 from __future__ import annotations
 
+import csv
 import datetime as dt
 import os
 from glob import glob
@@ -84,6 +85,17 @@ def derive_source(run_props: dict, kind: str, station_type: str) -> dict:
     }
 
 
+def read_station_list(path: str) -> list[str | None]:
+    """The ``station`` column (header matched case-insensitively) of a
+    ``meta_FORECAST_*.csv`` station list, read on the driver — a few
+    hundred names never need a Spark job. An empty cell is None, as in
+    Spark's CSV reader."""
+    with open(path, newline="") as f:
+        rows = [r for r in csv.reader(f) if r]
+    col = next(i for i, c in enumerate(rows[0]) if c.lower() == "station")
+    return [(r[col] if col < len(r) else "") or None for r in rows[1:]]
+
+
 class ModelIngest:
     def __init__(self, spark: SparkSession, catalog: Catalog, harvest_dir: str,
                  *, ui_data_url: str = "https://apsviz/ui-data"):
@@ -143,15 +155,21 @@ class ModelIngest:
             self._register_source(src)
 
         processing = dt.datetime.now().replace(microsecond=0)
-        keys =["data_source", "source_name", "source_archive", "source_instance",
+        # (file_name, station_name, source_id) of every registered source
+        # of each file, from the catalog's cached dimension rows: the
+        # model_source ⋈ gauge_station join, with SQL = on the source keys
+        keys = ["data_source", "source_name", "source_archive", "source_instance",
                 "forcing_metclass"]
-        file_srcs = local_frame(self.spark, [
-            [os.path.basename(path)] + [src[k] for k in keys] for path, _, src in files],
-            ", ".join(f"{k} string" for k in ["file_name", *keys]))
-        lookup = (self.catalog.read("model_source", MODEL_SOURCE).join(file_srcs, keys)
-                  .join(self.catalog.read("gauge_station", GAUGE_STATION)
-                        .select("station_id", "station_name"), "station_id")
-                  .select("file_name", "station_name", "source_id"))
+        names: dict = {}
+        for r in self.catalog.rows("gauge_station", GAUGE_STATION):
+            names.setdefault(r.station_id, []).append(r.station_name)
+        sources = self.catalog.rows("model_source", MODEL_SOURCE)
+        lookup = local_frame(self.spark, [
+            (os.path.basename(path), name, r.source_id)
+            for path, _, src in files for r in sources
+            if all(r[k] is not None and r[k] == src[k] for k in keys)
+            for name in names.get(r.station_id, ())],
+            "file_name string, station_name string, source_id long")
         rows = (read_harvest_csv(self.spark, [path for path, _, _ in files], "water_level")
                 .join(F.broadcast(lookup), ["file_name", "station_name"], "left"))
         loaded = F.col("source_id").isNotNull() & F.col("time").isNotNull()
@@ -241,12 +259,9 @@ class ModelIngest:
             if name in seen:
                 continue
             src = derive_source(props, "FORECAST", station_type)
-            stations_df = self.spark.read.option("header", True).csv(path)
-            station_col = next(c for c in stations_df.columns if c.lower() == "station")
-            station_names = [r[0] for r in stations_df.select(station_col).collect()]
             publish_apsviz_stations(
                 self.spark, self.catalog, model_run_id=model_run_id,
-                adcirc_station_names=station_names,
+                adcirc_station_names=read_station_list(path),
                 data_source=src["data_source"], source_name=src["source_name"],
                 source_archive=src["source_archive"],
                 source_instance=src["source_instance"],

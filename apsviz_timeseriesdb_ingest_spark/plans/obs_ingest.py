@@ -20,11 +20,12 @@ calls too, so batch and stream enrich and merge with the same code.
 Keep-latest ordering: the reference keeps the highest serial ``obs_id``
 per (source_id, time) — i.e. last-loaded wins, and files are loaded in
 ``data_date_time`` order (``run/ingestObsTasks.py:45-56,233-237``). The
-deterministic Spark equivalent orders by (timemark DESC, file key DESC):
-``discover`` stamps ``data_date_time`` and ``timemark`` from the same
-file-name timemark, so the newest harvest wins regardless of load order,
-making ingest permutation-invariant where the reference is
-order-dependent.
+Spark equivalent orders by (timemark DESC, file key DESC): ``discover``
+stamps ``data_date_time`` and ``timemark`` from the same file-name
+timemark, so a newer harvest wins regardless of load order. Stored rows
+keep no file key, so the key breaks ties only within one pass: when two
+files with the same timemark land in different passes (or micro-batches),
+the later-loaded file wins, as in the reference.
 """
 
 from __future__ import annotations

@@ -18,9 +18,15 @@ Semantics mirrored from the reference SQL exactly:
 - X4 nowcast (``get_nowcast_timeseries_station_data.sql:1-39``): window
   [start, end] + data_source + source_instance.
 
-Plan shape: dims broadcast into the fact scan; the single shuffle is the
-pivot groupBy on time; explicit category lists keep the output schema
-constant-folded (no distinct pre-scan).
+Plan shape: each read is planned on the driver from the catalog's
+cached dimension and zone-map rows (``Catalog.rows``; no Spark job once
+warm). The station's sources resolve to a ``source_id IN (...)`` filter
+that pushes into the zone-map-pruned parquet scan and a literal
+``source_id → data_source`` map; the filtered rows are coalesced into
+one partition, so the pivot's groupBy and the sort need no exchange
+(one Spark job a read). Explicit category lists keep the output schema
+constant-folded (no distinct pre-scan). ``obs_view`` and ``model_view``
+keep the join formulation for SQL users.
 """
 
 from __future__ import annotations
@@ -31,6 +37,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.strings import sanitize_pivot_label
+from ..schemas import (GAUGE_DATA, GAUGE_SOURCE, GAUGE_STATION, MODEL_DATA,
+                       MODEL_SOURCE)
 from ..sources.catalog import TIME_BUCKET, Catalog
 
 #: X1 fixed category → output column mapping
@@ -86,7 +94,7 @@ def _fact_read(catalog: Catalog, table: str, schema,
     lo, hi = (_parse_ntz(b) for b in time_range)
     if lo is None or hi is None:
         return catalog.read(table, schema)
-    keep = prune_files(catalog.read(zm_table(table), ZONEMAP_SCHEMA), "time",
+    keep = prune_files(catalog.rows(zm_table(table), ZONEMAP_SCHEMA), "time",
                        lo, hi, path=catalog.path(table))
     return read_pruned(catalog.spark, catalog.path(table), keep, schema)
 
@@ -97,8 +105,6 @@ def obs_view(catalog: Catalog, *,
     gauge_data ⋈ gauge_source ⋈ gauge_station, dims broadcast.
     ``time_range=(start, end)`` lets the fact scan file-skip through
     the zone-map sidecar when one exists (see :func:`_fact_read`)."""
-    from ..schemas import GAUGE_DATA, GAUGE_SOURCE, GAUGE_STATION
-
     data = _fact_read(catalog, "gauge_data", GAUGE_DATA, time_range)
     source = catalog.read("gauge_source", GAUGE_SOURCE)
     station = catalog.read("gauge_station", GAUGE_STATION)
@@ -111,8 +117,6 @@ def obs_view(catalog: Catalog, *,
 def model_view(catalog: Catalog, *,
                time_range: tuple[str, str] | None = None) -> DataFrame:
     """drf_model_station_source_data (``run/ingestModelTasks.py:475-501``)."""
-    from ..schemas import GAUGE_STATION, MODEL_DATA, MODEL_SOURCE
-
     data = _fact_read(catalog, "model_data", MODEL_DATA, time_range)
     source = catalog.read("model_source", MODEL_SOURCE)
     station = catalog.read("gauge_station", GAUGE_STATION)
@@ -152,16 +156,55 @@ def _time_range(df: DataFrame, start: str, end: str) -> DataFrame:
     return df.filter(cond)
 
 
-def _pivot_timeseries(joined: DataFrame, value: F.Column,
+#: fact table → (its schema, its source dimension, that one's schema)
+_FACTS = {"gauge_data": (GAUGE_DATA, "gauge_source", GAUGE_SOURCE),
+          "model_data": (MODEL_DATA, "model_source", MODEL_SOURCE)}
+
+
+def _station_facts(catalog: Catalog, fact: str, station_name: str,
+                   start: str, end: str, **match) -> DataFrame:
+    """The pruned scan of ``fact`` over [start, end], restricted to
+    ``station_name``'s sources whose ``match`` columns equal the given
+    values, with each row's ``data_source``: the dimension joins of
+    ``obs_view``/``model_view`` planned on the driver from the catalog's
+    cached dimension rows. Equality is SQL ``=``: a NULL on either side
+    matches nothing. ``source_id IN (...)`` pushes down into parquet,
+    whose merged files are sorted by ``source_id``."""
+    schema, dim, dim_schema = _FACTS[fact]
+
+    def eq(a, b):
+        return a is not None and a == b
+
+    stations = {r.station_id for r in catalog.rows("gauge_station", GAUGE_STATION)
+                if eq(r.station_name, station_name)}
+    sources = {r.source_id: r.data_source for r in catalog.rows(dim, dim_schema)
+               if r.station_id in stations
+               and all(eq(r[k], v) for k, v in match.items())}
+    ids = sorted(sources)
+    label = (F.create_map(*[c for i in ids for c in (F.lit(i).cast("long"),
+                                                     F.lit(sources[i]))])
+             [F.col("source_id")] if ids else F.lit(None).cast("string"))
+    return (_time_range(_fact_read(catalog, fact, schema, (start, end)), start, end)
+            .filter(F.col("source_id").isin(ids))
+            .withColumn("data_source", label))
+
+
+def _pivot_timeseries(facts: DataFrame, value: F.Column,
                       categories: dict[str, str]) -> DataFrame:
     """Shared crosstab core: time → one column per category label, cell =
-    first(value) (crosstab takes the single underlying row per cell)."""
+    first(value) (crosstab takes the single underlying row per cell).
+    One station's filtered rows are coalesced into one partition, so
+    the scan, the groupBy and the sort run as one task of one Spark job
+    with no exchange. (``repartition(1)`` keeps the scan parallel for a
+    long window over many files, at one more job a read; at dashboard
+    windows the two measure the same.)"""
     piv = (
-        joined.select(
+        facts.select(
             F.date_format("time", "yyyy-MM-dd HH:mm:ss").alias("time_stamp"),
             F.col("data_source").alias("category"),
             value.alias("yaxis"),
         )
+        .coalesce(1)
         .groupBy("time_stamp")
         .pivot("category", list(categories))
         .agg(F.first("yaxis", ignorenulls=False))
@@ -175,11 +218,9 @@ def _pivot_timeseries(joined: DataFrame, value: F.Column,
 def get_obs_timeseries_station_data(catalog: Catalog, station_name: str,
                                     start_date: str, end_date: str) -> DataFrame:
     """X1 — obs crosstab for one station and date range."""
-    joined = _time_range(obs_view(catalog, time_range=(start_date, end_date)),
-                         start_date, end_date).filter(
-        F.col("station_name") == station_name)
-    return _pivot_timeseries(joined, F.coalesce("water_level", "wave_height"),
-                             OBS_CATEGORIES)
+    return _pivot_timeseries(
+        _station_facts(catalog, "gauge_data", station_name, start_date, end_date),
+        F.coalesce("water_level", "wave_height"), OBS_CATEGORIES)
 
 
 def get_obs_timeseries_station_data_allparms(catalog: Catalog, station_name: str,
@@ -189,12 +230,11 @@ def get_obs_timeseries_station_data_allparms(catalog: Catalog, station_name: str
     cats = dict(ALLPARMS_PRE)
     cats[nowcast_source] = sanitize_pivot_label(nowcast_source)
     cats.update(ALLPARMS_POST)
-    joined = _time_range(obs_view(catalog, time_range=(start_date, end_date)),
-                         start_date, end_date).filter(
-        F.col("station_name") == station_name)
     value = F.coalesce("water_level", "stream_elevation", "wave_height",
                        "wind_speed", "air_pressure", "flow_volume")
-    return _pivot_timeseries(joined, value, cats)
+    return _pivot_timeseries(
+        _station_facts(catalog, "gauge_data", station_name, start_date, end_date),
+        value, cats)
 
 
 def get_forecast_timeseries_station_data(catalog: Catalog, station_name: str,
@@ -202,16 +242,11 @@ def get_forecast_timeseries_station_data(catalog: Catalog, station_name: str,
                                          data_source: str, source_instance: str,
                                          ) -> DataFrame:
     """X3 — one forecast run's crosstab, pinned by timemark."""
-    joined = _time_range(model_view(catalog,
-                                    time_range=(timemark,
-                                                max_forecast_endtime)),
-                         timemark, max_forecast_endtime).filter(
-        (F.col("station_name") == station_name)
-        & (F.col("timemark") == F.lit(timemark).cast("timestamp_ntz"))
-        & (F.col("data_source") == data_source)
-        & (F.col("source_instance") == source_instance)
-    )
-    return _pivot_timeseries(joined, F.coalesce("water_level"),
+    facts = _station_facts(catalog, "model_data", station_name, timemark,
+                           max_forecast_endtime, data_source=data_source,
+                           source_instance=source_instance).filter(
+        F.col("timemark") == F.lit(timemark).cast("timestamp_ntz"))
+    return _pivot_timeseries(facts, F.coalesce("water_level"),
                              {data_source: sanitize_pivot_label(data_source)})
 
 
@@ -220,14 +255,9 @@ def get_nowcast_timeseries_station_data(catalog: Catalog, station_name: str,
                                         data_source: str, source_instance: str,
                                         ) -> DataFrame:
     """X4 — nowcast crosstab over [start, end]."""
-    joined = _time_range(model_view(catalog,
-                                    time_range=(start_date, end_date)),
-                         start_date, end_date).filter(
-        (F.col("station_name") == station_name)
-        & (F.col("data_source") == data_source)
-        & (F.col("source_instance") == source_instance)
-    )
-    return _pivot_timeseries(joined, F.coalesce("water_level"),
+    facts = _station_facts(catalog, "model_data", station_name, start_date, end_date,
+                           data_source=data_source, source_instance=source_instance)
+    return _pivot_timeseries(facts, F.coalesce("water_level"),
                              {data_source: sanitize_pivot_label(data_source)})
 
 
@@ -245,20 +275,14 @@ def get_model_vs_obs_asof(catalog: Catalog, station_name: str,
     that stopped reporting should not be carried forward for days)."""
     from ..operators.asof import asof_join
 
-    # both fact scans go THROUGH the zone-map skipping layer with the
-    # query's own bounds (r7 verdict task 7 — this read used to be the
-    # one API path reading facts unpruned)
-    model = (_time_range(model_view(catalog,
-                                    time_range=(start_date, end_date)),
-                         start_date, end_date)
-             .filter(F.col("station_name") == station_name)
-             .select("station_name", "data_source", "time",
+    # both fact scans go through the zone-map skipping layer with the
+    # query's own bounds
+    name = F.lit(station_name).cast("string").alias("station_name")
+    model = (_station_facts(catalog, "model_data", station_name, start_date, end_date)
+             .select(name, "data_source", "time",
                      F.col("water_level").alias("model_water_level")))
-    obs = (_time_range(obs_view(catalog,
-                                time_range=(start_date, end_date)),
-                       start_date, end_date)
-           .filter(F.col("station_name") == station_name)
-           .select("station_name", "time", "water_level"))
+    obs = (_station_facts(catalog, "gauge_data", station_name, start_date, end_date)
+           .select(name, "time", "water_level"))
     return asof_join(model, obs, on=["station_name"], left_ts="time",
                      right_ts="time", value_cols=["water_level"],
                      tolerance=tolerance)

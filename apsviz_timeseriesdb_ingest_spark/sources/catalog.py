@@ -26,7 +26,7 @@ from __future__ import annotations
 import os
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -173,6 +173,7 @@ class Catalog:
         self.spark = spark
         self.warehouse = warehouse
         self.merge_strategy = merge_strategy or DynamicOverwriteMerge()
+        self._rows: dict[str, tuple[tuple, tuple[Row, ...]]] = {}
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
     def path(self, table: str) -> str:
@@ -189,6 +190,40 @@ class Catalog:
             return local_frame(self.spark, [], schema)
         reader = self.spark.read if schema is None else self.spark.read.schema(schema)
         return reader.parquet(self.path(table))
+
+    def rows(self, table: str, schema: StructType | str) -> tuple[Row, ...]:
+        """A small table's rows on the driver (dimensions, stats
+        sidecars), read with its declared ``schema`` and cached. The
+        cache key is the table's on-disk listing (path, size and mtime
+        of every data file), so any writer — another ``Catalog`` or
+        process included — invalidates it: a hit costs one directory
+        walk and no Spark job, a miss one read. A missing table has no
+        rows."""
+        listing = self._listing(table)
+        cached = self._rows.get(table)
+        if cached is not None and cached[0] == listing:
+            return cached[1]
+        rows = tuple(self.read(table, schema).collect()) if listing else ()
+        self._rows[table] = (listing, rows)
+        return rows
+
+    def overwrite_rows(self, rows: Sequence, table: str,
+                       schema: StructType | str) -> None:
+        """Overwrite ``table`` with driver-side ``rows`` and keep them as
+        its :meth:`rows` copy, under the listing taken right after the
+        write (one writer per table, as every plain-parquet verb here
+        assumes), so the next :meth:`rows` call reads nothing."""
+        df = local_frame(self.spark, rows, schema)
+        self.overwrite(df, table)
+        named = Row(*df.columns)
+        self._rows[table] = (self._listing(table), tuple(named(*r) for r in rows))
+
+    def _listing(self, table: str) -> tuple:
+        from .zonemap import list_parquet_files
+
+        return tuple((f, st.st_size, st.st_mtime_ns)
+                     for f in list_parquet_files(self.path(table))
+                     for st in (os.stat(f),))
 
     def refresh_skipping(self, table: str) -> dict[str, int]:
         """Bring the table's skipping sidecars (``{table}__zm`` /

@@ -30,7 +30,7 @@ from __future__ import annotations
 import datetime as _dt
 import os
 from functools import partial
-from typing import Iterable
+from typing import Iterable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -155,22 +155,23 @@ def build_zonemap(catalog, path: str, columns: Iterable[str], *,
     only files absent from it get footer stats, and ONE overwrite from
     driver rows (none when nothing changed) brings it exactly current
     after appends AND compactions."""
-    old = (catalog.read(table, ZONEMAP_SCHEMA).collect()
+    old = (catalog.rows(table, ZONEMAP_SCHEMA)
            if incremental and catalog.exists(table) else None)
     return _write_zonemap(catalog, path, columns, table, old)
 
 
 def refresh_zonemap(catalog, path: str, *, table: str) -> int | None:
     """Incremental :func:`build_zonemap` over the columns the stats
-    table already covers, taken from the same one read. None when the
-    table has no rows to name them."""
-    old = catalog.read(table, ZONEMAP_SCHEMA).collect()
+    table already covers, taken from the catalog's driver-side copy of
+    it (``Catalog.rows``: no job when this process wrote it last). None
+    when the table has no rows to name them."""
+    old = catalog.rows(table, ZONEMAP_SCHEMA)
     cols = sorted({r.column for r in old})
     return _write_zonemap(catalog, path, cols, table, old) if cols else None
 
 
 def _write_zonemap(catalog, path: str, columns: Iterable[str], table: str,
-                   old: list | None) -> int:
+                   old: Sequence | None) -> int:
     on_disk = list_parquet_files(path)
     new, rows = on_disk, []
     if old is not None:
@@ -179,22 +180,23 @@ def _write_zonemap(catalog, path: str, columns: Iterable[str], table: str,
         rows = [r for r in old if r.file in live]
         if not new and len(rows) == len(old):
             return len(on_disk)
-    catalog.overwrite(local_frame(catalog.spark, rows + footer_stats(new, columns),
-                                  ZONEMAP_SCHEMA), table)
+    catalog.overwrite_rows(rows + footer_stats(new, columns), table,
+                           ZONEMAP_SCHEMA)
     return len(on_disk)
 
 
-def _prune_by(zonemap: DataFrame, column: str, path: str | None,
+def _prune_by(zonemap: DataFrame | Sequence, column: str, path: str | None,
               may_match) -> list[str]:
     """Shared prune driver: keep files without usable stats (and, with
     ``path``, files on disk but absent from a STALE stats table — a
     stale zone map must degrade to reading more, never to dropping
     unseen data; stats rows for files no longer on disk are dropped),
     plus every file where ``may_match(dtype, min_val, max_val)`` is
-    True. Driver-side arithmetic over the stats frame."""
-    rows = (zonemap.filter(F.col("column") == column)
-            .select("file", "dtype", "min_val", "max_val", "has_stats")
-            .collect())
+    True. Driver-side arithmetic over the stats frame, or over its
+    rows already on the driver (``Catalog.rows``)."""
+    if isinstance(zonemap, DataFrame):
+        zonemap = zonemap.collect()
+    rows = [r for r in zonemap if r.column == column]
     on_disk = set(list_parquet_files(path)) if path is not None else None
     covered = {r.file for r in rows}
     keep = ([f for f in on_disk if f not in covered]
@@ -207,13 +209,13 @@ def _prune_by(zonemap: DataFrame, column: str, path: str | None,
     return sorted(keep)
 
 
-def prune_files(zonemap: DataFrame, column: str, lo=None, hi=None, *,
+def prune_files(zonemap: DataFrame | Sequence, column: str, lo=None, hi=None, *,
                 path: str | None = None) -> list[str]:
     """Files whose ``[min, max]`` for ``column`` can intersect
     ``[lo, hi]`` (either bound may be None = unbounded). Files without
     stats for the column are KEPT — pruning must never change results,
     only skip provably-irrelevant files. Driver-side arithmetic over
-    the stats frame (planning metadata).
+    the stats frame or its collected rows (planning metadata).
 
     Pass ``path`` whenever the table may have CHANGED since the stats
     build (appends, compaction, overwrite): files on disk but absent

@@ -16,7 +16,9 @@ Mapping of reference semantics onto streaming primitives:
   join is stream-specific
 - ordering (ORDER BY data_date_time) → ``latestFirst=false`` +
   ``maxFilesPerTrigger`` for bounded micro-batches; the merge orders by
-  (timemark, file key) on both paths, so results are order-independent
+  (timemark, file key) on both paths, so a newer timemark wins in any
+  landing order; two files with the same timemark in different
+  micro-batches resolve last-loaded-wins (stored rows keep no file key)
 
 Note: Hadoop file listing cannot address paths containing ':' — harvest
 producers targeting streaming mode write ``...T00_00_00.csv`` names (the
