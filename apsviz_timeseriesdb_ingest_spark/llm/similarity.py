@@ -244,18 +244,21 @@ def embedding_neardup_pairs(vectors: DataFrame, *, id_col: str = "vec_id",
     # per-band buckets are pure map-side expressions over the vector;
     # band t uses hyperplanes [t*planes, (t+1)*planes) of one shared
     # deterministic family, so Spark and any oracle agree literally.
-    # All `bands` bucket expressions inline into ONE stack() selectExpr:
-    # parsing 12 separate band expressions through F.expr cost ~0.5 s
-    # of driver-side construction per query (the r11 py4j/parse lesson
-    # — build wide expressions as one SQL string); one parse emits the
-    # identical per-row arithmetic.
+    # All `bands` bucket expressions go into ONE SQL string (parsing 12
+    # separate band expressions through F.expr cost ~0.5 s of driver
+    # time per query, the r11 py4j/parse lesson), and a nested select
+    # computes them as columns that stack() then reads: inlined into
+    # stack() they form one expression past the 64 KB generated-code
+    # limit, and Spark falls back to slow interpreted code.
     coeffs = (sparse_hyperplane_rows(dim, bands * planes, inv_density)
               if inv_density else hyperplane_coefficients(dim, bands * planes))
-    stack = ", ".join(
-        f"{t}, ({_bucket_sql('vec', coeffs[t * planes:(t + 1) * planes])})"
+    cols = ", ".join(
+        f"({_bucket_sql('vec', coeffs[t * planes:(t + 1) * planes])}) AS bucket_{t}"
         for t in range(bands))
-    buckets = v.selectExpr(
-        "id AS doc", f"stack({bands}, {stack}) AS (band, bucket)")
+    stack = ", ".join(f"{t}, bucket_{t}" for t in range(bands))
+    buckets = v.sparkSession.sql(
+        f"SELECT id AS doc, stack({bands}, {stack}) AS (band, bucket) "
+        f"FROM (SELECT id, {cols} FROM {{v}})", v=v)
     cand = lsh_pairs_from_buckets(buckets, max_bucket_size=max_bucket_size)
     # pair-gen leaves cand AQE-coalesced to few partitions on small
     # inputs; spread the verify (the expensive stage) across cores.

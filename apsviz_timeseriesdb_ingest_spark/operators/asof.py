@@ -59,28 +59,15 @@ def asof_join(left: DataFrame, right: DataFrame, *,
                             if c not in set(on) and c != right_ts])
     keys = list(on)
 
-    l_tag = (left.withColumn("__ts", F.col(left_ts))
-             .withColumn("__side", F.lit(1)))
-    r_tag = (right.select(*keys,
-                          F.col(right_ts).alias("__ts"),
-                          *[F.col(c) for c in value_cols])
-             .withColumn("__side", F.lit(0)))
-    # carry right payload as one struct column; left rows carry NULL
-    payload = F.struct(F.col("__ts").alias("__rts"),
-                       *[F.col(c).alias(c) for c in value_cols])
-    r_tag = r_tag.select(*keys, "__ts", "__side", payload.alias("__payload"))
-    l_tag = l_tag.withColumn("__payload",
-                             F.lit(None).cast(r_tag.schema["__payload"].dataType))
-
-    # left columns ride through the union; right-side rows carry NULLs
-    # for them and are dropped after the carry-forward
-    lcols = [c for c in left.columns]
-    l_all = l_tag.select(*lcols, "__ts", "__side", "__payload")
-    r_all = r_tag
-    for c in lcols:
-        if c not in r_all.columns:
-            r_all = r_all.withColumn(c, F.lit(None).cast(dict(left.dtypes)[c]))
-    merged = l_all.unionByName(r_all.select(*l_all.columns))
+    # left columns ride through the union; right rows carry the right
+    # payload as one struct column, and each side gets NULLs for the
+    # other's columns (right rows are dropped after the carry-forward)
+    lcols = left.columns
+    l_tag = left.select(*lcols, F.col(left_ts).alias("__ts"), F.lit(1).alias("__side"))
+    payload = F.struct(F.col(right_ts).alias("__rts"), *[F.col(c) for c in value_cols])
+    r_tag = right.select(*keys, F.col(right_ts).alias("__ts"), F.lit(0).alias("__side"),
+                         payload.alias("__payload"))
+    merged = l_tag.unionByName(r_tag, allowMissingColumns=True)
 
     # right rows (side 0) sort before left rows (side 1) at equal ts ->
     # an exactly-equal right timestamp IS matched (<= semantics)

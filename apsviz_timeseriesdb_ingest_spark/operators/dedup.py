@@ -9,11 +9,11 @@ window dedup with a *deterministic* version ordering, which makes ingest
 order-independent (same result no matter how files are parallelized).
 
 Scale notes: ``row_number`` over (keys) is a single hash-partitioned
-shuffle on the dedup keys; with fact tables partitioned by the same keys
-(source × time-bucket) AQE keeps partitions balanced, and the incremental
-path (``merge_keep_latest``) touches only the time window of the incoming
-batch — exactly the reference's bounded-DELETE optimization, expressed as
-partition pruning instead of a DELETE predicate.
+shuffle on the dedup keys. The incremental merge that uses it is
+``sources.catalog.Catalog.merge_keep_latest``: it dedups the incoming
+batch together with only the time-bucket partitions the batch touches —
+the reference's bounded-DELETE optimization, expressed as partition
+pruning instead of a DELETE predicate.
 """
 
 from __future__ import annotations
@@ -40,29 +40,3 @@ def keep_latest(df: DataFrame, keys: Sequence[str], order_by: Sequence[Column | 
         .drop("__rn")
     )
 
-
-def merge_keep_latest(existing: DataFrame, incoming: DataFrame, keys: Sequence[str],
-                      order_by: Sequence[Column | str], *, time_col: str | None = None,
-                      ) -> DataFrame:
-    """Merge ``incoming`` into ``existing`` with keep-latest semantics.
-
-    When ``time_col`` is given, the dedup is bounded to the incoming
-    batch's [min, max] time window (the reference's DELETE bound,
-    ``run/ingestObsTasks.py:390-399``): rows outside the window are passed
-    through untouched — at scale this is what keeps the merge cost
-    proportional to the batch, not the table.
-
-    Correctness constraint: window bounding is only equivalent to the
-    one-shot dedup when ``time_col`` is part of ``keys`` (as in the fact
-    tables, keyed (source_id, time)) — then any existing row sharing a
-    key with an incoming row is inside the window by construction.
-    """
-    if time_col is None:
-        return keep_latest(existing.unionByName(incoming), keys, order_by)
-    bounds = incoming.agg(F.min(time_col).alias("lo"), F.max(time_col).alias("hi")).first()
-    if bounds["lo"] is None:
-        return existing
-    in_window = F.col(time_col).between(F.lit(bounds["lo"]), F.lit(bounds["hi"]))
-    untouched = existing.filter(~in_window)
-    contended = existing.filter(in_window).unionByName(incoming)
-    return untouched.unionByName(keep_latest(contended, keys, order_by))

@@ -4,9 +4,9 @@ The reference discovers work by globbing a harvest dir and anti-joining
 against ``drf_harvest_obs_file_meta`` where ``ingested`` tracks completion
 (``run/createHarvestObsFileMeta.py:179-185``). Streaming mode gets this
 for free from the file-source checkpoint; batch mode uses this explicit
-anti-join, with a recency bound so the ledger side of the join stays small
-at scale (the reference's 31-day bound,
-``run/createHarvestObsFileMeta.py:88,177``).
+anti-join against the whole ledger. The reference's 31-day recency bound
+on its ledger side (``run/createHarvestObsFileMeta.py:88,177``) is not
+applied: a file older than the bound is still recognized as seen.
 """
 
 from __future__ import annotations
@@ -16,18 +16,11 @@ from pyspark.sql import functions as F
 
 
 def new_files_anti_join(candidates: DataFrame, ledger: DataFrame,
-                        *, file_col: str = "file_name",
-                        recency_col: str | None = None,
-                        recency_days: int | None = None) -> DataFrame:
+                        *, file_col: str = "file_name") -> DataFrame:
     """Rows of ``candidates`` whose ``file_col`` is absent from ``ledger``.
 
-    The ledger side is filtered by the recency bound then broadcast —
-    file-name sets are tiny relative to data, so this never shuffles the
-    candidate side.
+    The ledger's distinct file names are broadcast — file-name sets are
+    tiny relative to data, so this never shuffles the candidate side.
     """
-    seen = ledger.select(file_col)
-    if recency_col and recency_days:
-        seen = ledger.filter(
-            F.col(recency_col) > F.current_timestamp() - F.expr(f"INTERVAL {recency_days} DAYS")
-        ).select(file_col)
-    return candidates.join(F.broadcast(seen.distinct()), on=file_col, how="left_anti")
+    seen = ledger.select(file_col).distinct()
+    return candidates.join(F.broadcast(seen), on=file_col, how="left_anti")

@@ -20,7 +20,9 @@ appended to ``retain_obs_station``.
   Output:      union (O3) + per-station csvurl (F9), appended to
                ``apsviz_station``.
 
-All dimension joins broadcast; the only shuffle is the final distinct.
+All dimension joins broadcast driver-side frames of the catalog's
+cached ``gauge_station`` rows (``Catalog.rows``); the only shuffle is the
+final distinct.
 """
 
 from __future__ import annotations
@@ -53,8 +55,10 @@ def ingest_retain_obs_station(catalog: Catalog, *, station_names: Sequence[str],
                               source_name: str, source_archive: str,
                               location_type: str) -> None:
     """Append one harvest window's station snapshot to retain_obs_station."""
-    stations = catalog.read("gauge_station", GAUGE_STATION).filter(
-        F.col("station_name").isin(list(station_names)))
+    names = set(station_names) - {None}  # SQL IN: a NULL matches nothing
+    stations = local_frame(catalog.spark, [
+        r for r in catalog.rows("gauge_station", GAUGE_STATION)
+        if r.station_name in names], GAUGE_STATION)
     snapshot = stations.select(
         "station_name", "lat", "lon", "location_name", "tz", "gauge_owner",
         "country", "state", "county", "geom",
@@ -70,7 +74,8 @@ def ingest_retain_obs_station(catalog: Catalog, *, station_names: Sequence[str],
 
 
 def _station_info(catalog: Catalog) -> DataFrame:
-    return catalog.read("gauge_station", GAUGE_STATION).select(*STATION_INFO_COLS)
+    return local_frame(catalog.spark, catalog.rows("gauge_station", GAUGE_STATION),
+                       GAUGE_STATION).select(*STATION_INFO_COLS)
 
 
 def publish_apsviz_stations(spark: SparkSession, catalog: Catalog, *,

@@ -3,6 +3,9 @@
 Creates the dimension tables from the station geometry CSVs and the
 source-meta seed CSV, and derives ``gauge_source`` (one row per station ×
 matching source config, ``run/createIngestObsSourceMeta.py:47-84``).
+Besides the keys, it owns the one station ↔ source pairing that every
+ingest and read path resolves ``source_id`` through
+(:func:`station_sources`, from the catalog's cached dimension rows).
 
 Surrogate keys: the reference uses Postgres serials. Serials are a
 single-writer artifact; this engine derives *stable deterministic* 64-bit
@@ -17,10 +20,10 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
-from ..schemas import SOURCE_OBS_META
+from ..schemas import GAUGE_SOURCE, GAUGE_STATION, MODEL_SOURCE, SOURCE_OBS_META
 from ..sources.catalog import Catalog
 from ..sources.harvest_csv import read_station_csv
 
@@ -33,6 +36,23 @@ def source_key(station_name: Column, data_source: Column, source_name: Column,
                source_archive: Column) -> Column:
     return F.xxhash64(F.lit("source"), station_name, data_source, source_name,
                       source_archive)
+
+
+def station_sources(catalog: Catalog, dim: str) -> list[tuple[str | None, Row]]:
+    """``(station_name, source row)`` for every row of the source
+    dimension ``dim`` (``gauge_source`` or ``model_source``) and every
+    ``gauge_station`` row with its ``station_id``: the inner join on
+    ``station_id`` (a NULL id matches nothing), multiplicity kept, built
+    on the driver from :meth:`Catalog.rows`. Matching on the name and
+    the source columns is the caller's: SQL ``=`` where the pairs feed a
+    Spark join, an explicit NULL-is-no-match test on the driver."""
+    names: dict = {}
+    for r in catalog.rows("gauge_station", GAUGE_STATION):
+        if r.station_id is not None:
+            names.setdefault(r.station_id, []).append(r.station_name)
+    schema = {"gauge_source": GAUGE_SOURCE, "model_source": MODEL_SOURCE}[dim]
+    return [(name, r) for r in catalog.rows(dim, schema)
+            for name in names.get(r.station_id, ())]
 
 
 def load_source_obs_meta(spark: SparkSession, seed_csv: str) -> DataFrame:

@@ -37,14 +37,3 @@ def get_adcirc_run_property_variables(config_items: DataFrame, model_run_id: str
     row.pop("instance_id", None)
     return row
 
-
-def check_model_source_meta(source_model_meta: DataFrame, filename_prefix: str,
-                            source_instance: str) -> bool:
-    """J8 existence check (``run/getDashboardMeta.py:100-138``): does this
-    (filename_prefix, source_instance) source already exist?"""
-    return bool(
-        source_model_meta.filter(
-            (F.col("filename_prefix") == filename_prefix)
-            & (F.col("source_instance") == source_instance)
-        ).limit(1).count()
-    )

@@ -29,13 +29,12 @@ from glob import glob
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..schemas import (GAUGE_STATION, HARVEST_MODEL_FILE_META, MODEL_DATA, MODEL_SOURCE,
-                       SOURCE_MODEL_META)
+from ..schemas import GAUGE_STATION, HARVEST_MODEL_FILE_META, MODEL_DATA, SOURCE_MODEL_META
 from ..session import local_frame
 from ..sources.catalog import Catalog
 from ..sources.harvest_csv import read_harvest_csv
-from .bootstrap import source_key
-from .dashboard_meta import check_model_source_meta, get_adcirc_run_property_variables
+from .bootstrap import source_key, station_sources
+from .dashboard_meta import get_adcirc_run_property_variables
 
 LEDGER = "harvest_model_file_meta"
 FACT = "model_data"
@@ -111,15 +110,19 @@ class ModelIngest:
     def _register_source(self, src: dict) -> None:
         """Idempotent source auto-registration (J8+M1): add source meta and
         one model_source row per station of the matching location_type."""
-        if self.catalog.exists("source_model_meta") and check_model_source_meta(
-                self.catalog.read("source_model_meta", SOURCE_MODEL_META),
-                src["filename_prefix"], src["source_instance"]):
+        # J8 existence check (run/getDashboardMeta.py:100-138) on the
+        # catalog's cached rows; SQL =, so a NULL matches nothing
+        key = (src["filename_prefix"], src["source_instance"])
+        if None not in key and key in {
+                (r.filename_prefix, r.source_instance)
+                for r in self.catalog.rows("source_model_meta", SOURCE_MODEL_META)}:
             return
         self.catalog.append(local_frame(self.spark, [src], SOURCE_MODEL_META),
                             "source_model_meta")
 
-        stations = (self.catalog.read("gauge_station", GAUGE_STATION)
-                    .filter(F.col("location_type") == src["location_type"]))
+        stations = local_frame(
+            self.spark, [r for r in self.catalog.rows("gauge_station", GAUGE_STATION)
+                         if r.location_type == src["location_type"]], GAUGE_STATION)
         model_source = stations.select(
             source_key(F.col("station_name"), F.lit(src["data_source"]),
                        F.lit(src["source_name"]), F.lit(src["source_archive"]))
@@ -156,19 +159,15 @@ class ModelIngest:
 
         processing = dt.datetime.now().replace(microsecond=0)
         # (file_name, station_name, source_id) of every registered source
-        # of each file, from the catalog's cached dimension rows: the
-        # model_source ⋈ gauge_station join, with SQL = on the source keys
+        # of each file, from the station-source pairs of the catalog's
+        # cached dimension rows, with SQL = on the source keys
         keys = ["data_source", "source_name", "source_archive", "source_instance",
                 "forcing_metclass"]
-        names: dict = {}
-        for r in self.catalog.rows("gauge_station", GAUGE_STATION):
-            names.setdefault(r.station_id, []).append(r.station_name)
-        sources = self.catalog.rows("model_source", MODEL_SOURCE)
+        pairs = station_sources(self.catalog, "model_source")
         lookup = local_frame(self.spark, [
             (os.path.basename(path), name, r.source_id)
-            for path, _, src in files for r in sources
-            if all(r[k] is not None and r[k] == src[k] for k in keys)
-            for name in names.get(r.station_id, ())],
+            for path, _, src in files for name, r in pairs
+            if all(r[k] is not None and r[k] == src[k] for k in keys)],
             "file_name string, station_name string, source_id long")
         rows = (read_harvest_csv(self.spark, [path for path, _, _ in files], "water_level")
                 .join(F.broadcast(lookup), ["file_name", "station_name"], "left"))

@@ -7,7 +7,8 @@ Reference stages (per-source subprocesses + intermediate CSVs) collapse to:
                      the ledger (J4), append rows ingested=False; no CSV read
     ingest_new()  -- read all pending files ONCE (one scan per measure
                      variable), widen to the sparse 6-measure layout (S6),
-                     enrich with source_id via broadcast dim join (J1/J2)
+                     enrich with source_id from the station-source pairs of
+                     the cached dimension rows, broadcast (J1/J2)
                      and materialize; per-file min/max TIME (A1) from that
                      copy, keep-latest merge into gauge_data bounded to the
                      batch's time window (J7/M3), one ledger update fills
@@ -15,7 +16,11 @@ Reference stages (per-source subprocesses + intermediate CSVs) collapse to:
 
 The source lookup, the measure fan-out and the keep-latest merge are
 module functions that the streaming path (``streaming/stream_ingest``)
-calls too, so batch and stream enrich and merge with the same code.
+calls too, so batch and stream enrich and merge with the same code. The
+dimension and source-config tables are read through ``Catalog.rows``
+(a driver-side copy kept until the table's files change), and the source
+lookup is ``bootstrap.station_sources``, the pairing the model ingest
+and the dashboard reads use too.
 
 Keep-latest ordering: the reference keeps the highest serial ``obs_id``
 per (source_id, time) — i.e. last-loaded wins, and files are loaded in
@@ -42,7 +47,6 @@ from ..functions.timeparse import TIMEMARK_RE
 from ..operators.ledger import new_files_anti_join
 from ..schemas import (
     GAUGE_DATA,
-    GAUGE_SOURCE,
     GAUGE_STATION,
     HARVEST_OBS_FILE_META,
     OBS_MEASURES,
@@ -53,6 +57,7 @@ from ..schemas import (
 from ..session import local_frame
 from ..sources.catalog import Catalog
 from ..sources.harvest_csv import read_harvest_csv
+from .bootstrap import station_sources
 
 LEDGER = "harvest_obs_file_meta"
 FACT = "gauge_data"
@@ -72,15 +77,18 @@ def _staged_name(file_name: str) -> str:
 
 
 def join_source_id(rows: DataFrame, catalog: Catalog, how: str = "inner") -> DataFrame:
-    """Attach ``source_id`` to rows keyed by station and source config:
-    the gauge_source ⋈ gauge_station lookup (J1+J2), tiny and broadcast."""
-    stations = catalog.read("gauge_station", GAUGE_STATION).select("station_id", "station_name")
-    lookup = (catalog.read("gauge_source", GAUGE_SOURCE)
-              .join(stations, "station_id")
-              .select("station_name", "data_source", "source_name", "source_archive",
-                      "source_id"))
-    return rows.join(F.broadcast(lookup),
-                     ["station_name", "data_source", "source_name", "source_archive"], how)
+    """Attach ``source_id`` to rows keyed by station and source config
+    (J1+J2): the station ↔ source pairs of ``bootstrap.station_sources``,
+    built from the catalog's cached dimension rows, broadcast as one
+    driver-side frame; the join's SQL ``=`` matches no NULL key."""
+    keys = ["station_name", "data_source", "source_name", "source_archive"]
+    lookup = local_frame(
+        catalog.spark,
+        [(name, *(r[k] for k in keys[1:]), r.source_id)
+         for name, r in station_sources(catalog, "gauge_source")],
+        "station_name string, data_source string, source_name string, "
+        "source_archive string, source_id long")
+    return rows.join(F.broadcast(lookup), keys, how)
 
 
 def measure_columns(variable: str) -> list[Column]:
@@ -132,11 +140,10 @@ class ObsIngest:
         """Find new harvest files for every configured source; append them
         to the ledger with ingested=False and null TIME windows (filled by
         :meth:`ingest_new`). Returns number discovered."""
-        source_meta = self.catalog.read("source_obs_meta", SOURCE_OBS_META).collect()
         ledger = self.catalog.read(LEDGER, HARVEST_OBS_FILE_META)
 
         candidates = []
-        for m in source_meta:
+        for m in self.catalog.rows("source_obs_meta", SOURCE_OBS_META):
             for path in sorted(glob(os.path.join(self.harvest_dir, m.filename_prefix + "*.csv"))):
                 name = os.path.basename(path)
                 stamp = _timemark_of(name)
@@ -243,12 +250,11 @@ class ObsIngest:
         snapshot append — no per-file driver loop. Meta files whose
         paired data file is not ingested or has no parseable ``TIME``
         are skipped this pass (retried next pass)."""
-        source_meta = self.catalog.read("source_obs_meta", SOURCE_OBS_META).collect()
         ledger = self.catalog.read("retain_obs_station_file_meta",
                                    RETAIN_OBS_STATION_FILE_META)
 
         candidates = []  # (meta file name, paired data file name, timemark, source cfg)
-        for m in source_meta:
+        for m in self.catalog.rows("source_obs_meta", SOURCE_OBS_META):
             meta_prefix = m.filename_prefix.replace("stationdata", "stationdata_meta")
             if meta_prefix == m.filename_prefix:
                 continue
@@ -310,12 +316,13 @@ class ObsIngest:
             .csv([self._readable_path(self.harvest_dir, e[1]) for e in entries])
             .withColumn("file_key", F.element_at(F.split(F.input_file_name(), "/"), -1))
             .select(F.col("station").alias("station_name"), "file_key"))
-        info = self.catalog.read("gauge_station", GAUGE_STATION).select(
+        info = local_frame(self.spark, self.catalog.rows("gauge_station", GAUGE_STATION),
+                           GAUGE_STATION).select(
             "station_name", "lat", "lon", "location_name", "tz", "gauge_owner",
             "country", "state", "county", "geom")
         snapshot = (meta_stations
                     .join(F.broadcast(consts), "file_key")
-                    .join(info, "station_name")
+                    .join(F.broadcast(info), "station_name")
                     .select(*[f.name for f in RETAIN_OBS_STATION.fields]))
         self.catalog.append(snapshot, "retain_obs_station")
         self.catalog.append(

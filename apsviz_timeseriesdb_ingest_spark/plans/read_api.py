@@ -20,7 +20,9 @@ Semantics mirrored from the reference SQL exactly:
 
 Plan shape: each read is planned on the driver from the catalog's
 cached dimension and zone-map rows (``Catalog.rows``; no Spark job once
-warm). The station's sources resolve to a ``source_id IN (...)`` filter
+warm). The station's sources come from ``bootstrap.station_sources``,
+the station-source pairing the ingest paths resolve ``source_id``
+through too, and resolve to a ``source_id IN (...)`` filter
 that pushes into the zone-map-pruned parquet scan and a literal
 ``source_id → data_source`` map; the filtered rows are coalesced into
 one partition, so the pivot's groupBy and the sort need no exchange
@@ -40,6 +42,7 @@ from ..functions.strings import sanitize_pivot_label
 from ..schemas import (GAUGE_DATA, GAUGE_SOURCE, GAUGE_STATION, MODEL_DATA,
                        MODEL_SOURCE)
 from ..sources.catalog import TIME_BUCKET, Catalog
+from .bootstrap import station_sources
 
 #: X1 fixed category → output column mapping
 #: (scripts/get_obs_timeseries_station_data.sql:26-38)
@@ -156,9 +159,9 @@ def _time_range(df: DataFrame, start: str, end: str) -> DataFrame:
     return df.filter(cond)
 
 
-#: fact table → (its schema, its source dimension, that one's schema)
-_FACTS = {"gauge_data": (GAUGE_DATA, "gauge_source", GAUGE_SOURCE),
-          "model_data": (MODEL_DATA, "model_source", MODEL_SOURCE)}
+#: fact table → (its schema, its source dimension)
+_FACTS = {"gauge_data": (GAUGE_DATA, "gauge_source"),
+          "model_data": (MODEL_DATA, "model_source")}
 
 
 def _station_facts(catalog: Catalog, fact: str, station_name: str,
@@ -166,20 +169,18 @@ def _station_facts(catalog: Catalog, fact: str, station_name: str,
     """The pruned scan of ``fact`` over [start, end], restricted to
     ``station_name``'s sources whose ``match`` columns equal the given
     values, with each row's ``data_source``: the dimension joins of
-    ``obs_view``/``model_view`` planned on the driver from the catalog's
-    cached dimension rows. Equality is SQL ``=``: a NULL on either side
-    matches nothing. ``source_id IN (...)`` pushes down into parquet,
-    whose merged files are sorted by ``source_id``."""
-    schema, dim, dim_schema = _FACTS[fact]
+    ``obs_view``/``model_view`` planned on the driver from the
+    station-source pairs of the catalog's cached dimension rows
+    (``bootstrap.station_sources``). Equality is SQL ``=``: a NULL on
+    either side matches nothing. ``source_id IN (...)`` pushes down into
+    parquet, whose merged files are sorted by ``source_id``."""
+    schema, dim = _FACTS[fact]
 
     def eq(a, b):
         return a is not None and a == b
 
-    stations = {r.station_id for r in catalog.rows("gauge_station", GAUGE_STATION)
-                if eq(r.station_name, station_name)}
-    sources = {r.source_id: r.data_source for r in catalog.rows(dim, dim_schema)
-               if r.station_id in stations
-               and all(eq(r[k], v) for k, v in match.items())}
+    sources = {r.source_id: r.data_source for name, r in station_sources(catalog, dim)
+               if eq(name, station_name) and all(eq(r[k], v) for k, v in match.items())}
     ids = sorted(sources)
     label = (F.create_map(*[c for i in ids for c in (F.lit(i).cast("long"),
                                                      F.lit(sources[i]))])

@@ -13,7 +13,10 @@ Mapping of reference semantics onto streaming primitives:
   batch path's own row normalization (``sources/harvest_csv``), source
   lookup, measure fan-out and merge (``plans/obs_ingest``), so semantics
   are identical by construction; only the file-prefix → source-config
-  join is stream-specific
+  join is stream-specific. Both lookups are broadcast driver-side frames
+  built from the catalog's cached dimension and ``source_obs_meta`` rows
+  (``Catalog.rows``), so a micro-batch reads those tables only when their
+  files changed
 - ordering (ORDER BY data_date_time) → ``latestFirst=false`` +
   ``maxFilesPerTrigger`` for bounded micro-batches; the merge orders by
   (timemark, file key) on both paths, so a newer timemark wins in any
@@ -33,6 +36,7 @@ from pyspark.sql import functions as F
 
 from ..plans.obs_ingest import join_source_id, measure_columns, merge_obs
 from ..schemas import SOURCE_OBS_META, STREAM_OBS_LEDGER
+from ..session import local_frame
 from ..sources.catalog import Catalog
 from ..sources.harvest_csv import normalize_harvest_rows, obs_data_schema
 
@@ -66,11 +70,14 @@ class StreamingObsIngest:
 
     def _enrich(self, batch: DataFrame) -> DataFrame:
         """The stream-specific enrichment: file-name prefix → source
-        config (the batch path takes it from its ledger)."""
-        meta = (self.catalog.read("source_obs_meta", SOURCE_OBS_META)
-                .filter(F.col("source_variable") == self.source_variable)
-                .select("data_source", "source_name", "source_archive",
-                        "filename_prefix"))
+        config (the batch path takes it from its ledger), from the
+        catalog's cached ``source_obs_meta`` rows."""
+        cols = ["data_source", "source_name", "source_archive", "filename_prefix"]
+        meta = local_frame(
+            self.spark,
+            [[m[c] for c in cols] for m in self.catalog.rows("source_obs_meta", SOURCE_OBS_META)
+             if m.source_variable == self.source_variable],
+            ", ".join(f"{c} string" for c in cols))
         return batch.join(F.broadcast(meta),
                           F.col("file_name").startswith(F.col("filename_prefix")))
 

@@ -44,27 +44,55 @@ def test_keep_latest_matches_pandas(data):
     assert got == exp
 
 
+#: (key, day, version, value): days 0-2 fall in January, 3-5 in February
+_merge_rows = st.lists(
+    st.tuples(st.integers(0, 3), st.integers(0, 5), st.integers(0, 5),
+              st.floats(allow_nan=False, allow_infinity=False, width=32)),
+    min_size=1, max_size=30,
+)
+
+
 @settings(max_examples=8, deadline=None)
-@given(rows, rows)
+@given(_merge_rows, _merge_rows)
 def test_merge_equals_one_shot(existing, incoming):
-    """Merging batch B into a table built from batch A equals deduping
-    A ∪ B in one pass — the incremental path loses nothing."""
+    """``Catalog.merge_keep_latest`` — the merge the ingest paths run,
+    which rewrites only the time-bucket months the batch touches — of
+    batch B into a table built from batch A keeps per (key, time) the
+    same row as deduping A ∪ B in one pass. A's first row is in January
+    and B's in February, so every example spans two months."""
+    import datetime as dt
+    import tempfile
+
     from pyspark.sql import SparkSession
 
-    from apsviz_timeseriesdb_ingest_spark.operators.dedup import merge_keep_latest
+    from apsviz_timeseriesdb_ingest_spark.session import local_frame
+    from apsviz_timeseriesdb_ingest_spark.sources.catalog import Catalog
 
     spark = SparkSession.getActiveSession() or SparkSession.builder.getOrCreate()
-    schema = "key int, version int, id long, value double"
-    order = [F.col("version").desc(), F.col("id").desc()]
-    # disjoint id parity across batches keeps the total order tie-free
-    existing = [(k, v, i * 2, val) for k, v, i, val in existing]
-    incoming = [(k, v, i * 2 + 1, val) for k, v, i, val in incoming]
-    a = keep_latest(spark.createDataFrame(existing, schema), ["key"], order)
-    b = spark.createDataFrame(incoming, schema)
-    merged = sorted(map(tuple, merge_keep_latest(a, b, ["key"], order).collect()))
-    oneshot = sorted(map(tuple, keep_latest(
-        spark.createDataFrame(existing + incoming, schema), ["key"], order).collect()))
-    assert merged == oneshot
+    schema = "key int, time timestamp_ntz, version int, id long, value double"
+    t0 = dt.datetime(2024, 1, 29)
+
+    def batch(rows, parity, first_day):
+        # disjoint id parity across batches keeps the (version, id) order
+        # tie-free
+        days = [first_day(rows[0][1])] + [d for _, d, _, _ in rows[1:]]
+        return [(k, t0 + dt.timedelta(days=d), v, 2 * n + parity, val)
+                for n, ((k, _, v, val), d) in enumerate(zip(rows, days))]
+
+    existing = batch(existing, 0, lambda d: d % 3)
+    incoming = batch(incoming, 1, lambda d: 3 + d % 3)
+    with tempfile.TemporaryDirectory() as wh:
+        catalog = Catalog(spark, wh)
+        for rows in (existing, incoming):
+            catalog.merge_keep_latest("facts", local_frame(spark, rows, schema),
+                                      keys=["key", "time"], order_by=["version", "id"])
+        merged = sorted(map(tuple, catalog.read("facts").select(
+            "key", "time", "version", "id", "value").collect()))
+    oneshot: dict = {}
+    for r in existing + incoming:
+        if r[:2] not in oneshot or r[2:4] > oneshot[r[:2]][2:4]:
+            oneshot[r[:2]] = r
+    assert merged == sorted(oneshot.values())
 
 
 def test_minhash_tune_properties():

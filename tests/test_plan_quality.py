@@ -106,6 +106,17 @@ def test_embedding_neardup_bucketed_no_driver_collect(spark, sf_small):
     assert "python" not in plan.lower()
 
 
+def test_embedding_neardup_compiles_without_fallback(spark, sf_small):
+    """The near-dup query runs with codegen fallback disabled: no
+    generated method past the 64 KB limit. Inlining the 12 band buckets
+    into one stack() broke it, and Spark silently ran interpreted code."""
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    try:
+        assert QUERIES["llm_embedding_neardup"](spark, sf_small).count() > 0
+    finally:
+        spark.conf.unset("spark.sql.codegen.fallback")
+
+
 @pytest.mark.parametrize("name", ["llm_pack_documents"])
 def test_shuffle_order_no_single_task_sort(name, spark, sf_small):
     # the bucketed two-phase enumeration must never funnel the corpus
