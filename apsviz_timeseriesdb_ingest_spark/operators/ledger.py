@@ -3,8 +3,10 @@
 The reference discovers work by globbing a harvest dir and anti-joining
 against ``drf_harvest_obs_file_meta`` where ``ingested`` tracks completion
 (``run/createHarvestObsFileMeta.py:179-185``). Streaming mode gets this
-for free from the file-source checkpoint; batch mode uses this explicit
-anti-join against the whole ledger. The reference's 31-day recency bound
+for free from the file-source checkpoint. The obs ingest ledger is small
+enough to live on the driver, so ``ObsIngest.discover`` runs the same
+anti-join as a set lookup over its cached ledger rows; this Spark form
+serves ledgers held as frames. The reference's 31-day recency bound
 on its ledger side (``run/createHarvestObsFileMeta.py:88,177``) is not
 applied: a file older than the bound is still recognized as seen.
 """

@@ -54,23 +54,16 @@ def ingest_retain_obs_station(catalog: Catalog, *, station_names: Sequence[str],
                               end_date: dt.datetime, data_source: str,
                               source_name: str, source_archive: str,
                               location_type: str) -> None:
-    """Append one harvest window's station snapshot to retain_obs_station."""
+    """Append one harvest window's station snapshot to retain_obs_station,
+    as driver rows (``Catalog.append_rows``)."""
     names = set(station_names) - {None}  # SQL IN: a NULL matches nothing
-    stations = local_frame(catalog.spark, [
-        r for r in catalog.rows("gauge_station", GAUGE_STATION)
-        if r.station_name in names], GAUGE_STATION)
-    snapshot = stations.select(
-        "station_name", "lat", "lon", "location_name", "tz", "gauge_owner",
-        "country", "state", "county", "geom",
-        F.lit(timemark).cast("timestamp_ntz").alias("timemark"),
-        F.lit(begin_date).cast("timestamp_ntz").alias("begin_date"),
-        F.lit(end_date).cast("timestamp_ntz").alias("end_date"),
-        F.lit(data_source).alias("data_source"),
-        F.lit(source_name).alias("source_name"),
-        F.lit(source_archive).alias("source_archive"),
-        F.lit(location_type).alias("location_type"),
-    )
-    catalog.append(snapshot, "retain_obs_station")
+    consts = (timemark, begin_date, end_date, data_source, source_name,
+              source_archive, location_type)
+    catalog.append_rows([
+        (r.station_name, r.lat, r.lon, r.location_name, r.tz, r.gauge_owner,
+         r.country, r.state, r.county, r.geom, *consts)
+        for r in catalog.rows("gauge_station", GAUGE_STATION)
+        if r.station_name in names], "retain_obs_station", RETAIN_OBS_STATION)
 
 
 def _station_info(catalog: Catalog) -> DataFrame:

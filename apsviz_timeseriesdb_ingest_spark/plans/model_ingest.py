@@ -21,7 +21,6 @@ Per run directory ``<harvest_dir>/<model_run_id>/`` containing
 
 from __future__ import annotations
 
-import csv
 import datetime as dt
 import os
 from glob import glob
@@ -32,7 +31,7 @@ from pyspark.sql import functions as F
 from ..schemas import GAUGE_STATION, HARVEST_MODEL_FILE_META, MODEL_DATA, SOURCE_MODEL_META
 from ..session import local_frame
 from ..sources.catalog import Catalog
-from ..sources.harvest_csv import read_harvest_csv
+from ..sources.harvest_csv import read_harvest_csv, read_station_list
 from .bootstrap import source_key, station_sources
 from .dashboard_meta import get_adcirc_run_property_variables
 
@@ -84,17 +83,6 @@ def derive_source(run_props: dict, kind: str, station_type: str) -> dict:
     }
 
 
-def read_station_list(path: str) -> list[str | None]:
-    """The ``station`` column (header matched case-insensitively) of a
-    ``meta_FORECAST_*.csv`` station list, read on the driver — a few
-    hundred names never need a Spark job. An empty cell is None, as in
-    Spark's CSV reader."""
-    with open(path, newline="") as f:
-        rows = [r for r in csv.reader(f) if r]
-    col = next(i for i, c in enumerate(rows[0]) if c.lower() == "station")
-    return [(r[col] if col < len(r) else "") or None for r in rows[1:]]
-
-
 class ModelIngest:
     def __init__(self, spark: SparkSession, catalog: Catalog, harvest_dir: str,
                  *, ui_data_url: str = "https://apsviz/ui-data"):
@@ -117,8 +105,7 @@ class ModelIngest:
                 (r.filename_prefix, r.source_instance)
                 for r in self.catalog.rows("source_model_meta", SOURCE_MODEL_META)}:
             return
-        self.catalog.append(local_frame(self.spark, [src], SOURCE_MODEL_META),
-                            "source_model_meta")
+        self.catalog.append_rows([src], "source_model_meta", SOURCE_MODEL_META)
 
         stations = local_frame(
             self.spark, [r for r in self.catalog.rows("gauge_station", GAUGE_STATION)
@@ -206,8 +193,7 @@ class ModelIngest:
             time_col="time", drop_before_write=["__proc_dt"],
         )
 
-        self.catalog.append(local_frame(self.spark, ledger_rows, HARVEST_MODEL_FILE_META),
-                            LEDGER)
+        self.catalog.append_rows(ledger_rows, LEDGER, HARVEST_MODEL_FILE_META)
 
         published = self.publish_stations(model_run_id, props, timemark)
         return {"files": len(files), "rows": n_rows, "station_files": published}
@@ -276,10 +262,8 @@ class ModelIngest:
                             src["source_instance"], src["forcing_metclass"],
                             props["ADCIRCgrid"].upper(), model_run_id, timemark,
                             src["location_type"], self.ui_data_url, True])
-        if entries:
-            self.catalog.append(
-                local_frame(self.spark, entries, APSVIZ_STATION_FILE_META),
-                "apsviz_station_file_meta")
+        self.catalog.append_rows(entries, "apsviz_station_file_meta",
+                                 APSVIZ_STATION_FILE_META)
         return len(entries)
 
     def cleanup_run_dir(self, model_run_id: str) -> bool:

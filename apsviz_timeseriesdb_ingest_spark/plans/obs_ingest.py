@@ -3,24 +3,34 @@ as one Spark lineage (SURVEY section 3.1).
 
 Reference stages (per-source subprocesses + intermediate CSVs) collapse to:
 
-    discover()    -- glob harvest dir, per-file timemark (F1), anti-join
-                     the ledger (J4), append rows ingested=False; no CSV read
+    discover()    -- glob harvest dir, per-file timemark (F1), drop files
+                     the ledger names (J4) and append the rest
+                     ingested=False, on the driver; no CSV read, no job
     ingest_new()  -- read all pending files ONCE (one scan per measure
                      variable), widen to the sparse 6-measure layout (S6),
                      enrich with source_id from the station-source pairs of
                      the cached dimension rows, broadcast (J1/J2)
                      and materialize; per-file min/max TIME (A1) from that
                      copy, keep-latest merge into gauge_data bounded to the
-                     batch's time window (J7/M3), one ledger update fills
-                     the windows and flips ingested (M2)
+                     batch's time window (J7/M3), one ledger rewrite from
+                     driver rows fills the windows and flips ingested (M2)
+    ingest_station_meta()
+                  -- station-meta files' station lists joined to the cached
+                     station rows and appended with their ledger entries,
+                     on the driver
+
+The ledgers are small tables: they are read through ``Catalog.rows`` (a
+driver-side copy kept until the table's files change) and written with
+``Catalog.append_rows``/``overwrite_rows`` (one parquet file written on
+the driver, which keeps that copy current), so only the CSV read, the
+window aggregate and the fact merge run Spark jobs.
 
 The source lookup, the measure fan-out and the keep-latest merge are
 module functions that the streaming path (``streaming/stream_ingest``)
 calls too, so batch and stream enrich and merge with the same code. The
-dimension and source-config tables are read through ``Catalog.rows``
-(a driver-side copy kept until the table's files change), and the source
-lookup is ``bootstrap.station_sources``, the pairing the model ingest
-and the dashboard reads use too.
+dimension and source-config tables are read through ``Catalog.rows`` as
+well, and the source lookup is ``bootstrap.station_sources``, the
+pairing the model ingest and the dashboard reads use too.
 
 Keep-latest ordering: the reference keeps the highest serial ``obs_id``
 per (source_id, time) — i.e. last-loaded wins, and files are loaded in
@@ -44,7 +54,6 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.timeparse import TIMEMARK_RE
-from ..operators.ledger import new_files_anti_join
 from ..schemas import (
     GAUGE_DATA,
     GAUGE_STATION,
@@ -56,7 +65,7 @@ from ..schemas import (
 )
 from ..session import local_frame
 from ..sources.catalog import Catalog
-from ..sources.harvest_csv import read_harvest_csv
+from ..sources.harvest_csv import read_harvest_csv, read_station_list
 from .bootstrap import station_sources
 
 LEDGER = "harvest_obs_file_meta"
@@ -68,6 +77,16 @@ def _timemark_of(name: str) -> dt.datetime | None:
     None when it has none."""
     match = re.search(TIMEMARK_RE, name)
     return dt.datetime.fromisoformat(match.group(1).replace("_", ":")) if match else None
+
+
+def utc_now() -> dt.datetime:
+    """Naive UTC wall clock: ``current_timestamp()`` as TIMESTAMP_NTZ
+    under the engine's UTC session timezone."""
+    return dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
+
+
+def _coalesce(value, default):
+    return default if value is None else value
 
 
 def _staged_name(file_name: str) -> str:
@@ -139,56 +158,49 @@ class ObsIngest:
     def discover(self) -> int:
         """Find new harvest files for every configured source; append them
         to the ledger with ingested=False and null TIME windows (filled by
-        :meth:`ingest_new`). Returns number discovered."""
-        ledger = self.catalog.read(LEDGER, HARVEST_OBS_FILE_META)
+        :meth:`ingest_new`). Returns number discovered.
 
-        candidates = []
+        The anti-join against the ledger (J4) is a set lookup over the
+        ledger's cached rows (``Catalog.rows``), and the entries are
+        appended as driver rows (``Catalog.append_rows``): when this
+        catalog wrote the ledger last, discovery runs no Spark job."""
+        seen = {r.file_name for r in self.catalog.rows(LEDGER, HARVEST_OBS_FILE_META)}
+        now = utc_now()
+        entries = []
         for m in self.catalog.rows("source_obs_meta", SOURCE_OBS_META):
             for path in sorted(glob(os.path.join(self.harvest_dir, m.filename_prefix + "*.csv"))):
                 name = os.path.basename(path)
                 stamp = _timemark_of(name)
-                if stamp is None:  # null-guard path (run/createHarvestObsFileMeta.py:159-164)
+                # null-guard path (run/createHarvestObsFileMeta.py:159-164)
+                if stamp is None or name in seen:
                     continue
-                candidates.append({
+                entries.append({
                     "dir_path": os.path.dirname(path), "file_name": name,
-                    "data_date_time": stamp, "timemark": stamp,
+                    "processing_datetime": now, "data_date_time": stamp,
+                    "data_begin_time": None, "data_end_time": None,
                     "data_source": m.data_source, "source_name": m.source_name,
                     "source_archive": m.source_archive,
                     "source_variable": m.source_variable,
-                    "location_type": m.location_type,
+                    "location_type": m.location_type, "timemark": stamp,
+                    "ingested": False, "overlap_past_file_date_time": False,
                 })
-        if not candidates:
-            return 0
-        cand = local_frame(
-            self.spark, candidates,
-            "dir_path string, file_name string, data_date_time timestamp_ntz, "
-            "timemark timestamp_ntz, data_source string, source_name string, "
-            "source_archive string, source_variable string, location_type string",
-        )
-        new = new_files_anti_join(cand, ledger)
-        new_rows = new.collect()
-        if not new_rows:
-            return 0
-        no_time = F.lit(None).cast("timestamp_ntz")
-        entries = (
-            local_frame(self.spark, new_rows, new.schema)
-            .withColumn("processing_datetime", F.current_timestamp().cast("timestamp_ntz"))
-            .withColumn("data_begin_time", no_time)
-            .withColumn("data_end_time", no_time)
-            .withColumn("ingested", F.lit(False))
-            .withColumn("overlap_past_file_date_time", F.lit(False))
-            .select(*[f.name for f in HARVEST_OBS_FILE_META.fields])
-        )
-        self.catalog.append(entries, LEDGER)
-        return len(new_rows)
+        self.catalog.append_rows(entries, LEDGER, HARVEST_OBS_FILE_META)
+        return len(entries)
 
     # -- stages 2+3: enrich + merge ---------------------------------------
 
     def ingest_new(self) -> int:
         """Ingest every pending ledger file into the fact table. Returns
-        number of files ingested."""
-        ledger = self.catalog.read(LEDGER, HARVEST_OBS_FILE_META)
-        pending = sorted(ledger.filter(~F.col("ingested")).collect(),
+        number of files ingested.
+
+        Pending files are the cached ledger rows with ``ingested`` false
+        (a NULL flag is not pending, as in SQL). The per-file ``[min,
+        max]`` TIME windows come from one aggregate over the
+        materialized rows, and the ledger is rewritten from driver rows
+        (``Catalog.overwrite_rows``) with the windows filled and the
+        flags flipped."""
+        ledger = self.catalog.rows(LEDGER, HARVEST_OBS_FILE_META)
+        pending = sorted((r for r in ledger if r.ingested is False),
                          key=lambda r: r.data_date_time)
         if not pending:
             return 0
@@ -217,19 +229,22 @@ class ObsIngest:
         # the pass's one CSV read, materialized once; the left join keeps
         # unknown stations' rows for the windows (they are not merged)
         rows = join_source_id(rows, self.catalog, "left").localCheckpoint(eager=True)
-        windows = rows.groupBy("file_name").agg(
-            F.min("time").alias("__begin"), F.max("time").alias("__end"))
+        windows = {r.file_name: (r.lo, r.hi) for r in rows.groupBy("file_name").agg(
+            F.min("time").alias("lo"), F.max("time").alias("hi")).collect()}
         merge_obs(self.catalog, rows.filter(F.col("source_id").isNotNull()))
 
-        updated = (
-            ledger.join(F.broadcast(windows), "file_name", "left")
-            .withColumn("data_begin_time", F.coalesce("data_begin_time", "__begin"))
-            .withColumn("data_end_time", F.coalesce("data_end_time", "__end"))
-            .withColumn("ingested",
-                        F.col("ingested") | F.col("file_name").isin([r.file_name for r in pending]))
-            .select(*[f.name for f in HARVEST_OBS_FILE_META.fields])
-        )
-        self.catalog.update(LEDGER, updated)
+        names = {r.file_name for r in pending}
+        updated = []
+        for r in ledger:
+            begin, end = windows.get(r.file_name, (None, None))
+            updated.append({
+                **r.asDict(),
+                "data_begin_time": _coalesce(r.data_begin_time, begin),
+                "data_end_time": _coalesce(r.data_end_time, end),
+                # SQL OR: a NULL flag stays NULL unless the file was ingested
+                "ingested": True if r.file_name in names else r.ingested,
+            })
+        self.catalog.overwrite_rows(updated, LEDGER, HARVEST_OBS_FILE_META)
         return len(pending)
 
     # -- stage 4: retain-obs station snapshots ----------------------------
@@ -242,92 +257,60 @@ class ObsIngest:
         (``run/createRetainObsStationFileMeta.py:110-135``), and ledger
         them. Returns number of meta files processed.
 
-        Batched: the paired data files' windows are the parsed
-        ``data_begin_time``/``data_end_time`` that :meth:`ingest_new`
-        wrote to the obs ledger (one ledger probe, no CSV re-read, so a
-        malformed ``TIME`` cell cannot abort the pass), and ONE read
-        collects every meta file's station list, followed by a single
-        snapshot append — no per-file driver loop. Meta files whose
-        paired data file is not ingested or has no parseable ``TIME``
-        are skipped this pass (retried next pass)."""
-        ledger = self.catalog.read("retain_obs_station_file_meta",
-                                   RETAIN_OBS_STATION_FILE_META)
-
-        candidates = []  # (meta file name, paired data file name, timemark, source cfg)
+        All on the driver, with no Spark job once the ledgers are cached.
+        The seen meta files and the paired data files' windows (the
+        parsed ``data_begin_time``/``data_end_time`` that
+        :meth:`ingest_new` wrote, so a malformed ``TIME`` cell cannot
+        abort the pass) come from the two ledgers' ``Catalog.rows``
+        copies. Each meta file's station column is read with
+        ``read_station_list`` and inner-joined to the cached
+        ``gauge_station`` rows by name with SQL bag semantics (a NULL
+        name matches nothing, a duplicated station name multiplies);
+        the snapshot and the ledger entries are appended as driver
+        rows. The trade-off: the driver holds both ledgers whole (about
+        200 B per file row), where the old broadcast semi-join probes
+        held O(harvest dir). Meta files whose paired data file is not
+        ingested or has no parseable ``TIME`` are skipped this pass
+        (retried next pass)."""
+        seen = {r.file_name for r in self.catalog.rows(
+            "retain_obs_station_file_meta", RETAIN_OBS_STATION_FILE_META)}
+        pending = []  # (meta file name, paired data file name, timemark, source cfg)
         for m in self.catalog.rows("source_obs_meta", SOURCE_OBS_META):
             meta_prefix = m.filename_prefix.replace("stationdata", "stationdata_meta")
             if meta_prefix == m.filename_prefix:
                 continue
             for path in sorted(glob(os.path.join(self.harvest_dir, meta_prefix + "*.csv"))):
-                candidates.append((os.path.basename(path), m))
-        # ledger probe bounded to THIS pass's candidate names via a
-        # broadcast semi-join (NOT an isin literal list: thousands of
-        # pending files would bloat the plan — the zonemap stats-build
-        # lesson), so the driver set is O(harvest dir), never O(ledger
-        # history) — the model-side r6 verdict task 4 applied to the
-        # retain-obs ledger
-        if candidates:
-            names = local_frame(self.spark, [(n,) for n, _ in candidates], "file_name string")
-            seen = {r.file_name for r in
-                    ledger.join(F.broadcast(names), "file_name",
-                                "left_semi")
-                    .select("file_name").collect()}
-        else:
-            seen = set()
-
-        pending = []
-        for name, m in candidates:
-            if name in seen:
-                continue
-            stamp = _timemark_of(name)
-            if stamp is None:
-                continue
-            pending.append((name, "_".join(name.split("_meta_")), stamp, m))
+                name = os.path.basename(path)
+                stamp = _timemark_of(name)
+                if name in seen or stamp is None:
+                    continue
+                pending.append((name, "_".join(name.split("_meta_")), stamp, m))
         if not pending:
             return 0
 
-        data_names = local_frame(self.spark, [(d,) for _, d, _, _ in pending], "file_name string")
-        windows = {r.file_name: (r.data_begin_time, r.data_end_time) for r in
-                   self.catalog.read(LEDGER, HARVEST_OBS_FILE_META)
-                   .join(F.broadcast(data_names), "file_name", "left_semi")
-                   .select("file_name", "data_begin_time", "data_end_time")
-                   .collect()}
-
-        const_rows, entries = [], []
+        windows = {r.file_name: (r.data_begin_time, r.data_end_time)
+                   for r in self.catalog.rows(LEDGER, HARVEST_OBS_FILE_META)}
+        stations: dict[str, list] = {}
+        for st in self.catalog.rows("gauge_station", GAUGE_STATION):
+            if st.station_name is not None:
+                stations.setdefault(st.station_name, []).append(st)
+        snapshot, entries = [], []
         for name, data_name, stamp, m in pending:
             begin, end = windows.get(data_name, (None, None))
             if begin is None or end is None:
                 continue  # paired data file missing, empty or not ingested yet
-            const_rows.append([_staged_name(name), stamp, begin, end, m.data_source,
-                               m.source_name, m.source_archive, m.location_type])
+            consts = (stamp, begin, end, m.data_source, m.source_name,
+                      m.source_archive, m.location_type)
+            for station in read_station_list(os.path.join(self.harvest_dir, name)):
+                snapshot += [(st.station_name, st.lat, st.lon, st.location_name, st.tz,
+                              st.gauge_owner, st.country, st.state, st.county, st.geom,
+                              *consts) for st in stations.get(station, ())]
             entries.append([self.harvest_dir, name, m.data_source,
                             m.source_name, m.source_archive, m.location_type,
                             stamp, begin, end, True])
-        if not const_rows:
-            return 0
-
-        consts = local_frame(
-            self.spark, const_rows,
-            "file_key string, timemark timestamp_ntz, begin_date timestamp_ntz, "
-            "end_date timestamp_ntz, data_source string, source_name string, "
-            "source_archive string, location_type string")
-        meta_stations = (
-            self.spark.read.schema("station string").option("header", True)
-            .csv([self._readable_path(self.harvest_dir, e[1]) for e in entries])
-            .withColumn("file_key", F.element_at(F.split(F.input_file_name(), "/"), -1))
-            .select(F.col("station").alias("station_name"), "file_key"))
-        info = local_frame(self.spark, self.catalog.rows("gauge_station", GAUGE_STATION),
-                           GAUGE_STATION).select(
-            "station_name", "lat", "lon", "location_name", "tz", "gauge_owner",
-            "country", "state", "county", "geom")
-        snapshot = (meta_stations
-                    .join(F.broadcast(consts), "file_key")
-                    .join(F.broadcast(info), "station_name")
-                    .select(*[f.name for f in RETAIN_OBS_STATION.fields]))
-        self.catalog.append(snapshot, "retain_obs_station")
-        self.catalog.append(
-            local_frame(self.spark, entries, RETAIN_OBS_STATION_FILE_META),
-            "retain_obs_station_file_meta")
+        self.catalog.append_rows(snapshot, "retain_obs_station", RETAIN_OBS_STATION)
+        self.catalog.append_rows(entries, "retain_obs_station_file_meta",
+                                 RETAIN_OBS_STATION_FILE_META)
         return len(entries)
 
     # -- stage 5: post-ingest cleanup (M5) ---------------------------------
@@ -345,16 +328,11 @@ class ObsIngest:
         ``cleanSource`` option instead)."""
         import shutil
 
-        done: list[tuple[str, str]] = []
-        ledger = self.catalog.read(LEDGER, HARVEST_OBS_FILE_META)
-        done += [(r.dir_path, r.file_name) for r in
-                 ledger.filter(F.col("ingested"))
-                 .select("dir_path", "file_name").collect()]
-        meta_ledger = self.catalog.read("retain_obs_station_file_meta",
-                                        RETAIN_OBS_STATION_FILE_META)
-        done += [(r.dir_path, r.file_name) for r in
-                 meta_ledger.filter(F.col("ingested"))
-                 .select("dir_path", "file_name").collect()]
+        done = [(r.dir_path, r.file_name)
+                for table, schema in ((LEDGER, HARVEST_OBS_FILE_META),
+                                      ("retain_obs_station_file_meta",
+                                       RETAIN_OBS_STATION_FILE_META))
+                for r in self.catalog.rows(table, schema) if r.ingested]
         n = 0
         for dir_path, file_name in done:
             src = os.path.join(dir_path, file_name)

@@ -118,20 +118,35 @@ def ensure_runtime_conf(spark: SparkSession) -> SparkSession:
     return spark
 
 
+def as_struct(schema: StructType | str) -> StructType:
+    """A StructType, or a DDL string parsed into one."""
+    return StructType.fromDDL(schema) if isinstance(schema, str) else schema
+
+
+def arrow_rows(rows: list, schema: StructType | str) -> pa.Table:
+    """Driver-side ``rows`` as one ``pyarrow.Table`` of ``schema`` (Arrow
+    types from ``to_arrow_schema``; TIMESTAMP_NTZ is a tz-less
+    microsecond timestamp). ``schema``: a StructType or DDL string.
+    ``rows``: tuples, lists or ``Row``s by position, or dicts by field
+    name. A value that does not fit its field raises, as
+    ``createDataFrame``'s verifier does."""
+    schema = as_struct(schema)
+    names = schema.fieldNames()
+    return pa.Table.from_pylist(
+        [r if isinstance(r, dict) else dict(zip(names, r, strict=True)) for r in rows],
+        schema=to_arrow_schema(schema))
+
+
 def local_frame(spark: SparkSession, rows: list, schema: StructType | str) -> DataFrame:
-    """Driver-side ``rows`` as a frame built from one ``pyarrow.Table``.
+    """Driver-side ``rows`` (see :func:`arrow_rows`) as a one-partition
+    frame built from one ``pyarrow.Table``.
 
     ``createDataFrame(list, schema)`` pickles rows into a Python RDD, so
     each task of each job reading it runs a Python worker (~0.2 s a task
     on 4 cores). The JVM reads Arrow batches with no Python worker, and
-    regardless of ``spark.sql.execution.arrow.pyspark.enabled``.
-    ``schema``: a StructType or DDL string. ``rows``: tuples, lists or
-    ``Row``s by position, or dicts by field name. A value that does not
-    fit its field raises, as ``createDataFrame``'s verifier does."""
-    if isinstance(schema, str):
-        schema = StructType.fromDDL(schema)
-    names = schema.fieldNames()
-    table = pa.Table.from_pylist(
-        [r if isinstance(r, dict) else dict(zip(names, r, strict=True)) for r in rows],
-        schema=to_arrow_schema(schema))
-    return spark.createDataFrame(table, schema)
+    regardless of ``spark.sql.execution.arrow.pyspark.enabled``. It
+    slices the rows into up to ``defaultParallelism`` partitions, so a
+    5-row lookup would broadcast through a 4-task stage and write 4
+    files; driver rows are small by definition, so they stay in one."""
+    schema = as_struct(schema)
+    return spark.createDataFrame(arrow_rows(rows, schema), schema).coalesce(1)

@@ -4,12 +4,19 @@ The reference's sink is Postgres COPY + DELETE-dedup + UPDATE flags
 (SURVEY section 2.1 S5, 2.8 M2/M3). Here every table is a partitioned
 parquet directory and the mutation verbs become:
 
-    append            -- COPY
+    append            -- COPY of a Spark frame
     overwrite         -- CREATE TABLE AS
     merge_keep_latest -- COPY + bounded DELETE-dedup, as one atomic-ish
                          dynamic-partition overwrite
-    update            -- ledger flag flips (read-modify-write of the tiny
-                         ledger table)
+    append_rows       -- COPY of driver-side rows (ledger entries, station
+                         snapshots): one parquet file written on the
+                         driver, no Spark job
+    overwrite_rows    -- full replace of a small table from driver rows
+                         (ledger flag flips, zone-map sidecars), likewise
+
+A small table's rows are read back through ``rows``, a driver-side copy
+that the two ``*_rows`` writers keep current, so a ledger probe after a
+ledger write costs a directory walk and no Spark job.
 
 Scale design: fact tables are partitioned by a derived time bucket
 (``yyyy-MM`` of the event time). ``merge_keep_latest`` only reads and
@@ -31,7 +38,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from ..operators.dedup import keep_latest
-from ..session import local_frame
+from ..session import arrow_rows, local_frame
 
 #: partition column derived from event time for fact tables
 TIME_BUCKET = "time_bucket"
@@ -72,7 +79,10 @@ class DynamicOverwriteMerge(MergeStrategy):
     ``run/ingestObsTasks.py:390-399``, as partition pruning). ``incoming``
     runs ONCE: it is materialized with ``time_bucket``, and one
     ``distinct`` over that copy is both the emptiness guard and the
-    month list; the dedup never re-runs the caller's lineage."""
+    month list; the dedup never re-runs the caller's lineage. The stored
+    partitions are read with the schema this strategy writes (the
+    incoming columns less ``drop_before_write``), so every caller must
+    pass rows of the table's full schema."""
 
     def merge(self, catalog: "Catalog", table: str, incoming: DataFrame,
               keys: Sequence[str], order_by: Sequence[Column], *,
@@ -94,7 +104,12 @@ class DynamicOverwriteMerge(MergeStrategy):
             catalog.overwrite(deduped, table, partition_by=[TIME_BUCKET],
                               refresh_skipping=False)
             return
-        existing = catalog.read(table).filter(F.col(TIME_BUCKET).isin(months))
+        # the stored partitions hold what this strategy writes: the
+        # incoming columns but the transient ones, time_bucket included;
+        # declaring them spares the read a footer-inference job
+        stored = StructType([f for f in incoming.schema.fields
+                             if f.name not in drop_before_write])
+        existing = catalog.read(table, stored).filter(F.col(TIME_BUCKET).isin(months))
         merged = keep_latest(
             existing.unionByName(incoming, allowMissingColumns=True), keys, order_by,
         ).drop(*drop_before_write)
@@ -192,13 +207,14 @@ class Catalog:
         return reader.parquet(self.path(table))
 
     def rows(self, table: str, schema: StructType | str) -> tuple[Row, ...]:
-        """A small table's rows on the driver (dimensions, stats
+        """A small table's rows on the driver (dimensions, ledgers, stats
         sidecars), read with its declared ``schema`` and cached. The
         cache key is the table's on-disk listing (path, size and mtime
         of every data file), so any writer — another ``Catalog`` or
         process included — invalidates it: a hit costs one directory
-        walk and no Spark job, a miss one read. A missing table has no
-        rows."""
+        walk and no Spark job, a miss one read. :meth:`append_rows` and
+        :meth:`overwrite_rows` keep the copy current. A missing table
+        has no rows."""
         listing = self._listing(table)
         cached = self._rows.get(table)
         if cached is not None and cached[0] == listing:
@@ -207,16 +223,70 @@ class Catalog:
         self._rows[table] = (listing, rows)
         return rows
 
+    def append_rows(self, rows: Sequence, table: str,
+                    schema: StructType | str) -> None:
+        """Append driver-side ``rows`` to ``table`` as one parquet file
+        (:meth:`_write_rows`); no rows write nothing."""
+        if rows:
+            self._write_rows(rows, table, schema, replace=False)
+
     def overwrite_rows(self, rows: Sequence, table: str,
                        schema: StructType | str) -> None:
-        """Overwrite ``table`` with driver-side ``rows`` and keep them as
-        its :meth:`rows` copy, under the listing taken right after the
-        write (one writer per table, as every plain-parquet verb here
-        assumes), so the next :meth:`rows` call reads nothing."""
-        df = local_frame(self.spark, rows, schema)
-        self.overwrite(df, table)
-        named = Row(*df.columns)
-        self._rows[table] = (self._listing(table), tuple(named(*r) for r in rows))
+        """Replace ``table`` with driver-side ``rows``, as one parquet
+        file (:meth:`_write_rows`).
+
+        Crash window: the new file is renamed into the table first, and
+        only then is every other entry of the table directory (the old
+        listing's data files, checksums, ``_SUCCESS``) removed. A crash
+        in between leaves both generations visible: for the obs ledger,
+        a file both pending and ingested, which the next pass re-ingests
+        (the keep-latest merge makes that idempotent)."""
+        self._write_rows(rows, table, schema, replace=True)
+
+    def _write_rows(self, rows: Sequence, table: str,
+                    schema: StructType | str, *, replace: bool) -> None:
+        """The driver-side writer of small tables: pyarrow writes the
+        rows (``session.arrow_rows``) to a hidden temp name in the table
+        directory, which ``os.replace`` then publishes, so no Spark job
+        runs and no reader (``list_parquet_files``, Spark's file index)
+        sees a partial file. The rows become the table's :meth:`rows`
+        copy (appended to it when that copy was current) under the
+        listing taken after the write, one writer per table as every
+        plain-parquet verb here assumes; an append to a table whose
+        copy is stale drops the copy instead."""
+        import shutil
+        import uuid
+
+        import pyarrow.parquet as pq
+
+        data = arrow_rows(rows, schema)
+        before = self._listing(table)
+        cached = self._rows.get(table)
+        old = (() if replace or not before
+               else cached[1] if cached is not None and cached[0] == before
+               else None)
+        d = self.path(table)
+        os.makedirs(d, exist_ok=True)
+        name = f"part-{uuid.uuid4().hex}.parquet"
+        tmp = os.path.join(d, f".{name}.tmp")
+        pq.write_table(data, tmp)
+        os.replace(tmp, os.path.join(d, name))
+        if replace:
+            for entry in os.listdir(d):
+                p = os.path.join(d, entry)
+                if entry == name:
+                    continue
+                if os.path.isdir(p):
+                    shutil.rmtree(p)
+                else:
+                    os.unlink(p)
+        if old is None:
+            self._rows.pop(table, None)
+        else:
+            named = Row(*data.column_names)
+            self._rows[table] = (self._listing(table), old + tuple(
+                named(*r.values()) for r in data.to_pylist()))
+        self.refresh_skipping(table)
 
     def _listing(self, table: str) -> tuple:
         from .zonemap import list_parquet_files
@@ -305,12 +375,6 @@ class Catalog:
         self.merge_strategy.merge(self, table, incoming, keys, order_by,
                                   time_col=time_col,
                                   drop_before_write=drop_before_write)
-        self.refresh_skipping(table)
-
-    def update(self, table: str, df: DataFrame) -> None:
-        """Full-replace of a small control/ledger table (flag flips)."""
-        df = df.localCheckpoint(eager=True)
-        df.write.mode("overwrite").parquet(self.path(table))
         self.refresh_skipping(table)
 
     def drop(self, table: str) -> None:

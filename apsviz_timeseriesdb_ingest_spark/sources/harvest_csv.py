@@ -9,6 +9,7 @@ F1, min/max TIME A1) falls out of one groupBy instead of a Python loop.
 
 from __future__ import annotations
 
+import csv
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -66,3 +67,20 @@ def read_station_csv(spark: SparkSession, paths: Sequence[str]) -> DataFrame:
     """Read headerless station geometry CSVs (S3,
     ``run/ingestObsTasks.py:129,144-153``)."""
     return spark.read.schema(STATION_CSV).option("header", False).csv(list(paths))
+
+
+def read_station_list(path: str) -> list[str | None]:
+    """The ``station`` column (header matched case-insensitively) of a
+    station-list CSV — an obs ``stationdata_meta`` file or a model
+    ``meta_FORECAST_*.csv`` (FIXTURES.md sections 4-5) — read on the
+    driver: a few hundred names never need a Spark job. An empty cell
+    is None, as in Spark's CSV reader; an empty or header-only file has
+    no names, and a header without a station column raises."""
+    with open(path, newline="") as f:
+        rows = [r for r in csv.reader(f) if r]
+    if not rows:
+        return []
+    col = next((i for i, c in enumerate(rows[0]) if c.lower() == "station"), None)
+    if col is None:
+        raise ValueError(f"{path}: no station column in header {rows[0]}")
+    return [(r[col] if col < len(r) else "") or None for r in rows[1:]]

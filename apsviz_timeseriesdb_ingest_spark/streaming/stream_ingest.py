@@ -8,7 +8,8 @@ Mapping of reference semantics onto streaming primitives:
   exactly-once per file, no ledger anti-join needed on the hot path
 - ``ingested`` flag flip (M2) → implicit in checkpoint commit; an audit
   ledger row is still appended per file inside the same foreachBatch for
-  API parity with the batch pipeline
+  API parity with the batch pipeline, from the batch's one collected
+  per-file aggregate, as driver rows (``Catalog.append_rows``)
 - enrichment and keep-latest dedup over overlapping windows (J7) → the
   batch path's own row normalization (``sources/harvest_csv``), source
   lookup, measure fan-out and merge (``plans/obs_ingest``), so semantics
@@ -34,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..plans.obs_ingest import join_source_id, measure_columns, merge_obs
+from ..plans.obs_ingest import join_source_id, measure_columns, merge_obs, utc_now
 from ..schemas import SOURCE_OBS_META, STREAM_OBS_LEDGER
 from ..session import local_frame
 from ..sources.catalog import Catalog
@@ -82,38 +83,31 @@ class StreamingObsIngest:
                           F.col("file_name").startswith(F.col("filename_prefix")))
 
     def _merge_batch(self, batch: DataFrame, batch_id: int) -> None:
-        # one run of the enrichment lineage feeds the emptiness guard,
-        # the merge and the ledger rows
+        # one run of the enrichment lineage feeds the per-file aggregate
+        # and the merge; the collected aggregate is the emptiness guard
         batch = (join_source_id(self._enrich(batch), self.catalog)
                  .filter(F.col("time").isNotNull())
                  .select("source_id", "timemark", "time",
                          *measure_columns(self.source_variable), "file_name")
                  .localCheckpoint(eager=True))
-        if batch.isEmpty():
+        files = batch.groupBy("file_name").agg(
+            F.min("time").alias("lo"), F.max("time").alias("hi"),
+            F.first("timemark").alias("timemark")).collect()
+        if not files:
             return
         merge_obs(self.catalog, batch)
         # audit ledger parity. foreachBatch is at-least-once on
         # failure/replay (the checkpoint commits AFTER this function
         # returns), so the append must be idempotent like the gauge_data
-        # merge: anti-join the existing ledger on the file identity so a
-        # replayed batch re-appends nothing.
-        ledger_rows = (
-            batch.groupBy("file_name")
-            .agg(F.min("time").alias("data_begin_time"),
-                 F.max("time").alias("data_end_time"),
-                 F.first("timemark").alias("timemark"))
-            .select("file_name",
-                    F.lit(self.source_variable).alias("source_variable"),
-                    "data_begin_time", "data_end_time", "timemark",
-                    F.current_timestamp().cast("timestamp_ntz").alias("processing_datetime"),
-                    F.lit(True).alias("ingested"))
-        )
-        if self.catalog.exists("stream_obs_ledger"):
-            seen = (self.catalog.read("stream_obs_ledger", STREAM_OBS_LEDGER)
-                    .select("file_name", "source_variable"))
-            ledger_rows = ledger_rows.join(
-                F.broadcast(seen), ["file_name", "source_variable"], "left_anti")
-        self.catalog.append(ledger_rows, "stream_obs_ledger")
+        # merge: files the cached ledger rows already name for this
+        # variable are dropped, so a replayed batch re-appends nothing.
+        seen = {(r.file_name, r.source_variable) for r in
+                self.catalog.rows("stream_obs_ledger", STREAM_OBS_LEDGER)}
+        now = utc_now()
+        self.catalog.append_rows(
+            [(r.file_name, self.source_variable, r.lo, r.hi, r.timemark, now, True)
+             for r in files if (r.file_name, self.source_variable) not in seen],
+            "stream_obs_ledger", STREAM_OBS_LEDGER)
 
     def _stream(self) -> DataFrame:
         reader = (

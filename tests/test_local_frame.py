@@ -102,3 +102,11 @@ def test_value_that_does_not_fit_raises(spark, row):
         spark.createDataFrame([row], ddl)
     with pytest.raises((TypeError, ValueError)):
         local_frame(spark, [row], ddl)
+
+
+def test_one_partition(spark):
+    """Driver rows stay in one partition: a 5-row lookup broadcasts
+    through a 1-task stage and writes one file."""
+    frame = local_frame(spark, [(i, "s") for i in range(5)], "id long, name string")
+    assert frame.rdd.getNumPartitions() == 1
+    assert sorted(frame.collect()) == [(i, "s") for i in range(5)]

@@ -1,10 +1,10 @@
-"""``model_ingest.read_station_list``: the ``meta_FORECAST_*.csv``
+"""``harvest_csv.read_station_list``: a ``meta_FORECAST_*.csv``
 station list read on the driver gives the names Spark's header CSV
 reader gives."""
 
 from __future__ import annotations
 
-from apsviz_timeseriesdb_ingest_spark.plans.model_ingest import read_station_list
+from apsviz_timeseriesdb_ingest_spark.sources.harvest_csv import read_station_list
 
 
 def test_station_list_matches_spark_csv(spark, tmp_path):

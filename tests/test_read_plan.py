@@ -274,8 +274,9 @@ PIVOT_READ_JOB_BUDGET = 1
 #: a warm as-of read: the union's map stage for the window exchange,
 #: and the window with the collect
 ASOF_READ_JOB_BUDGET = 2
-#: a zone-map refresh against the cached sidecar: its one overwrite
-CACHED_REFRESH_JOB_BUDGET = 1
+#: a zone-map refresh against the cached sidecar: footers and the
+#: sidecar rewrite are read and written on the driver
+CACHED_REFRESH_JOB_BUDGET = 0
 
 
 def test_warm_read_job_budgets(spark, warehouse):
