@@ -19,11 +19,12 @@ Reference stages (per-source subprocesses + intermediate CSVs) collapse to:
                      station rows and appended with their ledger entries,
                      on the driver
 
-The ledgers are small tables: they are read through ``Catalog.rows`` (a
-driver-side copy kept until the table's files change) and written with
-``Catalog.append_rows``/``overwrite_rows`` (one parquet file written on
-the driver, which keeps that copy current), so only the CSV read, the
-window aggregate and the fact merge run Spark jobs.
+The ledgers are read through ``Catalog.arrow`` (a driver-side Arrow copy
+kept until the table's files change, probed with ``pyarrow.compute``, so
+a pass's Python work grows with its new files, not with the ledger) and
+written with ``Catalog.append_rows``/``overwrite_rows`` (one parquet file
+written on the driver, which keeps that copy current), so only the CSV
+read, the window aggregate and the fact merge run Spark jobs.
 
 The source lookup, the measure fan-out and the keep-latest merge are
 module functions that the streaming path (``streaming/stream_ingest``)
@@ -46,10 +47,13 @@ the later-loaded file wins, as in the reference.
 from __future__ import annotations
 
 import datetime as dt
+import logging
 import os
 import re
 from glob import glob
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -71,6 +75,8 @@ from .bootstrap import station_sources
 LEDGER = "harvest_obs_file_meta"
 FACT = "gauge_data"
 
+log = logging.getLogger(__name__)
+
 
 def _timemark_of(name: str) -> dt.datetime | None:
     """The timemark a harvest file name embeds (F1, driver side), or
@@ -85,8 +91,31 @@ def utc_now() -> dt.datetime:
     return dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
 
 
-def _coalesce(value, default):
-    return default if value is None else value
+def _known(ledger: pa.Table, names: list[str]) -> set[str]:
+    """The ``names`` that ``ledger``'s ``file_name`` column holds."""
+    hit = pc.is_in(pa.array(names, pa.string()), value_set=ledger["file_name"])
+    return {n for n, h in zip(names, hit.to_pylist()) if h}
+
+
+def _flag(ledger: pa.Table, value: bool) -> pa.ChunkedArray:
+    """Rows whose ``ingested`` is ``value`` (a NULL flag is neither)."""
+    return pc.fill_null(pc.equal(ledger["ingested"], value), False)
+
+
+def _one_row_per_file(ledger: pa.Table) -> pa.Table:
+    """``ledger`` with one row per file: where a crash in
+    ``Catalog.overwrite_rows`` left two generations, a file's ingested
+    row wins over its pending one, and of equal rows the first stays."""
+    done = ledger.filter(_flag(ledger, True))["file_name"]
+    ledger = ledger.filter(pc.invert(pc.and_(
+        _flag(ledger, False), pc.is_in(ledger["file_name"], value_set=done))))
+    names = ledger["file_name"]
+    if pc.count_distinct(names, mode="all").as_py() == ledger.num_rows:
+        return ledger
+    first = {}
+    for i, n in enumerate(names.to_pylist()):
+        first.setdefault(n, i)
+    return ledger.take(sorted(first.values()))
 
 
 def _staged_name(file_name: str) -> str:
@@ -160,20 +189,24 @@ class ObsIngest:
         to the ledger with ingested=False and null TIME windows (filled by
         :meth:`ingest_new`). Returns number discovered.
 
-        The anti-join against the ledger (J4) is a set lookup over the
-        ledger's cached rows (``Catalog.rows``), and the entries are
-        appended as driver rows (``Catalog.append_rows``): when this
-        catalog wrote the ledger last, discovery runs no Spark job."""
-        seen = {r.file_name for r in self.catalog.rows(LEDGER, HARVEST_OBS_FILE_META)}
-        now = utc_now()
-        entries = []
+        The anti-join against the ledger (J4) probes the ledger's
+        cached Arrow copy (``Catalog.arrow``) for the globbed names, and
+        the entries are appended as driver rows
+        (``Catalog.append_rows``): discovery runs no Spark job."""
+        found = []
         for m in self.catalog.rows("source_obs_meta", SOURCE_OBS_META):
             for path in sorted(glob(os.path.join(self.harvest_dir, m.filename_prefix + "*.csv"))):
                 name = os.path.basename(path)
                 stamp = _timemark_of(name)
                 # null-guard path (run/createHarvestObsFileMeta.py:159-164)
-                if stamp is None or name in seen:
-                    continue
+                if stamp is not None:
+                    found.append((path, name, stamp, m))
+        seen = _known(self.catalog.arrow(LEDGER, HARVEST_OBS_FILE_META),
+                      [name for _, name, _, _ in found])
+        now = utc_now()
+        entries = []
+        for path, name, stamp, m in found:
+            if name not in seen:
                 entries.append({
                     "dir_path": os.path.dirname(path), "file_name": name,
                     "processing_datetime": now, "data_date_time": stamp,
@@ -193,30 +226,39 @@ class ObsIngest:
         """Ingest every pending ledger file into the fact table. Returns
         number of files ingested.
 
-        Pending files are the cached ledger rows with ``ingested`` false
-        (a NULL flag is not pending, as in SQL). The per-file ``[min,
-        max]`` TIME windows come from one aggregate over the
-        materialized rows, and the ledger is rewritten from driver rows
+        Pending files are the cached ledger's rows with ``ingested``
+        false (a NULL flag is not pending, as in SQL). The per-file
+        ``[min, max]`` TIME windows come from one aggregate over the
+        materialized rows, and the ledger is rewritten
         (``Catalog.overwrite_rows``) with the windows filled and the
-        flags flipped."""
-        ledger = self.catalog.rows(LEDGER, HARVEST_OBS_FILE_META)
-        pending = sorted((r for r in ledger if r.ingested is False),
-                         key=lambda r: r.data_date_time)
+        flags flipped, column-wise in Arrow: the pass's Python work is
+        its pending rows, whatever the ledger's length.
+
+        A crash inside ``overwrite_rows`` can leave a file's pending row
+        next to its ingested one. The ingested row wins: the file is not
+        pending (``cleanup_ingested`` may have removed it already), and
+        the rewrite keeps one row per file."""
+        stored = self.catalog.arrow(LEDGER, HARVEST_OBS_FILE_META)
+        ledger = _one_row_per_file(stored)
+        pending = sorted(ledger.filter(_flag(ledger, False)).to_pylist(),
+                         key=lambda r: r["data_date_time"])
         if not pending:
+            if ledger.num_rows < stored.num_rows:
+                self.catalog.overwrite_rows(ledger, LEDGER, HARVEST_OBS_FILE_META)
             return 0
 
         # ledger meta keyed by file_key rides along the CSV rows so one
         # read per measure variable covers every pending source config.
         pending_meta = local_frame(self.spark, [
-            [r.file_name, _staged_name(r.file_name), r.data_source, r.source_name,
-             r.source_archive] for r in pending],
+            [r["file_name"], _staged_name(r["file_name"]), r["data_source"],
+             r["source_name"], r["source_archive"]] for r in pending],
             "file_name string, file_key string, data_source string, source_name string, "
             "source_archive string")
 
         rows = None
-        for variable in sorted({r.source_variable for r in pending}):
-            paths = [self._readable_path(r.dir_path, r.file_name) for r in pending
-                     if r.source_variable == variable]
+        for variable in sorted({r["source_variable"] for r in pending}):
+            paths = [self._readable_path(r["dir_path"], r["file_name"]) for r in pending
+                     if r["source_variable"] == variable]
             df = (
                 read_harvest_csv(self.spark, paths, variable)
                 .drop("file_name")  # the staged name; the ledger's comes from meta
@@ -233,18 +275,20 @@ class ObsIngest:
             F.min("time").alias("lo"), F.max("time").alias("hi")).collect()}
         merge_obs(self.catalog, rows.filter(F.col("source_id").isNotNull()))
 
-        names = {r.file_name for r in pending}
-        updated = []
-        for r in ledger:
-            begin, end = windows.get(r.file_name, (None, None))
-            updated.append({
-                **r.asDict(),
-                "data_begin_time": _coalesce(r.data_begin_time, begin),
-                "data_end_time": _coalesce(r.data_end_time, end),
-                # SQL OR: a NULL flag stays NULL unless the file was ingested
-                "ingested": True if r.file_name in names else r.ingested,
-            })
-        self.catalog.overwrite_rows(updated, LEDGER, HARVEST_OBS_FILE_META)
+        names = [r["file_name"] for r in pending]
+        # per ledger row: its index in ``names``, NULL for files not pending
+        at = pc.index_in(ledger["file_name"], value_set=pa.array(names, pa.string()))
+        ts = pa.timestamp("us")
+        for col, end in (("data_begin_time", 0), ("data_end_time", 1)):
+            window = pa.array([windows.get(n, (None, None))[end] for n in names], ts)
+            ledger = ledger.set_column(
+                ledger.schema.get_field_index(col), col,
+                pc.coalesce(ledger[col], pc.take(window, at)))
+        # SQL OR: a NULL flag stays NULL unless the file was ingested
+        ledger = ledger.set_column(
+            ledger.schema.get_field_index("ingested"), "ingested",
+            pc.if_else(pc.is_valid(at), True, ledger["ingested"]))
+        self.catalog.overwrite_rows(ledger, LEDGER, HARVEST_OBS_FILE_META)
         return len(pending)
 
     # -- stage 4: retain-obs station snapshots ----------------------------
@@ -257,23 +301,21 @@ class ObsIngest:
         (``run/createRetainObsStationFileMeta.py:110-135``), and ledger
         them. Returns number of meta files processed.
 
-        All on the driver, with no Spark job once the ledgers are cached.
-        The seen meta files and the paired data files' windows (the
-        parsed ``data_begin_time``/``data_end_time`` that
-        :meth:`ingest_new` wrote, so a malformed ``TIME`` cell cannot
-        abort the pass) come from the two ledgers' ``Catalog.rows``
-        copies. Each meta file's station column is read with
-        ``read_station_list`` and inner-joined to the cached
-        ``gauge_station`` rows by name with SQL bag semantics (a NULL
-        name matches nothing, a duplicated station name multiplies);
-        the snapshot and the ledger entries are appended as driver
-        rows. The trade-off: the driver holds both ledgers whole (about
-        200 B per file row), where the old broadcast semi-join probes
-        held O(harvest dir). Meta files whose paired data file is not
-        ingested or has no parseable ``TIME`` are skipped this pass
-        (retried next pass)."""
-        seen = {r.file_name for r in self.catalog.rows(
-            "retain_obs_station_file_meta", RETAIN_OBS_STATION_FILE_META)}
+        All on the driver, with no Spark job. The seen meta files and
+        the paired data files' windows (the parsed
+        ``data_begin_time``/``data_end_time`` that :meth:`ingest_new`
+        wrote, so a malformed ``TIME`` cell cannot abort the pass) are
+        probed in the two ledgers' ``Catalog.arrow`` copies. Each meta
+        file's station column is read with ``read_station_list`` and
+        inner-joined to the cached ``gauge_station`` rows by name with
+        SQL bag semantics (a NULL name matches nothing, a duplicated
+        station name multiplies); the snapshot and the ledger entries
+        are appended as driver rows. The trade-off: the driver holds
+        both ledgers whole, as Arrow tables (about 190 B per file row),
+        where the old broadcast semi-join probes held O(harvest dir).
+        Meta files whose paired data file is not ingested or has no
+        parseable ``TIME``, and meta files with no ``station`` column,
+        are skipped this pass (retried next pass)."""
         pending = []  # (meta file name, paired data file name, timemark, source cfg)
         for m in self.catalog.rows("source_obs_meta", SOURCE_OBS_META):
             meta_prefix = m.filename_prefix.replace("stationdata", "stationdata_meta")
@@ -282,26 +324,41 @@ class ObsIngest:
             for path in sorted(glob(os.path.join(self.harvest_dir, meta_prefix + "*.csv"))):
                 name = os.path.basename(path)
                 stamp = _timemark_of(name)
-                if name in seen or stamp is None:
-                    continue
-                pending.append((name, "_".join(name.split("_meta_")), stamp, m))
+                if stamp is not None:
+                    pending.append((name, "_".join(name.split("_meta_")), stamp, m))
+        seen = _known(self.catalog.arrow("retain_obs_station_file_meta",
+                                         RETAIN_OBS_STATION_FILE_META),
+                      [name for name, _, _, _ in pending])
+        pending = [p for p in pending if p[0] not in seen]
         if not pending:
             return 0
 
-        windows = {r.file_name: (r.data_begin_time, r.data_end_time)
-                   for r in self.catalog.rows(LEDGER, HARVEST_OBS_FILE_META)}
+        ledger = self.catalog.arrow(LEDGER, HARVEST_OBS_FILE_META)
+        paired = ledger.filter(pc.is_in(
+            ledger["file_name"], value_set=pa.array([p[1] for p in pending], pa.string())))
+        # a pending row left next to the ingested one (see ingest_new) has
+        # no window; the ingested row's window counts
+        windows = {r["file_name"]: (r["data_begin_time"], r["data_end_time"])
+                   for r in paired.select(["file_name", "data_begin_time",
+                                           "data_end_time"]).to_pylist()
+                   if r["data_begin_time"] is not None and r["data_end_time"] is not None}
         stations: dict[str, list] = {}
         for st in self.catalog.rows("gauge_station", GAUGE_STATION):
             if st.station_name is not None:
                 stations.setdefault(st.station_name, []).append(st)
         snapshot, entries = [], []
         for name, data_name, stamp, m in pending:
-            begin, end = windows.get(data_name, (None, None))
-            if begin is None or end is None:
+            if data_name not in windows:
                 continue  # paired data file missing, empty or not ingested yet
+            try:
+                names = read_station_list(os.path.join(self.harvest_dir, name))
+            except ValueError as e:
+                log.warning("station-meta file skipped: %s", e)
+                continue
+            begin, end = windows[data_name]
             consts = (stamp, begin, end, m.data_source, m.source_name,
                       m.source_archive, m.location_type)
-            for station in read_station_list(os.path.join(self.harvest_dir, name)):
+            for station in names:
                 snapshot += [(st.station_name, st.lat, st.lon, st.location_name, st.tz,
                               st.gauge_owner, st.country, st.state, st.county, st.geom,
                               *consts) for st in stations.get(station, ())]
@@ -328,11 +385,13 @@ class ObsIngest:
         ``cleanSource`` option instead)."""
         import shutil
 
-        done = [(r.dir_path, r.file_name)
+        done = [(r["dir_path"], r["file_name"])
                 for table, schema in ((LEDGER, HARVEST_OBS_FILE_META),
                                       ("retain_obs_station_file_meta",
                                        RETAIN_OBS_STATION_FILE_META))
-                for r in self.catalog.rows(table, schema) if r.ingested]
+                for t in (self.catalog.arrow(table, schema),)
+                for r in t.filter(_flag(t, True)).select(["dir_path", "file_name"])
+                .to_pylist()]
         n = 0
         for dir_path, file_name in done:
             src = os.path.join(dir_path, file_name)

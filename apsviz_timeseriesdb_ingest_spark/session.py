@@ -123,18 +123,22 @@ def as_struct(schema: StructType | str) -> StructType:
     return StructType.fromDDL(schema) if isinstance(schema, str) else schema
 
 
+def arrow_schema(schema: StructType | str) -> pa.Schema:
+    """The Arrow form of ``schema`` (``to_arrow_schema``: TIMESTAMP_NTZ
+    is a tz-less microsecond timestamp)."""
+    return to_arrow_schema(as_struct(schema))
+
+
 def arrow_rows(rows: list, schema: StructType | str) -> pa.Table:
-    """Driver-side ``rows`` as one ``pyarrow.Table`` of ``schema`` (Arrow
-    types from ``to_arrow_schema``; TIMESTAMP_NTZ is a tz-less
-    microsecond timestamp). ``schema``: a StructType or DDL string.
+    """Driver-side ``rows`` as one ``pyarrow.Table`` of
+    :func:`arrow_schema`. ``schema``: a StructType or DDL string.
     ``rows``: tuples, lists or ``Row``s by position, or dicts by field
     name. A value that does not fit its field raises, as
     ``createDataFrame``'s verifier does."""
-    schema = as_struct(schema)
-    names = schema.fieldNames()
+    names = as_struct(schema).fieldNames()
     return pa.Table.from_pylist(
         [r if isinstance(r, dict) else dict(zip(names, r, strict=True)) for r in rows],
-        schema=to_arrow_schema(schema))
+        schema=arrow_schema(schema))
 
 
 def local_frame(spark: SparkSession, rows: list, schema: StructType | str) -> DataFrame:

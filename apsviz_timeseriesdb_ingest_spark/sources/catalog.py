@@ -14,9 +14,12 @@ parquet directory and the mutation verbs become:
     overwrite_rows    -- full replace of a small table from driver rows
                          (ledger flag flips, zone-map sidecars), likewise
 
-A small table's rows are read back through ``rows``, a driver-side copy
-that the two ``*_rows`` writers keep current, so a ledger probe after a
-ledger write costs a directory walk and no Spark job.
+A small table is read back through a driver-side copy that the two
+``*_rows`` writers keep current: ``rows`` hands it out as ``Row``s (a
+few hundred dimension or stats rows), ``arrow`` as a ``pyarrow.Table``
+(a ledger that grows a row per harvest file, probed with Arrow compute
+rather than a Python loop). A probe after a write costs a directory walk
+and no Spark job.
 
 Scale design: fact tables are partitioned by a derived time bucket
 (``yyyy-MM`` of the event time). ``merge_keep_latest`` only reads and
@@ -33,12 +36,14 @@ from __future__ import annotations
 import os
 from collections.abc import Sequence
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from ..operators.dedup import keep_latest
-from ..session import arrow_rows, local_frame
+from ..session import arrow_rows, arrow_schema, local_frame
 
 #: partition column derived from event time for fact tables
 TIME_BUCKET = "time_bucket"
@@ -52,6 +57,11 @@ VACUUM_GRACE_SECONDS = 600.0
 
 def time_bucket(col: str = "time") -> Column:
     return F.date_format(col, "yyyy-MM").alias(TIME_BUCKET)
+
+
+def _as_rows(data: pa.Table) -> tuple[Row, ...]:
+    named = Row(*data.column_names)
+    return tuple(named(*r.values()) for r in data.to_pylist())
 
 
 class MergeStrategy:
@@ -188,7 +198,9 @@ class Catalog:
         self.spark = spark
         self.warehouse = warehouse
         self.merge_strategy = merge_strategy or DynamicOverwriteMerge()
-        self._rows: dict[str, tuple[tuple, tuple[Row, ...]]] = {}
+        # table -> (listing, Arrow copy or None, Row copy or None)
+        self._copies: dict[str, tuple[tuple, pa.Table | None,
+                                      tuple[Row, ...] | None]] = {}
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
     def path(self, table: str) -> str:
@@ -207,7 +219,7 @@ class Catalog:
         return reader.parquet(self.path(table))
 
     def rows(self, table: str, schema: StructType | str) -> tuple[Row, ...]:
-        """A small table's rows on the driver (dimensions, ledgers, stats
+        """A small table's rows on the driver (dimensions, stats
         sidecars), read with its declared ``schema`` and cached. The
         cache key is the table's on-disk listing (path, size and mtime
         of every data file), so any writer — another ``Catalog`` or
@@ -216,21 +228,38 @@ class Catalog:
         :meth:`overwrite_rows` keep the copy current. A missing table
         has no rows."""
         listing = self._listing(table)
-        cached = self._rows.get(table)
-        if cached is not None and cached[0] == listing:
-            return cached[1]
-        rows = tuple(self.read(table, schema).collect()) if listing else ()
-        self._rows[table] = (listing, rows)
+        known, data, rows = self._copies.get(table, (None, None, None))
+        if known != listing:
+            data, rows = None, tuple(self.read(table, schema).collect()) if listing else ()
+        elif rows is None:
+            rows = _as_rows(data)
+        self._copies[table] = (listing, data, rows)
         return rows
 
-    def append_rows(self, rows: Sequence, table: str,
+    def arrow(self, table: str, schema: StructType | str) -> pa.Table:
+        """The same driver-side copy as :meth:`rows`, as a
+        ``pyarrow.Table`` of ``schema``: for an unpartitioned table too
+        long to walk as ``Row``s each pass (a ledger of every harvest
+        file), probed with ``pyarrow.compute``. A miss reads the
+        listing's files with pyarrow, so it runs no Spark job either."""
+        listing = self._listing(table)
+        known, data, rows = self._copies.get(table, (None, None, None))
+        if known != listing:
+            rows = None
+        if known != listing or data is None:
+            data = (pq.read_table([f for f, _, _ in listing], schema=arrow_schema(schema))
+                    if listing else arrow_schema(schema).empty_table())
+        self._copies[table] = (listing, data, rows)
+        return data
+
+    def append_rows(self, rows: Sequence | pa.Table, table: str,
                     schema: StructType | str) -> None:
         """Append driver-side ``rows`` to ``table`` as one parquet file
         (:meth:`_write_rows`); no rows write nothing."""
-        if rows:
+        if len(rows):
             self._write_rows(rows, table, schema, replace=False)
 
-    def overwrite_rows(self, rows: Sequence, table: str,
+    def overwrite_rows(self, rows: Sequence | pa.Table, table: str,
                        schema: StructType | str) -> None:
         """Replace ``table`` with driver-side ``rows``, as one parquet
         file (:meth:`_write_rows`).
@@ -238,33 +267,31 @@ class Catalog:
         Crash window: the new file is renamed into the table first, and
         only then is every other entry of the table directory (the old
         listing's data files, checksums, ``_SUCCESS``) removed. A crash
-        in between leaves both generations visible: for the obs ledger,
-        a file both pending and ingested, which the next pass re-ingests
-        (the keep-latest merge makes that idempotent)."""
+        in between leaves both generations visible, so a reader must
+        tolerate a key listed twice: the obs ledger keeps a file's
+        ingested row over its pending one (``ObsIngest.ingest_new``),
+        and its next rewrite drops the stale row."""
         self._write_rows(rows, table, schema, replace=True)
 
-    def _write_rows(self, rows: Sequence, table: str,
+    def _write_rows(self, rows: Sequence | pa.Table, table: str,
                     schema: StructType | str, *, replace: bool) -> None:
         """The driver-side writer of small tables: pyarrow writes the
-        rows (``session.arrow_rows``) to a hidden temp name in the table
-        directory, which ``os.replace`` then publishes, so no Spark job
-        runs and no reader (``list_parquet_files``, Spark's file index)
-        sees a partial file. The rows become the table's :meth:`rows`
-        copy (appended to it when that copy was current) under the
-        listing taken after the write, one writer per table as every
+        rows (a ``pyarrow.Table``, or rows as ``session.arrow_rows``
+        takes them) to a hidden temp name in the table directory, which
+        ``os.replace`` then publishes, so no Spark job runs and no
+        reader (``list_parquet_files``, Spark's file index) sees a
+        partial file. The rows become the table's driver-side copy
+        (appended to it when that copy was current) under the listing
+        taken after the write, one writer per table as every
         plain-parquet verb here assumes; an append to a table whose
         copy is stale drops the copy instead."""
         import shutil
         import uuid
 
-        import pyarrow.parquet as pq
-
-        data = arrow_rows(rows, schema)
+        data = (rows.cast(arrow_schema(schema)) if isinstance(rows, pa.Table)
+                else arrow_rows(rows, schema))
         before = self._listing(table)
-        cached = self._rows.get(table)
-        old = (() if replace or not before
-               else cached[1] if cached is not None and cached[0] == before
-               else None)
+        known, old_data, old_rows = self._copies.get(table, (None, None, None))
         d = self.path(table)
         os.makedirs(d, exist_ok=True)
         name = f"part-{uuid.uuid4().hex}.parquet"
@@ -280,12 +307,17 @@ class Catalog:
                     shutil.rmtree(p)
                 else:
                     os.unlink(p)
-        if old is None:
-            self._rows.pop(table, None)
+        if replace or not before:
+            copy = (data, None)
+        elif known == before:
+            copy = (None if old_data is None else pa.concat_tables([old_data, data]),
+                    None if old_rows is None else old_rows + _as_rows(data))
         else:
-            named = Row(*data.column_names)
-            self._rows[table] = (self._listing(table), old + tuple(
-                named(*r.values()) for r in data.to_pylist()))
+            copy = None
+        if copy is None:
+            self._copies.pop(table, None)
+        else:
+            self._copies[table] = (self._listing(table), *copy)
         self.refresh_skipping(table)
 
     def _listing(self, table: str) -> tuple:

@@ -1,13 +1,16 @@
 """``Catalog.append_rows``/``overwrite_rows``: small tables written from
 driver rows with pyarrow read back as Spark-written tables do, run no
-Spark job, keep the ``Catalog.rows`` copy current and never expose a
-partial file; the obs station-meta snapshot built on the driver equals
-its Spark join formulation; the stream's fixed cost per call is pinned."""
+Spark job, keep the ``Catalog.rows``/``Catalog.arrow`` copy current and
+never expose a partial file; the obs ledger survives a crash inside
+``overwrite_rows``; the obs station-meta snapshot built on the driver
+equals its Spark join formulation; the stream's fixed cost per call is
+pinned."""
 
 from __future__ import annotations
 
 import datetime as dt
 import os
+import shutil
 from collections import Counter
 
 import pyarrow.parquet as pq
@@ -79,6 +82,10 @@ def test_reads_back_as_spark_written(spark, tmp_path, table):
         assert got.schema == inferred.schema, name
         assert Counter(got.collect()) == Counter(inferred.collect()), name
     assert len(list_parquet_files(catalog.path("over"))) == 1
+    # the Arrow copy of a Spark-written table, read by pyarrow, agrees too
+    fresh = Catalog(spark, catalog.warehouse)
+    assert Counter(tuple(r.values()) for r in
+                   fresh.arrow("spark_written", schema).to_pylist()) == want_declared
 
 
 def test_no_job_and_cached_copy_follows_writers(spark, tmp_path):
@@ -93,6 +100,9 @@ def test_no_job_and_cached_copy_follows_writers(spark, tmp_path):
         cached, jobs = _jobs(spark, "cached-rows", lambda: catalog.rows(table, schema))
         assert jobs == 0
         assert Counter(cached) == Counter(catalog.read(table, schema).collect())
+        data, jobs = _jobs(spark, "cached-arrow", lambda: catalog.arrow(table, schema))
+        assert jobs == 0
+        assert Counter(tuple(r.values()) for r in data.to_pylist()) == Counter(cached)
     assert Counter(catalog.rows(table, schema)) == Counter(second + first)
 
     # a second catalog's write invalidates the first one's copy, and an
@@ -133,6 +143,65 @@ def test_temp_files_stay_invisible(spark, tmp_path, monkeypatch):
     assert len(os.listdir(path)) == 1
 
 
+# -- the obs ledger across a crash in overwrite_rows ---------------------------
+
+def _obs_fixture(spark, tmp_path, stations):
+    from apsviz_timeseriesdb_ingest_spark.plans.bootstrap import bootstrap
+
+    harvest = tmp_path / "harvest"
+    harvest.mkdir()
+    _write(str(tmp_path / "stations.csv"), [",".join(map(str, r)) for r in stations])
+    _write(str(tmp_path / "meta.csv"), [SOURCE_META_HEADER, SOURCE_META_ROWS[0]])
+    catalog = Catalog(spark, str(tmp_path / "wh"))
+    bootstrap(spark, catalog, station_csvs=[str(tmp_path / "stations.csv")],
+              source_meta_csv=str(tmp_path / "meta.csv"))
+    return harvest, catalog
+
+
+def _land_obs(harvest, hour: int) -> str:
+    name = f"noaa_stationdata_water_level_2024-01-01T{hour:02d}_00_00.csv"
+    _write(str(harvest / name), ["STATION,TIME,WATER_LEVEL",
+                                 f"ST_B,2024-01-01 {hour:02d}:00:00,1.0"])
+    return name
+
+
+def test_ledger_survives_crash_inside_rewrite(spark, tmp_path):
+    """A crash after ``overwrite_rows`` published the rewritten ledger
+    but before it unlinked the old file leaves a file both pending and
+    ingested. Cleanup then removes the file; the next pass must neither
+    read it again nor keep the ledger doubled."""
+    harvest, catalog = _obs_fixture(spark, tmp_path, META_STATIONS[2:])
+    table = catalog.path("harvest_obs_file_meta")
+    pipe = ObsIngest(spark, catalog, str(harvest))
+    first = _land_obs(harvest, 1)
+    assert pipe.discover() == 1
+    old = list_parquet_files(table)
+    saved = [shutil.copy2(f, tmp_path) for f in old]
+
+    def crash() -> None:  # the old generation back next to the new one
+        for f, copy in zip(old, saved):
+            shutil.copy2(copy, f)
+
+    assert pipe.ingest_new() == 1
+    crash()
+    assert len(catalog.read("harvest_obs_file_meta").collect()) == 2
+    assert pipe.cleanup_ingested() == 1
+    assert not (harvest / first).exists()
+
+    second = _land_obs(harvest, 2)
+    assert pipe.run_sequence_ingest() == {"discovered": 1, "ingested": 1, "station_meta": 0}
+    ledger = catalog.read("harvest_obs_file_meta").collect()
+    assert sorted((r.file_name, r.ingested) for r in ledger) == [(first, True), (second, True)]
+    assert catalog.read("gauge_data").count() == 2
+
+    # with nothing pending, the pass still drops the stale generation
+    crash()
+    assert pipe.ingest_new() == 0
+    ledger = catalog.read("harvest_obs_file_meta").collect()
+    assert sorted((r.file_name, r.ingested, r.data_begin_time) for r in ledger) == [
+        (first, True, dt.datetime(2024, 1, 1, 1)), (second, True, dt.datetime(2024, 1, 1, 2))]
+
+
 # -- the obs station-meta snapshot --------------------------------------------
 
 #: ST_A twice under one name: an inner join by name multiplies
@@ -170,18 +239,11 @@ def _spark_snapshot(spark, catalog, pipe, meta_files):
 
 
 def test_station_meta_snapshot_matches_spark_join(spark, tmp_path):
-    from apsviz_timeseriesdb_ingest_spark.plans.bootstrap import bootstrap
-
-    harvest = tmp_path / "harvest"
-    harvest.mkdir()
-    _write(str(tmp_path / "stations.csv"), [",".join(map(str, r)) for r in META_STATIONS])
-    _write(str(tmp_path / "meta.csv"), [SOURCE_META_HEADER, SOURCE_META_ROWS[0]])
-    catalog = Catalog(spark, str(tmp_path / "wh"))
-    bootstrap(spark, catalog, station_csvs=[str(tmp_path / "stations.csv")],
-              source_meta_csv=str(tmp_path / "meta.csv"))
+    harvest, catalog = _obs_fixture(spark, tmp_path, META_STATIONS)
     prefix = "noaa_stationdata_water_level"
     stamps = {"2024-01-01T02:00:00": dt.datetime(2024, 1, 1, 2),   # colon name, staged
-              "2024-01-01T04_00_00": dt.datetime(2024, 1, 1, 4)}   # header-only meta
+              "2024-01-01T04_00_00": dt.datetime(2024, 1, 1, 4),   # header-only meta
+              "2024-01-01T06_00_00": dt.datetime(2024, 1, 1, 6)}   # no station column
     for i, stamp in enumerate(stamps):
         _write(str(harvest / f"{prefix}_{stamp}.csv"),
                ["STATION,TIME,WATER_LEVEL", f"ST_B,2024-01-01 0{i}:00:00,1.0",
@@ -190,18 +252,24 @@ def test_station_meta_snapshot_matches_spark_join(spark, tmp_path):
     _write(str(harvest / meta_files[0][0]),
            ["STATION,LAT,LON", "ST_A,1,1", ",2,2", "NOPE,3,3", "ST_B,4,4", "ST_A,5,5"])
     _write(str(harvest / meta_files[1][0]), ["STATION,LAT,LON"])
+    _write(str(harvest / meta_files[2][0]), ["NAME,LAT,LON", "ST_B,4,4"])
 
     pipe = ObsIngest(spark, catalog, str(harvest))
-    assert pipe.run_sequence_ingest() == {"discovered": 2, "ingested": 2, "station_meta": 2}
+    # the bad header skips its own file only, unledgered
+    assert pipe.run_sequence_ingest() == {"discovered": 3, "ingested": 3, "station_meta": 2}
     got = catalog.read("retain_obs_station", schemas.RETAIN_OBS_STATION).collect()
-    want = _spark_snapshot(spark, catalog, pipe, meta_files)
+    want = _spark_snapshot(spark, catalog, pipe, meta_files[:2])
     # ST_A listed twice x two ST_A stations, ST_B once; the empty cell
     # and the unknown station match nothing
     assert len(want) == 5
     assert Counter(got) == Counter(want)
     ledger = catalog.read("retain_obs_station_file_meta").collect()
-    assert sorted(r.file_name for r in ledger) == sorted(n for n, _ in meta_files)
+    assert sorted(r.file_name for r in ledger) == sorted(n for n, _ in meta_files[:2])
     assert pipe.ingest_station_meta() == 0
+    # mended, the file is taken by the next pass
+    _write(str(harvest / meta_files[2][0]), ["STATION,LAT,LON", "ST_B,4,4"])
+    assert pipe.ingest_station_meta() == 1
+    assert catalog.read("retain_obs_station").count() == 6
 
 
 # -- the stream's fixed cost --------------------------------------------------
