@@ -1,6 +1,5 @@
 from .catalog import (  # noqa: F401
     Catalog,
-    DeltaMerge,
     DynamicOverwriteMerge,
     MergeStrategy,
 )

@@ -6,8 +6,8 @@ parquet directory and the mutation verbs become:
 
     append            -- COPY of a Spark frame
     overwrite         -- CREATE TABLE AS
-    merge_keep_latest -- COPY + bounded DELETE-dedup, as one atomic-ish
-                         dynamic-partition overwrite
+    merge_keep_latest -- COPY + bounded DELETE-dedup: the touched months
+                         are rebuilt in a stage and published
     append_rows       -- COPY of driver-side rows (ledger entries, station
                          snapshots): one parquet file written on the
                          driver, no Spark job
@@ -23,17 +23,28 @@ and no Spark job.
 
 Scale design: fact tables are partitioned by a derived time bucket
 (``yyyy-MM`` of the event time). ``merge_keep_latest`` only reads and
-rewrites the partitions the incoming batch touches (dynamic partition
-overwrite) — the cost is proportional to the batch's time window, never
-the table, which is the reference's bounded-DELETE optimization
-(``run/ingestObsTasks.py:390-399``) expressed as partition pruning. On a
-real deployment this maps 1:1 onto Delta/Iceberg MERGE; plain parquet
-keeps this repo dependency-free.
+rewrites the partitions the incoming batch touches — the cost is
+proportional to the batch's time window, never the table, which is the
+reference's bounded-DELETE optimization
+(``run/ingestObsTasks.py:390-399``) expressed as partition pruning.
+
+The merge and the ``*_rows`` writers commit one way (:func:`_publish`):
+finished files written under hidden names are ``os.replace``d into a
+table or month directory, and only then are its old entries unlinked.
+No write reads what it replaces. The two windows:
+
+- a crash between publish and unlink leaves both generations in the
+  directory until the rerun: a rerun merge reads both and keeps the
+  latest of each key; a small table's reader tolerates a key listed
+  twice (:meth:`Catalog.overwrite_rows`);
+- a reader racing the publish can see both generations of a month (one
+  writer per table and no racing reader is assumed throughout).
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 from collections.abc import Sequence
 
 import pyarrow as pa
@@ -44,6 +55,7 @@ from pyspark.sql.types import StructType
 
 from ..operators.dedup import keep_latest
 from ..session import arrow_rows, arrow_schema, local_frame
+from .zonemap import list_parquet_files
 
 #: partition column derived from event time for fact tables
 TIME_BUCKET = "time_bucket"
@@ -54,9 +66,18 @@ TIME_BUCKET = "time_bucket"
 #: window (ADVICE r7). 0.0 is an explicit per-call opt-in.
 VACUUM_GRACE_SECONDS = 600.0
 
+#: the most files :meth:`Catalog.append_rows` lets a small table hold;
+#: the append that finds this many rewrites the table as one file
+SMALL_TABLE_MAX_FILES = 16
+
 
 def time_bucket(col: str = "time") -> Column:
     return F.date_format(col, "yyyy-MM").alias(TIME_BUCKET)
+
+
+def _arrow(rows: Sequence | pa.Table, schema: StructType | str) -> pa.Table:
+    return (rows.cast(arrow_schema(schema)) if isinstance(rows, pa.Table)
+            else arrow_rows(rows, schema))
 
 
 def _as_rows(data: pa.Table) -> tuple[Row, ...]:
@@ -64,16 +85,29 @@ def _as_rows(data: pa.Table) -> tuple[Row, ...]:
     return tuple(named(*r.values()) for r in data.to_pylist())
 
 
-class MergeStrategy:
-    """Deployment seam for the keep-latest upsert (M3/J7).
+def _publish(dest: str, staged: Sequence[tuple[str, str]], *, replace: bool) -> None:
+    """The catalog's one commit: ``os.replace`` each finished file
+    ``(path, name)`` into directory ``dest``, then, with ``replace``,
+    remove every other entry of ``dest`` (old data files, checksums,
+    ``_SUCCESS``)."""
+    os.makedirs(dest, exist_ok=True)
+    for path, name in staged:
+        os.replace(path, os.path.join(dest, name))
+    if replace:
+        for entry in set(os.listdir(dest)) - {name for _, name in staged}:
+            p = os.path.join(dest, entry)
+            if os.path.isdir(p):
+                shutil.rmtree(p)
+            else:
+                os.unlink(p)
 
-    The engine's merge semantics are: dedup ``incoming`` per ``keys`` by
-    ``order_by`` (first row wins), then upsert into ``table`` such that
-    for every key the winner across stored+incoming survives. How that
-    executes is a deployment concern — plain parquet needs a partition
-    overwrite; Delta/Iceberg deployments use a real transactional MERGE
-    with concurrent-writer safety. Swap the strategy at Catalog
-    construction; pipeline code never changes."""
+
+class MergeStrategy:
+    """Seam for the keep-latest upsert (M3/J7): dedup ``incoming`` per
+    ``keys`` by ``order_by`` (first row wins), then upsert into
+    ``table`` such that for every key the winner across stored+incoming
+    survives. Swap the strategy at Catalog construction (to wrap or
+    instrument it); pipeline code never changes."""
 
     def merge(self, catalog: "Catalog", table: str, incoming: DataFrame,
               keys: Sequence[str], order_by: Sequence[Column | str], *,
@@ -82,114 +116,58 @@ class MergeStrategy:
 
 
 class DynamicOverwriteMerge(MergeStrategy):
-    """Single-writer merge for plain parquet: keep-latest dedup union'd
-    with only the time-bucket partitions the batch touches, rewritten via
-    dynamic partition overwrite. Cost is proportional to the batch's time
-    window, never the table (the reference's bounded DELETE,
-    ``run/ingestObsTasks.py:390-399``, as partition pruning). ``incoming``
-    runs ONCE: it is materialized with ``time_bucket``, and one
-    ``distinct`` over that copy is both the emptiness guard and the
-    month list; the dedup never re-runs the caller's lineage. The stored
-    partitions are read with the schema this strategy writes (the
-    incoming columns less ``drop_before_write``), so every caller must
-    pass rows of the table's full schema."""
+    """Single-writer merge for plain parquet: a staged swap of the
+    months the batch touches, so cost follows the batch's time window,
+    never the table (the reference's bounded DELETE,
+    ``run/ingestObsTasks.py:390-399``, as partition pruning).
+
+    ``incoming`` runs once, written by month to a hidden stage
+    ``{warehouse}/.merge-<uuid>/in``; the month directories it creates
+    are the touched months (none for an empty batch). That batch and
+    the stored rows of those months, read with the schema this strategy
+    writes (the incoming columns less ``drop_before_write``: callers
+    pass rows of the table's full schema), are deduplicated into
+    ``.../out``, whose months :func:`_publish` then moves into the
+    table. A new table is a merge with no stored months."""
 
     def merge(self, catalog: "Catalog", table: str, incoming: DataFrame,
-              keys: Sequence[str], order_by: Sequence[Column], *,
+              keys: Sequence[str], order_by: Sequence[Column | str], *,
               time_col: str, drop_before_write: Sequence[str]) -> None:
-        incoming = (incoming.withColumn(TIME_BUCKET, time_bucket(time_col))
-                    .localCheckpoint(eager=True))
-        months = [r[0] for r in incoming.select(TIME_BUCKET).distinct().collect()]
-        if not months:
-            # degenerate batches (e.g. a header-only harvest file) must
-            # not create/overwrite anything: writing an empty frame to a
-            # fresh table path leaves a parquet dir with no footers that
-            # poisons every later read
-            return
-        if not catalog.exists(table):
-            deduped = (keep_latest(incoming, keys, order_by).drop(*drop_before_write)
-                       .sortWithinPartitions(*keys))
-            # merge_keep_latest refreshes skipping sidecars once, after
-            # the strategy returns — skip the inner overwrite's hook
-            catalog.overwrite(deduped, table, partition_by=[TIME_BUCKET],
-                              refresh_skipping=False)
-            return
-        # the stored partitions hold what this strategy writes: the
-        # incoming columns but the transient ones, time_bucket included;
-        # declaring them spares the read a footer-inference job
-        stored = StructType([f for f in incoming.schema.fields
-                             if f.name not in drop_before_write])
-        existing = catalog.read(table, stored).filter(F.col(TIME_BUCKET).isin(months))
-        merged = keep_latest(
-            existing.unionByName(incoming, allowMissingColumns=True), keys, order_by,
-        ).drop(*drop_before_write)
-        # cluster rows by the dedup keys inside each file: parquet
-        # row-group min/max stats then skip for key-selective reads
-        merged = merged.sortWithinPartitions(*keys)
-        # Materialize before writing: the write target is also the read
-        # source; breaking lineage avoids read-your-own-overwrite. (A real
-        # deployment uses Delta/Iceberg MERGE and skips this.)
-        merged = merged.localCheckpoint(eager=True)
-        (merged.write.mode("overwrite").partitionBy(TIME_BUCKET)
-         .parquet(catalog.path(table)))
+        import uuid
 
-
-class DeltaMerge(MergeStrategy):
-    """Delta Lake binding: the same keep-latest upsert as a transactional
-    ``MERGE`` with optimistic concurrency (multi-writer safe). Requires
-    ``delta-spark`` on the cluster (not shipped in this repo's sandbox;
-    the binding is exercised on deployments).
-
-    Semantics mapping: dedup incoming per key first (one winner per key
-    in the batch), then ``MERGE ON keys`` where ``whenMatched`` updates
-    only if the incoming row wins ``order_by`` against the stored row —
-    for an all-descending ``order_by`` (every pipeline here: newest
-    timemark/file wins, nulls last) that condition is a tuple compare
-    ``struct(src.o1, src.o2, ...) >= struct(tgt.o1, tgt.o2, ...)``.
-    Iceberg's ``MERGE INTO`` binds identically via SQL."""
-
-    def merge(self, catalog: "Catalog", table: str, incoming: DataFrame,
-              keys: Sequence[str], order_by: Sequence[Column], *,
-              time_col: str, drop_before_write: Sequence[str]) -> None:
+        stage = os.path.join(catalog.warehouse, f".merge-{uuid.uuid4().hex}")
+        staged_in, staged_out = os.path.join(stage, "in"), os.path.join(stage, "out")
         try:
-            from delta.tables import DeltaTable
-        except ImportError as e:  # pragma: no cover - deployment-only path
-            raise NotImplementedError(
-                "DeltaMerge requires delta-spark; use DynamicOverwriteMerge "
-                "in environments without it") from e
-        incoming = incoming.withColumn(TIME_BUCKET, time_bucket(time_col))
-        winners = keep_latest(incoming, keys, order_by).drop(*drop_before_write)
-        if not DeltaTable.isDeltaTable(catalog.spark, catalog.path(table)):
-            (winners.write.format("delta").partitionBy(TIME_BUCKET)
-             .save(catalog.path(table)))
-            return
-        target = DeltaTable.forPath(catalog.spark, catalog.path(table))
-        on = " AND ".join(f"tgt.{k} <=> src.{k}" for k in keys)
-        # order columns that survive drop_before_write (transient
-        # tie-break columns exist only batch-side and can't be compared
-        # against the stored row; the surviving prefix, e.g. timemark,
-        # decides — ties resolve incoming-wins via >=, the reference's
-        # last-loaded-wins). Names must be passed AS names: extracting a
-        # name from a Column expression (str(col) parsing) breaks
-        # silently the day an ordering is an expression, so it is a
-        # TypeError here instead.
-        order_cols = []
-        for c in order_by:
-            if not isinstance(c, str):
-                raise TypeError(
-                    "DeltaMerge requires order_by entries as column NAMES "
-                    "(a bare name means '<name> DESC' — the keep-latest "
-                    "convention); got a Column expression, whose name "
-                    "cannot be extracted reliably for the MERGE condition")
-            if c in winners.columns:
-                order_cols.append(c)
-        newer = ("struct(" + ", ".join(f"src.{c}" for c in order_cols) + ") >= "
-                 "struct(" + ", ".join(f"tgt.{c}" for c in order_cols) + ")"
-                 ) if order_cols else "true"
-        (target.alias("tgt").merge(winners.alias("src"), on)
-         .whenMatchedUpdateAll(condition=newer)
-         .whenNotMatchedInsertAll()
-         .execute())
+            incoming = incoming.withColumn(TIME_BUCKET, time_bucket(time_col))
+            incoming.write.partitionBy(TIME_BUCKET).parquet(staged_in)
+            months = _month_dirs(staged_in)
+            if not months:
+                return
+            merged = catalog.spark.read.schema(incoming.schema).parquet(staged_in)
+            dest = catalog.path(table)
+            have = [os.path.join(dest, m) for m in months
+                    if os.path.isdir(os.path.join(dest, m))]
+            if have:
+                stored = StructType([f for f in incoming.schema.fields
+                                     if f.name not in drop_before_write])
+                merged = (catalog.spark.read.schema(stored).option("basePath", dest)
+                          .parquet(*have).unionByName(merged, allowMissingColumns=True))
+            # cluster rows by the dedup keys inside each file: parquet
+            # row-group min/max stats then skip for key-selective reads
+            (keep_latest(merged, keys, order_by).drop(*drop_before_write)
+             .sortWithinPartitions(*keys)
+             .write.partitionBy(TIME_BUCKET).parquet(staged_out))
+            for m in _month_dirs(staged_out):
+                _publish(os.path.join(dest, m),
+                         [(f, os.path.basename(f))
+                          for f in list_parquet_files(os.path.join(staged_out, m))],
+                         replace=True)
+        finally:
+            shutil.rmtree(stage, ignore_errors=True)
+
+
+def _month_dirs(path: str) -> list[str]:
+    return sorted(e for e in os.listdir(path) if e.startswith(f"{TIME_BUCKET}="))
 
 
 class Catalog:
@@ -255,41 +233,44 @@ class Catalog:
     def append_rows(self, rows: Sequence | pa.Table, table: str,
                     schema: StructType | str) -> None:
         """Append driver-side ``rows`` to ``table`` as one parquet file
-        (:meth:`_write_rows`); no rows write nothing."""
-        if len(rows):
+        (:meth:`_write_rows`); no rows write nothing. A table already
+        holding :data:`SMALL_TABLE_MAX_FILES` files is rewritten as one
+        file instead, its Arrow copy plus ``rows``, so an append-only
+        table (a station snapshot per pass) never costs more than that
+        many files to list and read."""
+        if not len(rows):
+            return
+        if len(self._listing(table)) < SMALL_TABLE_MAX_FILES:
             self._write_rows(rows, table, schema, replace=False)
+        else:
+            self._write_rows(pa.concat_tables([self.arrow(table, schema),
+                                               _arrow(rows, schema)]),
+                             table, schema, replace=True)
 
     def overwrite_rows(self, rows: Sequence | pa.Table, table: str,
                        schema: StructType | str) -> None:
         """Replace ``table`` with driver-side ``rows``, as one parquet
-        file (:meth:`_write_rows`).
-
-        Crash window: the new file is renamed into the table first, and
-        only then is every other entry of the table directory (the old
-        listing's data files, checksums, ``_SUCCESS``) removed. A crash
-        in between leaves both generations visible, so a reader must
-        tolerate a key listed twice: the obs ledger keeps a file's
-        ingested row over its pending one (``ObsIngest.ingest_new``),
-        and its next rewrite drops the stale row."""
+        file (:meth:`_write_rows`). A crash inside :func:`_publish`
+        leaves both generations visible, so a reader must tolerate a key
+        listed twice: the obs ledger keeps a file's ingested row over its
+        pending one (``ObsIngest.ingest_new``), and its next rewrite
+        drops the stale row."""
         self._write_rows(rows, table, schema, replace=True)
 
     def _write_rows(self, rows: Sequence | pa.Table, table: str,
                     schema: StructType | str, *, replace: bool) -> None:
         """The driver-side writer of small tables: pyarrow writes the
         rows (a ``pyarrow.Table``, or rows as ``session.arrow_rows``
-        takes them) to a hidden temp name in the table directory, which
-        ``os.replace`` then publishes, so no Spark job runs and no
-        reader (``list_parquet_files``, Spark's file index) sees a
+        takes them) to a hidden temp name that :func:`_publish` moves
+        into the table, so no Spark job runs and no reader sees a
         partial file. The rows become the table's driver-side copy
         (appended to it when that copy was current) under the listing
         taken after the write, one writer per table as every
         plain-parquet verb here assumes; an append to a table whose
         copy is stale drops the copy instead."""
-        import shutil
         import uuid
 
-        data = (rows.cast(arrow_schema(schema)) if isinstance(rows, pa.Table)
-                else arrow_rows(rows, schema))
+        data = _arrow(rows, schema)
         before = self._listing(table)
         known, old_data, old_rows = self._copies.get(table, (None, None, None))
         d = self.path(table)
@@ -297,16 +278,7 @@ class Catalog:
         name = f"part-{uuid.uuid4().hex}.parquet"
         tmp = os.path.join(d, f".{name}.tmp")
         pq.write_table(data, tmp)
-        os.replace(tmp, os.path.join(d, name))
-        if replace:
-            for entry in os.listdir(d):
-                p = os.path.join(d, entry)
-                if entry == name:
-                    continue
-                if os.path.isdir(p):
-                    shutil.rmtree(p)
-                else:
-                    os.unlink(p)
+        _publish(d, [(tmp, name)], replace=replace)
         if replace or not before:
             copy = (data, None)
         elif known == before:
@@ -321,8 +293,6 @@ class Catalog:
         self.refresh_skipping(table)
 
     def _listing(self, table: str) -> tuple:
-        from .zonemap import list_parquet_files
-
         return tuple((f, st.st_size, st.st_mtime_ns)
                      for f in list_parquet_files(self.path(table))
                      for st in (os.stat(f),))
@@ -388,14 +358,12 @@ class Catalog:
                           drop_before_write: Sequence[str] = ()) -> None:
         """Upsert ``incoming`` with keep-latest semantics, touching only the
         time-bucket partitions present in the batch. Delegates to the
-        catalog's :class:`MergeStrategy` (parquet dynamic overwrite by
-        default; :class:`DeltaMerge` on Delta deployments).
+        catalog's :class:`MergeStrategy` (:class:`DynamicOverwriteMerge`
+        by default).
 
-        Prefer passing ``order_by`` as column NAMES (a bare name means
-        ``<name> DESC`` — ``operators.dedup.keep_latest``'s convention):
-        names work under every strategy; Column expressions work for
-        parquet merges but are rejected by :class:`DeltaMerge`, which
-        needs the names to build its ``whenMatched`` tuple compare.
+        ``order_by``: column names (a bare name means ``<name> DESC`` —
+        ``operators.dedup.keep_latest``'s convention) or Column
+        expressions.
 
         ``drop_before_write``: transient ordering helper columns present
         only on the incoming side (e.g. source file identity used as a
@@ -417,8 +385,6 @@ class Catalog:
         ``corpus_prep_*`` pipeline intermediates, and retired index
         generations. Plain-parquet single-writer semantics: never drop
         a table a live frame still reads."""
-        import shutil
-
         shutil.rmtree(self.path(table), ignore_errors=True)
 
     def drop_prefix(self, prefix: str) -> list[str]:
@@ -510,7 +476,7 @@ class Catalog:
         live writer's pre-commit window and could drop its partition).
         Uncommitted orphans are also left in place
         (``vacuum_uncommitted`` owns reclaiming them)."""
-        from .zonemap import list_parquet_files, read_pruned
+        from .zonemap import read_pruned
 
         part_cols = self.partition_columns(table)
         n = partitions or self.spark.sparkContext.defaultParallelism
@@ -605,8 +571,6 @@ class Catalog:
 
         Without ``ledger`` the table is plain/single-writer and the
         caller owns exclusion, as with every plain-parquet mutation."""
-        from .zonemap import list_parquet_files
-
         before = len(list_parquet_files(self.path(table)))
         dropped = []
         if ledger is not None:
@@ -814,7 +778,6 @@ class Catalog:
         ADVICE r7). Each partition's
         commit file is re-checked immediately before removal (a commit
         landing between the ledger snapshot and the rmtree wins)."""
-        import shutil
         import time
 
         committed = set(self.committed_batches(ledger))

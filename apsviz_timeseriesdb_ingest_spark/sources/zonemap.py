@@ -75,17 +75,26 @@ def _parse(dtype: str, s: str):
     return s
 
 
+def _hidden(name: str) -> bool:
+    """Spark's file-index rule: a name starting with ``.``, or with
+    ``_`` and holding no ``=`` (``__batch=3`` is a partition), is not
+    table data."""
+    return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+
 def list_parquet_files(path: str) -> list[str]:
-    """The data files under a parquet table path (driver-side listing —
-    file METADATA, cheap at any corpus size; nested partition dirs
-    included, hidden/_SUCCESS/commit sidecars excluded)."""
+    """The data files under a parquet table path, as Spark's file index
+    lists them (driver-side listing — file METADATA, cheap at any corpus
+    size): nested partition dirs included; hidden files and directories
+    (``_SUCCESS``, checksums, a killed write's ``_temporary/``, a merge
+    stage) excluded."""
     out: list[str] = []
     if os.path.isfile(path):
         return [path]
-    for root, _dirs, names in os.walk(path):
-        for n in sorted(names):
-            if n.endswith(".parquet") and not n.startswith(("_", ".")):
-                out.append(os.path.join(root, n))
+    for root, dirs, names in os.walk(path):
+        dirs[:] = [d for d in dirs if not _hidden(d)]
+        out.extend(os.path.join(root, n) for n in names
+                   if n.endswith(".parquet") and not _hidden(n))
     return sorted(out)
 
 

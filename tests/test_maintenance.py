@@ -55,9 +55,8 @@ def test_dedup_within_watermark_stream(spark, tmp_path):
 
 
 def test_merge_strategy_seam(spark, tmp_path):
-    # the keep-latest upsert is a deployment seam: a Catalog constructed
-    # with a custom MergeStrategy routes every merge through it (the
-    # DeltaMerge binding plugs in the same way on Delta deployments)
+    # the keep-latest upsert is a seam: a Catalog constructed
+    # with a custom MergeStrategy routes every merge through it
     from apsviz_timeseriesdb_ingest_spark.sources.catalog import MergeStrategy
 
     calls = []
@@ -73,20 +72,6 @@ def test_merge_strategy_seam(spark, tmp_path):
     catalog.merge_keep_latest("facts", df, keys=["source_id", "time"],
                               order_by=[F.col("v").desc()])
     assert calls == [("facts", ("source_id", "time"), "time")]
-
-
-def test_delta_merge_order_col_extraction(spark):
-    # DeltaMerge's newer-condition parser: transient (dropped) tie-break
-    # columns are excluded; surviving order columns are extracted by name
-    cols = [F.col("timemark").desc(), F.col("__file_dt").desc(),
-            F.col("__file_key").desc()]
-    surviving = ["timemark", "time", "source_id"]
-    names = []
-    for c in cols:
-        name = str(c).split("'")[1].split(" ")[0].split(".")[-1]
-        if name in surviving:
-            names.append(name)
-    assert names == ["timemark"]
 
 
 def test_catalog_drop_and_drop_prefix(spark, tmp_path):

@@ -24,6 +24,8 @@ from apsviz_timeseriesdb_ingest_spark.plans.read_api import (
 )
 from apsviz_timeseriesdb_ingest_spark.sources.catalog import Catalog
 
+from .test_small_table_writer import _marker_jobs
+
 RUN_ID = "4420-21ab3d_gfs"
 
 PROPS = {
@@ -142,6 +144,26 @@ def test_rerun_dedup(env, spark):
     assert pipe.model_data().count() == 5
     # ledger keeps both processing passes (audit parity)
     assert env["catalog"].read("harvest_model_file_meta").count() == 4
+
+
+#: Spark jobs of one warm ``ingest_run`` of the fixture's run (14 before
+#: the merge staged its months): 2 for the run-property pivot, 3 for the
+#: per-file aggregate over the CSV read, 4 in the keep-latest merge, and
+#: 2 for the station-publish ledger probe. The rerun registers no source
+#: and publishes no station; its ledger rows are written on the driver.
+#: A change that needs more must raise it and say why.
+INGEST_RUN_JOB_BUDGET = 11
+
+
+def test_ingest_run_job_budget(env, spark):
+    pipe = ModelIngest(spark, env["catalog"], env["harvest"])
+    pipe.ingest_run(RUN_ID, env["config"])  # warm: sources and stations exist
+    before = _marker_jobs(spark, "ingest-run-before")[-1]
+    out = pipe.ingest_run(RUN_ID, env["config"])
+    jobs = _marker_jobs(spark, "ingest-run-after")[0] - before - 1
+    assert jobs <= INGEST_RUN_JOB_BUDGET, jobs
+    assert out == {"files": 2, "rows": 5, "station_files": 0}
+    assert pipe.model_data().count() == 5
 
 
 def test_station_ledger_probe_is_per_run(env, spark):

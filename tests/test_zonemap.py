@@ -249,3 +249,25 @@ def test_prune_files_prefix(spark, tmp_path):
         .coalesce(2).write.parquet(ipath)
     zmi = collect_zonemap(spark, ipath, ["k"])
     assert len(prune_files_prefix(zmi, "k", "9", path=ipath)) == 2
+
+
+def test_listing_skips_hidden_dirs_like_spark(spark, tmp_path):
+    """A killed write's ``_temporary/`` and a crashed merge's stage hold
+    part files Spark's file index never reads; the listing (and with it
+    ``Catalog.rows``/``arrow`` and the zone-map build) skips them too,
+    and keeps ``__batch=`` partitions."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    root = tmp_path / "t"
+    for sub, v in (("_temporary/0", 0), (".merge-x", 1), ("__batch=1", 2)):
+        os.makedirs(root / sub)
+        pq.write_table(pa.table({"v": [v]}), str(root / sub / f"part-{v}.parquet"))
+    (root / "_SUCCESS").touch()
+    listed = list_parquet_files(str(root))
+    assert listed == [str(root / "__batch=1" / "part-2.parquet")]
+    df = spark.read.parquet(str(root))
+    assert [f.replace("file://", "") for f in df.inputFiles()] == listed
+    assert [r.v for r in df.collect()] == [2]
