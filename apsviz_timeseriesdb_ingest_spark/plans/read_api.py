@@ -42,6 +42,7 @@ from ..functions.strings import sanitize_pivot_label
 from ..schemas import (GAUGE_DATA, GAUGE_SOURCE, GAUGE_STATION, MODEL_DATA,
                        MODEL_SOURCE)
 from ..sources.catalog import TIME_BUCKET, Catalog
+from ..sources.skipping import pruned_scan
 from .bootstrap import station_sources
 
 #: X1 fixed category → output column mapping
@@ -79,27 +80,17 @@ def _parse_ntz(s: str):
 
 def _fact_read(catalog: Catalog, table: str, schema,
                time_range: tuple[str, str] | None) -> DataFrame:
-    """Fact-table scan with zone-map FILE skipping when the table has a
-    ``{table}__zm`` sidecar (``sources/skipping.build_skipping(...,
-    range_cols=["time"])`` — the ingest verbs keep it current): the
-    query's [start, end] prunes the driver-side file list BEFORE any
-    task is scheduled, composing with (and subsuming) the time_bucket
-    partition pruning for intra-month file skipping. Results are
-    identical with or without the sidecar — the callers' real
-    predicates are always applied (r6 verdict task 7: the skipping
-    layer now serves the headline read API, not just its own tests)."""
-    from ..sources.skipping import zm_table
-    from ..sources.zonemap import ZONEMAP_SCHEMA, prune_files, read_pruned
-
-    if time_range is None or not catalog.exists(zm_table(table)) \
-            or not catalog.exists(table):
-        return catalog.read(table, schema)
-    lo, hi = (_parse_ntz(b) for b in time_range)
+    """Fact-table scan, file-skipped through the table's ``time`` zone
+    map when it has one (``sources/skipping.pruned_scan``; the ingest
+    verbs keep the sidecar current): the query's [start, end] prunes the
+    driver-side file list BEFORE any task is scheduled, composing with
+    the time_bucket partition pruning for intra-month skipping. Results
+    are identical with or without the sidecar — the callers' real
+    predicates are always applied."""
+    lo, hi = (None, None) if time_range is None else (_parse_ntz(b) for b in time_range)
     if lo is None or hi is None:
         return catalog.read(table, schema)
-    keep = prune_files(catalog.rows(zm_table(table), ZONEMAP_SCHEMA), "time",
-                       lo, hi, path=catalog.path(table))
-    return read_pruned(catalog.spark, catalog.path(table), keep, schema)
+    return pruned_scan(catalog, table, "time", lo, hi, schema)
 
 
 def obs_view(catalog: Catalog, *,

@@ -151,6 +151,9 @@ def local_frame(spark: SparkSession, rows: list, schema: StructType | str) -> Da
     regardless of ``spark.sql.execution.arrow.pyspark.enabled``. It
     slices the rows into up to ``defaultParallelism`` partitions, so a
     5-row lookup would broadcast through a 4-task stage and write 4
-    files; driver rows are small by definition, so they stay in one."""
+    files; driver rows are small by definition, so they stay in one. No
+    rows have nothing to slice: that frame is returned as built, so
+    collecting it (``Catalog.read`` of a missing table) runs no job."""
     schema = as_struct(schema)
-    return spark.createDataFrame(arrow_rows(rows, schema), schema).coalesce(1)
+    frame = spark.createDataFrame(arrow_rows(rows, schema), schema)
+    return frame.coalesce(1) if rows else frame

@@ -8,10 +8,6 @@ from .jsonl import read_documents_jsonl, write_jsonl_sharded  # noqa: F401
 from .skipping import (  # noqa: F401
     build_skipping,
     read_between,
-    read_committed_between,
-    read_committed_equals,
-    read_equals,
-    read_prefix,
     refresh_skipping,
 )
 from .warc import read_wet, wet_quarantine_counts  # noqa: F401

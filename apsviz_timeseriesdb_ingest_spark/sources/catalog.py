@@ -45,6 +45,7 @@ from __future__ import annotations
 
 import os
 import shutil
+import time
 from collections.abc import Sequence
 
 import pyarrow as pa
@@ -128,13 +129,23 @@ class DynamicOverwriteMerge(MergeStrategy):
     writes (the incoming columns less ``drop_before_write``: callers
     pass rows of the table's full schema), are deduplicated into
     ``.../out``, whose months :func:`_publish` then moves into the
-    table. A new table is a merge with no stored months."""
+    table. A new table is a merge with no stored months.
+
+    A killed merge leaves its stage behind; no reader lists it, and the
+    next merge removes every stage whose newest entry is older than
+    :data:`VACUUM_GRACE_SECONDS` (a younger one may be a live merge's)."""
 
     def merge(self, catalog: "Catalog", table: str, incoming: DataFrame,
               keys: Sequence[str], order_by: Sequence[Column | str], *,
               time_col: str, drop_before_write: Sequence[str]) -> None:
         import uuid
 
+        if os.path.isdir(catalog.warehouse):
+            now = time.time()
+            for e in os.listdir(catalog.warehouse):
+                left = os.path.join(catalog.warehouse, e)
+                if e.startswith(".merge-") and not _young(left, VACUUM_GRACE_SECONDS, now):
+                    shutil.rmtree(left, ignore_errors=True)
         stage = os.path.join(catalog.warehouse, f".merge-{uuid.uuid4().hex}")
         staged_in, staged_out = os.path.join(stage, "in"), os.path.join(stage, "out")
         try:
@@ -164,6 +175,26 @@ class DynamicOverwriteMerge(MergeStrategy):
                          replace=True)
         finally:
             shutil.rmtree(stage, ignore_errors=True)
+
+
+def _young(path: str, grace_seconds: float, now: float) -> bool:
+    """Whether anything under ``path`` (itself included) was modified
+    less than ``grace_seconds`` before ``now``: a live writer may still
+    own it. A path that vanishes underneath counts as young (skipped
+    this pass); ``grace_seconds <= 0`` makes nothing young."""
+    if grace_seconds <= 0:
+        return False
+    try:
+        newest = os.path.getmtime(path)
+    except OSError:
+        return True
+    for d, dirs, names in os.walk(path):
+        for nm in dirs + names:
+            try:
+                newest = max(newest, os.path.getmtime(os.path.join(d, nm)))
+            except OSError:
+                pass
+    return (now - newest) < grace_seconds
 
 
 def _month_dirs(path: str) -> list[str]:
@@ -298,15 +329,14 @@ class Catalog:
                      for st in (os.stat(f),))
 
     def refresh_skipping(self, table: str) -> dict[str, int]:
-        """Bring the table's skipping sidecars (``{table}__zm`` /
-        ``{table}__bloom``, see ``sources/skipping.py``) current with
-        its on-disk files. Every mutation verb calls this by default so
-        index staleness never accumulates silently; it costs nothing
-        (two dir checks) for the overwhelming majority of tables that
-        never built a skipping index. Reserved-sidecar names (double
-        underscore — stats tables, commit ledgers, staging dirs) are
-        excluded, which also breaks the recursion of the stats build's
-        own sidecar overwrite."""
+        """Bring the table's zone map (``{table}__zm``, see
+        ``sources/skipping.py``) current with its on-disk files. Every
+        mutation verb calls this by default so index staleness never
+        accumulates silently; it costs one dir check for the tables that
+        never built one. Reserved-sidecar names (double underscore —
+        stats tables, commit ledgers, staging dirs) are excluded, which
+        also breaks the recursion of the stats build's own sidecar
+        overwrite."""
         if "__" in table:
             return {}
         from .skipping import refresh_skipping
@@ -314,30 +344,11 @@ class Catalog:
 
     def overwrite(self, df: DataFrame, table: str, *,
                   partition_by: Sequence[str] = (),
-                  cluster_by: Sequence[str] = (),
-                  zorder_by: Sequence[str] = (),
-                  files: int = 32,
                   refresh_skipping: bool = True) -> None:
-        """``cluster_by`` range-shards + sorts on one key set (zone-map
-        selectivity on the leading key); ``zorder_by`` Morton-interleaves
-        several keys (selectivity on any of them) — see
-        ``sources/layout.py``. Mutually exclusive with each other and
-        with ``partition_by`` (directory partitioning already clusters
-        its keys)."""
-        if sum(map(bool, (partition_by, cluster_by, zorder_by))) > 1:
-            raise ValueError("partition_by, cluster_by, and zorder_by "
-                             "are mutually exclusive")
-        if cluster_by:
-            from .layout import cluster_write
-            cluster_write(df, self.path(table), cluster_by, files=files)
-        elif zorder_by:
-            from .layout import zorder_write
-            zorder_write(df, self.path(table), zorder_by, files=files)
-        else:
-            w = df.write.mode("overwrite")
-            if partition_by:
-                w = w.partitionBy(*partition_by)
-            w.parquet(self.path(table))
+        w = df.write.mode("overwrite")
+        if partition_by:
+            w = w.partitionBy(*partition_by)
+        w.parquet(self.path(table))
         if refresh_skipping:
             self.refresh_skipping(table)
 
@@ -587,26 +598,6 @@ class Catalog:
         return {"vacuumed_partitions": len(dropped),
                 "files_before": before, "files_after": after}
 
-    def save_bucketed(self, df: DataFrame, table: str, *, bucket_by: Sequence[str],
-                      num_buckets: int = 32, sort_by: Sequence[str] = ()) -> None:
-        """Write as a bucketed (+optionally sorted) session-catalog table.
-
-        Two tables bucketed on their join key with the same bucket count
-        join with NO shuffle on either side — the co-location strategy
-        for repeated fact-fact joins at 100 TB (bucket metadata lives in
-        the catalog; on a deployment that's Hive/Glue/Unity instead of
-        the session catalog)."""
-        w = (df.write.mode("overwrite").format("parquet")
-             .option("path", self.path(table))
-             .bucketBy(num_buckets, *bucket_by))
-        if sort_by:
-            w = w.sortBy(*sort_by)
-        w.saveAsTable(table)
-
-    def read_table(self, table: str) -> DataFrame:
-        """Read a session-catalog (possibly bucketed) table by name."""
-        return self.spark.table(table)
-
     # -- exclusive commit ledger -------------------------------------
     #
     # The ledger of a transactional index family is a DIRECTORY of one
@@ -748,9 +739,7 @@ class Catalog:
         and orphan ``(__batch, __writer)`` partitions are invisible;
         ``as_of_batch=N`` is the snapshot read. Sugar over
         ``streaming.corpus_stream.committed_corpus`` so non-stream
-        callers need no streaming import; for predicate reads that
-        should ALSO skip files, use
-        ``sources.skipping.read_committed_between/_equals``."""
+        callers need no streaming import."""
         from ..streaming.corpus_stream import committed_corpus
 
         return committed_corpus(self, table, index_table,
@@ -778,31 +767,12 @@ class Catalog:
         ADVICE r7). Each partition's
         commit file is re-checked immediately before removal (a commit
         landing between the ledger snapshot and the rmtree wins)."""
-        import time
-
         committed = set(self.committed_batches(ledger))
         root = self.path(table)
         dropped: list[str] = []
         if not os.path.isdir(root):
             return dropped
         now = time.time()
-
-        def _young(p: str) -> bool:
-            if grace_seconds <= 0:
-                return False
-            try:
-                newest = os.path.getmtime(p)
-            except OSError:
-                return True  # vanished underneath us — skip this pass
-            for d, _, names in os.walk(p):
-                for nm in names:
-                    try:
-                        newest = max(newest,
-                                     os.path.getmtime(os.path.join(d, nm)))
-                    except OSError:
-                        pass
-            return (now - newest) < grace_seconds
-
         for bdir in sorted(os.listdir(root)):
             if not bdir.startswith("__batch="):
                 continue
@@ -814,7 +784,7 @@ class Catalog:
                 writer = wdir.split("=", 1)[1]
                 wpath = os.path.join(bpath, wdir)
                 if ((batch, writer) not in committed
-                        and not _young(wpath)
+                        and not _young(wpath, grace_seconds, now)
                         and not self._pair_committed(ledger, batch,
                                                      writer)):
                     shutil.rmtree(wpath, ignore_errors=True)

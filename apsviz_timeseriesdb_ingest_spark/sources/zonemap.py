@@ -36,8 +36,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from ..session import local_frame
-
 #: stats-table schema; values rendered to strings so ONE table covers
 #: every column type (comparisons re-parse via ``dtype`` at prune time)
 ZONEMAP_SCHEMA = ("file string, column string, dtype string, "
@@ -143,88 +141,47 @@ def footer_stats(files: Iterable[str], columns: Iterable[str]) -> list[tuple]:
     return rows
 
 
-def collect_zonemap(spark: SparkSession, path: str,
-                    columns: Iterable[str], *,
-                    files: list[str] | None = None) -> DataFrame:
-    """:func:`footer_stats` over the table's data files (or ``files``)
-    as a frame."""
-    files = list_parquet_files(path) if files is None else files
-    return local_frame(spark, footer_stats(files, columns), ZONEMAP_SCHEMA)
-
-
 def build_zonemap(catalog, path: str, columns: Iterable[str], *,
-                  table: str, incremental: bool = False) -> int:
+                  table: str) -> int:
     """Persist :func:`footer_stats` over the files under ``path`` as a
     catalog table — the build-once/probe-many form (probes then cost a
     metadata-table read, no footer access at all). Returns the file
-    count covered.
-
-    ``incremental=True`` refreshes an existing stats table: it is read
-    to the driver ONCE, rows of files no longer on disk are retired,
-    only files absent from it get footer stats, and ONE overwrite from
-    driver rows (none when nothing changed) brings it exactly current
-    after appends AND compactions."""
-    old = (catalog.rows(table, ZONEMAP_SCHEMA)
-           if incremental and catalog.exists(table) else None)
-    return _write_zonemap(catalog, path, columns, table, old)
+    count covered."""
+    files = list_parquet_files(path)
+    catalog.overwrite_rows(footer_stats(files, columns), table, ZONEMAP_SCHEMA)
+    return len(files)
 
 
 def refresh_zonemap(catalog, path: str, *, table: str) -> int | None:
-    """Incremental :func:`build_zonemap` over the columns the stats
-    table already covers, taken from the catalog's driver-side copy of
-    it (``Catalog.rows``: no job when this process wrote it last). None
-    when the table has no rows to name them."""
+    """Bring the stats table exactly current with the files under
+    ``path``, over the columns it already covers: rows of files no
+    longer on disk are retired, only files absent from it get footer
+    stats, and ONE overwrite from driver rows (none when nothing
+    changed) follows appends AND compactions. The old rows come from
+    the catalog's driver-side copy (``Catalog.rows``: no job when this
+    process wrote it last). Returns the file count covered; None when
+    the table has no rows to name its columns."""
     old = catalog.rows(table, ZONEMAP_SCHEMA)
     cols = sorted({r.column for r in old})
-    return _write_zonemap(catalog, path, cols, table, old) if cols else None
-
-
-def _write_zonemap(catalog, path: str, columns: Iterable[str], table: str,
-                   old: Sequence | None) -> int:
+    if not cols:
+        return None
     on_disk = list_parquet_files(path)
-    new, rows = on_disk, []
-    if old is not None:
-        covered, live = {r.file for r in old}, set(on_disk)
-        new = [f for f in on_disk if f not in covered]
-        rows = [r for r in old if r.file in live]
-        if not new and len(rows) == len(old):
-            return len(on_disk)
-    catalog.overwrite_rows(rows + footer_stats(new, columns), table,
-                           ZONEMAP_SCHEMA)
+    covered, live = {r.file for r in old}, set(on_disk)
+    new = [f for f in on_disk if f not in covered]
+    rows = [r for r in old if r.file in live]
+    if new or len(rows) != len(old):
+        catalog.overwrite_rows(rows + footer_stats(new, cols), table,
+                               ZONEMAP_SCHEMA)
     return len(on_disk)
 
 
-def _prune_by(zonemap: DataFrame | Sequence, column: str, path: str | None,
-              may_match) -> list[str]:
-    """Shared prune driver: keep files without usable stats (and, with
-    ``path``, files on disk but absent from a STALE stats table — a
-    stale zone map must degrade to reading more, never to dropping
-    unseen data; stats rows for files no longer on disk are dropped),
-    plus every file where ``may_match(dtype, min_val, max_val)`` is
-    True. Driver-side arithmetic over the stats frame, or over its
-    rows already on the driver (``Catalog.rows``)."""
-    if isinstance(zonemap, DataFrame):
-        zonemap = zonemap.collect()
-    rows = [r for r in zonemap if r.column == column]
-    on_disk = set(list_parquet_files(path)) if path is not None else None
-    covered = {r.file for r in rows}
-    keep = ([f for f in on_disk if f not in covered]
-            if on_disk is not None else [])
-    for r in rows:
-        if on_disk is not None and r.file not in on_disk:
-            continue
-        if not r.has_stats or may_match(r.dtype, r.min_val, r.max_val):
-            keep.append(r.file)
-    return sorted(keep)
-
-
-def prune_files(zonemap: DataFrame | Sequence, column: str, lo=None, hi=None, *,
+def prune_files(zonemap: Sequence, column: str, lo=None, hi=None, *,
                 path: str | None = None) -> list[str]:
     """Files whose ``[min, max]`` for ``column`` can intersect
-    ``[lo, hi]`` (either bound may be None = unbounded). Files without
-    stats for the column are KEPT — pruning must never change results,
-    only skip provably-irrelevant files. Driver-side arithmetic over
-    the stats frame or its collected rows (planning metadata).
+    ``[lo, hi]`` (either bound may be None = unbounded), by driver-side
+    arithmetic over the stats rows (``Catalog.rows`` of the stats
+    table). Files without stats for the column are KEPT — pruning must
+    never change results, only skip provably-irrelevant files.
 
     Pass ``path`` whenever the table may have CHANGED since the stats
     build (appends, compaction, overwrite): files on disk but absent
@@ -233,70 +190,19 @@ def prune_files(zonemap: DataFrame | Sequence, column: str, lo=None, hi=None, *,
     stats rows for files no longer on disk are dropped (compaction
     replaced them; keeping them would make the read fail)."""
     lo_r, hi_r = _render(lo), _render(hi)
-
-    def may_match(dtype, mn, mx):
-        p = lambda s: _parse(dtype, s)  # noqa: E731
-        if lo_r is not None and p(mx) < p(lo_r):
-            return False
-        if hi_r is not None and p(mn) > p(hi_r):
-            return False
-        return True
-
-    return _prune_by(zonemap, column, path, may_match)
-
-
-def prune_files_in(zonemap: DataFrame, column: str, values, *,
-                   path: str | None = None) -> list[str]:
-    """Files whose ``[min, max]`` can contain ANY of ``values`` — the
-    IN-list probe on a CLUSTERED column, where each point value
-    intersects at most a few files' ranges (on an unclustered
-    high-cardinality column every file spans the domain and the Bloom
-    index is the right tool — ``bloomskip``). Same staleness contract
-    as :func:`prune_files`. NULL values never match (parquet min/max
-    exclude nulls, matching Spark's ``isin`` semantics)."""
-    rendered = [_render(v) for v in values]
-    rendered = [v for v in rendered if v is not None]
-
-    def may_match(dtype, mn, mx):
-        p = lambda s: _parse(dtype, s)  # noqa: E731
-        lo, hi = p(mn), p(mx)
-        return any(lo <= p(v) <= hi for v in rendered)
-
-    return _prune_by(zonemap, column, path, may_match)
-
-
-def prefix_upper_bound(prefix: str) -> str | None:
-    """The smallest string greater than every string with ``prefix``:
-    increment the rightmost incrementable character and truncate
-    (``"ab"`` → ``"ac"``). None when no such bound exists (all
-    characters at the maximum code point — match everything)."""
-    for i in range(len(prefix) - 1, -1, -1):
-        if ord(prefix[i]) < 0x10FFFF:
-            return prefix[:i] + chr(ord(prefix[i]) + 1)
-    return None
-
-
-def prune_files_prefix(zonemap: DataFrame, column: str, prefix: str, *,
-                       path: str | None = None) -> list[str]:
-    """Files that may contain a STRING starting with ``prefix``
-    (``LIKE 'abc%'``): a string starts with ``prefix`` iff
-    ``prefix <= s < prefix_upper_bound(prefix)``, so the probe is the
-    half-open interval intersection against each file's [min, max] —
-    range-convertible exactly like a BETWEEN. Same staleness contract
-    as :func:`prune_files`. String columns only (the rendered stats of
-    other types do not compare meaningfully against a raw prefix)."""
-    upper = prefix_upper_bound(prefix)
-
-    def may_match(dtype, mn, mx):
-        if not (dtype.startswith("string") or dtype.startswith("byte")):
-            return True  # not a string column: never prune on a prefix
-        if mx < prefix:  # every value < prefix → none can carry it
-            return False
-        if upper is not None and mn >= upper:
-            return False
-        return True
-
-    return _prune_by(zonemap, column, path, may_match)
+    rows = [r for r in zonemap if r.column == column]
+    on_disk = set(list_parquet_files(path)) if path is not None else None
+    covered = {r.file for r in rows}
+    keep = ([f for f in on_disk if f not in covered]
+            if on_disk is not None else [])
+    for r in rows:
+        if on_disk is not None and r.file not in on_disk:
+            continue
+        p = partial(_parse, r.dtype)
+        if not r.has_stats or ((lo_r is None or p(r.max_val) >= p(lo_r))
+                               and (hi_r is None or p(r.min_val) <= p(hi_r))):
+            keep.append(r.file)
+    return sorted(keep)
 
 
 def read_pruned(spark: SparkSession, path: str, files: list[str],
@@ -314,36 +220,3 @@ def read_pruned(spark: SparkSession, path: str, files: list[str],
     if os.path.isdir(path):
         reader = reader.option("basePath", path)
     return reader.parquet(*files)
-
-
-def zonemap_aggregates(zonemap: DataFrame, column: str, *,
-                       path: str | None = None) -> dict | None:
-    """``count(*)`` / ``min`` / ``max`` / null count for ``column``
-    answered ENTIRELY from the stats table — zero data tasks, the
-    manifest-aggregate trick transactional table formats use for
-    metadata-only queries. Returns ``None`` whenever the stats cannot
-    answer exactly: any covered file lacks usable stats for the
-    column, or (with ``path=``) the on-disk file set differs from the
-    covered set (stale stats must never produce a wrong answer —
-    callers fall back to the real scan).
-
-    min/max semantics match Spark's null-ignoring aggregates (parquet
-    column statistics exclude nulls; all-null files carry no min/max
-    and surface as ``has_stats = false`` → ``None`` here)."""
-    rows = (zonemap.filter(F.col("column") == column)
-            .select("file", "dtype", "min_val", "max_val",
-                    "null_count", "num_rows", "has_stats")
-            .collect())
-    if not rows or not all(r.has_stats for r in rows):
-        return None
-    if path is not None and \
-            set(list_parquet_files(path)) != {r.file for r in rows}:
-        return None
-    mins = [_parse(r.dtype, r.min_val) for r in rows]
-    maxs = [_parse(r.dtype, r.max_val) for r in rows]
-    return {
-        "num_rows": sum(r.num_rows for r in rows),
-        "null_count": sum(r.null_count for r in rows),
-        "min": min(mins),
-        "max": max(maxs),
-    }

@@ -1,9 +1,8 @@
-"""Committed reads composed with file skipping (r6): one call that
-drops uncommitted/orphan ``(__batch, __writer)`` partitions via the
-commit ledger AND skips committed files by zone-map/Bloom stats — the
-combined read path for stream-owned tables. Contract order as ever:
-result equality against ``committed_corpus(...).filter(pred)`` first,
-then that files were actually excluded, then snapshot (as-of) reads."""
+"""Committed files of stream-owned tables and their zone maps (r6):
+``committed_files`` drops uncommitted/orphan ``(__batch, __writer)``
+partitions via the commit ledger by driver-side path arithmetic, the
+zone map prunes committed files by their stats, and compaction keeps
+both the partition chain and the sidecar current."""
 
 from __future__ import annotations
 
@@ -15,15 +14,13 @@ from apsviz_timeseriesdb_ingest_spark.sources.catalog import Catalog
 from apsviz_timeseriesdb_ingest_spark.sources.skipping import (
     build_skipping,
     committed_files,
-    read_committed_between,
-    read_committed_equals,
+    zm_table,
 )
 from apsviz_timeseriesdb_ingest_spark.sources.zonemap import (
+    ZONEMAP_SCHEMA,
     list_parquet_files,
+    prune_files,
     read_pruned,
-)
-from apsviz_timeseriesdb_ingest_spark.streaming.corpus_stream import (
-    committed_corpus,
 )
 
 IDX = "minhash_index"
@@ -53,8 +50,7 @@ def stream_table(spark, catalog):
                        refresh_skipping=False)
         if committed:
             catalog.commit_batch(commits_table(IDX), batch, writer)
-    build_skipping(catalog, "corpus", range_cols=["doc_id"],
-                   equality_cols=["doc_id"])
+    build_skipping(catalog, "corpus", range_cols=["doc_id"])
     return "corpus"
 
 
@@ -70,53 +66,24 @@ def test_committed_files_excludes_uncommitted(catalog, stream_table):
     assert asof and all("__batch=0" in f for f in asof)
 
 
-def test_between_matches_committed_corpus(catalog, stream_table):
-    expect = sorted(
-        r.doc_id for r in
-        committed_corpus(catalog, stream_table, IDX)
-        .filter(F.col("doc_id").between(120, 130))
-        .select("doc_id").collect())
-    got_df = read_committed_between(catalog, stream_table, "doc_id",
-                                    120, 130, index_table=IDX)
-    got = sorted(r.doc_id for r in got_df.select("doc_id").collect())
-    assert got == expect == list(range(120, 131))
-    # partition columns survive the leaf-file read
-    assert {"__batch", "__writer"}.issubset(got_df.columns)
-
-
-def test_equals_matches_committed_corpus(catalog, stream_table):
-    # 105 is committed; 505 (orphan writer) and 205 (uncommitted
-    # batch) exist on disk but must be invisible
-    got = sorted(r.doc_id for r in
-                 read_committed_equals(catalog, stream_table, "doc_id",
-                                       [5, 105, 205, 505],
-                                       index_table=IDX)
-                 .select("doc_id").collect())
-    assert got == [5, 105]
-
-
-def test_snapshot_read_pins_earlier_state(catalog, stream_table):
-    asof = read_committed_between(catalog, stream_table, "doc_id",
-                                  0, 1000, index_table=IDX,
-                                  as_of_batch=0)
+def test_snapshot_read_pins_earlier_state(spark, catalog, stream_table):
+    # the as-of-batch-0 committed files hold exactly batch 0's rows,
+    # which is committed_corpus's snapshot
+    files = committed_files(catalog, stream_table, commits_table(IDX),
+                            as_of_batch=0)
+    asof = read_pruned(spark, catalog.path(stream_table), files)
     assert asof.count() == 50
     assert asof.agg(F.max("doc_id")).collect()[0][0] == 49
-    # matches committed_corpus's snapshot semantics exactly
-    expect = committed_corpus(catalog, stream_table, IDX,
-                              as_of_batch=0).count()
-    assert expect == 50
+    assert sorted(asof.collect()) == sorted(
+        catalog.read_committed(stream_table, IDX, as_of_batch=0)
+        .select(*asof.columns).collect())
 
 
 def test_skipping_actually_prunes_committed_files(catalog, stream_table):
     # the range predicate lives entirely in batch 1: of the two
     # committed batches' files, only batch 1's survive both prunings
-    from apsviz_timeseriesdb_ingest_spark.sources.skipping import (
-        committed_files as cf, zm_table)
-    from apsviz_timeseriesdb_ingest_spark.sources.zonemap import (
-        prune_files)
-
-    committed = set(cf(catalog, stream_table, commits_table(IDX)))
-    stats = set(prune_files(catalog.read(zm_table(stream_table)),
+    committed = set(committed_files(catalog, stream_table, commits_table(IDX)))
+    stats = set(prune_files(catalog.rows(zm_table(stream_table), ZONEMAP_SCHEMA),
                             "doc_id", 120, 130,
                             path=catalog.path(stream_table)))
     both = committed & stats
@@ -127,15 +94,12 @@ def test_skipping_actually_prunes_committed_files(catalog, stream_table):
 
 def test_plain_table_passthrough(spark, catalog):
     # a non-stream table has no (__batch, __writer) chain: committed
-    # reads keep every file (nothing to exclude), like committed_corpus
+    # files are every file (nothing to exclude), like committed_corpus
     catalog.append(spark.range(10).select(F.col("id").alias("doc_id")),
                    "flat", refresh_skipping=False)
     os_files = list_parquet_files(catalog.path("flat"))
     assert committed_files(catalog, "flat", commits_table(IDX)) == \
         sorted(os_files)
-    got = read_committed_between(catalog, "flat", "doc_id", 2, 4,
-                                 index_table=IDX)
-    assert sorted(r.doc_id for r in got.collect()) == [2, 3, 4]
 
 
 def test_read_pruned_keeps_partition_columns(spark, catalog):
@@ -163,9 +127,6 @@ def test_compact_preserves_txn_layout_and_committed_reads(
     (__batch, __writer) partition chain (files are replaced WITHIN
     partitions) — committed reads and the skipping composition stay
     correct, and the auto-refresh hook re-stats the new files."""
-    from apsviz_timeseriesdb_ingest_spark.sources.skipping import (
-        zm_table)
-
     before = sorted(
         r.doc_id for r in
         catalog.read_committed(stream_table, IDX).collect())
@@ -180,6 +141,5 @@ def test_compact_preserves_txn_layout_and_committed_reads(
     assert {r.file for r in catalog.read(zm_table(stream_table))
             .select("file").collect()} == \
         set(list_parquet_files(catalog.path(stream_table)))
-    got = read_committed_between(catalog, stream_table, "doc_id",
-                                 120, 130, index_table=IDX)
-    assert got.count() == 11
+    assert catalog.read_committed(stream_table, IDX).filter(
+        F.col("doc_id").between(120, 130)).count() == 11

@@ -371,30 +371,29 @@ def test_drift_report_empty_windows(spark):
 
 
 def test_skipping_probes_hostile_values(spark, tmp_path):
-    """Empty IN-lists, all-NULL probe lists, and empty prefixes through
-    the zone-map probes: correct (empty/full) results, never a crash."""
+    """An inverted range, open bounds and a column the zone map does not
+    cover, through the zone-map probe: correct (empty/full) results,
+    never a crash."""
     import pyspark.sql.functions as F
 
     from apsviz_timeseriesdb_ingest_spark.sources.catalog import Catalog
     from apsviz_timeseriesdb_ingest_spark.sources.skipping import (
-        build_skipping, read_equals, read_prefix)
+        build_skipping, read_between)
     from apsviz_timeseriesdb_ingest_spark.sources.zonemap import (
-        prune_files_in, prune_files_prefix)
+        ZONEMAP_SCHEMA, list_parquet_files, prune_files)
 
     catalog = Catalog(spark, str(tmp_path / "wh"))
     catalog.overwrite(spark.range(20).select(
         F.col("id").alias("k"),
-        F.concat(F.lit("n"), F.col("id")).alias("name")), "t",
+        F.concat(F.lit("n"), F.col("id")).alias("name")).repartition(4), "t",
         refresh_skipping=False)
-    build_skipping(catalog, "t", range_cols=["k", "name"])
-    zm = catalog.read("t__zm")
-    assert prune_files_in(zm, "k", [], path=catalog.path("t")) == []
-    assert prune_files_in(zm, "k", [None], path=catalog.path("t")) == []
-    assert read_equals(catalog, "t", "k", []).count() == 0
-    # the empty prefix matches everything: no file can be pruned
-    from apsviz_timeseriesdb_ingest_spark.sources.zonemap import (
-        list_parquet_files)
-    assert set(prune_files_prefix(zm, "name", "",
-                                  path=catalog.path("t"))) == \
-        set(list_parquet_files(catalog.path("t")))
-    assert read_prefix(catalog, "t", "name", "").count() == 20
+    build_skipping(catalog, "t", range_cols=["k"])
+    zm = catalog.rows("t__zm", ZONEMAP_SCHEMA)
+    path = catalog.path("t")
+    everything = set(list_parquet_files(path))
+    assert read_between(catalog, "t", "k", 10, 5).count() == 0
+    # unbounded, and a column with no stats rows: no file can be pruned
+    assert set(prune_files(zm, "k", path=path)) == everything
+    assert set(prune_files(zm, "name", "n1", "n2", path=path)) == everything
+    assert read_between(catalog, "t", "name", "n1", "n2").count() == \
+        sum("n1" <= f"n{i}" <= "n2" for i in range(20))

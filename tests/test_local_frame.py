@@ -1,6 +1,6 @@
 """``session.local_frame`` builds the same frame as
 ``spark.createDataFrame(rows, schema)`` for every schema the ingest path
-hands it: the declared tables, the skipping sidecars and the DDL strings
+hands it: the declared tables, the zone-map sidecar and the DDL strings
 of the driver-rows call sites."""
 
 from __future__ import annotations
@@ -10,7 +10,6 @@ import datetime as dt
 import pytest
 from pyspark.sql import Row
 from pyspark.sql.types import (
-    ArrayType,
     BooleanType,
     DoubleType,
     IntegerType,
@@ -22,8 +21,10 @@ from pyspark.sql.types import (
 
 from apsviz_timeseriesdb_ingest_spark import schemas
 from apsviz_timeseriesdb_ingest_spark.session import local_frame
-from apsviz_timeseriesdb_ingest_spark.sources.bloomskip import BLOOM_SCHEMA
+from apsviz_timeseriesdb_ingest_spark.sources.catalog import Catalog
 from apsviz_timeseriesdb_ingest_spark.sources.zonemap import ZONEMAP_SCHEMA
+
+from .test_small_table_writer import _marker_jobs
 
 TS = dt.datetime(2024, 1, 2, 3, 4, 5, 678901)
 
@@ -47,7 +48,6 @@ CALL_SITE_DDL = {
     "file": "file string",
     "committed": "__batch long, __writer string",
     "zonemap": ZONEMAP_SCHEMA,
-    "bloom": BLOOM_SCHEMA,
 }
 
 SCHEMAS = {**{name: s for name, s in vars(schemas).items() if isinstance(s, StructType)},
@@ -57,12 +57,6 @@ _SAMPLE = {
     StringType: "s:1", LongType: 2 ** 62, IntegerType: -7, DoubleType: 1.5,
     BooleanType: True, TimestampNTZType: TS,
 }
-
-
-def _sample(dtype):
-    if isinstance(dtype, ArrayType):
-        return [1, None, -(2 ** 63)]
-    return _SAMPLE[type(dtype)]
 
 
 def _struct(schema) -> StructType:
@@ -78,7 +72,7 @@ def test_every_declared_schema_is_covered():
 def test_same_frame_as_create_dataframe(spark, name):
     schema = SCHEMAS[name]
     names = _struct(schema).fieldNames()
-    values = [_sample(f.dataType) for f in _struct(schema).fields]
+    values = [_SAMPLE[type(f.dataType)] for f in _struct(schema).fields]
     rows = [tuple(values), Row(**dict(zip(names, values))), dict(zip(names, values)),
             [None] * len(names), {}]
     got, want = local_frame(spark, rows, schema), spark.createDataFrame(rows, schema)
@@ -110,3 +104,15 @@ def test_one_partition(spark):
     frame = local_frame(spark, [(i, "s") for i in range(5)], "id long, name string")
     assert frame.rdd.getNumPartitions() == 1
     assert sorted(frame.collect()) == [(i, "s") for i in range(5)]
+
+
+def test_missing_table_collects_with_no_job(spark, tmp_path):
+    """``Catalog.read`` of a missing table is an empty driver frame: with
+    no rows to slice it is not coalesced, so collecting it, or a filter
+    and projection of it, runs no Spark job."""
+    frame = Catalog(spark, str(tmp_path / "wh")).read("absent", schemas.GAUGE_DATA)
+    before = _marker_jobs(spark, "missing-read-before")[-1]
+    assert frame.collect() == []
+    assert frame.filter("source_id = 1").select("time").collect() == []
+    jobs = _marker_jobs(spark, "missing-read-after")[0] - before - 1
+    assert jobs == 0, jobs

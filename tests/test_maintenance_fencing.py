@@ -190,26 +190,22 @@ def test_flag_drift_skips_absent_metric_rules(spark):
 
 
 def test_snapshot_read_requires_stream_layout(spark, tmp_path):
-    """read_committed_between/_equals with as_of_batch on a table with
-    files but no (__batch,__writer) layout raise the same ValueError as
+    """committed_files with as_of_batch on a table with files but no
+    (__batch,__writer) layout raises the same ValueError as
     committed_corpus (ADVICE r6: previously silently ignored)."""
     from apsviz_timeseriesdb_ingest_spark.sources.skipping import (
-        read_committed_between,
-        read_committed_equals,
-    )
+        committed_files)
+    from apsviz_timeseriesdb_ingest_spark.sources.zonemap import (
+        list_parquet_files)
 
     catalog = Catalog(spark, str(tmp_path / "wh"))
     catalog.overwrite(spark.range(10).select(F.col("id").alias("k")), "t")
     with pytest.raises(ValueError, match="no .__batch, __writer. layout"):
-        read_committed_between(catalog, "t", "k", 1, 5,
-                               index_table="idx", as_of_batch=3).count()
-    with pytest.raises(ValueError, match="no .__batch, __writer. layout"):
-        read_committed_equals(catalog, "t", "k", [1, 2],
-                              index_table="idx", as_of_batch=3).count()
-    # without as_of the plain read still works (non-stream tables mix
-    # nothing to exclude)
-    assert read_committed_between(catalog, "t", "k", 1, 5,
-                                  index_table="idx").count() == 5
+        committed_files(catalog, "t", "idx_commits", as_of_batch=3)
+    # without as_of every file is kept (non-stream tables mix nothing
+    # to exclude)
+    assert committed_files(catalog, "t", "idx_commits") == \
+        list_parquet_files(catalog.path("t"))
 
 
 def test_compact_is_incremental_per_partition(spark, tmp_path):

@@ -147,12 +147,13 @@ def test_rerun_dedup(env, spark):
 
 
 #: Spark jobs of one warm ``ingest_run`` of the fixture's run (14 before
-#: the merge staged its months): 2 for the run-property pivot, 3 for the
-#: per-file aggregate over the CSV read, 4 in the keep-latest merge, and
-#: 2 for the station-publish ledger probe. The rerun registers no source
-#: and publishes no station; its ledger rows are written on the driver.
-#: A change that needs more must raise it and say why.
-INGEST_RUN_JOB_BUDGET = 11
+#: the merge staged its months, 11 before the station-publish ledger was
+#: probed on the driver): 2 for the run-property pivot, 3 for the
+#: per-file aggregate over the CSV read and 4 in the keep-latest merge.
+#: The rerun registers no source and publishes no station; its ledger
+#: rows are written, and both ledgers probed, on the driver. A change
+#: that needs more must raise it and say why.
+INGEST_RUN_JOB_BUDGET = 9
 
 
 def test_ingest_run_job_budget(env, spark):
@@ -193,30 +194,16 @@ def test_station_ledger_probe_is_per_run(env, spark):
     # idempotent against its OWN run's ledger row, untouched by history
     assert out["station_files"] == 0
     assert catalog.read("apsviz_station_file_meta").count() == before + 10_000
-    # the probe frame itself is run-scoped: collecting it yields the
-    # run's rows only, not the 10k-row history
+    # the probe itself is run-scoped: it yields the run's files only,
+    # not the 10k-row history, and runs no Spark job
     run_rows = (catalog.read("apsviz_station_file_meta")
                 .filter(F.col("model_run_id") == RUN_ID)
                 .select("file_name").collect())
     assert len(run_rows) == before
-
-    # with a Bloom sidecar on model_run_id the probe also FILE-skips
-    # (read_equals path) and behavior is unchanged
-    from apsviz_timeseriesdb_ingest_spark.sources.skipping import (
-        build_skipping, read_equals)
-    from apsviz_timeseriesdb_ingest_spark.sources.zonemap import (
-        list_parquet_files)
-
-    build_skipping(catalog, "apsviz_station_file_meta",
-                   equality_cols=["model_run_id"])
-    probe = read_equals(catalog, "apsviz_station_file_meta",
-                        "model_run_id", [RUN_ID])
-    assert {r.file_name for r in probe.select("file_name").collect()} == \
-        {r.file_name for r in run_rows}
-    assert len(probe.inputFiles()) < len(
-        list_parquet_files(catalog.path("apsviz_station_file_meta")))
-    out2 = pipe.ingest_run(RUN_ID, env["config"])
-    assert out2["station_files"] == 0
+    mark = _marker_jobs(spark, "ledger-probe-before")[-1]
+    seen = pipe._published(RUN_ID)
+    assert _marker_jobs(spark, "ledger-probe-after")[0] - mark - 1 == 0
+    assert seen == {r.file_name for r in run_rows} == {"meta_FORECAST_NOAASTATIONS.csv"}
 
 
 def test_x3_forecast_pivot(env):
@@ -248,7 +235,10 @@ def test_cleanup_run_dir(env, spark):
     pipe = ModelIngest(spark, env["catalog"], env["harvest"])
     run_dir = os.path.join(env["harvest"], RUN_ID)
     assert os.path.isdir(run_dir)
+    # the ledger is probed through its driver-side Arrow copy: no job
+    before = _marker_jobs(spark, "cleanup-before")[-1]
     assert pipe.cleanup_run_dir(RUN_ID) is True
+    assert _marker_jobs(spark, "cleanup-after")[0] - before - 1 == 0
     assert not os.path.exists(run_dir)
     assert pipe.cleanup_run_dir(RUN_ID) is False  # idempotent
     # fact data untouched

@@ -1,12 +1,10 @@
-"""Skipping-index maintenance hooks: Catalog mutation verbs keep the
-``__zm``/``__bloom`` sidecars exactly current (r6; previously staleness
-was SAFE but silent — reads just skipped less until someone re-ran
-``build_skipping(incremental=True)`` by hand).
+"""Zone-map maintenance hooks: Catalog mutation verbs keep the ``__zm``
+sidecar exactly current (r6; previously staleness was SAFE but silent —
+reads just skipped less until someone rebuilt the sidecar by hand).
 
-Contract order mirrors the zonemap/bloom tests: result equality first,
-then that the sidecars actually track the on-disk file set, then that
-recovered build parameters (covered columns, Bloom geometry) survive
-refreshes untouched."""
+Contract order mirrors the zonemap tests: result equality first, then
+that the sidecar actually tracks the on-disk file set, then that its
+covered columns survive refreshes untouched."""
 
 from __future__ import annotations
 
@@ -15,16 +13,13 @@ import pytest
 
 from apsviz_timeseriesdb_ingest_spark.sources.catalog import Catalog
 from apsviz_timeseriesdb_ingest_spark.sources.skipping import (
-    bloom_table,
     build_skipping,
     read_between,
-    read_equals,
     refresh_skipping,
-    skipping_spec,
     zm_table,
 )
 from apsviz_timeseriesdb_ingest_spark.sources.zonemap import (
-    collect_zonemap,
+    footer_stats,
     list_parquet_files,
     prune_files,
 )
@@ -42,22 +37,23 @@ def _covered(catalog: Catalog, table: str) -> set[str]:
 def _seed(catalog, spark, n=40, files=4, table="t"):
     catalog.overwrite(spark.range(0, n).select(F.col("id").alias("k"))
                       .repartition(files, "k"), table)
-    build_skipping(catalog, table, range_cols=["k"], equality_cols=["k"])
+    build_skipping(catalog, table, range_cols=["k"])
 
 
-def test_append_auto_refreshes_both_sidecars(spark, catalog):
+def test_append_auto_refreshes(spark, catalog):
     _seed(catalog, spark)
     catalog.append(spark.range(100, 120).select(F.col("id").alias("k"))
                    .repartition(2, "k"), "t")
     on_disk = set(list_parquet_files(catalog.path("t")))
     assert _covered(catalog, zm_table("t")) == on_disk
-    assert _covered(catalog, bloom_table("t")) == on_disk
     # the refreshed zone map PRUNES the new range without path= help
-    zm = catalog.read(zm_table("t"))
+    zm = catalog.read(zm_table("t")).collect()
     keep = prune_files(zm, "k", 100, 119)
     assert 0 < len(keep) < len(on_disk)
     assert read_between(catalog, "t", "k", 100, 119).count() == 20
-    assert read_equals(catalog, "t", "k", [105]).count() == 1
+    # tables with no sidecar, and the reserved sidecar names: no-ops
+    assert refresh_skipping(catalog, "absent") == {}
+    assert catalog.refresh_skipping("t__zm") == {}
 
 
 def test_compact_auto_refreshes(spark, catalog):
@@ -65,8 +61,7 @@ def test_compact_auto_refreshes(spark, catalog):
     catalog.compact("t", partitions=1)
     on_disk = set(list_parquet_files(catalog.path("t")))
     assert _covered(catalog, zm_table("t")) == on_disk
-    assert _covered(catalog, bloom_table("t")) == on_disk
-    assert read_equals(catalog, "t", "k", [7]).count() == 1
+    assert read_between(catalog, "t", "k", 7, 7).count() == 1
 
 
 def test_overwrite_auto_refreshes_and_reflects_replacement(spark, catalog):
@@ -76,37 +71,10 @@ def test_overwrite_auto_refreshes_and_reflects_replacement(spark, catalog):
     assert _covered(catalog, zm_table("t")) == \
         set(list_parquet_files(catalog.path("t")))
     # old keys are gone from data AND stats prunes to zero files
-    zm = catalog.read(zm_table("t"))
+    zm = catalog.read(zm_table("t")).collect()
     assert prune_files(zm, "k", 0, 39) == []
     assert read_between(catalog, "t", "k", 0, 39).count() == 0
     assert read_between(catalog, "t", "k", 1000, 1009).count() == 10
-
-
-def test_bloom_geometry_recovered_across_refreshes(spark, catalog):
-    catalog.overwrite(spark.range(0, 40).select(F.col("id").alias("k"))
-                      .repartition(4, "k"), "t")
-    build_skipping(catalog, "t", equality_cols=["k"], n_bits=1 << 12,
-                   n_hashes=3)
-    catalog.append(spark.range(100, 110).select(F.col("id").alias("k")),
-                   "t")
-    geom = (catalog.read(bloom_table("t")).filter("has_bloom")
-            .select("n_bits", "n_hashes").distinct().collect())
-    assert [(g.n_bits, g.n_hashes) for g in geom] == [(1 << 12, 3)]
-    assert read_equals(catalog, "t", "k", [105]).count() == 1
-
-
-def test_spec_recovers_columns_and_geometry(spark, catalog):
-    catalog.overwrite(spark.range(0, 20).select(
-        F.col("id").alias("k"), (F.col("id") * 2).alias("v")), "t")
-    build_skipping(catalog, "t", range_cols=["v"], equality_cols=["k"],
-                   n_bits=1 << 12, n_hashes=3)
-    spec = skipping_spec(catalog, "t")
-    assert spec == {"range_cols": ["v"], "equality_cols": ["k"],
-                    "n_bits": 1 << 12, "n_hashes": 3}
-    # tables with no sidecars: empty spec, refresh is a no-op
-    assert skipping_spec(catalog, "absent") == {}
-    assert refresh_skipping(catalog, "absent") == {}
-    assert catalog.refresh_skipping("t__zm") == {}  # reserved names
 
 
 def test_opt_out_leaves_stats_stale_but_reads_correct(spark, catalog):
@@ -146,9 +114,8 @@ def test_empty_table_build_then_append_refreshes(spark, catalog):
     catalog.overwrite(
         spark.createDataFrame([], "k long"), "t", refresh_skipping=False)
     build_skipping(catalog, "t", range_cols=["k"])
-    zm = catalog.read(zm_table("t"))
-    assert [r.has_stats for r in zm.collect()] == [False]
-    assert skipping_spec(catalog, "t") == {"range_cols": ["k"]}
+    zm = catalog.read(zm_table("t")).collect()
+    assert [(r.column, r.has_stats) for r in zm] == [("k", False)]
     catalog.append(spark.range(5).select(F.col("id").alias("k")), "t")
     assert _covered(catalog, zm_table("t")) == \
         set(list_parquet_files(catalog.path("t")))
@@ -164,38 +131,10 @@ def test_zero_row_sidecar_is_skipped_not_crashed(spark, catalog):
     os.makedirs(catalog.path("t"))
     build_skipping(catalog, "t", range_cols=["k"])
     assert catalog.read(zm_table("t")).count() == 0
-    assert skipping_spec(catalog, "t") == {}
+    assert catalog.refresh_skipping("t") == {}
     catalog.append(spark.range(5).select(F.col("id").alias("k")), "t")
     # stats stayed empty; reads degrade to keeping uncovered files
     assert read_between(catalog, "t", "k", 0, 4).count() == 5
-
-
-def test_read_equals_zonemap_fallback(spark, catalog):
-    """With only a zone map (no Bloom sidecar), read_equals prunes by
-    point-interval intersection on the clustered column — and read_prefix
-    serves LIKE 'p%' from the same stats."""
-    from apsviz_timeseriesdb_ingest_spark.sources.skipping import (
-        read_prefix)
-    from apsviz_timeseriesdb_ingest_spark.sources.zonemap import (
-        prune_files_in)
-
-    names = [f"{c}{i:03d}" for c in "abcd" for i in range(100)]
-    df = spark.createDataFrame(
-        [(i, names[i]) for i in range(len(names))],
-        "k long, name string")
-    catalog.overwrite(df.repartitionByRange(8, "k"), "t",
-                      refresh_skipping=False)
-    build_skipping(catalog, "t", range_cols=["k", "name"])
-
-    zm = catalog.read(zm_table("t"))
-    keep = prune_files_in(zm, "k", [7, 307], path=catalog.path("t"))
-    assert len(keep) == 2
-    got = sorted(r.k for r in
-                 read_equals(catalog, "t", "k", [7, 307]).collect())
-    assert got == [7, 307]
-
-    got = read_prefix(catalog, "t", "name", "b0").count()
-    assert got == sum(1 for n in names if n.startswith("b0")) > 0
 
 
 #: one zone-map refresh: the sidecar rows cached by the build, footers
@@ -225,8 +164,7 @@ def test_refresh_equals_rebuild_and_job_budget(spark, catalog, tmp_path):
 
     def assert_current():
         got = {tuple(r) for r in catalog.read(zm_table("facts")).collect()}
-        want = {tuple(r) for r in
-                collect_zonemap(spark, catalog.path("facts"), cols).collect()}
+        want = set(footer_stats(list_parquet_files(catalog.path("facts")), cols))
         assert got == want
 
     catalog.merge_keep_latest("facts", frame(range(12), 1), ["id"], ["time"])

@@ -267,7 +267,11 @@ def test_merge_survives_crash_inside_publish(spark, tmp_path, monkeypatch):
 
 def test_crashed_merge_stage_stays_invisible(spark, tmp_path, monkeypatch):
     """A merge killed before it published leaves its stage under the
-    warehouse. No reader lists it, and the next merge ignores it."""
+    warehouse. No reader lists it; the next merge removes it once it is
+    older than the vacuum grace window, and keeps a younger stage,
+    which may be a live merge's."""
+    import time
+
     want = _clean_gauge_data(spark, tmp_path)
     catalog, pipe = _second_file_pending(spark, tmp_path)
     before = Counter(catalog.read("gauge_data").collect())
@@ -287,8 +291,17 @@ def test_crashed_merge_stage_stays_invisible(spark, tmp_path, monkeypatch):
     assert not [f for f in list_parquet_files(catalog.warehouse) if ".merge-" in f]
     assert Counter(catalog.read("gauge_data").collect()) == before
 
+    crashed = os.path.join(catalog.warehouse, stages[0])
+    past = time.time() - catalog_module.VACUUM_GRACE_SECONDS - 60
+    for d, dirs, names in os.walk(crashed, topdown=False):
+        for nm in dirs + names:
+            os.utime(os.path.join(d, nm), (past, past))
+    os.utime(crashed, (past, past))
+    os.makedirs(os.path.join(catalog.warehouse, ".merge-live", "in"))
     assert pipe.ingest_new() == 1
     assert Counter(catalog.read("gauge_data").collect()) == want
+    assert [e for e in os.listdir(catalog.warehouse) if e.startswith(".merge-")] == \
+        [".merge-live"]
 
 
 # -- compaction of append-only small tables -----------------------------------

@@ -1,0 +1,93 @@
+"""Static guards over the files that import the package from outside it:
+every ``from apsviz_timeseriesdb_ingest_spark… import name`` in
+``tools/*.py`` names something the package still defines, and every
+``tests/slow_tests.txt`` entry names a test function that exists. Both
+are read from source with ``ast``; nothing is imported and no Spark
+session starts, so a deleted symbol cannot silently break a soak script
+or leave a dead slow entry."""
+
+from __future__ import annotations
+
+import ast
+import os
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+PKG = "apsviz_timeseriesdb_ingest_spark"
+
+
+def _parse(path: str) -> ast.Module:
+    with open(path) as f:
+        return ast.parse(f.read(), path)
+
+
+def _module_path(module: str) -> str | None:
+    base = os.path.join(ROOT, *module.split("."))
+    for path in (base + ".py", os.path.join(base, "__init__.py")):
+        if os.path.isfile(path):
+            return path
+    return None
+
+
+def _top_level_names(tree: ast.Module) -> set[str]:
+    """Names bound at module level, also inside top-level ``if``/``try``
+    blocks."""
+    names: set[str] = set()
+    stack = list(tree.body)
+    while stack:
+        node = stack.pop()
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            names.add(node.name)
+        elif isinstance(node, (ast.Import, ast.ImportFrom)):
+            names.update((a.asname or a.name).split(".")[0] for a in node.names)
+        elif isinstance(node, (ast.Assign, ast.AnnAssign, ast.AugAssign)):
+            targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+            names.update(n.id for t in targets for n in ast.walk(t)
+                         if isinstance(n, ast.Name))
+        elif isinstance(node, (ast.If, ast.Try)):
+            stack.extend(node.body + node.orelse + getattr(node, "finalbody", [])
+                         + [s for h in getattr(node, "handlers", []) for s in h.body])
+    return names
+
+
+def _broken_imports(path: str) -> list[str]:
+    broken = []
+    for node in ast.walk(_parse(path)):
+        if isinstance(node, ast.Import):
+            broken += [a.name for a in node.names
+                       if a.name.split(".")[0] == PKG and _module_path(a.name) is None]
+        elif (isinstance(node, ast.ImportFrom) and not node.level and node.module
+              and node.module.split(".")[0] == PKG):
+            target = _module_path(node.module)
+            if target is None:
+                broken.append(node.module)
+                continue
+            defined = _top_level_names(_parse(target))
+            broken += [f"{node.module}.{a.name}" for a in node.names
+                       if a.name not in defined
+                       and _module_path(f"{node.module}.{a.name}") is None]
+    return broken
+
+
+def test_tool_imports_resolve():
+    tools = os.path.join(ROOT, "tools")
+    broken = {name: bad for name in sorted(os.listdir(tools)) if name.endswith(".py")
+              for bad in (_broken_imports(os.path.join(tools, name)),) if bad}
+    assert broken == {}
+
+
+def test_slow_entries_name_existing_tests():
+    tests = os.path.join(ROOT, "tests")
+    with open(os.path.join(tests, "slow_tests.txt")) as f:
+        entries = [ln.strip() for ln in f if ln.strip() and not ln.startswith("#")]
+    defined: dict[str, set[str]] = {}
+    stale = []
+    for entry in entries:
+        module, _, name = entry.partition("::")
+        path = os.path.join(tests, module)
+        if module not in defined:
+            defined[module] = ({n.name for n in _parse(path).body
+                                if isinstance(n, ast.FunctionDef)}
+                               if os.path.isfile(path) else set())
+        if name.split("[", 1)[0] not in defined[module]:
+            stale.append(entry)
+    assert entries and stale == []

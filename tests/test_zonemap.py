@@ -8,16 +8,25 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 import pytest
+from pyspark.sql import Row
 
 from apsviz_timeseriesdb_ingest_spark.sources.catalog import Catalog
 from apsviz_timeseriesdb_ingest_spark.sources.zonemap import (
+    ZONEMAP_SCHEMA,
     build_zonemap,
-    collect_zonemap,
+    footer_stats,
     list_parquet_files,
     prune_files,
     read_pruned,
 )
 from apsviz_timeseriesdb_ingest_spark.testdata import load_table
+
+_ZM = Row(*(f.split()[0] for f in ZONEMAP_SCHEMA.split(", ")))
+
+
+def _zonemap(path, columns):
+    """The stats rows a zone-map build over ``path`` persists."""
+    return [_ZM(*r) for r in footer_stats(list_parquet_files(path), columns)]
 
 
 @pytest.fixture()
@@ -40,8 +49,8 @@ def orders_sharded(spark, sf_small, tmp_path):
 def test_prune_preserves_results_and_skips_files(spark, orders_sharded):
     files = list_parquet_files(orders_sharded)
     assert len(files) == 8
-    zm = collect_zonemap(spark, orders_sharded, ["o_orderdate", "o_custkey"])
-    assert zm.filter(~F.col("has_stats")).count() == 0
+    zm = _zonemap(orders_sharded, ["o_orderdate", "o_custkey"])
+    assert all(r.has_stats for r in zm)
 
     lo, hi = "1995-01-01 00:00:00", "1995-06-30 23:59:59"
     pred = F.col("o_orderdate").between(lo, hi)
@@ -62,7 +71,7 @@ def test_prune_preserves_results_and_skips_files(spark, orders_sharded):
 
 
 def test_prune_outside_all_ranges_is_empty_but_typed(spark, orders_sharded):
-    zm = collect_zonemap(spark, orders_sharded, ["o_orderdate"])
+    zm = _zonemap(orders_sharded, ["o_orderdate"])
     keep = prune_files(zm, "o_orderdate", "2099-01-01", "2099-12-31")
     assert keep == []
     out = read_pruned(spark, orders_sharded, keep)
@@ -77,7 +86,7 @@ def test_open_bounds_and_numeric_parse(spark, tmp_path):
     path = str(tmp_path / "nums")
     (spark.range(0, 1000).select(F.col("id").alias("k"))
      .repartitionByRange(4, "k").write.parquet(path))
-    zm = collect_zonemap(spark, path, ["k"])
+    zm = _zonemap(path, ["k"])
     all_files = list_parquet_files(path)
     hi_only = prune_files(zm, "k", None, 10)
     lo_only = prune_files(zm, "k", 990, None)
@@ -98,13 +107,12 @@ def test_missing_stats_kept_conservatively(spark, tmp_path):
         .coalesce(1).write.parquet(path)
     spark.createDataFrame([(2,)], "a long") \
         .coalesce(1).write.mode("append").parquet(path)
-    zm = collect_zonemap(spark, path, ["b"])
-    assert zm.filter(~F.col("has_stats")).count() == 1
+    zm = _zonemap(path, ["b"])
+    assert [r.has_stats for r in zm].count(False) == 1
     # b's range [5,5] misses [100,200], but the stats-less file stays
     keep = prune_files(zm, "b", 100, 200)
     assert len(keep) == 1
-    assert zm.filter(F.col("file") == keep[0]).collect()[0].has_stats \
-        is False
+    assert [r.has_stats for r in zm if r.file == keep[0]] == [False]
 
 
 def test_build_probe_many_via_catalog(spark, catalog, orders_sharded):
@@ -113,7 +121,9 @@ def test_build_probe_many_via_catalog(spark, catalog, orders_sharded):
     n = build_zonemap(catalog, orders_sharded, ["o_orderdate"],
                       table="orders_zm")
     assert n == 8
-    zm = catalog.read("orders_zm")
+    zm = catalog.rows("orders_zm", ZONEMAP_SCHEMA)
+    assert {tuple(r) for r in catalog.read("orders_zm").collect()} == \
+        {tuple(r) for r in zm}
     keep = prune_files(zm, "o_orderdate", "1997-01-01", "1997-03-31")
     assert 0 < len(keep) < 8
     pred = F.col("o_orderdate").between("1997-01-01", "1997-03-31")
@@ -128,8 +138,7 @@ def test_stale_stats_keep_uncovered_files(spark, tmp_path):
     path = str(tmp_path / "grow")
     spark.range(0, 20).select(F.col("id").alias("k")) \
         .coalesce(1).write.parquet(path)
-    zm = collect_zonemap(spark, path, ["k"]).cache()
-    zm.count()  # materialize stats BEFORE the table grows
+    zm = _zonemap(path, ["k"])  # stats taken BEFORE the table grows
     spark.range(100, 120).select(F.col("id").alias("k")) \
         .coalesce(1).write.mode("append").parquet(path)
 
@@ -139,7 +148,6 @@ def test_stale_stats_keep_uncovered_files(spark, tmp_path):
     keep = prune_files(zm, "k", 5, 5, path=path)
     assert read_pruned(spark, path, keep) \
         .filter(F.col("k") == 5).count() == 1
-    zm.unpersist()
 
 
 def test_compacted_table_drops_dead_stats_rows(spark, tmp_path):
@@ -149,8 +157,7 @@ def test_compacted_table_drops_dead_stats_rows(spark, tmp_path):
     path = str(tmp_path / "compact")
     spark.range(0, 40).select(F.col("id").alias("k")) \
         .repartition(4).write.parquet(path)
-    zm = collect_zonemap(spark, path, ["k"]).cache()
-    zm.count()
+    zm = _zonemap(path, ["k"])
     # materialize before overwriting the path being read
     compacted = spark.createDataFrame(spark.read.parquet(path).toPandas())
     compacted.coalesce(1).write.mode("overwrite").parquet(path)
@@ -159,96 +166,6 @@ def test_compacted_table_drops_dead_stats_rows(spark, tmp_path):
     assert keep == list_parquet_files(path)
     assert read_pruned(spark, path, keep) \
         .filter(F.col("k") == 7).count() == 1
-    zm.unpersist()
-
-
-def test_zonemap_aggregates_metadata_only(spark, tmp_path):
-    """count/min/max/null_count answered from the stats table alone;
-    refuses (None) on stale or stats-less coverage."""
-    from apsviz_timeseriesdb_ingest_spark.sources.zonemap import (
-        zonemap_aggregates)
-
-    path = str(tmp_path / "t")
-    df = spark.range(0, 1000).select(
-        F.col("id").alias("k"),
-        F.when(F.col("id") % 10 != 0, F.col("id") * 2).alias("v"),
-        F.concat(F.lit("s"), F.lpad(F.col("id").cast("string"), 4, "0"))
-        .alias("name"))
-    df.repartition(4).write.parquet(path)
-    zm = collect_zonemap(spark, path, ["k", "v", "name"]).cache()
-
-    exact = spark.read.parquet(path).agg(
-        F.count("*"), F.min("k"), F.max("k"),
-        F.sum(F.col("v").isNull().cast("long")),
-        F.min("v"), F.max("v"), F.min("name"), F.max("name")).collect()[0]
-    agg_k = zonemap_aggregates(zm, "k", path=path)
-    assert agg_k == {"num_rows": exact[0], "null_count": 0,
-                     "min": exact[1], "max": exact[2]}
-    agg_v = zonemap_aggregates(zm, "v", path=path)
-    assert agg_v == {"num_rows": exact[0], "null_count": exact[3],
-                     "min": exact[4], "max": exact[5]}
-    agg_n = zonemap_aggregates(zm, "name", path=path)
-    assert (agg_n["min"], agg_n["max"]) == (exact[6], exact[7])
-
-    # unknown column → None; stale coverage → None
-    assert zonemap_aggregates(zm, "nope") is None
-    spark.range(5).select(F.col("id").alias("k")) \
-        .coalesce(1).write.mode("append").parquet(path)
-    assert zonemap_aggregates(zm, "k", path=path) is None
-    # without path= the (possibly stale) covered-set answer is returned
-    assert zonemap_aggregates(zm, "k") == agg_k
-    zm.unpersist()
-
-
-def test_prune_files_in_point_values(spark, tmp_path):
-    """IN-list probe on a CLUSTERED column: each point value keeps only
-    the files whose range contains it; results equal the plain isin."""
-    from apsviz_timeseriesdb_ingest_spark.sources.zonemap import (
-        collect_zonemap, prune_files_in)
-
-    path = str(tmp_path / "clustered")
-    (spark.range(1000).select(F.col("id").alias("k"))
-     .repartitionByRange(10, "k").write.parquet(path))
-    zm = collect_zonemap(spark, path, ["k"])
-    keep = prune_files_in(zm, "k", [5, 505], path=path)
-    assert len(keep) == 2  # one owning file per value
-    got = sorted(r.k for r in read_pruned(spark, path, keep)
-                 .filter(F.col("k").isin([5, 505])).collect())
-    assert got == [5, 505]
-    # NULL values never match; absent values keep nothing
-    assert prune_files_in(zm, "k", [None], path=path) == []
-    assert prune_files_in(zm, "k", [10_000], path=path) == []
-
-
-def test_prune_files_prefix(spark, tmp_path):
-    """LIKE 'prefix%' is the half-open range [prefix, upper): prunes on
-    a clustered string column, result-equal to the plain startswith."""
-    from apsviz_timeseriesdb_ingest_spark.sources.zonemap import (
-        collect_zonemap, prefix_upper_bound, prune_files_prefix)
-
-    assert prefix_upper_bound("ab") == "ac"
-    assert prefix_upper_bound("a" + chr(0x10FFFF)) == "b"
-    assert prefix_upper_bound(chr(0x10FFFF)) is None
-
-    path = str(tmp_path / "names")
-    names = [f"{c}{i:03d}" for c in "abcdefgh" for i in range(50)]
-    (spark.createDataFrame([(n,) for n in names], "name string")
-     .repartitionByRange(8, "name").write.parquet(path))
-    zm = collect_zonemap(spark, path, ["name"])
-    keep = prune_files_prefix(zm, "name", "c0", path=path)
-    assert 0 < len(keep) < 8
-    got = (read_pruned(spark, path, keep)
-           .filter(F.col("name").startswith("c0")).count())
-    expect = sum(1 for n in names if n.startswith("c0"))
-    assert got == expect > 0
-    # a prefix past every range keeps nothing
-    assert prune_files_prefix(zm, "name", "zzz", path=path) == []
-    # non-string columns are never pruned on a prefix (conservative)
-    ipath = str(tmp_path / "ints")
-    spark.range(100).select(F.col("id").alias("k")) \
-        .coalesce(2).write.parquet(ipath)
-    zmi = collect_zonemap(spark, ipath, ["k"])
-    assert len(prune_files_prefix(zmi, "k", "9", path=ipath)) == 2
 
 
 def test_listing_skips_hidden_dirs_like_spark(spark, tmp_path):

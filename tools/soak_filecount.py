@@ -3,30 +3,28 @@
 files, and every driver-side piece of the skipping machinery —
 file listing, prune arithmetic, the incremental build's
 covered-set diff — is O(#files). This measures those walls at
-1k/10k files so "flat at 256 files" (soak_skipping) doesn't hide a
+1k/10k files so a flat curve at a few hundred files doesn't hide a
 10k-file cliff.
 
 Measured per file count:
 
 - ``list_s``: plain file listing (os.walk) — the floor every
   driver-side op pays;
-- ``zm_build_s`` / ``bloom_build_s``: full stats builds (footer-only
-  vs column-pruned data pass), distributed over the file list;
+- ``zm_build_s``: the full zone-map build (parquet footers read on
+  the driver);
 - ``zm_incr_s``: incremental refresh after appending ``--append``
-  files — must be O(new files) + the survivor semi-join, NOT a
-  rebuild;
-- ``zm_prune_s`` / ``bloom_probe_s``: driver/Spark arithmetic over
-  the stats table for a ~0.1%-selective range / 5-id IN-list;
+  files — must be O(new files), NOT a rebuild;
+- ``zm_prune_s``: driver arithmetic over the stats rows for a
+  ~0.1%-selective range;
 - ``committed_files_s``: the composed committed-read's driver-side
   file arithmetic over a half-committed ``(__batch, __writer)``
   layout at the same file count;
-- ``zm_kept`` / ``bloom_kept``: files surviving the prune (the
-  selectivity sanity check: pruned read == full filtered read is
-  asserted, result-equality first as always).
+- ``zm_kept``: files surviving the prune (the selectivity sanity
+  check: pruned read == full filtered read is asserted,
+  result-equality first as always).
 
-Layouts are honest: range shards for the zone map, hash shards for
-the Bloom index. Bloom geometry is shrunk to 2^12 bits (rows/file is
-tiny here — the soak scales FILE COUNT, not bytes). One JSON line per
+The layout is range shards, the one a zone map prunes. Rows/file is
+tiny here — the soak scales FILE COUNT, not bytes. One JSON line per
 file count on stdout.
 
 Usage: python tools/soak_filecount.py [--files 1000,10000]
@@ -60,12 +58,9 @@ def main() -> None:
 
     from apsviz_timeseriesdb_ingest_spark.sources.catalog import Catalog
     from apsviz_timeseriesdb_ingest_spark.sources.skipping import (
-        bloom_table, build_skipping, read_between, read_equals,
-        zm_table)
-    from apsviz_timeseriesdb_ingest_spark.sources.bloomskip import (
-        prune_files_bloom)
+        build_skipping, committed_files, read_between, zm_table)
     from apsviz_timeseriesdb_ingest_spark.sources.zonemap import (
-        list_parquet_files, prune_files)
+        ZONEMAP_SCHEMA, list_parquet_files, prune_files)
 
     spark = (SparkSession.builder.master(f"local[{args.cpus}]")
              .config("spark.sql.shuffle.partitions", args.cpus)
@@ -79,12 +74,9 @@ def main() -> None:
             n_rows = n_files * args.rows_per_file
             base = spark.range(n_rows).select(F.col("id").alias("k"))
 
-            # range shards (zone-map-honest layout) in one job; hash
-            # shards for bloom in another table
+            # range shards: the layout a zone map prunes
             (base.repartitionByRange(n_files, "k")
              .write.parquet(catalog.path("zt")))
-            (base.repartition(n_files, "k")
-             .write.parquet(catalog.path("bt")))
 
             t0 = time.time()
             files = list_parquet_files(catalog.path("zt"))
@@ -94,15 +86,10 @@ def main() -> None:
             t0 = time.time()
             build_skipping(catalog, "zt", range_cols=["k"])
             zm_build_s = time.time() - t0
-            t0 = time.time()
-            build_skipping(catalog, "bt", equality_cols=["k"],
-                           n_bits=1 << 12, n_hashes=5)
-            bloom_build_s = time.time() - t0
 
             # ~0.1%-selective range probe
             lo, hi = n_rows // 2, n_rows // 2 + n_rows // 1000
-            zm = catalog.read(zm_table("zt")).cache()
-            zm.count()
+            zm = catalog.rows(zm_table("zt"), ZONEMAP_SCHEMA)
             t0 = time.time()
             kept = prune_files(zm, "k", lo, hi,
                                path=catalog.path("zt"))
@@ -111,22 +98,9 @@ def main() -> None:
             got = read_between(catalog, "zt", "k", lo, hi).count()
             assert got == expect, (got, expect)
 
-            ids = [i * (n_rows // 7) for i in range(5)]
-            bl = catalog.read(bloom_table("bt")).cache()
-            bl.count()
-            t0 = time.time()
-            bkept = prune_files_bloom(bl, "k", ids,
-                                      path=catalog.path("bt"))
-            bloom_probe_s = time.time() - t0
-            got = read_equals(catalog, "bt", "k", ids).count()
-            assert got == len(set(ids)), got
-
-            # committed-read composition at file-count scale: commit
-            # half the batches of a (__batch, __writer) layout and time
-            # the driver-side committed-file arithmetic over ALL files
-            from apsviz_timeseriesdb_ingest_spark.sources.skipping import (
-                committed_files)
-
+            # committed files at file-count scale: commit half the
+            # batches of a (__batch, __writer) layout and time the
+            # driver-side committed-file arithmetic over ALL files
             n_batches = 50
             (base.withColumn("__batch", (F.col("k")
                                          % n_batches).cast("long"))
@@ -143,7 +117,7 @@ def main() -> None:
             assert 0 < len(cfiles) < all_ct
 
             # incremental refresh paid per APPEND (the auto-hook path):
-            # a stats pass over the new files + the survivor semi-join
+            # footer stats over the new files only
             extra = spark.range(n_rows, n_rows
                                 + args.append * 10).select(
                 F.col("id").alias("k"))
@@ -157,11 +131,8 @@ def main() -> None:
                 "files": n_files, "rows": n_rows,
                 "list_s": round(list_s, 3),
                 "zm_build_s": round(zm_build_s, 2),
-                "bloom_build_s": round(bloom_build_s, 2),
                 "zm_prune_s": round(zm_prune_s, 3),
                 "zm_kept": len(kept),
-                "bloom_probe_s": round(bloom_probe_s, 3),
-                "bloom_kept": len(bkept),
                 "zm_incr_append_s": round(zm_incr_s, 2),
                 "appended_files": args.append,
                 "committed_files_s": round(committed_s, 3),

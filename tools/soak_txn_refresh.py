@@ -1,17 +1,16 @@
 """Per-batch cost of the skipping auto-refresh inside the streaming
-dedup txn (r7 candidate 1): once a corpus table has ``__zm``/``__bloom``
-sidecars, every micro-batch's corpus write triggers
-``Catalog.refresh_skipping`` — an incremental stats pass over the
-batch's new files plus the survivor semi-join. This measures what that
-adds to a batch at a realistic size, against the same batches with no
-sidecars (the default: tables that never opted into skipping pay two
-dir checks).
+dedup txn (r7 candidate 1): once a corpus table has a ``__zm``
+sidecar, every micro-batch's corpus write triggers
+``Catalog.refresh_skipping`` — footer stats over the batch's new files
+and one rewrite of the sidecar. This measures what that adds to a batch
+at a realistic size, against the same batches with no sidecar (the
+default: tables that never opted into skipping pay one dir check).
 
-One JSON line on stdout: mean batch wall without sidecars, with a zone
-map, and with zone map + Bloom; the per-batch delta is the number a
-deployment weighs against its probe savings (the refresh is
-correctness-optional — staleness only skips less — so a latency-bound
-stream can pass refresh_skipping=False and refresh on compaction).
+One JSON line on stdout: mean batch wall without and with a zone map;
+the per-batch delta is the number a deployment weighs against its probe
+savings (the refresh is correctness-optional — staleness only skips
+less — so a latency-bound stream can pass refresh_skipping=False and
+refresh on compaction).
 
 Usage: python tools/soak_txn_refresh.py [--batches 6] [--docs 500]
 """
@@ -63,7 +62,7 @@ def main() -> None:
                      F.lit(" with some distinct trailing words "),
                      (F.col("id") * 7919) % 104729).alias("text")))
 
-    def run(label: str, range_cols, equality_cols) -> float:
+    def run(range_cols) -> float:
         with tempfile.TemporaryDirectory() as tmp:
             catalog = Catalog(spark, tmp)
             build_dedup_index(catalog, batch_df(999),
@@ -71,10 +70,9 @@ def main() -> None:
                               bands=4)
             apply_dedup_increment_txn(catalog, batch_df(0), 0,
                                       k=2, num_hashes=16, bands=4)
-            if range_cols or equality_cols:
+            if range_cols:
                 build_skipping(catalog, "stream_corpus",
-                               range_cols=range_cols,
-                               equality_cols=equality_cols)
+                               range_cols=range_cols)
             walls = []
             for b in range(1, args.batches + 1):
                 t0 = time.time()
@@ -83,16 +81,13 @@ def main() -> None:
                 walls.append(time.time() - t0)
             return sum(walls) / len(walls)
 
-    plain = run("plain", (), ())
-    zm = run("zm", ["doc_id"], ())
-    both = run("zm+bloom", ["doc_id"], ["doc_id"])
+    plain = run(())
+    zm = run(["doc_id"])
     print(json.dumps({
         "batches": args.batches, "docs_per_batch": args.docs,
         "mean_batch_s_plain": round(plain, 2),
         "mean_batch_s_zm": round(zm, 2),
-        "mean_batch_s_zm_bloom": round(both, 2),
         "refresh_overhead_s_zm": round(zm - plain, 2),
-        "refresh_overhead_s_zm_bloom": round(both - plain, 2),
     }), flush=True)
     spark.stop()
 
