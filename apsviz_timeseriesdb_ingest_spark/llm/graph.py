@@ -157,12 +157,6 @@ def pagerank(edges: DataFrame, *, src_col: str = "src",
              .distinct())
     outdeg = (es.groupBy("src").agg(F.sum("w").alias("out"))
               .withColumnRenamed("src", "node"))
-    if checkpoint_catalog is not None:
-        # durable slots (resume reads only edges and ranks); in local
-        # mode both frames fold into the first pass's cut instead (2
-        # fewer jobs)
-        nodes = cut(nodes, "nodes")
-        outdeg = cut(outdeg, "outdeg")
     # node count rides as a broadcast one-row aggregate (same fold as
     # the per-pass dangling scalar, r12): no driver count job, and the
     # initial 1/n is the identical IEEE double division. The old n == 0

@@ -98,15 +98,15 @@ def build_dedup_index(catalog: Catalog, docs: DataFrame, *,
     flat one: rows carry ``__batch = -1`` / ``__writer = "-"`` (the
     table is partitioned by both) and the ``{table}_commits`` ledger
     records batch -1 as committed — the layout
-    ``run_incremental_dedup_stream`` requires so its per-batch dynamic
-    partition overwrites and put-if-absent ledger commits make index
+    ``run_incremental_dedup_stream`` requires so its per-batch
+    partitioned overwrites and put-if-absent ledger commits make index
     appends atomic-with-replay AND writer-exclusive (the r3
     partial-commit closure + the r6 two-writer closure)."""
     buckets = minhash_band_buckets(docs, text_col=text_col, id_col=id_col,
                                    **lsh_kw)
     spark = docs.sparkSession
     # A rebuild must fully REPLACE the index (a partitioned overwrite
-    # under the session's DYNAMIC mode would leave stale __batch
+    # replaces only the frame's partitions, so it would leave stale __batch
     # partitions and phantom rows — ADVICE r4), but dropping the old
     # generation BEFORE the rebuild job runs left a window where any
     # rebuild failure destroyed the index entirely (ADVICE r5). Staged

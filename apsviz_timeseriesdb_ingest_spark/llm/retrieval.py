@@ -261,7 +261,7 @@ def build_bm25_index(catalog, docs: DataFrame, *, table: str = "bm25",
         catalog.append(stats, f"{table}_stats")
         return
     # A rebuild must fully REPLACE the index: a partitioned overwrite
-    # under the session's DYNAMIC mode would leave stale __batch /
+    # replaces only the frame's partitions, so it would leave stale __batch /
     # term_bucket partitions and phantom rows in probes (ADVICE r4) —
     # but dropping the generation BEFORE the rebuild job left a window
     # where any failure destroyed the index entirely (ADVICE r5). The
@@ -323,8 +323,8 @@ def append_bm25_increment_txn(catalog, docs: DataFrame, batch_id: int, *,
     1. ``batch_id`` already committed in ``{table}_commits`` (a
        driver-side file check) → fully applied, return (replay no-op).
     2. Write the increment's tf/df/stats rows as
-       ``(__batch=batch_id, __writer)`` partitions via DYNAMIC
-       partition overwrite — a replay REPLACES a crashed attempt's
+       ``(__batch=batch_id, __writer)`` partitions by a partitioned
+       overwrite — a replay REPLACES a crashed attempt's
        partial partitions across all three tables, and a racing
        writer's rows land in its OWN partition.
     3. ``Catalog.commit_batch`` — the atomic, exclusive commit point

@@ -28,17 +28,19 @@ proportional to the batch's time window, never the table, which is the
 reference's bounded-DELETE optimization
 (``run/ingestObsTasks.py:390-399``) expressed as partition pruning.
 
-The merge and the ``*_rows`` writers commit one way (:func:`_publish`):
-finished files written under hidden names are ``os.replace``d into a
-table or month directory, and only then are its old entries unlinked.
-No write reads what it replaces. The two windows:
+Every write commits one way (:func:`_publish`): finished files written
+under hidden names are ``os.replace``d into a table or partition
+directory, and only then are its old entries unlinked. A Spark frame is
+first written whole under a hidden stage (:meth:`Catalog._write_frame`),
+a small table's rows to a hidden file; so a failed write job leaves the
+table as it was, and no write reads what it replaces. The two windows:
 
 - a crash between publish and unlink leaves both generations in the
   directory until the rerun: a rerun merge reads both and keeps the
   latest of each key; a small table's reader tolerates a key listed
   twice (:meth:`Catalog.overwrite_rows`);
-- a reader racing the publish can see both generations of a month (one
-  writer per table and no racing reader is assumed throughout).
+- a reader racing the publish can see both generations of a partition
+  (one writer per table and no racing reader is assumed throughout).
 """
 
 from __future__ import annotations
@@ -46,7 +48,8 @@ from __future__ import annotations
 import os
 import shutil
 import time
-from collections.abc import Sequence
+from collections.abc import Iterator, Sequence
+from contextlib import contextmanager
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -120,35 +123,24 @@ class DynamicOverwriteMerge(MergeStrategy):
     """Single-writer merge for plain parquet: a staged swap of the
     months the batch touches, so cost follows the batch's time window,
     never the table (the reference's bounded DELETE,
-    ``run/ingestObsTasks.py:390-399``, as partition pruning).
+    ``run/ingestObsTasks.py:390-399``, as partition pruning). The
+    benchmark's tracer wraps this class by name.
 
-    ``incoming`` runs once, written by month to a hidden stage
-    ``{warehouse}/.merge-<uuid>/in``; the month directories it creates
-    are the touched months (none for an empty batch). That batch and
-    the stored rows of those months, read with the schema this strategy
-    writes (the incoming columns less ``drop_before_write``: callers
-    pass rows of the table's full schema), are deduplicated into
-    ``.../out``, whose months :func:`_publish` then moves into the
-    table. A new table is a merge with no stored months.
-
-    A killed merge leaves its stage behind; no reader lists it, and the
-    next merge removes every stage whose newest entry is older than
-    :data:`VACUUM_GRACE_SECONDS` (a younger one may be a live merge's)."""
+    ``incoming`` runs once, written by month under a hidden
+    :meth:`Catalog._stage`; the month directories it creates are the
+    touched months (none for an empty batch). That batch and the stored
+    rows of those months, read with the schema this strategy writes
+    (the incoming columns less ``drop_before_write``: callers pass rows
+    of the table's full schema), are deduplicated and written by
+    :meth:`Catalog._write_frame`, which replaces exactly those months.
+    A new table is a merge with no stored months."""
 
     def merge(self, catalog: "Catalog", table: str, incoming: DataFrame,
               keys: Sequence[str], order_by: Sequence[Column | str], *,
               time_col: str, drop_before_write: Sequence[str]) -> None:
-        import uuid
-
-        if os.path.isdir(catalog.warehouse):
-            now = time.time()
-            for e in os.listdir(catalog.warehouse):
-                left = os.path.join(catalog.warehouse, e)
-                if e.startswith(".merge-") and not _young(left, VACUUM_GRACE_SECONDS, now):
-                    shutil.rmtree(left, ignore_errors=True)
-        stage = os.path.join(catalog.warehouse, f".merge-{uuid.uuid4().hex}")
-        staged_in, staged_out = os.path.join(stage, "in"), os.path.join(stage, "out")
-        try:
+        with catalog._stage() as stage:
+            # a sub-directory: Spark warns on reading a hidden root path
+            staged_in = os.path.join(stage, "in")
             incoming = incoming.withColumn(TIME_BUCKET, time_bucket(time_col))
             incoming.write.partitionBy(TIME_BUCKET).parquet(staged_in)
             months = _month_dirs(staged_in)
@@ -165,16 +157,9 @@ class DynamicOverwriteMerge(MergeStrategy):
                           .parquet(*have).unionByName(merged, allowMissingColumns=True))
             # cluster rows by the dedup keys inside each file: parquet
             # row-group min/max stats then skip for key-selective reads
-            (keep_latest(merged, keys, order_by).drop(*drop_before_write)
-             .sortWithinPartitions(*keys)
-             .write.partitionBy(TIME_BUCKET).parquet(staged_out))
-            for m in _month_dirs(staged_out):
-                _publish(os.path.join(dest, m),
-                         [(f, os.path.basename(f))
-                          for f in list_parquet_files(os.path.join(staged_out, m))],
-                         replace=True)
-        finally:
-            shutil.rmtree(stage, ignore_errors=True)
+            catalog._write_frame(keep_latest(merged, keys, order_by).drop(*drop_before_write)
+                                 .sortWithinPartitions(*keys),
+                                 table, [TIME_BUCKET], replace=True)
 
 
 def _young(path: str, grace_seconds: float, now: float) -> bool:
@@ -210,7 +195,6 @@ class Catalog:
         # table -> (listing, Arrow copy or None, Row copy or None)
         self._copies: dict[str, tuple[tuple, pa.Table | None,
                                       tuple[Row, ...] | None]] = {}
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
     def path(self, table: str) -> str:
         return os.path.join(self.warehouse, table)
@@ -228,21 +212,21 @@ class Catalog:
         return reader.parquet(self.path(table))
 
     def rows(self, table: str, schema: StructType | str) -> tuple[Row, ...]:
-        """A small table's rows on the driver (dimensions, stats
-        sidecars), read with its declared ``schema`` and cached. The
+        """An unpartitioned small table's rows on the driver
+        (dimensions, stats sidecars), read with its declared ``schema``
+        and cached. The
         cache key is the table's on-disk listing (path, size and mtime
         of every data file), so any writer — another ``Catalog`` or
         process included — invalidates it: a hit costs one directory
-        walk and no Spark job, a miss one read. :meth:`append_rows` and
-        :meth:`overwrite_rows` keep the copy current. A missing table
-        has no rows."""
-        listing = self._listing(table)
-        known, data, rows = self._copies.get(table, (None, None, None))
-        if known != listing:
-            data, rows = None, tuple(self.read(table, schema).collect()) if listing else ()
-        elif rows is None:
+        walk and no Spark job, and a miss builds the rows from the
+        pyarrow read of :meth:`arrow`, which runs none either.
+        :meth:`append_rows` and :meth:`overwrite_rows` keep the copy
+        current. A missing table has no rows."""
+        data = self.arrow(table, schema)
+        listing, _, rows = self._copies[table]
+        if rows is None:
             rows = _as_rows(data)
-        self._copies[table] = (listing, data, rows)
+            self._copies[table] = (listing, data, rows)
         return rows
 
     def arrow(self, table: str, schema: StructType | str) -> pa.Table:
@@ -342,23 +326,65 @@ class Catalog:
         from .skipping import refresh_skipping
         return refresh_skipping(self, table)
 
+    @contextmanager
+    def _stage(self) -> Iterator[str]:
+        """A fresh hidden stage path ``{warehouse}/.stage-<uuid>`` for a
+        Spark write, removed on exit. It sits under the warehouse so the
+        :func:`_publish` renames out of it stay on one filesystem, and no
+        reader lists it (``zonemap.list_parquet_files`` hides dot
+        directories). A killed writer leaves its stage behind: entering
+        removes every stage whose newest entry is older than
+        :data:`VACUUM_GRACE_SECONDS` (a younger one may be a live
+        writer's)."""
+        import uuid
+
+        if os.path.isdir(self.warehouse):
+            now = time.time()
+            for e in os.listdir(self.warehouse):
+                left = os.path.join(self.warehouse, e)
+                if e.startswith(".stage-") and not _young(left, VACUUM_GRACE_SECONDS, now):
+                    shutil.rmtree(left, ignore_errors=True)
+        stage = os.path.join(self.warehouse, f".stage-{uuid.uuid4().hex}")
+        try:
+            yield stage
+        finally:
+            shutil.rmtree(stage, ignore_errors=True)
+
+    def _write_frame(self, df: DataFrame, table: str, partition_by: Sequence[str], *,
+                     replace: bool) -> None:
+        """The writer of every Spark frame: ``df`` is written whole
+        under a :meth:`_stage`, then each directory that write created
+        is :func:`_publish`ed into the table, so a failed job leaves the
+        table as it was. With ``replace``, an unpartitioned frame
+        replaces the table and a partitioned one only the ``col=value``
+        partitions it holds; an empty partitioned frame writes no data
+        file, so it changes nothing (an empty unpartitioned one writes a
+        file holding only the schema)."""
+        with self._stage() as stage:
+            w = df.write.partitionBy(*partition_by) if partition_by else df.write
+            w.parquet(stage)
+            by_dir: dict[str, list[str]] = {}
+            for f in list_parquet_files(stage):
+                by_dir.setdefault(os.path.dirname(f), []).append(f)
+            dest = self.path(table)
+            os.makedirs(dest, exist_ok=True)
+            for d, files in by_dir.items():
+                _publish(os.path.normpath(os.path.join(dest, os.path.relpath(d, stage))),
+                         [(f, os.path.basename(f)) for f in files], replace=replace)
+
     def overwrite(self, df: DataFrame, table: str, *,
                   partition_by: Sequence[str] = (),
                   refresh_skipping: bool = True) -> None:
-        w = df.write.mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(self.path(table))
+        """Replace ``table`` with ``df``; partitioned, only the
+        partitions ``df`` holds (:meth:`_write_frame`)."""
+        self._write_frame(df, table, partition_by, replace=True)
         if refresh_skipping:
             self.refresh_skipping(table)
 
     def append(self, df: DataFrame, table: str, *,
                partition_by: Sequence[str] = (),
                refresh_skipping: bool = True) -> None:
-        w = df.write.mode("append")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(self.path(table))
+        self._write_frame(df, table, partition_by, replace=False)
         if refresh_skipping:
             self.refresh_skipping(table)
 
@@ -468,17 +494,22 @@ class Catalog:
         their partition columns so each partition dir collapses to ~one
         file.
 
-        INCREMENTAL for partitioned tables (r7): only leaf partitions
-        holding at least ``min_files`` data files are rewritten, via
-        dynamic partition overwrite — already-compacted partitions are
-        not read, not rewritten, and a table with no crowded partition
-        is a metadata-only NO-OP. That turns periodic maintenance from
-        O(table) per pass into O(small-file buildup since the last
-        pass), which is the difference between OPTIMIZE being free and
-        being a nightly full rewrite at 100 TB (Delta/Iceberg OPTIMIZE
-        has the same file-count gating). Flat (unpartitioned) tables
-        keep the full coalesce rewrite, skipped when the table already
-        holds fewer than ``min_files`` files.
+        INCREMENTAL (r7): only directories (a leaf partition, or a flat
+        table's root) holding at least ``min_files`` data files are
+        read, and :meth:`_write_frame` replaces exactly those —
+        already-compacted partitions are not read, not rewritten, and a
+        table with no crowded directory is a metadata-only NO-OP. That
+        turns periodic maintenance from O(table) per pass into
+        O(small-file buildup since the last pass), which is the
+        difference between OPTIMIZE being free and being a nightly full
+        rewrite at 100 TB (Delta/Iceberg OPTIMIZE has the same
+        file-count gating). A flat table is coalesced to an eighth of
+        ``partitions`` (default: the default parallelism) files. The
+        rewrite is staged whole before anything it read is replaced. A
+        crash inside the publish leaves both generations of a
+        partition: no row is lost, but that partition lists its rows
+        twice until a keep-latest merge of it (compacting again keeps
+        both copies).
 
         ``committed_ledger``: for a stream-owned ``(__batch, __writer)``
         table, compact only the partitions COMMITTED in that ledger —
@@ -490,55 +521,22 @@ class Catalog:
         from .zonemap import read_pruned
 
         part_cols = self.partition_columns(table)
-        n = partitions or self.spark.sparkContext.defaultParallelism
-        min_files = max(2, int(min_files))
-        if part_cols:
-            files = list_parquet_files(self.path(table))
-            if committed_ledger is not None and part_cols[:2] == [
-                    "__batch", "__writer"]:
-                from .skipping import committed_files
+        files = list_parquet_files(self.path(table))
+        if committed_ledger is not None and part_cols[:2] == ["__batch", "__writer"]:
+            from .skipping import committed_files
 
-                files = committed_files(self, table, committed_ledger)
-            by_part: dict[str, list[str]] = {}
-            for f in files:
-                by_part.setdefault(os.path.dirname(f), []).append(f)
-            crowded = [f for fs in by_part.values()
-                       if len(fs) >= min_files for f in fs]
-            if not crowded:
-                return  # nothing to heal — zero jobs
-            df = read_pruned(self.spark, self.path(table), crowded)
-            df = df.localCheckpoint(eager=True)
-            # PIN dynamic mode around the write rather than trusting
-            # the session conf: under 'static' this overwrite would
-            # delete EVERY partition and rewrite only the crowded ones
-            # (r7 review). Only the crowded partitions present in the
-            # frame are replaced; everything else untouched.
-            prev = self.spark.conf.get(
-                "spark.sql.sources.partitionOverwriteMode")
-            self.spark.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", "dynamic")
-            try:
-                (df.repartition(n, *part_cols).write.mode("overwrite")
-                 .partitionBy(*part_cols).parquet(self.path(table)))
-            finally:
-                self.spark.conf.set(
-                    "spark.sql.sources.partitionOverwriteMode", prev)
-            self.refresh_skipping(table)
-            return
-        if len(list_parquet_files(self.path(table))) < min_files:
-            return
-        df = self.read(table)
-        df = df.localCheckpoint(eager=True)
-        prev = self.spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-        # static: the whole (flat) table is being rewritten
-        self.spark.conf.set("spark.sql.sources.partitionOverwriteMode",
-                            "static")
-        try:
-            (df.coalesce(max(1, n // 8)).write.mode("overwrite")
-             .parquet(self.path(table)))
-        finally:
-            self.spark.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", prev)
+            files = committed_files(self, table, committed_ledger)
+        by_dir: dict[str, list[str]] = {}
+        for f in files:
+            by_dir.setdefault(os.path.dirname(f), []).append(f)
+        min_files = max(2, int(min_files))
+        crowded = [f for fs in by_dir.values() if len(fs) >= min_files for f in fs]
+        if not crowded:
+            return  # nothing to heal — zero jobs
+        n = partitions or self.spark.sparkContext.defaultParallelism
+        df = read_pruned(self.spark, self.path(table), crowded)
+        df = df.repartition(n, *part_cols) if part_cols else df.coalesce(max(1, n // 8))
+        self._write_frame(df, table, part_cols, replace=True)
         self.refresh_skipping(table)
 
     def optimize(self, table: str, *, ledger: str | None = None,
@@ -566,9 +564,9 @@ class Catalog:
           therefore cannot commit a batch whose partition maintenance
           may have rewritten. Restart the stream after maintenance (it
           re-acquires on start).
-        - compaction touches only COMMITTED partitions (dynamic
-          overwrite — see :meth:`compact` ``committed_ledger``), never
-          an in-flight writer's pre-commit partition.
+        - compaction touches only COMMITTED partitions (see
+          :meth:`compact` ``committed_ledger``), never an in-flight
+          writer's pre-commit partition.
         - ``grace_seconds``: additionally skip vacuuming uncommitted
           partitions newer than this many seconds — the ONLY
           protection for writers that take no lease (writer id

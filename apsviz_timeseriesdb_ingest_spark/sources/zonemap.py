@@ -84,7 +84,7 @@ def list_parquet_files(path: str) -> list[str]:
     """The data files under a parquet table path, as Spark's file index
     lists them (driver-side listing — file METADATA, cheap at any corpus
     size): nested partition dirs included; hidden files and directories
-    (``_SUCCESS``, checksums, a killed write's ``_temporary/``, a merge
+    (``_SUCCESS``, checksums, a killed write's ``_temporary/``, a write
     stage) excluded."""
     out: list[str] = []
     if os.path.isfile(path):

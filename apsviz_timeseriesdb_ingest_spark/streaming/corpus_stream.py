@@ -187,7 +187,7 @@ def run_incremental_dedup_stream(spark, input_dir: str, catalog, *,
     :func:`apply_dedup_increment_txn` under the commit-ledger protocol,
     which closes the r2/r3 partial-index-append recall-loss window —
     index rows are invisible to probes until the batch's ledger row
-    lands, and a replay's dynamic partition overwrite replaces any
+    lands, and a replay's partitioned overwrite replaces any
     partial rows instead of colliding with them. See that function's
     docstring for the full crash matrix. The stream owns the index
     layout (``__batch``-partitioned); a pre-built index must be created
@@ -275,7 +275,7 @@ def apply_dedup_increment_txn(catalog, batch_df, batch_id: int, *,
        accepted set recomputes identically on replay instead of
        colliding with its own partial rows (the old recall-loss mode).
     3. Write accepted docs to the corpus as partition
-       ``(__batch, __writer)`` via DYNAMIC partition overwrite
+       ``(__batch, __writer)`` by a partitioned overwrite
        (anti-join against committed stored ids keeps re-sent doc ids
        out; materialized before the write so the plan never reads the
        path it is writing).
@@ -338,7 +338,8 @@ def apply_dedup_increment_txn(catalog, batch_df, batch_id: int, *,
         accepted = accepted.join(stored_ids, id_col, "left_anti"
                                  ).localCheckpoint(eager=True)
     bid = F.lit(int(batch_id)).cast("long")
-    # empty dynamic overwrites would poison a fresh table's schema
+    # an empty partitioned frame publishes nothing; the guards skip
+    # its write job
     if not accepted.isEmpty():
         catalog.overwrite(
             accepted.withColumn("__batch", bid)

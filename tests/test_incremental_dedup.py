@@ -217,8 +217,7 @@ def test_txn_rejects_flat_legacy_index(spark, catalog):
 
 def test_stream_index_rebuild_replaces_stale_batches(spark, catalog):
     """Rebuilding a stream-owned index over an existing one must fully
-    REPLACE it: the partitioned overwrite runs under the session-wide
-    dynamic partitionOverwriteMode, which only replaces partitions
+    REPLACE it: a partitioned overwrite only replaces partitions
     present in the new frame — without the pre-drop, a committed
     __batch=7 partition from the old generation survives the rebuild as
     phantom index rows that reject fresh docs (ADVICE r4, medium)."""

@@ -53,9 +53,7 @@ def test_pagerank_catalog_checkpoint_identical(spark, tmp_path):
     # decimal-summed update => bit-identical, not merely close
     assert base == via_tables
     # the durable state tables exist on shared storage
-    for t in ("pagerank_edges_0", "pagerank_nodes_0",
-              "pagerank_outdeg_0", "pagerank_ranks_0",
-              "pagerank_ranks_1"):
+    for t in ("pagerank_edges_0", "pagerank_ranks_0", "pagerank_ranks_1"):
         assert cat.exists(t), t
     assert os.listdir(cat.path("pagerank_ranks_0"))
 
@@ -185,17 +183,15 @@ def test_pagerank_resume_from_progress_table(spark, tmp_path):
 
 def test_pagerank_resume_round_trip(spark, tmp_path):
     """Resume reads the progress row, the edges slot and the ranks slot
-    only: with the nodes and outdeg slots gone, a run stopped after 1 of
-    3 passes still resumes to exactly the serial reference's ranks (the
-    shared decimal grid makes them bit-identical on this graph)."""
+    only: a run stopped after 1 of 3 passes resumes to exactly the
+    serial reference's ranks (the shared decimal grid makes them
+    bit-identical on this graph)."""
     from apsviz_timeseriesdb_ingest_spark.llm.graph import _pagerank_py, pagerank
 
     pairs = [("a", "b"), ("b", "c"), ("c", "a"), ("a", "c"), ("d", "a")]
     edges = spark.createDataFrame(pairs, "src string, dst string")
     cat = Catalog(spark, str(tmp_path / "wh"))
     pagerank(edges, iters=1, checkpoint_catalog=cat).collect()
-    cat.drop("pagerank_nodes_0")
-    cat.drop("pagerank_outdeg_0")
     resumed = {r.node: r.rank
                for r in pagerank(edges, iters=3, checkpoint_catalog=cat,
                                  resume=True).collect()}

@@ -9,7 +9,7 @@ the window between its data write and its ledger commit, after which
 the batch committed EMPTY. Now optimize() acquires the family's
 WriterLease (fencing the writer: its pre-commit lease re-check raises,
 the batch stays uncommitted and replays after restart), compaction
-rewrites COMMITTED partitions only via dynamic overwrite, and vacuum
+rewrites and replaces COMMITTED partitions only, and vacuum
 re-checks the exact (batch, writer) commit pair before each rmtree.
 """
 

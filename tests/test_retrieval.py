@@ -429,8 +429,8 @@ def test_bm25_txn_append_crash_replay(spark, sf_small, tmp_path):
 
 def test_bm25_rebuild_replaces_stale_partitions(spark, sf_small, tmp_path):
     """Rebuilding a BM25 index over an existing generation must fully
-    REPLACE it: the partitioned overwrites run under dynamic
-    partitionOverwriteMode, so without the pre-drop a committed
+    REPLACE it: a partitioned overwrite replaces only the partitions
+    present in the new frame, so without the pre-drop a committed
     __batch=5 partition (txn layout) or term_buckets absent from the
     smaller rebuild corpus (legacy layout) survive as phantom rows
     that double-count into scores (ADVICE r4, medium)."""

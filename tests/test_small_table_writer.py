@@ -88,6 +88,12 @@ def test_reads_back_as_spark_written(spark, tmp_path, table):
     fresh = Catalog(spark, catalog.warehouse)
     assert Counter(tuple(r.values()) for r in
                    fresh.arrow("spark_written", schema).to_pylist()) == want_declared
+    # and so does the Row copy a fresh catalog reads, with no Spark job
+    cold = Catalog(spark, catalog.warehouse)
+    before = _marker_jobs(spark, f"cold-rows-before-{table}")[-1]
+    got = cold.rows("spark_written", schema)
+    assert _marker_jobs(spark, f"cold-rows-after-{table}")[0] - before - 1 == 0
+    assert Counter(got) == want_declared
 
 
 def test_no_job_and_cached_copy_follows_writers(spark, tmp_path):
@@ -266,10 +272,11 @@ def test_merge_survives_crash_inside_publish(spark, tmp_path, monkeypatch):
 
 
 def test_crashed_merge_stage_stays_invisible(spark, tmp_path, monkeypatch):
-    """A merge killed before it published leaves its stage under the
-    warehouse. No reader lists it; the next merge removes it once it is
-    older than the vacuum grace window, and keeps a younger stage,
-    which may be a live merge's."""
+    """A merge killed before it published leaves its stages (the staged
+    batch and the staged result) under the warehouse. No reader lists
+    them; the next write removes each once it is older than the vacuum
+    grace window, and keeps a younger stage, which may be a live
+    write's."""
     import time
 
     want = _clean_gauge_data(spark, tmp_path)
@@ -281,27 +288,29 @@ def test_crashed_merge_stage_stays_invisible(spark, tmp_path, monkeypatch):
 
     with monkeypatch.context() as m:
         m.setattr(catalog_module, "_publish", killed)
-        # a killed process runs no cleanup: the stage stays
+        # a killed process runs no cleanup: the stages stay
         m.setattr(catalog_module.shutil, "rmtree", lambda *a, **k: None)
         with pytest.raises(RuntimeError, match="killed"):
             pipe.ingest_new()
-    stages = [e for e in os.listdir(catalog.warehouse) if e.startswith(".merge-")]
-    assert len(stages) == 1
-    assert list_parquet_files(os.path.join(catalog.warehouse, stages[0]))
-    assert not [f for f in list_parquet_files(catalog.warehouse) if ".merge-" in f]
+    stages = [e for e in os.listdir(catalog.warehouse) if e.startswith(".stage-")]
+    assert len(stages) == 2
+    for e in stages:
+        assert list_parquet_files(os.path.join(catalog.warehouse, e))
+    assert not [f for f in list_parquet_files(catalog.warehouse) if ".stage-" in f]
     assert Counter(catalog.read("gauge_data").collect()) == before
 
-    crashed = os.path.join(catalog.warehouse, stages[0])
     past = time.time() - catalog_module.VACUUM_GRACE_SECONDS - 60
-    for d, dirs, names in os.walk(crashed, topdown=False):
-        for nm in dirs + names:
-            os.utime(os.path.join(d, nm), (past, past))
-    os.utime(crashed, (past, past))
-    os.makedirs(os.path.join(catalog.warehouse, ".merge-live", "in"))
+    for e in stages:
+        crashed = os.path.join(catalog.warehouse, e)
+        for d, dirs, names in os.walk(crashed, topdown=False):
+            for nm in dirs + names:
+                os.utime(os.path.join(d, nm), (past, past))
+        os.utime(crashed, (past, past))
+    os.makedirs(os.path.join(catalog.warehouse, ".stage-live", "in"))
     assert pipe.ingest_new() == 1
     assert Counter(catalog.read("gauge_data").collect()) == want
-    assert [e for e in os.listdir(catalog.warehouse) if e.startswith(".merge-")] == \
-        [".merge-live"]
+    assert [e for e in os.listdir(catalog.warehouse) if e.startswith(".stage-")] == \
+        [".stage-live"]
 
 
 # -- compaction of append-only small tables -----------------------------------

@@ -179,7 +179,7 @@ def test_listing_skips_hidden_dirs_like_spark(spark, tmp_path):
     import pyarrow.parquet as pq
 
     root = tmp_path / "t"
-    for sub, v in (("_temporary/0", 0), (".merge-x", 1), ("__batch=1", 2)):
+    for sub, v in (("_temporary/0", 0), (".stage-x", 1), ("__batch=1", 2)):
         os.makedirs(root / sub)
         pq.write_table(pa.table({"v": [v]}), str(root / sub / f"part-{v}.parquet"))
     (root / "_SUCCESS").touch()
