@@ -5,7 +5,7 @@ Layout:
     session     -- tuned SparkSession builder (AQE, arrow, UTC)
     schemas     -- explicit StructTypes for every table (SURVEY.md section 1.3)
     functions/  -- scalar helpers (timemark parsing, portable hashing, overlaps)
-    operators/  -- engine operators (keep-latest dedup, crosstab pivot, ledger)
+    operators/  -- engine operators (keep-latest dedup, crosstab pivot, as-of join)
     sources/    -- harvest CSV readers + parquet table catalog
     plans/      -- end-to-end pipelines (bootstrap, obs ingest, model ingest,
                    read API)

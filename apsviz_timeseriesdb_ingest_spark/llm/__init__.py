@@ -1,4 +1,17 @@
-"""Large-scale training-data pipeline operators.
+"""Training-data operators; the ``suite/llmdata`` queries are built on them.
+
+    text        -- cleaning, filters, quality signals, decontamination
+    dedup       -- exact, MinHash-LSH and SimHash near-duplicate search
+    similarity  -- embeddings, exact top-k, k-means/IVF cells, ANN layout
+    multimodal  -- media features via Arrow-batched ``mapInPandas``
+    spans       -- sentence and paragraph spans, duplicate-span masking
+    lm          -- n-gram LMs, perplexity, DSIR selection
+    graph       -- PageRank
+    retrieval   -- BM25 top-k, rank fusion, contamination report
+    bpe, unigram -- subword tokenizer training and encoding
+    classifier  -- logistic-regression quality classifier
+    sketches    -- mergeable corpus sketches and drift rules
+    pipeline    -- the staged corpus-preparation pipeline and its reports
 
 All hot paths are JVM-side DataFrame expressions (higher-order functions,
 no row-at-a-time Python); the only Python execution is the Arrow-batched
@@ -94,10 +107,6 @@ from .multimodal import (  # noqa: F401
     sample_frames,
     with_binary_payload,
 )
-from .incremental import (  # noqa: F401
-    build_dedup_index,
-    dedup_increment,
-)
 from .pipeline import (  # noqa: F401
     data_card,
     export_training_shards,
@@ -117,17 +126,6 @@ from .bpe import (  # noqa: F401
     subword_vocabulary,
     train_bpe,
     word_pieces,
-)
-from .pq import (  # noqa: F401
-    pq_encode,
-    pq_reconstruction_error,
-    pq_topk,
-    train_pq,
-)
-from .ivfpq import (  # noqa: F401
-    build_ivfpq_index,
-    ivfpq_topk,
-    residuals,
 )
 from .lm import (  # noqa: F401
     dsir_grams,
@@ -151,10 +149,7 @@ from .unigram import (  # noqa: F401
     unigram_word_pieces,
 )
 from .retrieval import (  # noqa: F401
-    append_bm25_increment_txn,
     bm25_topk,
-    bm25_topk_from_index,
-    build_bm25_index,
     contamination_report,
     ranking_recall_at_k,
     rrf_fuse,

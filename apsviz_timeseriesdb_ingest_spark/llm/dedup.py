@@ -197,8 +197,7 @@ def minhash_tune(threshold: float, num_hashes: int = 16, *,
     estimate (collision odds there are exactly 1-(1-1/b)^b, i.e.
     0.63-0.75 — the start of the curve's steep rise).
     Driver-side arithmetic only — feed ``bands`` (and ``num_hashes``)
-    to :func:`minhash_band_buckets` / :func:`minhash_lsh_pairs` /
-    ``incremental.build_dedup_index``.
+    to :func:`minhash_band_buckets` / :func:`minhash_lsh_pairs`.
     """
     if not 0 < threshold < 1:
         raise ValueError("threshold must be in (0, 1)")
@@ -259,9 +258,8 @@ def minhash_band_buckets(df: DataFrame, *, text_col: str = "text",
                          fast: bool = False) -> DataFrame:
     """(doc, band, bucket) rows — the LSH index representation. Band
     bucket = md5 of the band's minhashes joined in seed order, computed
-    column-wise from the wide signature. This frame IS the persistent
-    ANN/dedup index shape (see ``llm.incremental``): equality on
-    (band, bucket) is the candidate test."""
+    column-wise from the wide signature. Equality on (band, bucket) is
+    the candidate test."""
     rows_per_band = num_hashes // bands
     sig = minhash_signatures(df, text_col=text_col, id_col=id_col, k=k,
                              num_hashes=num_hashes, fast=fast)
@@ -286,8 +284,7 @@ def lsh_pairs_from_buckets(buckets: DataFrame, *,
     ONE shuffle on (band, bucket), pairs generated map-side from each
     bucket's bigint doc list (the same shape as
     :func:`ngram_jaccard_pairs`' inverted index). Split out so callers
-    that already hold (or persist) the bucket frame — the incremental
-    index path in :mod:`llm.incremental` — skip re-shingling.
+    that already hold the bucket frame skip re-shingling.
 
     ``max_bucket_size`` is the hot-bucket guard: a spam cluster of D
     near-identical docs lands in one (band, bucket) and would emit
@@ -340,14 +337,13 @@ def cross_corpus_neardup(corpus: DataFrame, reference: DataFrame, *,
     """Flag corpus documents that NEAR-duplicate any document of a
     separate ``reference`` corpus — the fuzzy counterpart of
     :func:`llm.text.decontaminate` (which needs one exact shared
-    shingle) and the frame-vs-frame form of the persisted-index
-    increment probe (``llm.incremental.plan_increment``): dedup an eval
-    set against the training set, or a new crawl against last month's,
-    without building an index first. ``checkpoint_catalog`` makes the
-    materialized intermediates (band buckets, candidate pairs,
-    candidate shingles) durable ``{checkpoint_prefix}_*`` Catalog
-    tables instead of executor-local localCheckpoint blocks
-    (``operators.itercheckpoint`` contract — survives executor loss).
+    shingle): dedup an eval set against the training set, or a new
+    crawl against last month's, without building an index first.
+    ``checkpoint_catalog`` makes the materialized intermediates (band
+    buckets, candidate pairs, candidate shingles) durable
+    ``{checkpoint_prefix}_*`` Catalog tables instead of executor-local
+    localCheckpoint blocks (``operators.itercheckpoint`` contract —
+    survives executor loss).
 
     Returns ``(id, neardup_of_reference, best_jaccard)`` for EVERY
     corpus doc. Shape: MinHash band buckets on both sides → cross-side

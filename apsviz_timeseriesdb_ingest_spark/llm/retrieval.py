@@ -154,32 +154,10 @@ def bm25_topk(docs: DataFrame, queries: DataFrame, *, top_k: int = 10,
     tf = (base.select("doc", "dl", F.explode("__tk").alias("term"))
           .groupBy("doc", "dl", "term").agg(F.count("*").alias("tf")))
     dfreq = tf.groupBy("term").agg(F.count("*").alias("df"))
-    qterms = _query_terms(queries, query_id_col, query_text_col)
-    return _rank_bm25(tf, dfreq, qterms, n_docs=n_docs, avgdl=avgdl,
-                      stats=stats,
-                      k1=k1, b=b, min_idf=min_idf, top_k=top_k,
-                      query_id_col=query_id_col, id_col=id_col)
-
-
-def _query_terms(queries: DataFrame, query_id_col: str,
-                 query_text_col: str) -> DataFrame:
-    return (queries
-            .select(F.col(query_id_col).alias("q"),
-                    F.explode(F.array_distinct(tokens(query_text_col)))
-                    .alias("term")))
-
-
-def _rank_bm25(tf: DataFrame, dfreq: DataFrame, qterms: DataFrame, *,
-               n_docs: int | None, avgdl: float | None, k1: float,
-               b: float, min_idf: float | None, top_k: int,
-               query_id_col: str, id_col: str,
-               stats: DataFrame | None = None) -> DataFrame:
-    """Shared BM25 scoring tail over a ``(doc, dl, term, tf)`` frame —
-    the direct and the persisted-index paths both end here, so probe
-    scores are bit-identical to a from-scratch run by construction.
-    ``stats`` (a 1-row ``(__n, __avgdl)`` frame) is the lazy form of
-    the two corpus scalars: broadcast-joined onto the vocabulary-sized
-    ``dfreq``, same doubles as the literal path (r11)."""
+    qterms = (queries
+              .select(F.col(query_id_col).alias("q"),
+                      F.explode(F.array_distinct(tokens(query_text_col)))
+                      .alias("term")))
     if stats is not None:
         dfreq = dfreq.crossJoin(F.broadcast(stats))
         n_col, avgdl_col = F.col("__n"), F.col("__avgdl")
@@ -207,235 +185,15 @@ def _rank_bm25(tf: DataFrame, dfreq: DataFrame, qterms: DataFrame, *,
                     F.col("doc").alias(id_col), "bm25", "rnk"))
 
 
-#: number of term-hash directories the persisted index is partitioned
-#: into: probes prune the tf/df scans to the query terms' buckets
-_BM25_TERM_BUCKETS = 64
-
-
-def _term_bucket() -> F.Column:
-    from ..functions.portable_hash import md5_hash64
-
-    # fast (xxhash64) is fine: the bucket is engine-internal layout,
-    # never oracle-compared
-    return F.pmod(md5_hash64(F.col("term"), fast=True),
-                  F.lit(_BM25_TERM_BUCKETS)).cast("int")
-
-
-def build_bm25_index(catalog, docs: DataFrame, *, table: str = "bm25",
-                     text_col: str = "text", id_col: str = "doc_id",
-                     append: bool = False, txn: bool = False) -> None:
-    """Persist the BM25 corpus statistics so queries never re-tokenize
-    the corpus — the build-once/probe-many seam, same pattern as the
-    MinHash dedup index and the partitioned ANN layout.
-
-    Three tables, all LOG-STRUCTURED so ``append=True`` is a plain
-    parquet append of the increment's own counts (no read-modify-write
-    of corpus-sized state):
-
-    - ``{table}_tf``: (doc, dl, term, tf), partitioned by a 64-way term
-      hash bucket — probes prune the scan to the query terms' buckets;
-    - ``{table}_df``: per-batch (term, df) rows; true document
-      frequency = SUM per term at probe time (vocabulary-sized);
-    - ``{table}_stats``: per-batch (n_docs, total_tokens) rows; summed
-      at probe time for N and avgdl (exact integers).
-
-    Replaying a batch double-counts it — gate appends behind a ledger
-    anti-join (``operators/ledger``) exactly as the ingest pipelines
-    do, or use :func:`append_bm25_increment_txn`, which carries its own
-    commit ledger AND closes the multi-table partial-append window
-    (this legacy path commits tf/df/stats as THREE separate writes — a
-    crash between them leaves the tables mutually inconsistent until
-    the batch is replayed). ``txn=True`` writes the txn-ready layout
-    (rows carry ``__batch = -1`` / ``__writer = "-"``, the
-    ``{table}_commits`` put-if-absent ledger seeds batch -1) so
-    increments can use the crash-safe, writer-exclusive path — the
-    ``build_dedup_index(stream_index=True)`` twin.
-    """
-    tf, dfreq, stats = _bm25_counts(docs, text_col, id_col)
-    if txn and append:
-        raise ValueError("txn=True rebuilds the layout; use "
-                         "append_bm25_increment_txn for increments")
-    if append:
-        catalog.append(tf, f"{table}_tf", partition_by=["term_bucket"])
-        catalog.append(dfreq, f"{table}_df", partition_by=["term_bucket"])
-        catalog.append(stats, f"{table}_stats")
-        return
-    # A rebuild must fully REPLACE the index: a partitioned overwrite
-    # replaces only the frame's partitions, so it would leave stale __batch /
-    # term_bucket partitions and phantom rows in probes (ADVICE r4) —
-    # but dropping the generation BEFORE the rebuild job left a window
-    # where any failure destroyed the index entirely (ADVICE r5). The
-    # staged rebuild writes the new generation to __staging names and
-    # swaps after the job succeeds; a flat rebuild stages no commits
-    # ledger, so publish retires a previous txn generation's ledger.
-    names = [f"{table}{t}"
-             for t in ("_tf", "_df", "_stats", "_commits", "_writer")]
-    with catalog.staged_rebuild(*names) as stage:
-        if txn:
-            bid = F.lit(-1).cast("long")
-            wid = F.lit("-")
-            catalog.overwrite(
-                tf.withColumn("__batch", bid).withColumn("__writer", wid),
-                stage(f"{table}_tf"),
-                partition_by=["__batch", "__writer", "term_bucket"])
-            catalog.overwrite(
-                dfreq.withColumn("__batch", bid).withColumn("__writer", wid),
-                stage(f"{table}_df"),
-                partition_by=["__batch", "__writer", "term_bucket"])
-            catalog.overwrite(
-                stats.withColumn("__batch", bid).withColumn("__writer", wid),
-                stage(f"{table}_stats"),
-                partition_by=["__batch", "__writer"])
-            catalog.commit_batch(stage(f"{table}_commits"), -1, "-")
-        else:
-            catalog.overwrite(tf, stage(f"{table}_tf"),
-                              partition_by=["term_bucket"])
-            catalog.overwrite(dfreq, stage(f"{table}_df"),
-                              partition_by=["term_bucket"])
-            catalog.overwrite(stats, stage(f"{table}_stats"))
-
-
-def _bm25_counts(docs: DataFrame, text_col: str, id_col: str):
-    """The index's three count frames (shared by the legacy and txn
-    write paths)."""
-    par = docs.sparkSession.sparkContext.defaultParallelism
-    base = (docs.repartition(par, id_col)
-            .select(F.col(id_col).alias("doc"), tokens(text_col).alias("__tk"))
-            .select("doc", "__tk", F.size("__tk").alias("dl")))
-    tf = (base.select("doc", "dl", F.explode("__tk").alias("term"))
-          .groupBy("doc", "dl", "term").agg(F.count("*").alias("tf"))
-          .withColumn("term_bucket", _term_bucket()))
-    dfreq = (tf.groupBy("term").agg(F.count("*").alias("df"))
-             .withColumn("term_bucket", _term_bucket()))
-    stats = base.agg(F.count("*").alias("n_docs"),
-                     F.coalesce(F.sum("dl"), F.lit(0)).alias("total_tokens"))
-    return tf, dfreq, stats
-
-
-def append_bm25_increment_txn(catalog, docs: DataFrame, batch_id: int, *,
-                              table: str = "bm25", text_col: str = "text",
-                              id_col: str = "doc_id", lease=None) -> None:
-    """Append one corpus increment to a ``txn=True`` BM25 index under
-    the EXCLUSIVE COMMIT-LEDGER protocol (the
-    ``streaming.corpus_stream.apply_dedup_increment_txn`` pattern,
-    applied to the lexical index):
-
-    1. ``batch_id`` already committed in ``{table}_commits`` (a
-       driver-side file check) → fully applied, return (replay no-op).
-    2. Write the increment's tf/df/stats rows as
-       ``(__batch=batch_id, __writer)`` partitions by a partitioned
-       overwrite — a replay REPLACES a crashed attempt's
-       partial partitions across all three tables, and a racing
-       writer's rows land in its OWN partition.
-    3. ``Catalog.commit_batch`` — the atomic, exclusive commit point
-       (hard-link put-if-absent). Probes
-       (:func:`bm25_topk_from_index`) read committed (batch, writer)
-       pairs only, so a crash ANYWHERE before (3) leaves the index
-       observably unchanged — no torn tf-without-df state, no double
-       counts — and at most one writer ever commits a given batch.
-
-    ``lease=`` (a :class:`~..sources.catalog.WriterLease`) is the
-    fast-fail layer: checked after the replay short-circuit, so a
-    fenced writer raises before burning compute; its id becomes the
-    ``__writer`` partition value (``"-"`` without a lease). A writer
-    that slips past the fence loses at (3) and its orphan partitions
-    stay invisible (``Catalog.vacuum_uncommitted`` reclaims them).
-    """
-    commits = f"{table}_commits"
-    if catalog.batch_committed(commits, int(batch_id)):
-        return
-    if lease is not None:
-        lease.check()
-    writer = lease.writer_id if lease is not None else "-"
-    if (catalog.exists(f"{table}_tf")
-            and not {"__batch", "__writer"}.issubset(
-                catalog.read(f"{table}_tf").columns)):
-        raise ValueError(
-            f"BM25 index '{table}' has a legacy layout — rebuild "
-            "with build_bm25_index(txn=True) before transactional appends")
-    if not docs.isEmpty():
-        tf, dfreq, stats = _bm25_counts(docs, text_col, id_col)
-        bid = F.lit(int(batch_id)).cast("long")
-        wid = F.lit(writer)
-        catalog.overwrite(
-            tf.withColumn("__batch", bid).withColumn("__writer", wid),
-            f"{table}_tf",
-            partition_by=["__batch", "__writer", "term_bucket"])
-        catalog.overwrite(
-            dfreq.withColumn("__batch", bid).withColumn("__writer", wid),
-            f"{table}_df",
-            partition_by=["__batch", "__writer", "term_bucket"])
-        catalog.overwrite(
-            stats.withColumn("__batch", bid).withColumn("__writer", wid),
-            f"{table}_stats", partition_by=["__batch", "__writer"])
-    # the commit point re-checks the lease around the put-if-absent
-    # link (rollback if fenced mid-link): a writer fenced mid-batch by
-    # maintenance cannot commit partitions that may have been vacuumed
-    catalog.commit_batch(commits, int(batch_id), writer, lease=lease)
-
-
-def bm25_topk_from_index(catalog, queries: DataFrame, *,
-                         table: str = "bm25", top_k: int = 10,
-                         k1: float = 1.2, b: float = 0.75,
-                         min_idf: float | None = None,
-                         id_col: str = "doc_id",
-                         query_id_col: str = "query_id",
-                         query_text_col: str = "text") -> DataFrame:
-    """Score a query batch against a :func:`build_bm25_index` corpus.
-
-    The query terms' hash buckets become a LITERAL partition filter on
-    the tf/df tables (the IVF-probe trick), so the scan touches ~|query
-    vocabulary|/64 of the index regardless of corpus size; scoring then
-    runs the exact same tail as :func:`bm25_topk`. The driver holds
-    only the distinct query terms (queries are small by contract — the
-    same bound as the broadcast in the direct path).
-    """
-    qterms = _query_terms(queries, query_id_col, query_text_col)
-    qterms = qterms.localCheckpoint(eager=True)  # tiny; scanned thrice
-    buckets = sorted({r[0] for r in
-                      qterms.select(_term_bucket()).distinct().collect()})
-
-    # txn layout: read COMMITTED (batch, writer) pairs only, so a
-    # crashed partial append (append_bm25_increment_txn) or a fenced
-    # writer's orphan partition is invisible to probes
-    committed = (catalog.committed_frame(f"{table}_commits")
-                 if catalog.exists(f"{table}_commits") else None)
-
-    def _committed(df_):
-        if committed is not None and "__batch" in df_.columns:
-            return df_.join(F.broadcast(committed),
-                            ["__batch", "__writer"], "left_semi")
-        return df_
-
-    stats = (_committed(catalog.read(f"{table}_stats"))
-             .agg(F.sum("n_docs").alias("n"),
-                  F.sum("total_tokens").alias("t")).collect()[0])
-    n_docs = stats["n"] or 0
-    if not n_docs:
-        qt = queries.schema[query_id_col].dataType.simpleString()
-        dt = catalog.read(f"{table}_tf").schema["doc"].dataType.simpleString()
-        return (queries.sparkSession.createDataFrame(
-            [], f"{query_id_col} {qt}, {id_col} {dt}, bm25 double, rnk int"))
-    avgdl = stats["t"] / n_docs
-    tf = (_committed(catalog.read(f"{table}_tf"))
-          .filter(F.col("term_bucket").isin(buckets)))
-    dfreq = (_committed(catalog.read(f"{table}_df"))
-             .filter(F.col("term_bucket").isin(buckets))
-             .groupBy("term").agg(F.sum("df").alias("df")))
-    return _rank_bm25(tf, dfreq, qterms, n_docs=n_docs, avgdl=avgdl,
-                      k1=k1, b=b, min_idf=min_idf, top_k=top_k,
-                      query_id_col=query_id_col, id_col=id_col)
-
-
 def ranking_recall_at_k(got: DataFrame, truth: DataFrame, *, k: int,
                         query_id_col: str = "query_id",
                         id_col: str = "doc_id",
                         rank_col: str = "rnk") -> DataFrame:
     """Recall@k of a retrieved ranking against a ground-truth ranking,
-    computed distributed — the measurement the ANN/IVF/PQ tests do in
+    computed distributed — the measurement the ANN/IVF tests do in
     Python, as a product operator for index-quality monitoring at
-    corpus scale (e.g. ``ivfpq_topk`` vs ``brute_force_topk`` over a
-    probe query set, or an incremental index vs a fresh rebuild).
+    corpus scale (e.g. ``ivf_probe`` vs ``brute_force_topk`` over a
+    probe query set).
 
     Both inputs expose (query_id_col, id_col, rank_col); rows ranked
     beyond k are ignored on both sides. Returns per-query

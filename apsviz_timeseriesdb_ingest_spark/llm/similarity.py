@@ -35,7 +35,7 @@ def hash_embedding(df: DataFrame, *, dim: int = 64,
     text→vector operator — cosine over these vectors approximates
     token-multiset cosine (near-duplicate texts score high), so it
     feeds the whole ANN stack (``hyperplane_lsh_bucket``,
-    ``train_kmeans``/``ivf_probe``, PQ, ``embedding_neardup_pairs``)
+    ``train_kmeans``/``ivf_probe``, ``embedding_neardup_pairs``)
     without any model artifact or external library.
 
     Shape: explode tokens → one (doc, bucket) aggregate → per-doc dense
@@ -607,9 +607,9 @@ def probe_cells_expr(centroids: list[list[float]], vec: Column,
     """``nprobe`` nearest centroid ids as a MAP-SIDE array expression
     (cosine, smallest-id tie-break) — the per-ROW twin of
     :func:`probe_cells_for` (which is driver-side for literal partition
-    filters). Used where every incoming row needs its own probe list,
-    e.g. streaming incremental embedding dedup: sort the
-    struct(sim, -cid) array descending, slice nprobe, extract ids."""
+    filters). Used where every incoming row needs its own probe list:
+    sort the struct(sim, -cid) array descending, slice nprobe, extract
+    ids."""
     import math
 
     entries = []
@@ -1405,9 +1405,7 @@ def check_or_record_ann_layout(catalog, spark, table: str, *, k: int,
     G/k silently pruned the WRONG ``cell_group`` directories — reduced
     recall with no error — and toggling grouping on an existing
     per-cell table failed with a generic missing-column
-    AnalysisException). Same shape as the MinHash index's
-    ``check_or_record_params`` (llm/incremental.py), which exists for
-    the same silent-geometry-drift reason. ``partition_groups=None``
+    AnalysisException). ``partition_groups=None``
     (per-cell layout) is recorded as 0."""
     meta = f"{table}_layout"
     params = {"k": int(k), "partition_groups": int(partition_groups or 0)}
@@ -1995,7 +1993,7 @@ def train_kmeans_table(vectors: DataFrame, *, id_col: str = "vec_id",
     (``probe_all=True``) results are identical either way.
 
     **Durable resume** (the repo's iterative-state contract —
-    ``operators.itercheckpoint``, same shape as BPE/unigram/PageRank):
+    ``operators.itercheckpoint``, same shape as PageRank):
     with ``checkpoint_catalog=`` the per-iteration lineage cut writes
     alternating ``{prefix}_centroids_{0,1}`` Catalog tables plus a
     self-consistent one-row ``{prefix}_progress`` pointer (iteration,
@@ -2145,24 +2143,6 @@ def _probe_cells_via_index(spark, index, queries, nprobe: int) -> dict:
                       nprobe=nprobe)))
     return {int(r["query_id"]): [int(c) for c in r["__probes"]]
             for r in probed.select("query_id", "__probes").collect()}
-
-
-def _centroid_vec_lookup(spark, index, centroids, cells: list):
-    """Centroid VECTORS for the probed cells only — the residual-LUT
-    fetch that works without a driver-held k-sized list: the literal
-    list when given, else the index's own list (both driver-held
-    rungs keep one), else a bounded filtered collect of the probed
-    cells from the table rung's frame (≤|batch|·nprobe rows)."""
-    if centroids is not None:
-        return lambda c: centroids[c]
-    held = getattr(index, "centroids", None)
-    if held is not None:
-        return lambda c: held[c]
-    fetched = {int(r["__cid"]): [float(x) for x in r["__cvec"]]
-               for r in index.frame(spark)
-               .filter(F.col("__cid").isin([int(c) for c in cells]))
-               .select("__cid", "__cvec").collect()}
-    return lambda c: fetched[c]
 
 
 def ivf_probe(corpus: DataFrame, queries: list[tuple[int, list[float]]],

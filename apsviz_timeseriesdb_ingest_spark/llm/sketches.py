@@ -1,7 +1,7 @@
 """Mergeable corpus sketches (Apache DataSketches HLL via Spark's
 ``hll_sketch_agg`` family — public, built into Spark 3.5+/4).
 
-The incremental-monitoring companion to the persisted indexes: corpus
+Incremental corpus monitoring: corpus
 statistics that need DISTINCT counts (vocabulary size, distinct-content
 count → exact-dup rate) normally cost a corpus-wide shuffle per
 measurement. A sketch row is computed ONCE per increment (one pass,

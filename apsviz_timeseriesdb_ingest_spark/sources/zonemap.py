@@ -157,7 +157,7 @@ def refresh_zonemap(catalog, path: str, *, table: str) -> int | None:
     ``path``, over the columns it already covers: rows of files no
     longer on disk are retired, only files absent from it get footer
     stats, and ONE overwrite from driver rows (none when nothing
-    changed) follows appends AND compactions. The old rows come from
+    changed) follows appends AND rewrites. The old rows come from
     the catalog's driver-side copy (``Catalog.rows``: no job when this
     process wrote it last). Returns the file count covered; None when
     the table has no rows to name its columns."""
@@ -184,10 +184,10 @@ def prune_files(zonemap: Sequence, column: str, lo=None, hi=None, *,
     never change results, only skip provably-irrelevant files.
 
     Pass ``path`` whenever the table may have CHANGED since the stats
-    build (appends, compaction, overwrite): files on disk but absent
+    build (appends, merges, overwrites): files on disk but absent
     from the stats table are kept unconditionally — a stale zone map
     must degrade to reading more, never to dropping unseen data — and
-    stats rows for files no longer on disk are dropped (compaction
+    stats rows for files no longer on disk are dropped (a rewrite
     replaced them; keeping them would make the read fail)."""
     lo_r, hi_r = _render(lo), _render(hi)
     rows = [r for r in zonemap if r.column == column]

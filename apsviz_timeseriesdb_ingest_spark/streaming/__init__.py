@@ -1,10 +1,1 @@
 from .stream_ingest import StreamingObsIngest  # noqa: F401
-from .corpus_stream import (  # noqa: F401
-    apply_dedup_increment_txn,
-    benchmark_shingles,
-    committed_corpus,
-    contamination_flag,
-    run_corpus_stream,
-    run_incremental_dedup_stream,
-    stream_prepare_corpus,
-)

@@ -313,3 +313,19 @@ def test_ivf_probe_via_index_no_driver_centroid_list(spark, sf_small,
 
     with pytest.raises(ValueError, match="centroids= .* or"):
         ivf_probe(corpus, qrows, nprobe=3, top_k=5)
+
+
+def test_grouped_probe_missing_column_targeted_error(spark):
+    """ivf_probe(group_col=) on a per-cell table names the mismatch
+    (r8 ADVICE) instead of a generic missing-column AnalysisException."""
+    import pytest
+
+    from apsviz_timeseriesdb_ingest_spark.llm.similarity import ivf_probe
+
+    corpus = spark.createDataFrame(
+        [(1, [1.0, 0.0], 0), (2, [0.0, 1.0], 1)],
+        "vec_id long, embedding array<double>, centroid_id int")
+    cents = [[1.0, 0.0], [0.0, 1.0]]
+    with pytest.raises(ValueError, match="no 'cell_group' column"):
+        ivf_probe(corpus, [(9, [1.0, 0.1])], cents,
+                  group_col="cell_group", groups=2)

@@ -139,23 +139,6 @@ def test_bloom_table_matches_broadcast_and_exact(spark, tmp_path):
     assert {i for i, c in regot.items() if c} >= {1000 + i for i in range(5)}
 
 
-def test_stream_prep_bloom_matches_literal_path(spark):
-    from apsviz_timeseriesdb_ingest_spark.streaming.corpus_stream import (
-        benchmark_bloom,
-        benchmark_shingles,
-        stream_prepare_corpus,
-    )
-    from tests.test_corpus_stream import BENCH, CONTAM, EN
-
-    bench = spark.createDataFrame([(100, BENCH)], SCHEMA)
-    docs = spark.createDataFrame([(1, EN), (8, CONTAM)], SCHEMA)
-    via_literal = stream_prepare_corpus(docs, benchmark_shingles(bench))
-    via_bloom = stream_prepare_corpus(
-        docs, bench_bloom=benchmark_bloom(bench, num_bits=1 << 14))
-    assert ({r.doc_id for r in via_literal.collect()}
-            == {r.doc_id for r in via_bloom.collect()} == {1})
-
-
 def test_bloom_num_hashes_overflow_guard(spark):
     import pytest
 

@@ -8,7 +8,7 @@ Contract pinned here:
   (same fold order, tie-break, zero-norm convention);
 - default probing agrees with the exact argmin on clustered data;
 - the plan is constant-size in k, broadcast-join-backed, shuffle-free;
-- semantic_dedup / build_ivfpq_index / train_kmeans compose with it.
+- semantic_dedup / train_kmeans compose with it.
 """
 
 from __future__ import annotations
@@ -115,22 +115,6 @@ def test_semantic_dedup_with_index_matches_literal(spark):
     assert len(base) < corpus.count()  # the dups actually collapsed
 
 
-def test_ivfpq_build_with_index_matches_literal(spark):
-    from apsviz_timeseriesdb_ingest_spark.llm.ivfpq import build_ivfpq_index
-    from apsviz_timeseriesdb_ingest_spark.llm.pq import train_pq
-
-    df = _vectors(spark, n=120, dim=16, k_blobs=8)
-    cents = _centroids(spark, df, k=8)
-    books = train_pq(df, dim=16, m=4, codes=8, iters=3)
-    idx = CentroidIndex(cents, nprobe=10**6)
-    for residual in (False, True):
-        base = sorted(map(tuple, build_ivfpq_index(
-            df, cents, books, residual=residual).collect()))
-        via = sorted(map(tuple, build_ivfpq_index(
-            df, cents, books, residual=residual, index=idx).collect()))
-        assert via == base, f"residual={residual}"
-
-
 def test_train_kmeans_two_level_probe_all_matches_exact(spark):
     """Per-iteration two-level assignment with probe-everything is the
     exact literal assignment, so training converges identically."""
@@ -165,66 +149,6 @@ def test_probe_expr_indexed_probe_all_matches_literal(spark):
                idx, F.col("vec"), F.col("nrm"), nprobe=3).alias("p")))
     idx_probe = {r.vec_id: list(r.p) for r in via.collect()}
     assert idx_probe == lit_probe
-
-
-def test_embedding_stream_with_index(spark, tmp_path):
-    """run_incremental_embedding_stream(index=) keeps the exact batch
-    semantics of the literal path: cross-batch dup rejected via the
-    corpus probe, in-batch pair resolved, replay idempotent."""
-    from apsviz_timeseriesdb_ingest_spark.sources.catalog import Catalog
-    from apsviz_timeseriesdb_ingest_spark.streaming.corpus_stream import (
-        run_incremental_embedding_stream,
-    )
-
-    dim = 8
-    centroids = [[1.0 if i == a else 0.0 for i in range(dim)]
-                 for a in range(4)]
-    idx = CentroidIndex(centroids, nprobe=10**6)
-    src = str(tmp_path / "in")
-    catalog = Catalog(spark, str(tmp_path / "wh"))
-    SCH = "vec_id long, embedding array<float>"
-
-    def _write(rows):
-        spark.createDataFrame(rows, SCH).write.mode("append").parquet(src)
-
-    def _run(ck):
-        q = run_incremental_embedding_stream(
-            spark, src, catalog, centroids,
-            checkpoint_dir=str(tmp_path / ck),
-            threshold=0.95, nprobe=2, dim=dim, index=idx)
-        assert q.awaitTermination(120)
-        # ADVICE r7: the stream-lifetime index frame is unpersisted on
-        # query termination (listener keyed on query id) — no executor
-        # storage leak across restarts. Listener delivery is async.
-        import time
-        frame = q._graft_index_frame
-        assert frame is not None
-        for _ in range(200):
-            if not frame.storageLevel.useMemory:
-                break
-            time.sleep(0.1)
-        assert not frame.storageLevel.useMemory
-
-    def axis(a, scale=1.0):
-        # scalar multiples keep every sign-LSH bit identical (additive
-        # jitter on exact zeros flips bits at dot≈0 and breaks
-        # candidate generation — the original stream test's lesson)
-        return [scale if i == a else 0.0 for i in range(dim)]
-
-    _write([(1, axis(0)), (2, axis(1))])
-    _run("ck")
-    assert {r.vec_id for r in catalog.read("ann_corpus").collect()} == {1, 2}
-    # 12 duplicates 1 (cross-batch, corpus probe), 13/14 in-batch pair,
-    # 15 new
-    _write([(12, axis(0, 1.002)), (13, axis(2)),
-            (14, axis(2, 1.001)), (15, axis(3))])
-    _run("ck")
-    got = {r.vec_id for r in catalog.read("ann_corpus").collect()}
-    assert got == {1, 2, 13, 15}
-    # fresh-checkpoint replay: everything self-matches, corpus no-op
-    _run("ck2")
-    rows = catalog.read("ann_corpus").collect()
-    assert {r.vec_id for r in rows} == {1, 2, 13, 15} and len(rows) == 4
 
 
 def test_semantic_dedup_auto_one_verb(spark):

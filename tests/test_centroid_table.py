@@ -12,7 +12,7 @@ Contract pinned here:
 - every input row comes back exactly once at any nprobe;
 - the fine stage is a SHUFFLED join — the centroid table is never
   broadcast (that bound is the reason the rung exists);
-- semantic_dedup / build_ivfpq_index / train_kmeans /
+- semantic_dedup / train_kmeans /
   semantic_dedup_auto compose with it through the same ``index=`` /
   ladder-selection seams as the CentroidIndex.
 """
@@ -188,22 +188,6 @@ def test_semantic_dedup_with_table_matches_literal(spark):
     assert len(base) < corpus.count()
 
 
-def test_ivfpq_build_with_table_matches_literal(spark):
-    from apsviz_timeseriesdb_ingest_spark.llm.ivfpq import build_ivfpq_index
-    from apsviz_timeseriesdb_ingest_spark.llm.pq import train_pq
-
-    df = _vectors(spark, n=120, dim=16, k_blobs=8)
-    cents = _centroids(spark, df, k=8)
-    books = train_pq(df, dim=16, m=4, codes=8, iters=3)
-    tbl = CentroidTable(cents, nprobe=10**6)
-    for residual in (False, True):
-        base = sorted(map(tuple, build_ivfpq_index(
-            df, cents, books, residual=residual).collect()))
-        via = sorted(map(tuple, build_ivfpq_index(
-            df, cents, books, residual=residual, index=tbl).collect()))
-        assert via == base, f"residual={residual}"
-
-
 def test_train_kmeans_table_rung_probe_all_matches_exact(spark):
     """Per-iteration TABLE assignment with probe-everything is the exact
     literal assignment, so training converges to identical centroids
@@ -270,50 +254,6 @@ def test_probe_and_assign_matches_literal_probe(spark):
     assert got == lit
     assert all(cell == probes[0] for cell, probes in got.values())
     assert got[100] == (0, [0, 1, 2])  # the zero-norm row
-
-
-def test_embedding_stream_with_table(spark, tmp_path):
-    """run_incremental_embedding_stream(index=CentroidTable) keeps the
-    exact batch semantics of the broadcast-index path: cross-batch dup
-    rejected via the corpus probe, in-batch pair resolved, replay
-    idempotent — the ladder's last rung wired into streaming."""
-    from apsviz_timeseriesdb_ingest_spark.sources.catalog import Catalog
-    from apsviz_timeseriesdb_ingest_spark.streaming.corpus_stream import (
-        run_incremental_embedding_stream,
-    )
-
-    dim = 8
-    centroids = [[1.0 if i == a else 0.0 for i in range(dim)]
-                 for a in range(4)]
-    tbl = CentroidTable(centroids, nprobe=10**6)
-    src = str(tmp_path / "in")
-    catalog = Catalog(spark, str(tmp_path / "wh"))
-    SCH = "vec_id long, embedding array<float>"
-
-    def _write(rows):
-        spark.createDataFrame(rows, SCH).write.mode("append").parquet(src)
-
-    def _run(ck):
-        q = run_incremental_embedding_stream(
-            spark, src, catalog, centroids,
-            checkpoint_dir=str(tmp_path / ck),
-            threshold=0.95, nprobe=2, dim=dim, index=tbl)
-        assert q.awaitTermination(120)
-
-    def axis(a, scale=1.0):
-        return [scale if i == a else 0.0 for i in range(dim)]
-
-    _write([(1, axis(0)), (2, axis(1))])
-    _run("ck")
-    assert {r.vec_id for r in catalog.read("ann_corpus").collect()} == {1, 2}
-    _write([(12, axis(0, 1.002)), (13, axis(2)),
-            (14, axis(2, 1.001)), (15, axis(3))])
-    _run("ck")
-    got = {r.vec_id for r in catalog.read("ann_corpus").collect()}
-    assert got == {1, 2, 13, 15}
-    _run("ck2")
-    rows = catalog.read("ann_corpus").collect()
-    assert {r.vec_id for r in rows} == {1, 2, 13, 15} and len(rows) == 4
 
 
 def test_hostile_vectors_match_literal(spark):
@@ -406,51 +346,3 @@ def test_auto_training_cost_is_sampled(spark):
     s = _training_sample(df, n=1200, k=2, id_col="vec_id", per_centroid=100)
     assert s is not df
     assert "pmod" in s._jdf.queryExecution().analyzed().toString()
-
-
-def test_embedding_stream_centroids_optional_with_index(spark, tmp_path):
-    """r10 (r9 ADVICE): with index= given, centroids may be None — k
-    and dim derive from index.k/index.dim, so a table-resident
-    from_frame caller never materializes the k x dim list. Missing
-    both is a loud error."""
-    import pytest
-
-    from apsviz_timeseriesdb_ingest_spark.sources.catalog import Catalog
-    from apsviz_timeseriesdb_ingest_spark.streaming.corpus_stream import (
-        run_incremental_embedding_stream,
-    )
-
-    dim = 8
-    centroids = [[1.0 if i == a else 0.0 for i in range(dim)]
-                 for a in range(4)]
-    tbl = CentroidTable(centroids, nprobe=10**6)
-    src = str(tmp_path / "in")
-    catalog = Catalog(spark, str(tmp_path / "wh"))
-    SCH = "vec_id long, embedding array<float>"
-
-    def axis(a, scale=1.0):
-        return [scale if i == a else 0.0 for i in range(dim)]
-
-    spark.createDataFrame([(1, axis(0)), (2, axis(1))], SCH) \
-        .write.mode("append").parquet(src)
-    q = run_incremental_embedding_stream(
-        spark, src, catalog,
-        checkpoint_dir=str(tmp_path / "ck"),
-        threshold=0.95, nprobe=2, index=tbl)
-    assert q.awaitTermination(120)
-    # dup of 1 rejected cross-batch, fresh 13 accepted — semantics
-    # identical to the centroids-list call
-    spark.createDataFrame([(12, axis(0, 1.002)), (13, axis(2))], SCH) \
-        .write.mode("append").parquet(src)
-    q = run_incremental_embedding_stream(
-        spark, src, catalog,
-        checkpoint_dir=str(tmp_path / "ck"),
-        threshold=0.95, nprobe=2, index=tbl)
-    assert q.awaitTermination(120)
-    assert {r.vec_id for r in catalog.read("ann_corpus").collect()} \
-        == {1, 2, 13}
-
-    with pytest.raises(ValueError, match="centroids"):
-        run_incremental_embedding_stream(
-            spark, src, catalog,
-            checkpoint_dir=str(tmp_path / "ck3"))

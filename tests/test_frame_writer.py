@@ -2,9 +2,8 @@
 whole and then published, so building a catalog leaves the session's
 overwrite mode alone, a partitioned overwrite replaces only the
 partitions its frame holds, a failed write job leaves the table as it
-was, a crash inside ``compact``'s publish loses no row, and empty frames
-replace an unpartitioned table with its schema and change nothing
-else."""
+was, and empty frames replace an unpartitioned table with its schema
+and change nothing else."""
 
 from __future__ import annotations
 
@@ -14,11 +13,8 @@ from collections import Counter
 import pytest
 from pyspark.sql import functions as F
 
-from apsviz_timeseriesdb_ingest_spark.sources import catalog as catalog_module
 from apsviz_timeseriesdb_ingest_spark.sources.catalog import Catalog
 from apsviz_timeseriesdb_ingest_spark.sources.zonemap import list_parquet_files
-
-from .test_small_table_writer import _crashing_publish
 
 MODE = "spark.sql.sources.partitionOverwriteMode"
 SCHEMA = "id long, v string, __batch long, __writer string"
@@ -77,35 +73,6 @@ def test_failed_overwrite_keeps_the_table(spark, tmp_path):
         assert Counter(tuple(r) for r in catalog.read(table, SCHEMA).collect()) == \
             Counter(rows), table
     assert _contents(catalog.path("flat")) == flat_files
-    assert not _stages(catalog)
-
-
-def test_compact_survives_crash_inside_publish(spark, tmp_path, monkeypatch):
-    """A crash after ``compact`` published a partition's new file but
-    before it unlinked the old ones loses no row; the rerun leaves one
-    file in each crowded partition."""
-    catalog = Catalog(spark, str(tmp_path / "wh"))
-    parts = ["__batch", "__writer"]
-    for k in range(3):
-        catalog.append(_frame(spark, [(10 * k + i, "v", i % 2, "-") for i in range(4)]),
-                       "t", partition_by=parts)
-    before = Counter(catalog.read("t", SCHEMA).collect())
-    assert all(n >= 2 for n in Counter(
-        os.path.dirname(f) for f in list_parquet_files(catalog.path("t"))).values())
-
-    with monkeypatch.context() as m:
-        m.setattr(catalog_module, "_publish", _crashing_publish(catalog_module._publish))
-        with pytest.raises(RuntimeError, match="crash"):
-            catalog.compact("t")
-    crashed = Counter(catalog.read("t", SCHEMA).collect())
-    assert set(crashed) == set(before)
-    assert not before - crashed  # every row still there, some twice
-
-    catalog.compact("t")
-    files = list_parquet_files(catalog.path("t"))
-    assert sorted(os.path.relpath(os.path.dirname(f), catalog.path("t")) for f in files) == [
-        "__batch=0/__writer=-", "__batch=1/__writer=-"]
-    assert set(catalog.read("t", SCHEMA).collect()) == set(before)
     assert not _stages(catalog)
 
 

@@ -564,3 +564,63 @@ def test_semantic_k_scales_cluster_count():
     assert semantic_k(20_000) == 40
     assert semantic_k(10_000_000) == 20_000
     assert semantic_k(10, target_cell=0) >= 4  # degenerate guard
+
+
+def test_bucket_frame_matches_pairs_contract(spark):
+    """lsh_pairs_from_buckets(minhash_band_buckets(df)) ==
+    minhash_lsh_pairs(df) — the seam for callers that already hold the
+    bucket frame."""
+    from apsviz_timeseriesdb_ingest_spark.llm.dedup import (
+        lsh_pairs_from_buckets,
+        minhash_band_buckets,
+    )
+    lsh = dict(k=2, num_hashes=8, bands=4)
+    df = spark.createDataFrame([
+        (1, "the quick brown fox jumps over the lazy dog tonight"),
+        (2, "pack my box with five dozen liquor jugs right now"),
+        (3, "sphinx of black quartz judge my vow before dawn"),
+        (11, "the quick brown fox jumps over the lazy dog tonight again"),
+        (12, "colorless green ideas sleep furiously every single night"),
+        (13, "colorless green ideas sleep furiously every single night indeed"),
+        (14, "a completely unrelated document about spark shuffle partitions"),
+    ], "doc_id long, text string")
+    via_buckets = {tuple(r) for r in lsh_pairs_from_buckets(
+        minhash_band_buckets(df, **lsh)).collect()}
+    direct = {tuple(r) for r in minhash_lsh_pairs(df, **lsh).collect()}
+    assert via_buckets == direct
+
+
+def test_stateless_text_ops_compose_on_streams(spark, tmp_path):
+    """chunk_documents / gopher_quality_stats / remove_repeated_lines
+    are pure map-side (plus a repartition) — they must run unchanged on
+    a streaming frame, and produce batch-identical rows."""
+    from apsviz_timeseriesdb_ingest_spark.llm.text import (
+        chunk_documents,
+        gopher_quality_stats,
+        remove_repeated_lines,
+    )
+
+    schema = "doc_id long, text string"
+    en = ("the cat sat on the mat and the dog is a friend of the cat "
+          "and they walk to the park every day to see the ducks swim")
+    en2 = ("a quick brown fox jumps over the lazy dog and the fox is "
+           "happy to run in the field all day with the other animals")
+    rows = [(1, en), (2, "dup line here okay\ndup line here okay\n" + en2)]
+    src = str(tmp_path / "in")
+    spark.createDataFrame(rows, schema).write.mode("append").parquet(src)
+    stream = spark.readStream.schema(schema).parquet(src)
+    batch = spark.createDataFrame(rows, schema)
+
+    for name, op in (
+            ("chunk", lambda d: chunk_documents(d, max_tokens=8, overlap=2)),
+            ("gopher", gopher_quality_stats),
+            ("lines", remove_repeated_lines)):
+        out = str(tmp_path / f"out_{name}")
+        q = (op(stream).writeStream.format("parquet")
+             .option("path", out)
+             .option("checkpointLocation", str(tmp_path / f"ck_{name}"))
+             .outputMode("append").trigger(availableNow=True).start())
+        assert q.awaitTermination(120), name
+        got = sorted(map(tuple, spark.read.parquet(out).collect()))
+        expect = sorted(map(tuple, op(batch).collect()))
+        assert got == expect, name

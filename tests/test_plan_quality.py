@@ -130,32 +130,6 @@ def test_x2_constant_schema(spark, sf_small):
     assert len(df.columns) == 6  # time_stamp + 5 explicit categories
 
 
-def test_pq_search_stays_jvm_side(spark, sf_small):
-    # the ADC scan + shortlist re-rank must be pure expressions over
-    # broadcast frames: no Python/Arrow stage, no row collect into the
-    # plan (ADC's query cross join is broadcast by construction)
-    from pyspark.sql import functions as F
-
-    from apsviz_timeseriesdb_ingest_spark.llm.pq import (
-        pq_encode, pq_topk, train_pq)
-    from apsviz_timeseriesdb_ingest_spark.testdata import load_table
-
-    vecs = load_table(spark, sf_small, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding"))
-    books = train_pq(vecs, dim=64, m=8, codes=16, iters=0)
-    queries = [(r.vec_id, list(r.embedding))
-               for r in vecs.filter(F.col("vec_id") < 2).collect()]
-    plan = _plan(pq_topk(pq_encode(vecs, books), books, queries,
-                         rerank=vecs, shortlist=10))
-    # the driver-built query frame legitimately shows as
-    # applySchemaToPythonRDD (a LocalTableScan source, rows already on
-    # the driver) — what must NOT appear is per-row Python execution
-    for stage in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas",
-                  "FlatMapGroupsInPandas"):
-        assert stage not in plan
-    assert "Broadcast" in plan
-
-
 def test_bm25_broadcast_queries_partial_agg(spark, sf_small):
     from apsviz_timeseriesdb_ingest_spark.llm.retrieval import bm25_topk
     from apsviz_timeseriesdb_ingest_spark.testdata import load_table

@@ -34,10 +34,7 @@ from apsviz_timeseriesdb_ingest_spark.schemas import (
 from apsviz_timeseriesdb_ingest_spark.session import local_frame
 from apsviz_timeseriesdb_ingest_spark.sources.catalog import Catalog, time_bucket
 from apsviz_timeseriesdb_ingest_spark.sources.skipping import build_skipping, zm_table
-from apsviz_timeseriesdb_ingest_spark.sources.zonemap import (
-    ZONEMAP_SCHEMA,
-    list_parquet_files,
-)
+from apsviz_timeseriesdb_ingest_spark.sources.zonemap import ZONEMAP_SCHEMA
 
 NOWCAST_SOURCE = "nowcast.src"
 FORECAST, NOWCAST = "GFSFORECAST_G", "NOWCAST_G"
@@ -251,17 +248,14 @@ def test_cached_rows_follow_another_catalog(spark, tmp_path):
     assert [r["time_stamp"] for r in after] == [r["time_stamp"] for r in before]
     assert all(r["coastal_gauge_water_level"] is not None for r in after)
 
-    # after the merge's refresh and a compaction, the cached sidecar rows
+    # after the merge's refresh and an append, the cached sidecar rows
     # are the table's rows
     zm = zm_table("gauge_data")
     for cat in (other, catalog):
         assert set(cat.rows(zm, ZONEMAP_SCHEMA)) == set(cat.read(zm).collect())
-    # a second file in the month, outside the read's window, to compact
+    # a second file in the month, outside the read's window
     _append_facts(other, "gauge_data", _obs_rows(11, "water_level", 60, 1, shift=9.0),
                   GAUGE_DATA)
-    files = list_parquet_files(other.path("gauge_data"))
-    other.compact("gauge_data")
-    assert len(list_parquet_files(other.path("gauge_data"))) < len(files)
     for cat in (other, catalog):
         assert set(cat.rows(zm, ZONEMAP_SCHEMA)) == set(cat.read(zm).collect())
     assert x1() == after

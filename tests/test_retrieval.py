@@ -148,70 +148,6 @@ def test_bm25_precomputed_stats_and_string_id_schema(spark):
     assert dict(out.dtypes)["query_id"] == "string"
 
 
-def test_bm25_index_probe_matches_direct(spark, sf_small, tmp_path):
-    """The persisted-index probe ends in the same scoring tail as the
-    direct path — rows must be identical, and the pruned tf scan must
-    show a term_bucket partition filter."""
-    from apsviz_timeseriesdb_ingest_spark.llm.retrieval import (
-        bm25_topk_from_index,
-        build_bm25_index,
-    )
-    from apsviz_timeseriesdb_ingest_spark.sources.catalog import Catalog
-
-    docs = load_table(spark, sf_small, "documents")
-    sample = docs.orderBy("doc_id").limit(2).collect()
-    queries = spark.createDataFrame(
-        [(i, " ".join(r.text.lower().split()[:6]))
-         for i, r in enumerate(sample)], "query_id long, text string")
-
-    catalog = Catalog(spark, str(tmp_path / "wh"))
-    build_bm25_index(catalog, docs)
-    probe = bm25_topk_from_index(catalog, queries, top_k=7)
-    direct = bm25_topk(docs, queries, top_k=7)
-    got = sorted(map(tuple, probe.collect()))
-    exp = sorted(map(tuple, direct.collect()))
-    assert got == exp and got
-
-    import contextlib
-    import io
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        probe.explain("formatted")
-    plan = buf.getvalue()
-    assert "term_bucket" in plan and "PartitionFilters: [" in plan
-
-
-def test_bm25_index_incremental_append(spark, sf_small, tmp_path):
-    """Log-structured stats: building on half the corpus then appending
-    the other half probes identically to one full build (df/stats sum
-    per term; no read-modify-write)."""
-    from apsviz_timeseriesdb_ingest_spark.llm.retrieval import (
-        bm25_topk_from_index,
-        build_bm25_index,
-    )
-    from apsviz_timeseriesdb_ingest_spark.sources.catalog import Catalog
-    from pyspark.sql import functions as F
-
-    docs = load_table(spark, sf_small, "documents")
-    first = docs.filter(F.col("doc_id") % 2 == 0)
-    second = docs.filter(F.col("doc_id") % 2 == 1)
-    queries = spark.createDataFrame(
-        [(0, " ".join(docs.orderBy("doc_id").limit(1)
-                      .collect()[0].text.lower().split()[:6]))],
-        "query_id long, text string")
-
-    catalog = Catalog(spark, str(tmp_path / "inc"))
-    build_bm25_index(catalog, first)
-    build_bm25_index(catalog, second, append=True)
-    full = Catalog(spark, str(tmp_path / "full"))
-    build_bm25_index(full, docs)
-
-    got = sorted(map(tuple,
-                     bm25_topk_from_index(catalog, queries).collect()))
-    exp = sorted(map(tuple, bm25_topk_from_index(full, queries).collect()))
-    assert got == exp and got
-
-
 def test_rrf_fuse_matches_python_recompute(spark):
     from apsviz_timeseriesdb_ingest_spark.llm.retrieval import rrf_fuse
 
@@ -298,278 +234,3 @@ def test_ranking_recall_at_k(spark):
     rank = bm25_topk(docs, queries, top_k=5)
     perfect = ranking_recall_at_k(rank, rank, k=5).collect()
     assert all(r.recall == 1.0 for r in perfect) and perfect
-
-
-def test_bm25_index_ledger_gated_append_idempotent(spark, tmp_path):
-    """The documented append discipline, executably: batch appends to
-    the BM25 index gated by the ingest ledger anti-join — replaying an
-    already-indexed batch is a no-op, so probes stay correct under
-    at-least-once delivery."""
-    from pyspark.sql import functions as F
-
-    from apsviz_timeseriesdb_ingest_spark.llm.retrieval import (
-        bm25_topk_from_index,
-        build_bm25_index,
-    )
-    from apsviz_timeseriesdb_ingest_spark.operators.ledger import (
-        new_files_anti_join,
-    )
-    from apsviz_timeseriesdb_ingest_spark.sources.catalog import Catalog
-
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents")
-    b1 = docs.filter(F.col("doc_id") % 2 == 0).withColumn(
-        "batch", F.lit("batch-1"))
-    b2 = docs.filter(F.col("doc_id") % 2 == 1).withColumn(
-        "batch", F.lit("batch-2"))
-    catalog = Catalog(spark, str(tmp_path / "wh"))
-    ledger_t = "bm25_ingest_ledger"
-
-    def ingest(batch):
-        ledger = (catalog.read(ledger_t, batch.select("batch").schema)
-                  if catalog.exists(ledger_t)
-                  else spark.createDataFrame([], "batch string"))
-        fresh = new_files_anti_join(batch, ledger, file_col="batch")
-        if fresh.take(1):
-            build_bm25_index(catalog, fresh.drop("batch"),
-                             append=catalog.exists("bm25_tf"))
-            catalog.append(fresh.select("batch").distinct(), ledger_t)
-
-    ingest(b1)
-    ingest(b2)
-    ingest(b1)  # replay: ledger-gated, must not double-count
-    ingest(b2)
-
-    queries = spark.createDataFrame(
-        [(0, " ".join(docs.orderBy("doc_id").limit(1)
-                      .collect()[0].text.lower().split()[:6]))],
-        "query_id long, text string")
-    got = sorted(map(tuple,
-                     bm25_topk_from_index(catalog, queries).collect()))
-    exp = sorted(map(tuple, bm25_topk(docs, queries).collect()))
-    assert got == exp and got
-
-
-def test_bm25_txn_append_crash_replay(spark, sf_small, tmp_path):
-    """Commit-ledger protocol on the lexical index (r4): a crash after
-    the tf write but before df/stats leaves the index OBSERVABLY
-    unchanged (probes read committed batches only — no torn
-    tf-without-df state), the replay replaces the partial partitions
-    and commits, and the recovered index probes bit-identical to a
-    one-shot full build. Replay of a committed batch is a no-op; a
-    legacy flat index is refused."""
-    import pytest
-    from pyspark.sql import functions as F
-
-    from apsviz_timeseriesdb_ingest_spark.llm.retrieval import (
-        append_bm25_increment_txn,
-        bm25_topk_from_index,
-        build_bm25_index,
-    )
-    from apsviz_timeseriesdb_ingest_spark.sources.catalog import Catalog
-
-    docs = load_table(spark, sf_small, "documents")
-    first = docs.filter(F.col("doc_id") % 2 == 0)
-    second = docs.filter(F.col("doc_id") % 2 == 1)
-    queries = spark.createDataFrame(
-        [(0, " ".join(docs.orderBy("doc_id").limit(1)
-                      .collect()[0].text.lower().split()[:6]))],
-        "query_id long, text string")
-
-    catalog = Catalog(spark, str(tmp_path / "txn"))
-    build_bm25_index(catalog, first, txn=True)
-    before = sorted(map(tuple,
-                        bm25_topk_from_index(catalog, queries).collect()))
-
-    class _CrashAfterTf:
-        def __init__(self, real):
-            self._real = real
-
-        def __getattr__(self, name):
-            return getattr(self._real, name)
-
-        def overwrite(self, df, table, *, partition_by=()):
-            self._real.overwrite(df, table, partition_by=partition_by)
-            if table.endswith("_tf"):
-                raise RuntimeError("simulated crash after tf write")
-
-    with pytest.raises(RuntimeError, match="simulated crash"):
-        append_bm25_increment_txn(_CrashAfterTf(catalog), second, 5)
-    # torn state is invisible: probe sees exactly the committed index
-    mid = sorted(map(tuple,
-                     bm25_topk_from_index(catalog, queries).collect()))
-    assert mid == before
-    # uncommitted tf rows ARE on disk (the crash was real) ...
-    assert catalog.read("bm25_tf").filter(F.col("__batch") == 5).count() > 0
-    # ... but the ledger lacks the batch
-    assert not catalog.batch_committed("bm25_commits", 5)
-
-    # replay: replaces the partial partitions, commits, and the index
-    # now equals a one-shot full build bit-for-bit
-    append_bm25_increment_txn(catalog, second, 5)
-    full = Catalog(spark, str(tmp_path / "full"))
-    build_bm25_index(full, docs)
-    got = sorted(map(tuple,
-                     bm25_topk_from_index(catalog, queries).collect()))
-    exp = sorted(map(tuple, bm25_topk_from_index(full, queries).collect()))
-    assert got == exp and got
-
-    # committed replay is a no-op (no duplicate counts)
-    append_bm25_increment_txn(catalog, second, 5)
-    assert sorted(map(tuple, bm25_topk_from_index(catalog, queries)
-                      .collect())) == exp
-    assert catalog.batch_committed("bm25_commits", 5)
-
-    legacy = Catalog(spark, str(tmp_path / "legacy"))
-    build_bm25_index(legacy, first)
-    with pytest.raises(ValueError, match="txn=True"):
-        append_bm25_increment_txn(legacy, second, 1)
-    with pytest.raises(ValueError, match="append_bm25_increment_txn"):
-        build_bm25_index(legacy, second, append=True, txn=True)
-
-
-def test_bm25_rebuild_replaces_stale_partitions(spark, sf_small, tmp_path):
-    """Rebuilding a BM25 index over an existing generation must fully
-    REPLACE it: a partitioned overwrite replaces only the partitions
-    present in the new frame, so without the pre-drop a committed
-    __batch=5 partition (txn layout) or term_buckets absent from the
-    smaller rebuild corpus (legacy layout) survive as phantom rows
-    that double-count into scores (ADVICE r4, medium)."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from apsviz_timeseriesdb_ingest_spark.llm.retrieval import (
-        append_bm25_increment_txn,
-        bm25_topk,
-        bm25_topk_from_index,
-        build_bm25_index,
-    )
-    from apsviz_timeseriesdb_ingest_spark.sources.catalog import Catalog
-
-    docs = load_table(spark, sf_small, "documents")
-    first = docs.filter(F.col("doc_id") % 2 == 0)
-    second = docs.filter(F.col("doc_id") % 2 == 1)
-    queries = spark.createDataFrame(
-        [(0, " ".join(docs.orderBy("doc_id").limit(1)
-                      .collect()[0].text.lower().split()[:6]))],
-        "query_id long, text string")
-
-    catalog = Catalog(spark, str(tmp_path / "wh"))
-    build_bm25_index(catalog, first, txn=True)
-    append_bm25_increment_txn(catalog, second, 5)
-
-    # rebuild txn over the live two-batch index from the SMALLER corpus
-    build_bm25_index(catalog, first, txn=True)
-    for t in ("bm25_tf", "bm25_df", "bm25_stats"):
-        batches = {d for d in os.listdir(catalog.path(t))
-                   if d.startswith("__batch=")}
-        assert batches == {"__batch=-1"}, t
-    assert catalog.committed_batches("bm25_commits") == [(-1, "-")]
-    # probe scores match the direct path over ONLY the rebuilt corpus
-    # (phantom rows would shift N, avgdl, df and every score)
-    got = sorted(map(tuple,
-                     bm25_topk_from_index(catalog, queries).collect()))
-    want = sorted(map(tuple, bm25_topk(first, queries).collect()))
-    assert got == want
-
-    # legacy flat rebuild over the txn generation: __batch layout and
-    # stale ledger retired, scores again match the direct path
-    build_bm25_index(catalog, second)
-    assert not catalog.exists("bm25_commits")
-    assert "__batch" not in catalog.read("bm25_tf").columns
-    got = sorted(map(tuple,
-                     bm25_topk_from_index(catalog, queries).collect()))
-    want = sorted(map(tuple, bm25_topk(second, queries).collect()))
-    assert got == want
-
-
-def test_bm25_failed_rebuild_keeps_old_generation(spark, sf_small,
-                                                  tmp_path, monkeypatch):
-    """A BM25 rebuild that fails mid-job must leave the OLD index
-    generation readable and probe-able (ADVICE r5: drop-then-write left
-    no index at all on any rebuild failure)."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from apsviz_timeseriesdb_ingest_spark.llm.retrieval import (
-        bm25_topk_from_index,
-        build_bm25_index,
-    )
-    from apsviz_timeseriesdb_ingest_spark.sources.catalog import Catalog
-
-    docs = load_table(spark, sf_small, "documents")
-    queries = spark.createDataFrame(
-        [(0, " ".join(docs.orderBy("doc_id").limit(1)
-                      .collect()[0].text.lower().split()[:6]))],
-        "query_id long, text string")
-    catalog = Catalog(spark, str(tmp_path / "wh"))
-    build_bm25_index(catalog, docs, txn=True)
-    before = sorted(map(tuple,
-                        bm25_topk_from_index(catalog, queries).collect()))
-
-    real_overwrite = Catalog.overwrite
-    calls = {"n": 0}
-
-    def failing_overwrite(self, df, table, **kw):
-        calls["n"] += 1
-        if calls["n"] == 2:  # fail after the first staged table lands
-            raise RuntimeError("injected rebuild failure")
-        return real_overwrite(self, df, table, **kw)
-
-    monkeypatch.setattr(Catalog, "overwrite", failing_overwrite)
-    import pytest as _pytest
-    with _pytest.raises(RuntimeError, match="injected"):
-        build_bm25_index(catalog,
-                         docs.filter(F.col("doc_id") % 2 == 0), txn=True)
-    monkeypatch.undo()
-
-    after = sorted(map(tuple,
-                       bm25_topk_from_index(catalog, queries).collect()))
-    assert after == before
-    assert not any(t.endswith("__staging")
-                   for t in os.listdir(catalog.warehouse))
-
-
-def test_bm25_concurrent_writer_fencing(spark, sf_small, tmp_path):
-    """Writer-generation fencing on the BM25 commit-ledger index: the
-    second acquirer fences the first, whose next transactional append
-    raises instead of silently interleaving batches."""
-    import pytest as _pytest
-    from pyspark.sql import functions as F
-
-    from apsviz_timeseriesdb_ingest_spark.llm.retrieval import (
-        append_bm25_increment_txn,
-        build_bm25_index,
-    )
-    from apsviz_timeseriesdb_ingest_spark.sources.catalog import (
-        Catalog, ConcurrentWriterError, WriterLease)
-
-    docs = load_table(spark, sf_small, "documents")
-    catalog = Catalog(spark, str(tmp_path / "wh"))
-    build_bm25_index(catalog, docs.filter(F.col("doc_id") < 20), txn=True)
-
-    a = WriterLease(catalog, "bm25").acquire(spark)
-    append_bm25_increment_txn(
-        catalog, docs.filter((F.col("doc_id") >= 20)
-                             & (F.col("doc_id") < 30)), 1, lease=a)
-    b = WriterLease(catalog, "bm25").acquire(spark)
-    before = len(catalog.committed_batches("bm25_commits"))
-    with _pytest.raises(ConcurrentWriterError, match="fenced"):
-        append_bm25_increment_txn(
-            catalog, docs.filter((F.col("doc_id") >= 30)
-                                 & (F.col("doc_id") < 40)), 2, lease=a)
-    assert len(catalog.committed_batches("bm25_commits")) == before
-    # committed-batch replays stay no-ops even when fenced
-    append_bm25_increment_txn(
-        catalog, docs.filter((F.col("doc_id") >= 20)
-                             & (F.col("doc_id") < 30)), 1, lease=a)
-    # writer B proceeds normally
-    append_bm25_increment_txn(
-        catalog, docs.filter((F.col("doc_id") >= 30)
-                             & (F.col("doc_id") < 40)), 2, lease=b)
-    # a rebuild retires the lease table -> both writers fail loudly
-    build_bm25_index(catalog, docs.filter(F.col("doc_id") < 20), txn=True)
-    with _pytest.raises(ConcurrentWriterError, match="gone"):
-        append_bm25_increment_txn(
-            catalog, docs.filter(F.col("doc_id") >= 40), 3, lease=b)

@@ -352,3 +352,25 @@ def test_flag_drift_rules(spark):
                for r in custom)
     with pytest.raises(ValueError, match="unknown drift rule"):
         flag_drift(rep, {"p50_shift": ("~=", 1)}).collect()
+
+
+def test_flag_drift_skips_absent_metric_rules(spark):
+    """DEFAULT_DRIFT_RULES names p50_shift; a report built with qs
+    omitting 0.5 must evaluate the remaining rules instead of raising
+    (ADVICE r6)."""
+    from apsviz_timeseriesdb_ingest_spark.llm.sketches import (
+        corpus_stats_row,
+        drift_report,
+        flag_drift,
+    )
+
+    docs = spark.createDataFrame(
+        [(1, "alpha beta gamma delta"), (2, "alpha beta gamma delta epsilon")],
+        "doc_id long, text string")
+    stats = corpus_stats_row(docs)
+    report = drift_report(stats, stats, qs=(0.9,))
+    flagged = flag_drift(report)  # default rules, no p50_shift column
+    assert "flag_p50_shift" not in flagged.columns
+    assert "flag_dup_rate_win" in flagged.columns
+    row = flagged.collect()[0]
+    assert row["any_alert"] is False

@@ -56,14 +56,6 @@ def test_append_auto_refreshes(spark, catalog):
     assert catalog.refresh_skipping("t__zm") == {}
 
 
-def test_compact_auto_refreshes(spark, catalog):
-    _seed(catalog, spark, files=8)
-    catalog.compact("t", partitions=1)
-    on_disk = set(list_parquet_files(catalog.path("t")))
-    assert _covered(catalog, zm_table("t")) == on_disk
-    assert read_between(catalog, "t", "k", 7, 7).count() == 1
-
-
 def test_overwrite_auto_refreshes_and_reflects_replacement(spark, catalog):
     _seed(catalog, spark)
     catalog.overwrite(spark.range(1000, 1010)
@@ -143,7 +135,7 @@ REFRESH_JOB_BUDGET = 0
 
 
 def test_refresh_equals_rebuild_and_job_budget(spark, catalog, tmp_path):
-    """After an append, a keep-latest merge and a compaction, the
+    """After an append and a keep-latest merge, the
     refreshed ``__zm`` rows equal a full footer pass over the current
     files, and one refresh runs no Spark job. The fixture
     carries an empty part file (``has_stats=False``, null bounds) in a
@@ -194,12 +186,7 @@ def test_refresh_equals_rebuild_and_job_budget(spark, catalog, tmp_path):
     assert_current()
 
     # touches February only: January and March keep the appended files
-    # that the compaction then rewrites
     catalog.merge_keep_latest("facts", frame([4, 7, 301], 3), ["id"], ["time"])
-    assert_current()
-    before = set(list_parquet_files(catalog.path("facts")))
-    catalog.compact("facts")
-    assert set(list_parquet_files(catalog.path("facts"))) != before
     assert_current()
     assert any(r.file.startswith(empty_dir) and not r.has_stats
                for r in catalog.read(zm_table("facts")).collect())

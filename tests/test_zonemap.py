@@ -188,3 +188,15 @@ def test_listing_skips_hidden_dirs_like_spark(spark, tmp_path):
     df = spark.read.parquet(str(root))
     assert [f.replace("file://", "") for f in df.inputFiles()] == listed
     assert [r.v for r in df.collect()] == [2]
+
+
+def test_read_pruned_keeps_partition_columns(spark, catalog):
+    # regression for the leaf-file read dropping Hive partition
+    # columns: basePath anchors discovery
+    df = spark.range(20).select(
+        F.col("id").alias("k"), (F.col("id") % 2).alias("p"))
+    catalog.append(df, "t", partition_by=["p"], refresh_skipping=False)
+    files = list_parquet_files(catalog.path("t"))
+    out = read_pruned(spark, catalog.path("t"), files[:1])
+    assert "p" in out.columns
+    assert out.select("p").distinct().count() == 1

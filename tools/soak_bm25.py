@@ -1,16 +1,6 @@
-"""BM25 retrieval scale soak: persisted-index build wall, index size,
-and probe wall at sf0.1 documents and at 10x — the last heavy operator
-family without a recorded scale curve (NOTES_r6 candidate 5).
-
-What the curve should show if the design holds:
-
-- build: one tokenize+count pass — ~linear in corpus tokens;
-- probe: the term-hash-bucket partition filter makes a query batch
-  touch ~|query vocab|/64 of the index, so probe wall should grow far
-  slower than the corpus (index rows per touched bucket grow with the
-  corpus's per-term posting lengths, not its file count);
-- direct (index-free) scoring re-tokenizes the corpus per batch —
-  measured alongside to show what the index buys.
+"""BM25 retrieval scale soak: ``bm25_topk`` wall for a query batch at
+sf0.1 documents and at 10x. Scoring tokenizes the corpus once per
+batch, so the wall should grow about linearly in corpus tokens.
 
 10x construction: per-replica consonant permutation (soak_neardup's) —
 token structure and document lengths unchanged, vocabulary and posting
@@ -26,7 +16,6 @@ import argparse
 import json
 import os
 import sys
-import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(
@@ -47,9 +36,7 @@ def main() -> None:
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    from apsviz_timeseriesdb_ingest_spark.llm.retrieval import (
-        bm25_topk, bm25_topk_from_index, build_bm25_index)
-    from apsviz_timeseriesdb_ingest_spark.sources.catalog import Catalog
+    from apsviz_timeseriesdb_ingest_spark.llm.retrieval import bm25_topk
     from apsviz_timeseriesdb_ingest_spark.testdata import load_table
 
     spark = (SparkSession.builder.master(f"local[{args.cpus}]")
@@ -85,36 +72,20 @@ def main() -> None:
             df = df.unionByName(p)
         return df.repartition(int(args.cpus)).cache()
 
-    with tempfile.TemporaryDirectory() as tmp:
-        for times in (1, 10):
-            docs = replicate(times)
-            n = docs.count()
-            cat = Catalog(spark, os.path.join(tmp, f"wh_{times}"))
+    for times in (1, 10):
+        docs = replicate(times)
+        n = docs.count()
 
-            t0 = time.time()
-            build_bm25_index(cat, docs, table="bm25")
-            t_build = time.time() - t0
-            tf_rows = cat.read("bm25_tf").count()
+        t0 = time.time()
+        n_direct = bm25_topk(docs, queries, top_k=10).count()
+        t_direct = time.time() - t0
 
-            t0 = time.time()
-            probe = bm25_topk_from_index(cat, queries, table="bm25",
-                                         top_k=10)
-            n_hits = probe.count()
-            t_probe = time.time() - t0
-
-            t0 = time.time()
-            direct = bm25_topk(docs, queries, top_k=10)
-            n_direct = direct.count()
-            t_direct = time.time() - t0
-
-            print(json.dumps({
-                "scale": f"{times}x", "docs": n, "tf_rows": tf_rows,
-                "build_s": round(t_build, 2),
-                "probe_s": round(t_probe, 2), "probe_rows": n_hits,
-                "direct_s": round(t_direct, 2),
-                "direct_rows": n_direct,
-                "queries": args.queries}), flush=True)
-            docs.unpersist()
+        print(json.dumps({
+            "scale": f"{times}x", "docs": n,
+            "direct_s": round(t_direct, 2),
+            "direct_rows": n_direct,
+            "queries": args.queries}), flush=True)
+        docs.unpersist()
 
     spark.stop()
 

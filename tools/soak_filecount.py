@@ -16,9 +16,6 @@ Measured per file count:
   files — must be O(new files), NOT a rebuild;
 - ``zm_prune_s``: driver arithmetic over the stats rows for a
   ~0.1%-selective range;
-- ``committed_files_s``: the composed committed-read's driver-side
-  file arithmetic over a half-committed ``(__batch, __writer)``
-  layout at the same file count;
 - ``zm_kept``: files surviving the prune (the selectivity sanity
   check: pruned read == full filtered read is asserted,
   result-equality first as always).
@@ -58,7 +55,7 @@ def main() -> None:
 
     from apsviz_timeseriesdb_ingest_spark.sources.catalog import Catalog
     from apsviz_timeseriesdb_ingest_spark.sources.skipping import (
-        build_skipping, committed_files, read_between, zm_table)
+        build_skipping, read_between, zm_table)
     from apsviz_timeseriesdb_ingest_spark.sources.zonemap import (
         ZONEMAP_SCHEMA, list_parquet_files, prune_files)
 
@@ -98,24 +95,6 @@ def main() -> None:
             got = read_between(catalog, "zt", "k", lo, hi).count()
             assert got == expect, (got, expect)
 
-            # committed files at file-count scale: commit half the
-            # batches of a (__batch, __writer) layout and time the
-            # driver-side committed-file arithmetic over ALL files
-            n_batches = 50
-            (base.withColumn("__batch", (F.col("k")
-                                         % n_batches).cast("long"))
-             .withColumn("__writer", F.lit("w"))
-             .repartition(max(1, n_files // n_batches), "k")
-             .write.partitionBy("__batch", "__writer")
-             .parquet(catalog.path("ct")))
-            for b in range(0, n_batches, 2):
-                catalog.commit_batch("ct_commits", b, "w")
-            t0 = time.time()
-            cfiles = committed_files(catalog, "ct", "ct_commits")
-            committed_s = time.time() - t0
-            all_ct = len(list_parquet_files(catalog.path("ct")))
-            assert 0 < len(cfiles) < all_ct
-
             # incremental refresh paid per APPEND (the auto-hook path):
             # footer stats over the new files only
             extra = spark.range(n_rows, n_rows
@@ -135,9 +114,6 @@ def main() -> None:
                 "zm_kept": len(kept),
                 "zm_incr_append_s": round(zm_incr_s, 2),
                 "appended_files": args.append,
-                "committed_files_s": round(committed_s, 3),
-                "committed_kept": len(cfiles),
-                "committed_total": all_ct,
             }), flush=True)
 
     spark.stop()
