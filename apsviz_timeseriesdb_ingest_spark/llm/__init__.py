@@ -2,16 +2,12 @@
 
     text        -- cleaning, filters, quality signals, decontamination
     dedup       -- exact, MinHash-LSH and SimHash near-duplicate search
-    similarity  -- embeddings, exact top-k, k-means/IVF cells, ANN layout
+    similarity  -- embeddings, exact top-k, k-means/IVF cell assignment
     multimodal  -- media features via Arrow-batched ``mapInPandas``
     spans       -- sentence and paragraph spans, duplicate-span masking
     lm          -- n-gram LMs, perplexity, DSIR selection
     graph       -- PageRank
     retrieval   -- BM25 top-k, rank fusion, contamination report
-    bpe, unigram -- subword tokenizer training and encoding
-    classifier  -- logistic-regression quality classifier
-    sketches    -- mergeable corpus sketches and drift rules
-    pipeline    -- the staged corpus-preparation pipeline and its reports
 
 All hot paths are JVM-side DataFrame expressions (higher-order functions,
 no row-at-a-time Python); the only Python execution is the Arrow-batched
@@ -85,21 +81,16 @@ from .similarity import (  # noqa: F401
     CentroidTable,
     ann_assign,
     brute_force_topk,
-    check_or_record_ann_layout,
     embedding_neardup_pairs,
     hash_embedding,
     hyperplane_lsh_bucket,
     ivf_assign,
-    ivf_probe,
     kmeans_assign,
-    probe_cells_for,
-    read_ann_layout,
     semantic_dedup,
     semantic_dedup_auto,
     semantic_k,
     train_kmeans,
     train_kmeans_table,
-    write_ann_layout,
 )
 from .multimodal import (  # noqa: F401
     extract_media_features,
@@ -107,25 +98,11 @@ from .multimodal import (  # noqa: F401
     sample_frames,
     with_binary_payload,
 )
-from .pipeline import (  # noqa: F401
-    data_card,
-    export_training_shards,
-    attrition_report,
-    corpus_signals,
-    prepare_training_corpus,
-)
 from .spans import (  # noqa: F401
     split_sentences,
     dedup_paragraphs,
     duplicate_spans,
     mask_duplicate_spans,
-)
-from .bpe import (  # noqa: F401
-    BpeModel,
-    bpe_encode_docs,
-    subword_vocabulary,
-    train_bpe,
-    word_pieces,
 )
 from .lm import (  # noqa: F401
     dsir_grams,
@@ -142,36 +119,8 @@ from .lm import (  # noqa: F401
 from .graph import (  # noqa: F401
     pagerank,
 )
-from .unigram import (  # noqa: F401
-    UnigramModel,
-    train_unigram,
-    unigram_encode_docs,
-    unigram_word_pieces,
-)
 from .retrieval import (  # noqa: F401
     bm25_topk,
     contamination_report,
-    ranking_recall_at_k,
     rrf_fuse,
-)
-from .classifier import (  # noqa: F401
-    apply_standardization,
-    quality_features,
-    score_logreg,
-    standardize_stats,
-    train_logreg,
-)
-from .sketches import (  # noqa: F401
-    corpus_sketch,
-    corpus_stats_row,
-    drift_report,
-    flag_drift,
-    heavy_hitters_estimates,
-    heavy_hitters_sketch,
-    length_quantiles,
-    length_sketch,
-    merge_corpus_sketches,
-    merge_heavy_hitters,
-    merge_length_sketches,
-    sketch_estimates,
 )

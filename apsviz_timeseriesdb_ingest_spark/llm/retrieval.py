@@ -185,45 +185,13 @@ def bm25_topk(docs: DataFrame, queries: DataFrame, *, top_k: int = 10,
                     F.col("doc").alias(id_col), "bm25", "rnk"))
 
 
-def ranking_recall_at_k(got: DataFrame, truth: DataFrame, *, k: int,
-                        query_id_col: str = "query_id",
-                        id_col: str = "doc_id",
-                        rank_col: str = "rnk") -> DataFrame:
-    """Recall@k of a retrieved ranking against a ground-truth ranking,
-    computed distributed — the measurement the ANN/IVF tests do in
-    Python, as a product operator for index-quality monitoring at
-    corpus scale (e.g. ``ivf_probe`` vs ``brute_force_topk`` over a
-    probe query set).
-
-    Both inputs expose (query_id_col, id_col, rank_col); rows ranked
-    beyond k are ignored on both sides. Returns per-query
-    ``(query_id, n_true, n_hit, recall)`` plus macro averaging is one
-    ``avg`` away. Queries present only in ``truth`` score 0; queries
-    present only in ``got`` are dropped (no truth to recall). One
-    broadcast-sized join per side — rankings are query-bounded, never
-    corpus-sized.
-    """
-    t = (truth.filter(F.col(rank_col) <= k)
-         .select(F.col(query_id_col).alias("q"), F.col(id_col).alias("doc")))
-    g = (got.filter(F.col(rank_col) <= k)
-         .select(F.col(query_id_col).alias("q"), F.col(id_col).alias("doc")))
-    hits = (t.join(g, ["q", "doc"], "left_semi")
-            .groupBy("q").agg(F.count("*").alias("n_hit")))
-    return (t.groupBy("q").agg(F.count("*").alias("n_true"))
-            .join(hits, "q", "left")
-            .select(F.col("q").alias(query_id_col), "n_true",
-                    F.coalesce("n_hit", F.lit(0)).alias("n_hit"),
-                    F.round(F.coalesce("n_hit", F.lit(0)) / F.col("n_true"),
-                            6).alias("recall")))
-
-
 def rrf_fuse(rankings: list[DataFrame], *, k: int = 60, top_k: int = 10,
              query_id_col: str = "query_id", id_col: str = "doc_id",
              rank_col: str = "rnk") -> DataFrame:
     """Reciprocal-rank fusion (Cormack et al. 2009) of per-query
     rankings from heterogeneous systems — the standard hybrid-retrieval
     combiner for a lexical (:func:`bm25_topk`) and a dense
-    (``similarity.brute_force_topk`` / ``ivf_probe``) ranking, which
+    (``similarity.brute_force_topk``) ranking, which
     have incomparable scores but comparable RANKS:
 
         rrf(q, d) = Σ_systems 1 / (k + rank_s(q, d))

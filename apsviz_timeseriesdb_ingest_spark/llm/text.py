@@ -671,10 +671,9 @@ def pack_documents(df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 
     By default the weight is ``length(text_col)`` (character packing,
     output column ``n_chars_measured``). Pass ``weight_col`` to pack by
-    any per-doc size — e.g. ``n_bpe_tokens`` from
-    :func:`llm.bpe.bpe_encode_docs` for true token-budget packs — and
-    the measured column becomes ``n_weight_measured``; ``target_chars``
-    is then a weight target."""
+    any per-doc size — e.g. a per-doc token count for token-budget
+    packs — and the measured column becomes ``n_weight_measured``;
+    ``target_chars`` is then a weight target."""
     if weight_col is None:
         weight, measured = F.length(text_col), "n_chars_measured"
     else:
@@ -1267,17 +1266,15 @@ def normalize_unicode(df: DataFrame, *, form: str = "NFKC",
     ``e+\\u0301`` vs ``\\u00e9``), full-width forms, and compatibility
     characters are byte-different but visually identical, so without
     this every dedup grain (exact md5, shingles, paragraphs, URL text)
-    treats them as distinct documents. NFKC is the corpus-pipeline
-    default (canonical + compatibility folding); NFC preserves
-    compatibility distinctions.
+    treats them as distinct documents. NFKC folds canonical and
+    compatibility forms; NFC preserves compatibility distinctions.
 
     Implementation note: Spark has NO native unicode normalizer, so
     this is an Arrow-batched ``mapInPandas`` over stdlib
     ``unicodedata`` — the same documented Python-boundary exception
     class as :func:`compression_ratio` and the multimodal decode
     (never a row-at-a-time UDF). NULL text stays NULL. Cost: one
-    vectorized pass; apply once at ingest, before signals and dedup
-    (``prepare_training_corpus(unicode_form=...)`` does exactly that).
+    vectorized pass; apply once at ingest, before signals and dedup.
     """
     import unicodedata
 

@@ -29,10 +29,9 @@ Contract (``LineageCutter``):
   the caller to reference at most the most recent cut frame per name
   (true of every loop in this repo: each round derives only from the
   previous round's state).
-- Checkpoint tables are left in place after the run (the
-  ``prepare_training_corpus(catalog=)`` audit-trail convention); the
-  final returned frame reads from the last slot, so drop the tables
-  only after consuming the result.
+- Checkpoint tables are left in place after the run as an audit
+  trail; the final returned frame reads from the last slot, so drop
+  the tables only after consuming the result.
 
 Failure-recovery contract: with a catalog and ``every == 1``, an
 executor loss at any point is recoverable by Spark's normal lineage

@@ -27,8 +27,8 @@ def salted_join(skewed: DataFrame, other: DataFrame, on: Sequence[str],
     the join key becomes (keys..., salt) — a hot key's rows spread over
     ``salt_buckets`` reduce tasks instead of one. Result is exactly the
     plain inner join. (AQE skew-join does this adaptively; the explicit
-    operator covers engines/paths where it can't, e.g. under windowed
-    stages or disabled AQE.)"""
+    operator covers engines/paths where it can't, e.g. with AQE
+    disabled.)"""
     salted = skewed.withColumn("__salt", (F.rand(seed=0) * salt_buckets).cast("int"))
     replicated = other.withColumn(
         "__salt", F.explode(F.sequence(F.lit(0), F.lit(salt_buckets - 1))))

@@ -125,12 +125,12 @@ def read_wet(spark: SparkSession, path: str, *,
     shorter than ``min_text_chars`` are filtered — Common Crawl WET
     carries many empty extractions).
 
-    Compose directly into the corpus pipeline::
+    Key the records as documents for the ``llm`` operators::
 
         docs = (read_wet(spark, "cc/*.warc.wet.gz")
                 .select(F.xxhash64("record_id").alias("doc_id"),
                         "text", "url"))
-        corpus, audit = prepare_training_corpus(docs, ...)
+        kept = exact_dedup(docs)
     """
     rec = (spark.read.option("lineSep", WARC_MARKER).text(path)
            .filter(F.col("value") != ""))

@@ -741,9 +741,8 @@ def llm_kmeans_assign(spark, sf_dir):
     ``kmeans_assign``): the k centroids are inlined as literals so the
     assignment is a ZERO-EXCHANGE projection (vs ``ivf_assign``'s
     broadcast join + shuffled argmin — gated via llm_ann_assign). This
-    is the cell-routing step of the IVF/SemDeDup/classifier family at
-    100 TB: pure map-side, pipelineable into the partitioned layout
-    write."""
+    is the cell-routing step of the IVF/SemDeDup family at 100 TB: pure
+    map-side, pipelineable into the partitioned layout write."""
     from ..llm.similarity import kmeans_assign
     return kmeans_assign(tables(spark, sf_dir, "embeddings"),
                          _KMEANS_CENTROIDS)

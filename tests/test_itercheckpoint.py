@@ -103,45 +103,6 @@ def test_cross_corpus_neardup_catalog_checkpoint_identical(spark, tmp_path):
     assert cat.exists("xcorpus_cand_0")
 
 
-def test_bpe_unigram_catalog_checkpoint_identical(spark, tmp_path):
-    """The tokenizer trainings (the other long-iteration operators the
-    r3 verdict flagged) produce identical models through the durable
-    table path."""
-    from apsviz_timeseriesdb_ingest_spark.llm.bpe import (
-        bpe_encode_docs,
-        train_bpe,
-    )
-    from apsviz_timeseriesdb_ingest_spark.llm.unigram import train_unigram
-
-    docs = spark.createDataFrame(
-        [(i, "the bright lighthouse lights the nightly coastline "
-             "while weather stations watch the rising water")
-         for i in range(6)] +
-        [(10, "shuffle partitions shuffle again nightly"),
-         (11, "coastline weather rising rising rising water")],
-        "doc_id long, text string")
-    cat = Catalog(spark, str(tmp_path / "wh"))
-
-    base = train_bpe(docs, num_merges=12, batch=4)
-    via = train_bpe(docs, num_merges=12, batch=4, checkpoint_catalog=cat,
-                    checkpoint_every=2)
-    assert base.merges == via.merges
-    assert cat.exists("bpe_words_0")
-    enc_a = {r.doc_id: r.bpe_tokens
-             for r in bpe_encode_docs(docs, base, engine="sql").collect()}
-    enc_b = {r.doc_id: r.bpe_tokens
-             for r in bpe_encode_docs(docs, base, engine="sql",
-                                      checkpoint_catalog=cat).collect()}
-    assert enc_a == enc_b
-
-    u_base = train_unigram(docs, vocab_size=48, seed_size=96, em_iters=1)
-    u_via = train_unigram(docs, vocab_size=48, seed_size=96, em_iters=1,
-                          checkpoint_catalog=cat)
-    assert u_base.pieces == u_via.pieces
-    assert u_base.log_probs == u_via.log_probs
-    assert cat.exists("unigram_words_0")
-
-
 def test_pagerank_resume_from_progress_table(spark, tmp_path):
     """Driver-loss recovery: a run killed after iteration k resumes
     from the {prefix}_progress row + slot tables and finishes
@@ -226,106 +187,6 @@ def test_pagerank_resume_rejects_shorter_iters(spark, tmp_path):
     pagerank(edges, iters=5, checkpoint_catalog=cat).collect()
     with pytest.raises(ValueError, match="further along"):
         pagerank(edges, iters=3, checkpoint_catalog=cat, resume=True)
-
-
-def test_bpe_resume_from_progress_table(spark, tmp_path):
-    """Driver-loss recovery for BPE training (r4 verdict task 4): a run
-    killed after k merges resumes from the {prefix}_progress merge list
-    + words slot table and finishes merge-for-merge identical to an
-    uninterrupted run."""
-    from apsviz_timeseriesdb_ingest_spark.llm.bpe import train_bpe
-
-    docs = spark.createDataFrame(
-        [(i, "the bright lighthouse lights the nightly coastline "
-             "while weather stations watch the rising water")
-         for i in range(6)] +
-        [(10, "shuffle partitions shuffle again nightly"),
-         (11, "coastline weather rising rising rising water")],
-        "doc_id long, text string")
-
-    full = train_bpe(docs, num_merges=12, batch=1)
-
-    cat = Catalog(spark, str(tmp_path / "wh"))
-    # "crashed" run: completed only 5 of 12 merges before dying
-    train_bpe(docs, num_merges=5, batch=1, checkpoint_catalog=cat)
-    prog = cat.read("bpe_progress").orderBy("idx").collect()
-    assert len(prog) == 5
-    assert prog[0]["table"].startswith("bpe_words_")
-
-    resumed = train_bpe(docs, num_merges=12, batch=1,
-                        checkpoint_catalog=cat, resume=True)
-    assert resumed.merges == full.merges
-    assert resumed.eow == full.eow
-    assert len(cat.read("bpe_progress").collect()) == 12
-
-    # resume with nothing left to do returns the stored merges unchanged
-    again = train_bpe(docs, num_merges=12, batch=1,
-                      checkpoint_catalog=cat, resume=True)
-    assert again.merges == full.merges
-
-    # stored progress beyond the request is an error, like pagerank
-    with pytest.raises(ValueError, match="further along"):
-        train_bpe(docs, num_merges=3, batch=1,
-                  checkpoint_catalog=cat, resume=True)
-    with pytest.raises(ValueError, match="requires checkpoint_catalog"):
-        train_bpe(docs, num_merges=3, resume=True)
-
-    # resume without a progress table runs fresh
-    cat2 = Catalog(spark, str(tmp_path / "wh2"))
-    fresh = train_bpe(docs, num_merges=12, batch=1,
-                      checkpoint_catalog=cat2, resume=True)
-    assert fresh.merges == full.merges
-
-
-def test_unigram_resume_after_injected_driver_loss(spark, tmp_path,
-                                                   monkeypatch):
-    """Driver-loss recovery for unigram-LM training: kill the run
-    mid-EM (injected exception), then resume from the persisted
-    {prefix}_model + words tables — piece-for-piece and
-    log-prob-for-log-prob identical to an uninterrupted run."""
-    import apsviz_timeseriesdb_ingest_spark.llm.unigram as ug
-
-    docs = spark.createDataFrame(
-        [(i, "the bright lighthouse lights the nightly coastline "
-             "while weather stations watch the rising water")
-         for i in range(6)] +
-        [(10, "shuffle partitions shuffle again nightly"),
-         (11, "coastline weather rising rising rising water")],
-        "doc_id long, text string")
-    kw = dict(vocab_size=48, seed_size=96, em_iters=1)
-
-    full = ug.train_unigram(docs, **kw)
-
-    cat = Catalog(spark, str(tmp_path / "wh"))
-    real = ug._expected_counts
-    calls = {"n": 0}
-
-    def crashing(*a, **k):
-        calls["n"] += 1
-        if calls["n"] == 3:
-            raise RuntimeError("injected driver loss")
-        return real(*a, **k)
-
-    monkeypatch.setattr(ug, "_expected_counts", crashing)
-    with pytest.raises(RuntimeError, match="injected"):
-        ug.train_unigram(docs, **kw, checkpoint_catalog=cat)
-    monkeypatch.undo()
-    assert cat.exists("unigram_model")
-
-    resumed = ug.train_unigram(docs, **kw, checkpoint_catalog=cat,
-                               resume=True)
-    assert resumed.pieces == full.pieces
-    assert resumed.log_probs == full.log_probs
-
-    with pytest.raises(ValueError, match="requires checkpoint_catalog"):
-        ug.train_unigram(docs, **kw, resume=True)
-
-    # resume without a model table runs fresh
-    cat2 = Catalog(spark, str(tmp_path / "wh2"))
-    fresh = ug.train_unigram(docs, **kw, checkpoint_catalog=cat2,
-                             resume=True)
-    assert fresh.pieces == full.pieces
-    assert fresh.log_probs == full.log_probs
 
 
 @pytest.mark.parametrize("algorithm", ["star", "label"])

@@ -396,15 +396,10 @@ def test_skew_soak_hot_grams(spark):
 
 def test_buckets_and_pipeline_accept_ngram_model(spark):
     """perplexity_buckets passes hot_grams through to the n-gram scorer
-    (identical buckets), and prepare_training_corpus dispatches on the
-    model kind like perplexity_buckets does — a train_ngram_lm model
-    drives the pipeline's perplexity stage directly."""
+    (identical buckets) and buckets a train_ngram_lm model directly."""
     from apsviz_timeseriesdb_ingest_spark.llm.lm import (
         perplexity_buckets,
         train_ngram_lm,
-    )
-    from apsviz_timeseriesdb_ingest_spark.llm.pipeline import (
-        prepare_training_corpus,
     )
 
     docs = spark.createDataFrame(
@@ -422,14 +417,6 @@ def test_buckets_and_pipeline_accept_ngram_model(spark):
            for r in perplexity_buckets(docs, lm, hot_grams=10).collect()}
     assert base == hot
     assert base[20] == "tail"  # OOV junk is the worst scorer
-
-    corpus, audit = prepare_training_corpus(
-        docs, None, min_tokens=5, perplexity_lm=lm,
-        max_perplexity=1e9, languages=("en",))
-    got = {r.doc_id: r for r in audit.collect()}
-    # the ngram model scored every heuristic survivor
-    assert got[21].perplexity is not None
-    assert got[20].perplexity is not None
 
 
 def test_dsir_weights_separate_domains(spark):

@@ -1,32 +1,11 @@
-"""Catalog maintenance seams (merge strategy, drop); streaming
-dedup-within-watermark drops cross-batch duplicates."""
+"""Catalog maintenance seams: the merge strategy and drop."""
 
 from __future__ import annotations
 
 import datetime as dt
 
 from apsviz_timeseriesdb_ingest_spark.sources.catalog import Catalog
-from apsviz_timeseriesdb_ingest_spark.streaming.windowed import dedup_within_watermark
 from pyspark.sql import functions as F
-
-
-def test_dedup_within_watermark_stream(spark, tmp_path):
-    t0 = dt.datetime(2024, 1, 1)
-    rows = [(t0 + dt.timedelta(minutes=m), eid, v) for m, eid, v in
-            [(0, 1, 1.0), (1, 2, 2.0), (2, 1, 99.0), (3, 3, 3.0), (4, 2, 98.0)]]
-    path = str(tmp_path / "ev")
-    spark.createDataFrame(rows, "ts timestamp, event_id long, value double") \
-        .write.parquet(path)
-    stream = spark.readStream.schema("ts timestamp, event_id long, value double") \
-        .parquet(path)
-    q = (dedup_within_watermark(stream, ["event_id"], watermark="1 hour")
-         .writeStream.format("memory").queryName("dedup_wm")
-         .outputMode("append")
-         .option("checkpointLocation", str(tmp_path / "ckpt"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-    got = spark.sql("SELECT event_id, count(*) AS n FROM dedup_wm GROUP BY event_id")
-    assert {(r.event_id, r.n) for r in got.collect()} == {(1, 1), (2, 1), (3, 1)}
 
 
 def test_merge_strategy_seam(spark, tmp_path):

@@ -66,6 +66,7 @@ def test_m4_views(env, spark):
 def test_package_imports_without_spark_session():
     """Library hygiene: importing the package (and the full llm surface)
     must not start a SparkSession or JVM — consumers compose lazily."""
+    import os
     import subprocess
     import sys
 
@@ -76,7 +77,8 @@ def test_package_imports_without_spark_session():
         "assert SparkSession.getActiveSession() is None\n"
         "print('clean')\n"
     )
-    out = subprocess.run([sys.executable, "-c", code], cwd="/root/repo",
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run([sys.executable, "-c", code], cwd=root,
                          capture_output=True, text=True, timeout=120)
     assert out.returncode == 0, out.stderr
     assert "clean" in out.stdout

@@ -207,30 +207,3 @@ def test_hybrid_retrieval_composes_on_testdata(spark, sf_small):
     top = min(fused1, key=lambda t: t[4])
     assert top[3] == 2  # n_systems
 
-
-def test_ranking_recall_at_k(spark):
-    from apsviz_timeseriesdb_ingest_spark.llm.retrieval import (
-        ranking_recall_at_k,
-    )
-
-    truth = spark.createDataFrame(
-        [(0, 1, 1), (0, 2, 2), (0, 3, 3), (1, 9, 1), (2, 5, 1), (0, 4, 4)],
-        "query_id long, doc_id long, rnk int")
-    got = spark.createDataFrame(
-        [(0, 2, 1), (0, 7, 2), (0, 3, 3), (1, 8, 1), (3, 1, 1)],
-        "query_id long, doc_id long, rnk int")
-    out = {r.query_id: (r.n_true, r.n_hit, r.recall)
-           for r in ranking_recall_at_k(got, truth, k=3).collect()}
-    assert out[0] == (3, 2, round(2 / 3, 6))  # truth rnk 4 ignored at k=3
-    assert out[1] == (1, 0, 0.0)
-    assert out[2] == (1, 0, 0.0)   # query missing from got scores 0
-    assert 3 not in out            # no truth -> dropped
-
-    # self-comparison on a real ranking = perfect recall
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents")
-    probe = docs.orderBy("doc_id").limit(1).collect()[0]
-    queries = spark.createDataFrame([(0, probe.text)],
-                                    "query_id long, text string")
-    rank = bm25_topk(docs, queries, top_k=5)
-    perfect = ranking_recall_at_k(rank, rank, k=5).collect()
-    assert all(r.recall == 1.0 for r in perfect) and perfect

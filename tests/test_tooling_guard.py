@@ -1,15 +1,19 @@
-"""Static guards over the files that import the package from outside it:
-every ``from apsviz_timeseriesdb_ingest_spark… import name`` in
-``tools/*.py`` names something the package still defines, and every
-``tests/slow_tests.txt`` entry names a test function that exists. Both
-are read from source with ``ast``; nothing is imported and no Spark
-session starts, so a deleted symbol cannot silently break a soak script
-or leave a dead slow entry."""
+"""Guards over the package's import graph and the files that import it
+from outside: every ``from apsviz_timeseriesdb_ingest_spark… import
+name`` in ``tools/*.py`` names something the package still defines,
+every ``tests/slow_tests.txt`` entry names a test function that exists,
+and every module is reached from a query, an ingest plan or the
+streaming ingest. These are read from source with ``ast``, so a deleted
+symbol cannot silently break a soak script or leave a dead slow entry.
+One check imports the ingest packages in a subprocess (no Spark session
+starts) and asserts that they load no training-data module."""
 
 from __future__ import annotations
 
 import ast
 import os
+import subprocess
+import sys
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG = "apsviz_timeseriesdb_ingest_spark"
@@ -126,27 +130,11 @@ def _imported_modules(module: str, path: str, known: dict[str, str]) -> set[str]
             for i in range(m.count(".") + 1)}
 
 
-# Modules no root imports that still carry tests of their own: the
-# subword tokenizers, the staged corpus pipeline with its classifier,
-# sketches and JSONL shards, and the windowed stream operators. The list
-# only shrinks: a module leaves it when it is retired or a root reaches it.
-KEPT_UNREACHED = (
-    "llm.bpe",
-    "llm.classifier",
-    "llm.pipeline",
-    "llm.sketches",
-    "llm.unigram",
-    "sources.jsonl",
-    "streaming.windowed",
-)
-
-
 def test_every_module_is_reached_from_a_root():
     """Each non-``__init__`` module is imported, transitively, from a
     query module (``suite/``), an ingest plan (``plans/``) or the
-    streaming ingest, or is named in ``KEPT_UNREACHED``. A package
-    ``__init__`` counts as reached but its re-exports are not followed:
-    they would reach every module."""
+    streaming ingest. A package ``__init__`` counts as reached but its
+    re-exports are not followed: they would reach every module."""
     known = _package_modules()
     roots = {m for m in known
              if m.startswith((f"{PKG}.suite", f"{PKG}.plans"))}
@@ -161,4 +149,23 @@ def test_every_module_is_reached_from_a_root():
             todo.extend(_imported_modules(m, known[m], known) - reached)
     unreached = sorted(m[len(PKG) + 1:] for m, p in known.items()
                        if m not in reached and not p.endswith("__init__.py"))
-    assert unreached == sorted(KEPT_UNREACHED)
+    assert unreached == []
+
+
+def test_ingest_packages_load_no_corpus_modules():
+    """Importing the ingest surface (``streaming``, ``plans``,
+    ``sources``) loads none of the training-data operators: no ``llm``
+    module and no corpus reader (``sources.warc`` is imported directly
+    by the one query that parses WET records)."""
+    code = (
+        "import sys\n"
+        f"import {PKG}.streaming, {PKG}.plans, {PKG}.sources\n"
+        "print('\\n'.join(sorted(sys.modules)))\n"
+    )
+    out = subprocess.run([sys.executable, "-c", code], cwd=ROOT,
+                         capture_output=True, text=True, timeout=120)
+    assert out.returncode == 0, out.stderr
+    loaded = out.stdout.split()
+    corpus = [m for m in loaded
+              if m.startswith(f"{PKG}.llm") or m == f"{PKG}.sources.warc"]
+    assert f"{PKG}.plans.obs_ingest" in loaded and corpus == []

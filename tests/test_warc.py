@@ -1,6 +1,6 @@
 """WET (Common Crawl) source: record splitting, header parsing, type
 filtering, gzip transparency, torn-record accounting, and composition
-into the corpus pipeline — all against a spec-shaped handwritten
+into the text-prep operators — all against a spec-shaped handwritten
 fixture."""
 
 from __future__ import annotations
@@ -117,17 +117,24 @@ def test_read_wet_min_chars_and_quarantine(spark, tmp_path):
 
 
 def test_read_wet_composes_into_pipeline(spark, tmp_path):
-    """The advertised composition: WET records become pipeline docs and
-    flow through prepare_training_corpus end to end."""
-    from apsviz_timeseriesdb_ingest_spark.llm.pipeline import (
-        prepare_training_corpus,
+    """The advertised composition: WET records become prep docs and
+    flow through normalization, the Gopher drop tag and exact dedup
+    end to end."""
+    from apsviz_timeseriesdb_ingest_spark.llm.dedup import exact_dedup
+    from apsviz_timeseriesdb_ingest_spark.llm.text import (
+        gopher_drop_reason,
+        gopher_quality_stats,
+        normalize_unicode,
     )
 
-    docs = (read_wet(spark, _write(tmp_path, True))
-            .select(F.xxhash64("record_id").alias("doc_id"), "text",
-                    "url"))
-    corpus, audit = prepare_training_corpus(
-        docs, None, min_tokens=2, languages=("en",),
-        profiles={"en": ("hello", "of", "line", "doc", "short")})
+    docs = normalize_unicode(
+        read_wet(spark, _write(tmp_path, True))
+        .select(F.xxhash64("record_id").alias("doc_id"), "text", "url"))
+    audit = gopher_quality_stats(
+        docs, stopwords=("hello", "of", "line", "doc", "short")).select(
+        "doc_id",
+        F.when(F.col("n_tokens") < 2, F.lit("too_short"))
+        .otherwise(gopher_drop_reason()).alias("drop_reason"))
     assert audit.count() == 3
-    assert corpus.count() >= 1
+    kept = docs.join(audit.filter(F.col("drop_reason").isNull()), "doc_id")
+    assert exact_dedup(kept).count() >= 1
